@@ -11,11 +11,16 @@ exploratory lives here instead (per the optimization-round rules):
   r5 #4) gets a measured number and a plan assertion (labels exchanged,
   edges scanned — SortMergeJoin/ShuffledHashJoin, no BroadcastHashJoin
   in the iteration);
+* ``cckernel`` — connected components in auto mode on a chain graph
+  just under ``canonical.BROADCAST_AUTO_THRESHOLD`` nodes: the
+  single-task union-find kernel at its size limit, with the wall and
+  the peak RSS of the PySpark worker processes (the kernel's memory
+  lives there, outside the JVM and its event-log metrics);
 * ``scale64`` — one flagship leg at ×(AMPLIFY·64) amplification
   (VERDICT r5 #6 scale rehearsal) watching wall and plan-construction
   cost.
 
-Usage: python bench_extra.py [noop|ccnb|scale64 ...]   (default: noop ccnb)
+Usage: python bench_extra.py [noop|ccnb|cckernel|scale64 ...]   (default: noop ccnb)
 Prints one JSON line per section.
 """
 
@@ -93,6 +98,75 @@ def noop_section(spark) -> dict:
     return out
 
 
+def _chain_edges(spark, n_nodes: int, chain: int, path: str):
+    """Parquet-backed edges of ``n_nodes`` zero-padded string ids cut
+    into disjoint paths of ``chain`` nodes each."""
+    ids = spark.range(n_nodes).select(
+        F.lpad(F.col("id").cast("string"), 9, "0").alias("a"),
+        F.when(
+            (F.col("id") + 1) % chain != 0,
+            F.lpad((F.col("id") + 1).cast("string"), 9, "0"),
+        ).alias("b"),
+    )
+    ids.filter(F.col("b").isNotNull()).write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
+
+
+def _worker_peak_rss_mb(spark) -> float:
+    """Largest peak RSS (VmHWM) among the PySpark daemon and worker
+    processes under the driver JVM; 0 when none was started."""
+    todo, peak = [spark.sparkContext._gateway.proc.pid], 0
+    while todo:
+        pid = todo.pop()
+        try:
+            for tid in os.listdir(f"/proc/{pid}/task"):
+                with open(f"/proc/{pid}/task/{tid}/children") as fh:
+                    todo.extend(int(c) for c in fh.read().split())
+            with open(f"/proc/{pid}/cmdline", "rb") as fh:
+                if b"pyspark.daemon" not in fh.read():
+                    continue
+            with open(f"/proc/{pid}/status") as fh:
+                for line in fh:
+                    if line.startswith("VmHWM:"):
+                        peak = max(peak, int(line.split()[1]))
+        except OSError:
+            pass
+    return round(peak / 1024, 1)
+
+
+def cckernel_section(spark, chain: int = 64) -> dict:
+    """Auto-mode CC on a chain graph of ~1000 nodes fewer than
+    ``BROADCAST_AUTO_THRESHOLD`` (whole chains): the single-task
+    union-find kernel near the largest label table it accepts.  Reports
+    the CC wall, the branch taken, and the peak RSS of the PySpark
+    worker processes, read right after the call (workers outlive their
+    task until an idle timeout).  Run it as the only section, so no
+    earlier Python work sets that high-water mark."""
+    import shutil
+
+    n_nodes = (canonical.BROADCAST_AUTO_THRESHOLD - 1000) // chain * chain
+    edges = _chain_edges(spark, n_nodes, chain, "/tmp/ddaugner_extra_cck_e")
+    st: dict = {}
+    t0 = time.time()
+    comps = canonical.connected_components(
+        edges, stage_dir="/tmp/ddaugner_extra_cck", stats=st
+    )
+    wall = round(time.time() - t0, 3)
+    rss = _worker_peak_rss_mb(spark)
+    n_comp = comps.select("component").distinct().count()
+    shutil.rmtree("/tmp/ddaugner_extra_cck_e", ignore_errors=True)
+    shutil.rmtree("/tmp/ddaugner_extra_cck", ignore_errors=True)
+    return {
+        "cc_sec": wall,
+        "broadcast_labels": st.get("broadcast_labels"),
+        "n_nodes": st.get("n_nodes"),
+        "n_iters": len(st["iters"]),
+        "n_components": n_comp,
+        "components_expected": n_nodes // chain,
+        "worker_peak_rss_mb": rss,
+    }
+
+
 def ccnb_section(spark, n_nodes: int = 1_000_000, chain: int = 64) -> dict:
     """Non-broadcast CC (broadcast_labels=False) on a synthetic chain
     graph whose label table (1M string nodes) is past the 8 MB
@@ -102,16 +176,7 @@ def ccnb_section(spark, n_nodes: int = 1_000_000, chain: int = 64) -> dict:
     eyeballed: it must be a SortMergeJoin or ShuffledHashJoin, not a
     BroadcastHashJoin (the co-mention bench graph is 13 nodes — any
     leg built on it auto-broadcasts no matter what the flag says)."""
-    ids = spark.range(n_nodes).select(
-        F.lpad(F.col("id").cast("string"), 9, "0").alias("a"),
-        F.when(
-            (F.col("id") + 1) % chain != 0,
-            F.lpad((F.col("id") + 1).cast("string"), 9, "0"),
-        ).alias("b"),
-    )
-    edges = ids.filter(F.col("b").isNotNull())
-    edges.write.mode("overwrite").parquet("/tmp/ddaugner_extra_ccnb_e")
-    edges = spark.read.parquet("/tmp/ddaugner_extra_ccnb_e")
+    edges = _chain_edges(spark, n_nodes, chain, "/tmp/ddaugner_extra_ccnb_e")
 
     # plan pin: one hash-min iteration exactly as the operator builds it
     # with broadcast_labels=False (parquet-backed label table, as in the
@@ -202,6 +267,8 @@ def main():
                 print(json.dumps({"section": "noop", **noop_section(spark)}))
             elif s == "ccnb":
                 print(json.dumps({"section": "ccnb", **ccnb_section(spark)}))
+            elif s == "cckernel":
+                print(json.dumps({"section": "cckernel", **cckernel_section(spark)}))
             elif s == "scale64":
                 print(json.dumps({"section": "scale64", **scale64_section(spark)}))
             else:

@@ -1,36 +1,46 @@
-"""Canonicalization: connected components by iterative hash-min
-(GraphFrames-style) over edge DataFrames.
+"""Canonicalization: connected components over edge DataFrames.
 
 north_star stage 5.  The reference's per-surface analogue is
 ``majority_voting`` (/root/reference/ddaugner/utils.py:81-108) —
 consolidating all occurrences of a surface to one label; here we
 consolidate co-occurring entities into components whose canonical id is
-the minimum member (hash-min label propagation).
+the minimum member.
 
-Algorithm (driver loop, bounded lineage):
+:func:`connected_components` has two branches, chosen by the size of
+the label table (one row per node):
 
-    label(v) ← v
-    repeat: label(v) ← min(label(v), min over neighbors u of label(u))
-    until no label changes
+* **single-task union-find** (≤ :data:`BROADCAST_AUTO_THRESHOLD`
+  nodes): the edges stream through one
+  ``coalesce(1).mapInPandas`` kernel — union by smaller root, path
+  compression — that emits ``(entity, component = min member)`` into
+  ONE parquet table.  One Spark job in place of the loop's ~10 per
+  round: on small graphs the job floor, not the data, was the cost.
+  The kernel counts distinct nodes as it streams and stops past the
+  threshold, so the branch test needs no separate counting job;
 
-Each iteration is one self-contained join+groupBy stage.  Scale design:
+* **distributed hash-min + pointer jumping** (larger label tables, or
+  ``broadcast_labels=False``) — a driver loop with bounded lineage::
 
-* edges are symmetrized once; both join sides hash-partition on the node
-  id, so iterations reuse the same shuffle key;
-* lineage is truncated every iteration by a RELIABLE parquet round-trip
-  of the (tiny) label table — without truncation the plan doubles per
-  iteration and the optimizer blows up around iteration ~15.
-  ``localCheckpoint`` is NOT used: it pins blocks to executors, so on a
-  real cluster one lost executor kills a 25-iteration job mid-flight
-  (and parquet round-trips measured 5-10× faster here — CLAUDE.md);
-* convergence is detected by counting changed labels (an accumulator-free
-  ``count`` on a boolean filter);
-* iteration count is O(graph diameter); hub-and-spoke co-mention graphs
-  converge in ≤ log(n) rounds with min-propagation in both directions.
+      label(v) ← v
+      repeat: label(v) ← min(label(v), min over neighbors u of label(u))
+              label(v) ← label(label(v))
+      until no label changes
+
+  Both join sides hash-partition on the node id; lineage is truncated
+  every iteration by a RELIABLE parquet round-trip of the label table
+  (without it the plan quadruples per iteration and the optimizer
+  blows up around iteration ~15).  ``localCheckpoint`` is NOT used: it
+  pins blocks to executors, so on a real cluster one lost executor
+  kills the job mid-flight (CLAUDE.md).  Convergence is a changed-label
+  count; the jump makes rounds O(log n) on path-like graphs.
+
+Both branches reach the same fixpoint: every node labelled with the
+lexicographically smallest member of its component.
 """
 
 from __future__ import annotations
 
+import functools
 import shutil
 import tempfile
 import time
@@ -84,16 +94,54 @@ def checkpoint_policy(
     return 1
 
 
-#: label-table row count up to which the per-iteration hash-min join
-#: BROADCASTS the label table instead of shuffling the (much larger)
-#: symmetric edge table by its join key: the neighbor-min step becomes a
-#: map-side broadcast join + partial aggregate, so edges are SCANNED but
-#: never exchanged.  Above it, labels are executor-memory-sized and the
-#: iteration falls back to the shuffle join (the honest big-graph path —
-#: both sides exchange on the node id).  2M string-pair rows ≈ low tens
-#: of MB serialized — inside the executor broadcast budget, far outside
-#: the driver-collect danger zone.
+#: per-node table row count up to which a table counts as executor-
+#: memory-sized: graph operators broadcast it whole into their joins
+#: (edges are scanned map-side, never exchanged), and
+#: :func:`connected_components` resolves it in one single-task
+#: union-find kernel.  Above it, both sides exchange on the node id (the
+#: honest big-graph path).  2M string-pair rows ≈ low tens of MB
+#: serialized — inside the executor broadcast budget, far outside the
+#: driver-collect danger zone.
 BROADCAST_AUTO_THRESHOLD = 2_000_000
+
+
+def _union_find(batches, limit, seen):
+    """Single-task connected components over streamed ``(a, b)`` edge
+    batches: union by smaller root (so every root IS its set's minimum
+    member) with path compression; emits ``(entity, component)`` for
+    every node.  With ``limit`` set, stops as soon as more than
+    ``limit`` distinct nodes have been seen and emits nothing; either
+    way the accumulator ``seen`` receives the number of nodes seen, so
+    the driver can tell a finished pass from an abandoned one."""
+    import pandas as pd
+
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while (p := parent[root]) != root:
+            root = p
+        while x != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for b in batches:
+        for u, v in zip(b["a"].tolist(), b["b"].tolist()):
+            parent.setdefault(u, u)
+            parent.setdefault(v, v)
+            ru, rv = find(u), find(v)
+            if ru != rv:
+                if rv < ru:
+                    ru, rv = rv, ru
+                parent[rv] = ru
+        if limit is not None and len(parent) > limit:
+            seen.add(len(parent))
+            return
+    seen.add(len(parent))
+    nodes = list(parent)
+    yield pd.DataFrame(
+        {"entity": nodes, "component": [find(n) for n in nodes]}, dtype="object"
+    )
 
 
 def connected_components(
@@ -106,47 +154,33 @@ def connected_components(
 ) -> DataFrame:
     """(entity, component) with component = min entity id reachable.
 
-    Node ids are strings; min is lexicographic, deterministic.
-    ``stage_dir`` holds the parquet checkpoints (lineage truncation +
-    fault-tolerant restart point); a temp dir by default.  NOTE: the
-    returned DataFrame is lazily BACKED by the final checkpoint under
-    ``stage_dir`` — when ``stage_dir`` is None the backing temp dir is
-    left on disk for the lifetime of the result; pass an explicit
-    ``stage_dir`` to control that lifetime (the pipeline does).
+    Node ids are strings; min is lexicographic, deterministic.  Edges
+    with a null endpoint are ignored.  ``stage_dir`` holds the parquet
+    checkpoints; a temp dir by default.  NOTE: the returned DataFrame
+    is lazily BACKED by the final checkpoint under ``stage_dir`` — when
+    ``stage_dir`` is None the backing temp dir is left on disk for the
+    lifetime of the result; pass an explicit ``stage_dir`` to control
+    that lifetime (the pipeline does).  Nothing stays persisted.
 
-    Lineage only needs truncation often enough to keep the optimizer
-    happy (the plan roughly 4×'s per iteration from the two joins), not
-    every round — the label table is parquet-materialized every
-    ``checkpoint_every``-th iteration (A/B-dir crash safety kept) and
-    MEMORY-CACHED in between so intermediate iterations compute exactly
-    once (a lazy chain would re-run iterations 1..k−1 inside iteration
-    k's DAG).  The cache is an intra-loop reuse only: recovery always
-    recomputes from the last parquet checkpoint, so nothing is pinned
-    to executors the way ``localCheckpoint`` would (CLAUDE.md rule).
-    Convergence is checked only at checkpoints, so up to
-    ``checkpoint_every − 1`` extra (idempotent, fixed-point) iterations
-    may run — label output is identical.
+    ``broadcast_labels`` picks the branch (module docstring).  Default
+    (None) is auto: the union-find kernel while the graph has ≤
+    :data:`BROADCAST_AUTO_THRESHOLD` nodes — the kernel itself counts
+    them, and gives up past the threshold, falling back to the loop.
+    ``True`` runs the kernel at any size; ``False`` runs the loop.
 
-    MEASURED (local[32], sf0.1 co-mention graph, warm): k=1 → 3.0 s,
-    k=3+cache → 4.3 s, k=3 lazy (no cache) → 9.0 s.  ``checkpoint_every
-    = None`` (default) auto-tunes via :func:`checkpoint_policy` on the
-    materialized init label-table row count: k=1 while per-job overhead
-    dominates (small tables), k=3 once write bandwidth does.
+    Loop-branch knobs: ``max_iter`` bounds the rounds (the kernel always
+    reaches the fixpoint; ``max_iter`` < 1 returns singleton components
+    on both branches).  ``checkpoint_every`` parquet-materializes the
+    label table every k-th round and memory-caches it in between
+    (convergence is checked only at checkpoints, so up to k − 1 extra
+    idempotent rounds may run); None resolves via
+    :func:`checkpoint_policy`, which is 1.  The loop broadcasts
+    nothing: it runs for label tables too big to broadcast (or on
+    request), so both join sides of a round exchange on the node id.
 
-    ``broadcast_labels`` (default auto: n_nodes ≤
-    :data:`BROADCAST_AUTO_THRESHOLD`): broadcast the label table into
-    the per-iteration hash-min join so the symmetric EDGE table is
-    scanned, never exchanged — without it each iteration shuffles all
-    edges by the join key (the parquet round-trip that truncates
-    lineage also discards any physical partitioning, so the
-    "partition once, reuse every iteration" framing does not survive
-    materialization; broadcasting sidesteps the exchange entirely for
-    every graph whose label table fits executor memory).
-
-    ``stats`` (optional dict) is filled in place with per-iteration
-    walls and checkpoint/convergence counters — bench legs record it so
-    a wall-time regression is attributable to a specific phase instead
-    of re-bisecting the whole loop (VERDICT r4 #2).
+    ``stats`` (optional dict) is filled in place: ``broadcast_labels``
+    (the kernel ran), ``n_nodes``, per-round ``iters`` walls (one entry
+    for the kernel pass) and ``n_checkpoints``.
     """
     spark = edges.sparkSession
     if stats is None:
@@ -167,56 +201,80 @@ def connected_components(
         df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
         return spark.read.parquet(f"{stage_dir}/{name}")
 
+    edges = edges.select("a", "b").where(
+        F.col("a").isNotNull() & F.col("b").isNotNull()
+    )
+    if max_iter < 1:
+        # zero iterations: every node is its own component
+        nodes = edges.select(F.col("a").alias("entity")).union(
+            edges.select(F.col("b").alias("entity"))
+        )
+        return _roundtrip(
+            nodes.distinct().withColumn("component", F.col("entity")),
+            "labels_init",
+        )
+
+    if broadcast_labels is not False:
+        # one job: stream the edges through a single-task union-find
+        # (sequential pointer-chasing is exactly the "semantics demand
+        # it" case for the sanctioned iterator mapInPandas form)
+        t0 = time.time()
+        seen = spark.sparkContext.accumulator(0)
+        limit = None if broadcast_labels else BROADCAST_AUTO_THRESHOLD
+        node_type = edges.schema["a"].dataType.simpleString()
+        comps = _roundtrip(
+            edges.coalesce(1).mapInPandas(
+                functools.partial(_union_find, limit=limit, seen=seen),
+                f"entity {node_type}, component {node_type}",
+            ),
+            "components",
+        )
+        if limit is None or seen.value <= limit:
+            stats["n_nodes"] = seen.value
+            stats["broadcast_labels"] = True
+            stats["n_checkpoints"] = 1
+            stats["iters"].append(
+                {"it": 1, "sec": round(time.time() - t0, 3), "ckpt": True}
+            )
+            return comps
+        # past the threshold: the abandoned pass wrote an empty table
+        shutil.rmtree(f"{stage_dir}/components", ignore_errors=True)
+
     t0 = time.time()
     from pyspark import StorageLevel
 
-    # the symmetric edge table is loop-INVARIANT: persist it instead of
-    # the round-5 parquet round-trip (round 6; guide §1.2 — same shape,
-    # one write job fewer; its plan is shallow so no lineage hazard, and
-    # MEMORY_AND_DISK spills rather than drops, so every iteration reads
-    # the same materialized snapshot).  Iteration checkpoints below stay
-    # parquet — the label self-joins quadruple the logical plan per
-    # iteration, which only a real lineage cut resets.
+    # the symmetric edge table is loop-INVARIANT: persist it (released
+    # before return — the result is parquet-backed); iteration
+    # checkpoints below stay parquet — the label self-joins quadruple
+    # the logical plan per iteration, which only a real lineage cut
+    # resets.
     sym = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
     sym = sym.repartition("a").persist(StorageLevel.MEMORY_AND_DISK)
     sym.count()
     stats["sym_sec"] = round(time.time() - t0, 3)
 
-    if max_iter < 1:
-        # zero iterations: every node is its own component
-        labels = _roundtrip(
-            sym.select(F.col("a").alias("node"))
-            .distinct()
-            .withColumn("label", F.col("node")),
-            "labels_init",
-        )
-        return labels.select(
-            F.col("node").alias("entity"), F.col("label").alias("component")
-        )
-
     # iteration 1 fused into init: with label(v)=v, the first hash-min
     # step is label(v) ← min(v, min neighbor id) — ONE aggregate over
     # the symmetric edge table, no join (saves a full join round).
-    # Persisted, not parquet (round 6): the one count below both
-    # materializes it and decides the policies — one job total.
+    # Persisted, not parquet: the one count below both materializes it
+    # and sizes the policies — one job total.
     t0 = time.time()
-    labels = (
+    init = (
         sym.groupBy(F.col("a").alias("node")).agg(
             # min("a") is the group key itself (constant per group)
             F.least(F.min("a"), F.min("b")).alias("label")
         )
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    n_nodes = labels.count()
+    n_nodes = init.count()
     stats["n_nodes"] = n_nodes
     if checkpoint_every is None:
         checkpoint_every = checkpoint_policy(n_nodes)
-    if broadcast_labels is None:
-        broadcast_labels = n_nodes <= BROADCAST_AUTO_THRESHOLD
     checkpoint_every = max(1, checkpoint_every)
     stats["checkpoint_every"] = checkpoint_every
-    stats["broadcast_labels"] = bool(broadcast_labels)
+    stats["broadcast_labels"] = False
     stats["init_sec"] = round(time.time() - t0, 3)
 
+    labels = init
     final_name = "labels_init"
     n_ckpt = 0
     cached: list[DataFrame] = []
@@ -225,17 +283,13 @@ def connected_components(
     changed_any = F.lit(False)
     for _it in range(1, max_iter + 1):
         it_t0 = time.time()
-        # (1) hash-min: pull the minimum neighbor label.  Small graphs
-        # broadcast the label table — edges are scanned map-side, never
-        # exchanged; big graphs shuffle both sides on the node id.
-        lbl_side = F.broadcast(labels) if broadcast_labels else labels
+        # (1) hash-min: pull the minimum neighbor label; both sides
+        # shuffle on the node id.
         neighbor_min = (
-            sym.join(lbl_side, sym.b == labels.node)
+            sym.join(labels, sym.b == labels.node)
             .groupBy(F.col("a").alias("node2"))
             .agg(F.min("label").alias("nbr_label"))
         )
-        if broadcast_labels:
-            neighbor_min = F.broadcast(neighbor_min)
         stepped = labels.join(
             neighbor_min, labels.node == F.col("node2"), "left"
         ).select(
@@ -256,8 +310,6 @@ def connected_components(
         parent = stepped.select(
             F.col("node").alias("p_node"), F.col("label").alias("p_label")
         )
-        if broadcast_labels:
-            parent = F.broadcast(parent)
         jumped = (
             stepped.join(parent, stepped.label == F.col("p_node"), "left")
             .select(
@@ -303,6 +355,10 @@ def connected_components(
             stats["iters"].append(
                 {"it": _it, "sec": round(time.time() - it_t0, 3), "ckpt": False}
             )
+    # the result is backed by the final parquet checkpoint: release the
+    # loop-invariant persists
+    sym.unpersist()
+    init.unpersist()
 
     # drop the intermediates that don't back the returned DataFrame
     # (the final checkpoint stays — it IS the result)

@@ -16,10 +16,11 @@ DBSCAN arbitrariness (border claimed by several clusters) is resolved
 deterministically to the MINIMUM cluster id.
 
 Scale: degree count is one aggregate over the (pair-sized) symmetric
-edge list; clustering runs only on CORE-CORE edges via the hash-min CC
-loop (canonical.connected_components — broadcast labels, parquet
-lineage truncation); border assignment is one join from the symmetric
-edges to the core-cluster table.  Nothing touches the corpus again.
+edge list; clustering runs only on CORE-CORE edges via
+canonical.connected_components (one single-task union-find pass while
+the core set is broadcast-sized); border assignment is one join from
+the symmetric edges to the core-cluster table.  Nothing touches the
+corpus again.
 """
 
 from __future__ import annotations

@@ -14,7 +14,7 @@ DataFrames:
    edit-distance evaluation, then ``levenshtein ≤ max_dist``.
 2. feed the surviving pairs to
    :func:`~ddaugner_spark.operators.canonical.connected_components`
-   (hash-min label propagation) → a ``surface → canonical surface``
+   (min-member component labels) → a ``surface → canonical surface``
    rewrite map, broadcast back over mentions/triples.
 
 Scale notes: the self-join runs on the DISTINCT-SURFACE table (the
@@ -116,7 +116,7 @@ def er_candidate_pairs(
 
 def resolve_surfaces(pairs: DataFrame, stage_dir: str) -> DataFrame:
     """ER pairs → (surface, canonical, is_alias): connected components
-    over the pair graph (hash-min label propagation, the same operator
+    over the pair graph (min-member labels, the same operator
     that canonicalizes near-dup document clusters), canonical = the
     lexicographically smallest surface of each cluster.  The CC runs on
     the PAIR graph (vocabulary-scale), never on mentions."""

@@ -1537,8 +1537,8 @@ def hub_robustness(
 
     Edges are distinct a < b strings.  One degree aggregate picks the
     hubs (top-k window on the node-sized table); the filtered graph is
-    two hash anti-joins; components come from the same hash-min CC
-    operator the canonicalizer uses, so the probe exercises the
+    two hash anti-joins; components come from the same CC operator
+    the canonicalizer uses, so the probe exercises the
     production path twice on graph-sized inputs.
     """
     from pyspark.sql import Window

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import json
 import os
+import tempfile
 import time
 from dataclasses import dataclass, field, asdict
 from typing import Callable, Dict, List, Optional
@@ -165,11 +166,13 @@ class KGPipeline:
         m = mentions.mentions_df(docs)
         # CC checkpoints live under the pipeline's own output tree (the
         # returned DataFrame is lazily backed by the final one — a bare
-        # tempdir would leak for the life of the box); consumed before
-        # the next triples_for call, which overwrites it
+        # tempdir would leak for the life of the box), one dir per call
+        # so results held from earlier calls stay intact
+        cc_root = os.path.join(self.out_dir, "_cc")
+        os.makedirs(cc_root, exist_ok=True)
         comps = canonical.connected_components(
             canonical.co_mention_edges(m),
-            stage_dir=os.path.join(self.out_dir, "_cc", "adhoc"),
+            stage_dir=tempfile.mkdtemp(prefix="adhoc_", dir=cc_root),
         )
         return canonical.canonicalize_triples(t, comps).select(
             "doc_id",
