@@ -11,12 +11,13 @@ the label table (one row per node):
 
 * **single-task union-find** (≤ :data:`BROADCAST_AUTO_THRESHOLD`
   nodes): the edges stream through one
-  ``coalesce(1).mapInPandas`` kernel — union by smaller root, path
+  ``repartition(1).mapInPandas`` kernel — union by smaller root, path
   compression — that emits ``(entity, component = min member)`` into
-  ONE parquet table.  One Spark job in place of the loop's ~10 per
-  round: on small graphs the job floor, not the data, was the cost.
-  The kernel counts distinct nodes as it streams and stops past the
-  threshold, so the branch test needs no separate counting job;
+  ONE parquet table.  Two Spark jobs in place of the loop's ~10 per
+  round (on small graphs the job floor, not the data, was the cost):
+  the count that sizes the label table, then the kernel.  The
+  exchange into the single task keeps the stages that feed it
+  parallel;
 
 * **distributed hash-min + pointer jumping** (larger label tables, or
   ``broadcast_labels=False``) — a driver loop with bounded lineage::
@@ -40,7 +41,6 @@ lexicographically smallest member of its component.
 
 from __future__ import annotations
 
-import functools
 import shutil
 import tempfile
 import time
@@ -105,14 +105,11 @@ def checkpoint_policy(
 BROADCAST_AUTO_THRESHOLD = 2_000_000
 
 
-def _union_find(batches, limit, seen):
+def _union_find(batches):
     """Single-task connected components over streamed ``(a, b)`` edge
     batches: union by smaller root (so every root IS its set's minimum
     member) with path compression; emits ``(entity, component)`` for
-    every node.  With ``limit`` set, stops as soon as more than
-    ``limit`` distinct nodes have been seen and emits nothing; either
-    way the accumulator ``seen`` receives the number of nodes seen, so
-    the driver can tell a finished pass from an abandoned one."""
+    every node."""
     import pandas as pd
 
     parent: dict = {}
@@ -134,10 +131,6 @@ def _union_find(batches, limit, seen):
                 if rv < ru:
                     ru, rv = rv, ru
                 parent[rv] = ru
-        if limit is not None and len(parent) > limit:
-            seen.add(len(parent))
-            return
-    seen.add(len(parent))
     nodes = list(parent)
     yield pd.DataFrame(
         {"entity": nodes, "component": [find(n) for n in nodes]}, dtype="object"
@@ -162,11 +155,11 @@ def connected_components(
     lifetime of the result; pass an explicit ``stage_dir`` to control
     that lifetime (the pipeline does).  Nothing stays persisted.
 
-    ``broadcast_labels`` picks the branch (module docstring).  Default
-    (None) is auto: the union-find kernel while the graph has ≤
-    :data:`BROADCAST_AUTO_THRESHOLD` nodes — the kernel itself counts
-    them, and gives up past the threshold, falling back to the loop.
-    ``True`` runs the kernel at any size; ``False`` runs the loop.
+    ``broadcast_labels`` picks the branch (module docstring).  None or
+    True is auto: the union-find kernel while the label table has ≤
+    :data:`BROADCAST_AUTO_THRESHOLD` nodes, the loop above that; the
+    node count is the one the loop's init step takes anyway, so the big
+    graph pays nothing for the branch test.  ``False`` runs the loop.
 
     Loop-branch knobs: ``max_iter`` bounds the rounds (the kernel always
     reaches the fixpoint; ``max_iter`` < 1 returns singleton components
@@ -214,35 +207,9 @@ def connected_components(
             "labels_init",
         )
 
-    if broadcast_labels is not False:
-        # one job: stream the edges through a single-task union-find
-        # (sequential pointer-chasing is exactly the "semantics demand
-        # it" case for the sanctioned iterator mapInPandas form)
-        t0 = time.time()
-        seen = spark.sparkContext.accumulator(0)
-        limit = None if broadcast_labels else BROADCAST_AUTO_THRESHOLD
-        node_type = edges.schema["a"].dataType.simpleString()
-        comps = _roundtrip(
-            edges.coalesce(1).mapInPandas(
-                functools.partial(_union_find, limit=limit, seen=seen),
-                f"entity {node_type}, component {node_type}",
-            ),
-            "components",
-        )
-        if limit is None or seen.value <= limit:
-            stats["n_nodes"] = seen.value
-            stats["broadcast_labels"] = True
-            stats["n_checkpoints"] = 1
-            stats["iters"].append(
-                {"it": 1, "sec": round(time.time() - t0, 3), "ckpt": True}
-            )
-            return comps
-        # past the threshold: the abandoned pass wrote an empty table
-        shutil.rmtree(f"{stage_dir}/components", ignore_errors=True)
-
-    t0 = time.time()
     from pyspark import StorageLevel
 
+    t0 = time.time()
     # the symmetric edge table is loop-INVARIANT: persist it (released
     # before return — the result is parquet-backed); iteration
     # checkpoints below stay parquet — the label self-joins quadruple
@@ -250,15 +217,12 @@ def connected_components(
     # resets.
     sym = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
     sym = sym.repartition("a").persist(StorageLevel.MEMORY_AND_DISK)
-    sym.count()
-    stats["sym_sec"] = round(time.time() - t0, 3)
 
     # iteration 1 fused into init: with label(v)=v, the first hash-min
     # step is label(v) ← min(v, min neighbor id) — ONE aggregate over
     # the symmetric edge table, no join (saves a full join round).
-    # Persisted, not parquet: the one count below both materializes it
-    # and sizes the policies — one job total.
-    t0 = time.time()
+    # Persisted, not parquet: the one count below materializes it and
+    # sym, and sizes the label table for the branch — one job total.
     init = (
         sym.groupBy(F.col("a").alias("node")).agg(
             # min("a") is the group key itself (constant per group)
@@ -267,12 +231,37 @@ def connected_components(
     ).persist(StorageLevel.MEMORY_AND_DISK)
     n_nodes = init.count()
     stats["n_nodes"] = n_nodes
+    stats["init_sec"] = round(time.time() - t0, 3)
+
+    if broadcast_labels is not False and n_nodes <= BROADCAST_AUTO_THRESHOLD:
+        # one job: stream each undirected edge once through a single-task
+        # union-find (sequential pointer-chasing is exactly the "semantics
+        # demand it" case for the sanctioned iterator mapInPandas form).
+        # repartition, not coalesce: the exchange keeps the stages that
+        # feed it parallel instead of folding them into the one task
+        init.unpersist()
+        node_type = edges.schema["a"].dataType.simpleString()
+        comps = _roundtrip(
+            sym.where(F.col("a") <= F.col("b"))
+            .repartition(1)
+            .mapInPandas(
+                _union_find, f"entity {node_type}, component {node_type}"
+            ),
+            "components",
+        )
+        sym.unpersist()
+        stats["broadcast_labels"] = True
+        stats["n_checkpoints"] = 1
+        stats["iters"].append(
+            {"it": 1, "sec": round(time.time() - t0, 3), "ckpt": True}
+        )
+        return comps
+
     if checkpoint_every is None:
         checkpoint_every = checkpoint_policy(n_nodes)
     checkpoint_every = max(1, checkpoint_every)
     stats["checkpoint_every"] = checkpoint_every
     stats["broadcast_labels"] = False
-    stats["init_sec"] = round(time.time() - t0, 3)
 
     labels = init
     final_name = "labels_init"

@@ -26,8 +26,10 @@ parquet scan, so a resumed run reads only unfinished data.
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
 import tempfile
 import time
 from dataclasses import dataclass, field, asdict
@@ -158,7 +160,11 @@ class KGPipeline:
 
     # -- the dataflow -----------------------------------------------------
     def triples_for(self, pages: DataFrame) -> DataFrame:
-        """The logical plan for one partition's pages (lazy)."""
+        """The logical plan for one partition's pages (lazy).
+
+        Each call checkpoints its connected components into its own
+        ``_cc/adhoc_*`` dir under ``out_dir``, which backs the result;
+        the dir is removed when the process exits."""
         docs = pages.select(
             "doc_id", extract_text(F.col("html")).alias("text")
         )
@@ -167,12 +173,14 @@ class KGPipeline:
         # CC checkpoints live under the pipeline's own output tree (the
         # returned DataFrame is lazily backed by the final one — a bare
         # tempdir would leak for the life of the box), one dir per call
-        # so results held from earlier calls stay intact
+        # so results held from earlier calls stay intact; like
+        # connected_components' own temp dirs, each lives until exit
         cc_root = os.path.join(self.out_dir, "_cc")
         os.makedirs(cc_root, exist_ok=True)
+        cc_dir = tempfile.mkdtemp(prefix="adhoc_", dir=cc_root)
+        atexit.register(shutil.rmtree, cc_dir, ignore_errors=True)
         comps = canonical.connected_components(
-            canonical.co_mention_edges(m),
-            stage_dir=tempfile.mkdtemp(prefix="adhoc_", dir=cc_root),
+            canonical.co_mention_edges(m), stage_dir=cc_dir
         )
         return canonical.canonicalize_triples(t, comps).select(
             "doc_id",

@@ -77,13 +77,10 @@ def test_kernel_matches_loop_on_random_graphs(spark, tmp_path):
     assert kernel == loop == _components(rows)
 
 
-def test_kernel_matches_loop_on_empty_and_zero_iterations(spark, tmp_path):
+def test_kernel_matches_loop_on_empty_table(spark, tmp_path):
     empty = spark.createDataFrame([], "a string, b string")
     kernel, loop, st = _both(empty, tmp_path)
     assert kernel == loop == set() and st["n_nodes"] == 0
-    e = spark.createDataFrame([("a", "b"), ("b", "c"), ("x", "y")], "a string, b string")
-    kernel, loop, _ = _both(e, tmp_path / "zero", max_iter=0)
-    assert kernel == loop == {(n, n) for n in "abcxy"}
 
 
 def test_kernel_matches_loop_on_co_mention_graph(spark, docs, tmp_path):
@@ -93,10 +90,11 @@ def test_kernel_matches_loop_on_co_mention_graph(spark, docs, tmp_path):
     assert st["n_nodes"] == len(kernel)
 
 
-def test_kernel_gives_up_past_threshold(spark, tmp_path, monkeypatch):
-    """Auto mode: a graph with more nodes than the threshold abandons
-    the kernel pass and runs the loop, with the same labels."""
-    monkeypatch.setattr(canonical, "BROADCAST_AUTO_THRESHOLD", 3)
+@pytest.mark.parametrize("broadcast_labels", [None, True])
+def test_auto_runs_loop_past_threshold(spark, tmp_path, monkeypatch, broadcast_labels):
+    """None and True are both auto: a graph with more nodes than the
+    threshold runs the loop, with the same labels."""
+    monkeypatch.setattr(canonical, "BROADCAST_AUTO_THRESHOLD", 5)
     e = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("x", "y"), ("y", "z")], "a string, b string"
     )
@@ -104,7 +102,8 @@ def test_kernel_gives_up_past_threshold(spark, tmp_path, monkeypatch):
     got = {
         tuple(r)
         for r in canonical.connected_components(
-            e, stage_dir=str(tmp_path / "cc"), stats=st
+            e, stage_dir=str(tmp_path / "cc"), broadcast_labels=broadcast_labels,
+            stats=st,
         ).collect()
     }
     assert got == {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x"), ("z", "x")}
