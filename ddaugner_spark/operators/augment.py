@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import config
+from ..plans.materialize import cut, scratch_dir
 from .mentions import with_bio
 
 
@@ -138,29 +139,18 @@ def balance_upsample(
     corpus is read three times (post counts + per-class upsampling).
     """
     import math
-    import tempfile
 
     from .mentions import mentions_df
 
     aug = augment_standard(docs, freq=freq, modulus=modulus)
-    if stage_dir is None:
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_balance_")
-        # the returned corpus stays lazily backed by this staging dir;
-        # remove it at process exit so no-stage_dir callers don't leak
-        import atexit
-        import shutil
-
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-    aug.write.mode("overwrite").parquet(f"{stage_dir}/aug")
-    aug = docs.sparkSession.read.parquet(f"{stage_dir}/aug")
+    stage_dir = scratch_dir(stage_dir, "ddaugner_balance_")
+    aug = cut(aug, f"{stage_dir}/aug")
 
     pre = {
         r["tag"]: r["n"]
         for r in mentions_df(docs).groupBy("tag").agg(F.count("*").alias("n")).collect()
     }
-    m_aug_df = mentions_df(aug)
-    m_aug_df.write.mode("overwrite").parquet(f"{stage_dir}/m_aug")
-    m_aug_df = docs.sparkSession.read.parquet(f"{stage_dir}/m_aug")
+    m_aug_df = cut(mentions_df(aug), f"{stage_dir}/m_aug")
     post = {
         r["tag"]: r["n"]
         for r in m_aug_df.groupBy("tag").agg(F.count("*").alias("n")).collect()

@@ -37,11 +37,10 @@ fold's first step always appends unconditionally.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ddaugner_spark.plans.materialize import cut, scratch_dir
 
 
 def apply_merge(toks, p1: str, p2: str):
@@ -68,25 +67,15 @@ def _bpe_loop(
 ):
     """Shared train/encode core: returns (merges list, final word
     table) — the merge loop documented on bpe_train."""
-    spark = vocab.sparkSession
-    own_dir = stage_dir is None
-    if own_dir:
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_bpe_")
-        import atexit
+    stage_dir = scratch_dir(stage_dir, "ddaugner_bpe_")
 
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-
-    def _rt(df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-        return spark.read.parquet(f"{stage_dir}/{name}")
-
-    words = _rt(
+    words = cut(
         vocab.select(
             F.col("token").alias("word"),
             F.col("n").cast("long").alias("freq"),
             F.split(F.col("token"), "").alias("toks"),
         ),
-        "v0",
+        f"{stage_dir}/v0",
     )
     merges = []
     for k in range(1, n_merges + 1):
@@ -130,11 +119,11 @@ def _bpe_loop(
         llen = int(best[20:24])
         lhs, rhs = best[25 : 25 + llen], best[25 + llen :]
         merges.append((k, lhs, rhs, cnt))
-        words = _rt(
+        words = cut(
             words.select(
                 "word", "freq", apply_merge(F.col("toks"), lhs, rhs).alias("toks")
             ),
-            f"v{k}",
+            f"{stage_dir}/v{k}",
         )
     return merges, words
 

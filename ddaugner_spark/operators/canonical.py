@@ -42,11 +42,12 @@ lexicographically smallest member of its component.
 from __future__ import annotations
 
 import shutil
-import tempfile
 import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ddaugner_spark.plans.materialize import cut, scratch_dir
 
 
 def co_mention_edges(mentions: DataFrame) -> DataFrame:
@@ -60,38 +61,6 @@ def co_mention_edges(mentions: DataFrame) -> DataFrame:
         .select("a", "b")
         .distinct()
     )
-
-
-#: retained for API compatibility with the retired k=3 branch (below);
-#: no longer switches behavior.
-CHECKPOINT_AUTO_THRESHOLD = 2_000_000
-
-
-def checkpoint_policy(
-    n_nodes: int, threshold: int = CHECKPOINT_AUTO_THRESHOLD
-) -> int:
-    """checkpoint_every for a label table of ``n_nodes`` rows — ALWAYS
-    1 since round 5.  The round-4 policy batched 3 iterations between
-    checkpoints for large tables on the theory that write bandwidth
-    would dominate; the 6M-node / 5.9M-edge synthetic measurement
-    (VERDICT r4 #7, local[32], quiet box) refuted it:
-
-    * k=1 → **54.4 s**, converged in 6 iterations (6 checkpoints;
-      per-iteration walls 6.6-9.2 s, n_changed halving 5.8M → 0 —
-      the pointer-jumping payoff: plain hash-min needs ~chain-length
-      rounds, measured here at log₂(64) = 6);
-    * k=3 → **102.3 s**, 9 iterations: each 3-deep lazy chain costs
-      ~29 s ≈ 3× a materialized iteration (the cached intermediates
-      still recompute the join work inside one DAG) AND convergence is
-      only visible at checkpoints, so a full extra 3-batch runs after
-      the fixed point;
-    * small graphs agreed already (sf0.1 co-mention table, ~10³
-      labels: k=1 → 2.25 s vs k=3 → 3.6-4.1 s).
-
-    Per-iteration parquet materialization is ~2 s of the 7-9 s
-    iteration at 6M rows — writes were never the bottleneck; join
-    recompute is."""
-    return 1
 
 
 #: per-node table row count up to which a table counts as executor-
@@ -141,7 +110,6 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
     stage_dir: str | None = None,
-    checkpoint_every: int | None = None,
     broadcast_labels: bool | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -163,11 +131,8 @@ def connected_components(
 
     Loop-branch knobs: ``max_iter`` bounds the rounds (the kernel always
     reaches the fixpoint; ``max_iter`` < 1 returns singleton components
-    on both branches).  ``checkpoint_every`` parquet-materializes the
-    label table every k-th round and memory-caches it in between
-    (convergence is checked only at checkpoints, so up to k − 1 extra
-    idempotent rounds may run); None resolves via
-    :func:`checkpoint_policy`, which is 1.  The loop broadcasts
+    on both branches); every round parquet-materializes the label
+    table and checks convergence.  The loop broadcasts
     nothing: it runs for label tables too big to broadcast (or on
     request), so both join sides of a round exchange on the node id.
 
@@ -175,24 +140,12 @@ def connected_components(
     (the kernel ran), ``n_nodes``, per-round ``iters`` walls (one entry
     for the kernel pass) and ``n_checkpoints``.
     """
-    spark = edges.sparkSession
     if stats is None:
         stats = {}
     stats["iters"] = []
     stats["n_checkpoints"] = 0
     own_dir = stage_dir is None
-    if own_dir:
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_cc_")
-        # the result stays lazily backed by the final checkpoint, so the
-        # dir must outlive this call — but not the process: without this
-        # every no-stage_dir caller leaks one /tmp dir per invocation
-        import atexit
-
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-
-    def _roundtrip(df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-        return spark.read.parquet(f"{stage_dir}/{name}")
+    stage_dir = scratch_dir(stage_dir, "ddaugner_cc_")
 
     edges = edges.select("a", "b").where(
         F.col("a").isNotNull() & F.col("b").isNotNull()
@@ -202,9 +155,9 @@ def connected_components(
         nodes = edges.select(F.col("a").alias("entity")).union(
             edges.select(F.col("b").alias("entity"))
         )
-        return _roundtrip(
+        return cut(
             nodes.distinct().withColumn("component", F.col("entity")),
-            "labels_init",
+            f"{stage_dir}/labels_init",
         )
 
     from pyspark import StorageLevel
@@ -241,13 +194,13 @@ def connected_components(
         # feed it parallel instead of folding them into the one task
         init.unpersist()
         node_type = edges.schema["a"].dataType.simpleString()
-        comps = _roundtrip(
+        comps = cut(
             sym.where(F.col("a") <= F.col("b"))
             .repartition(1)
             .mapInPandas(
                 _union_find, f"entity {node_type}, component {node_type}"
             ),
-            "components",
+            f"{stage_dir}/components",
         )
         sym.unpersist()
         stats["broadcast_labels"] = True
@@ -257,19 +210,11 @@ def connected_components(
         )
         return comps
 
-    if checkpoint_every is None:
-        checkpoint_every = checkpoint_policy(n_nodes)
-    checkpoint_every = max(1, checkpoint_every)
-    stats["checkpoint_every"] = checkpoint_every
     stats["broadcast_labels"] = False
 
     labels = init
     final_name = "labels_init"
     n_ckpt = 0
-    cached: list[DataFrame] = []
-    # `changed` accumulates (OR) across the iterations since the last
-    # checkpoint; evaluated only when we materialize.
-    changed_any = F.lit(False)
     for _it in range(1, max_iter + 1):
         it_t0 = time.time()
         # (1) hash-min: pull the minimum neighbor label; both sides
@@ -286,7 +231,7 @@ def connected_components(
             F.least(
                 F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
             ).alias("label"),
-            (changed_any | (F.col("nbr_label") < F.col("label"))).alias("changed"),
+            (F.col("nbr_label") < F.col("label")).alias("changed"),
         )
         # (2) pointer jumping: label(v) ← label(label(v)).  Min-propagation
         # alone needs O(diameter) rounds (a length-L chain takes L
@@ -312,38 +257,20 @@ def connected_components(
                 ).alias("changed"),
             )
         )
-        if _it % checkpoint_every == 0 or _it == max_iter:
-            # alternate A/B dirs so a crashed write never clobbers the
-            # last good checkpoint (restartable at checkpoint granularity)
-            final_name = f"labels_{n_ckpt % 2}"
-            jumped = _roundtrip(jumped, final_name)
-            n_ckpt += 1
-            stats["n_checkpoints"] = n_ckpt
-            n_changed = jumped.filter(F.col("changed")).count()
-            for c in cached:
-                c.unpersist()
-            cached = []
-            labels = jumped.select("node", F.col("new_label").alias("label"))
-            changed_any = F.lit(False)
-            stats["iters"].append(
-                {"it": _it, "sec": round(time.time() - it_t0, 3),
-                 "ckpt": True, "n_changed": n_changed}
-            )
-            if n_changed == 0:
-                break
-        else:
-            # cache the (tiny) intermediate label table so the next
-            # iteration reads it instead of re-running this one inside
-            # its own DAG; carry `changed` forward for the checkpoint
-            jumped = jumped.cache()
-            cached.append(jumped)
-            labels = jumped.select(
-                "node", F.col("new_label").alias("label"), "changed"
-            )
-            changed_any = F.col("changed")
-            stats["iters"].append(
-                {"it": _it, "sec": round(time.time() - it_t0, 3), "ckpt": False}
-            )
+        # alternate A/B dirs so a crashed write never clobbers the
+        # last good checkpoint (restartable at checkpoint granularity)
+        final_name = f"labels_{n_ckpt % 2}"
+        jumped = cut(jumped, f"{stage_dir}/{final_name}")
+        n_ckpt += 1
+        stats["n_checkpoints"] = n_ckpt
+        n_changed = jumped.filter(F.col("changed")).count()
+        labels = jumped.select("node", F.col("new_label").alias("label"))
+        stats["iters"].append(
+            {"it": _it, "sec": round(time.time() - it_t0, 3),
+             "ckpt": True, "n_changed": n_changed}
+        )
+        if n_changed == 0:
+            break
     # the result is backed by the final parquet checkpoint: release the
     # loop-invariant persists
     sym.unpersist()
@@ -421,38 +348,28 @@ def strongly_connected_components(
     core.  Raises after ``max_peel_rounds`` (an SCC "chain" deeper than
     that means the graph wants the recursive refinement).
     """
-    spark = edges.sparkSession
     if stats is None:
         stats = {}
     stats["peels"] = []
-    own_dir = stage_dir is None
-    if own_dir:
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_scc_")
-        import atexit
+    stage_dir = scratch_dir(stage_dir, "ddaugner_scc_")
 
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-
-    def _rt(df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-        return spark.read.parquet(f"{stage_dir}/{name}")
-
-    e = _rt(
+    e = cut(
         edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).distinct(),
-        "edges",
+        f"{stage_dir}/edges",
     )
-    active = _rt(
+    active = cut(
         e.select(F.col("s").alias("node"))
         .union(e.select(F.col("d").alias("node")))
         .distinct(),
-        "active",
+        f"{stage_dir}/active",
     )
 
     def _min_fixpoint(edges_df: DataFrame, out_col: str, tag: str) -> DataFrame:
         """Propagate min labels along edges (s -> d for 'f', reversed
         for 'b') within the active subgraph until fixpoint."""
         s_col, d_col = ("s", "d") if out_col == "f" else ("d", "s")
-        lab = _rt(
-            active.select("node", F.col("node").alias("lbl")), f"{tag}_it0"
+        lab = cut(
+            active.select("node", F.col("node").alias("lbl")), f"{stage_dir}/{tag}_it0"
         )
         for it in range(max_fix_rounds):
             t0 = time.time()
@@ -470,7 +387,7 @@ def strongly_connected_components(
                     "chg"
                 ),
             )
-            merged = _rt(merged, f"{tag}_it{it + 1}")
+            merged = cut(merged, f"{stage_dir}/{tag}_it{it + 1}")
             n_chg = merged.filter("chg").count()
             lab = merged.select("node", "lbl")
             stats["peels"].append(
@@ -491,25 +408,27 @@ def strongly_connected_components(
         f = _min_fixpoint(e, "f", f"r{rnd}_f")
         b = _min_fixpoint(e, "b", f"r{rnd}_b")
         fb = f.join(b, "node")
-        done = _rt(
+        done = cut(
             fb.filter(F.col("f") == F.col("b")).select(
                 "node", F.col("f").alias("scc_id")
             ),
-            f"done_r{rnd}",
+            f"{stage_dir}/done_r{rnd}",
         )
         parts.append(done)
-        remaining = _rt(active.join(done, "node", "left_anti"), f"active_r{rnd}")
+        remaining = cut(
+            active.join(done, "node", "left_anti"), f"{stage_dir}/active_r{rnd}"
+        )
         n_remaining = remaining.count()
         stats["peels"].append({"round": rnd, "remaining": n_remaining})
         if n_remaining == 0:
             active = remaining
             break
         active = remaining
-        e = _rt(
+        e = cut(
             e.join(
                 active.select(F.col("node").alias("s")), "s", "left_semi"
             ).join(active.select(F.col("node").alias("d")), "d", "left_semi"),
-            f"edges_r{rnd}",
+            f"{stage_dir}/edges_r{rnd}",
         )
     else:
         raise RuntimeError(
@@ -519,7 +438,7 @@ def strongly_connected_components(
     out = parts[0]
     for p in parts[1:]:
         out = out.union(p)
-    return _rt(out, "scc_final")
+    return cut(out, f"{stage_dir}/scc_final")
 
 
 def connected_components_star(
@@ -568,20 +487,10 @@ def connected_components_star(
     round-trip per round under ``stage_dir``, results invariant under
     repartition.
     """
-    import atexit
-    import shutil
-
-    spark = edges.sparkSession
     if stats is None:
         stats = {}
     stats["rounds"] = []
-    if stage_dir is None:
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_ccstar_")
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-
-    def _rt(df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-        return spark.read.parquet(f"{stage_dir}/{name}")
+    stage_dir = scratch_dir(stage_dir, "ddaugner_ccstar_")
 
     def _sig(e: DataFrame):
         row = e.agg(
@@ -620,19 +529,20 @@ def connected_components_star(
             .distinct()
         )
 
-    nodes = _rt(
+    nodes = cut(
         edges.select(F.col("a").alias("entity"))
         .unionByName(edges.select(F.col("b").alias("entity")))
         .distinct(),
-        "nodes",
+        f"{stage_dir}/nodes",
     )
-    e = _rt(
-        edges.select("a", "b").where(F.col("a") != F.col("b")).distinct(), "e_0"
+    e = cut(
+        edges.select("a", "b").where(F.col("a") != F.col("b")).distinct(),
+        f"{stage_dir}/e_0",
     )
     sig = _sig(e)
     for it in range(1, max_iter + 1):
         t0 = time.time()
-        e = _rt(small_star(large_star(e)), f"e_{it % 2 + 1}")
+        e = cut(small_star(large_star(e)), f"{stage_dir}/e_{it % 2 + 1}")
         new_sig = _sig(e)
         stats["rounds"].append(
             {"round": it, "sec": round(time.time() - t0, 3), "n_edges": new_sig[0]}
@@ -642,9 +552,9 @@ def connected_components_star(
         sig = new_sig
     # fixpoint: e is (child, root) star edges; roots label themselves
     labels = e.select(F.col("a").alias("entity"), F.col("b").alias("component"))
-    return _rt(
+    return cut(
         nodes.join(labels, "entity", "left").select(
             "entity", F.coalesce("component", F.col("entity")).alias("component")
         ),
-        "labels_final",
+        f"{stage_dir}/labels_final",
     )

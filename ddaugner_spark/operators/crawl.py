@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ddaugner_spark.plans.materialize import cut, scratch_dir
+
 #: ports implied by the scheme — stripped during canonicalization;
 #: every other explicit port is load-bearing and kept.
 DEFAULT_PORTS = {"http": "80", "https": "443"}
@@ -341,31 +343,21 @@ def resolve_redirects(
     a chain length, so it is withheld rather than reported.  Parquet
     round-trips per round keep plan depth constant (the CC/LPA
     idiom)."""
-    import atexit
     import os
-    import shutil
-    import tempfile
     import time
 
     spark = redirects.sparkSession
     if stats is None:
         stats = {}
     stats["rounds"] = []
-    own_dir = stage_dir is None
-    if own_dir:
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_redir_")
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-
-    def _roundtrip(df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-        return spark.read.parquet(f"{stage_dir}/{name}")
+    stage_dir = scratch_dir(stage_dir, "ddaugner_redir_")
 
     settled_dir = f"{stage_dir}/settled"
-    active = _roundtrip(
+    active = cut(
         redirects.select("src", "dst").distinct().withColumn(
             "hops", F.lit(1).cast("long")
         ),
-        "active_init",
+        f"{stage_dir}/active_init",
     )
     have_settled = False
     for _round in range(1, max_jumps + 1):
@@ -380,7 +372,7 @@ def resolve_redirects(
             F.col("dst").alias("_d2"),
             F.col("hops").alias("_h2"),
         )
-        jumped = _roundtrip(
+        jumped = cut(
             active.join(hop, active.dst == hop._s2, "left").select(
                 "src",
                 F.coalesce("_d2", "dst").alias("dst"),
@@ -389,7 +381,7 @@ def resolve_redirects(
                 .alias("hops"),
                 F.col("_s2").isNotNull().alias("_moved"),
             ),
-            f"j_{_round % 2}",
+            f"{stage_dir}/j_{_round % 2}",
         )
         newly_settled = jumped.filter(~F.col("_moved")).drop("_moved")
         if newly_settled.limit(1).count() > 0:

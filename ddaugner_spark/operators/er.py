@@ -36,10 +36,10 @@ distance, 'kitten'→'sitting' = 3 on both engines).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ddaugner_spark.plans.materialize import cut, scratch_dir
 
 
 def distinct_surfaces(
@@ -444,14 +444,8 @@ def _er_eval_cells(
     )
     from .canonical import connected_components
 
-    if stage_dir is None:
-        # one dir for both CC runs, reclaimed at exit (the /tmp-hygiene
-        # contract — no leaked dir per invocation)
-        import atexit
-        import shutil
-
-        stage_dir = tempfile.mkdtemp(prefix=prefix)
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
+    # one dir for both CC runs
+    stage_dir = scratch_dir(stage_dir, prefix)
     gold_cc = connected_components(truth_edges, stage_dir=f"{stage_dir}/gold")
     pred_cc = connected_components(pred_edges, stage_dir=f"{stage_dir}/pred")
     r = (
@@ -1072,9 +1066,7 @@ def vi_cluster_eval(
     tree over the quantized folds.  0 ≤ VI ≤ ln n.
     """
     cells = _er_eval_cells(surfaces, max_dist, stage_dir, "ddaugner_vi_")
-    from ddaugner_spark.plans.materialize import roundtrip_small
-
-    cells = roundtrip_small(cells, stage_dir, "ddaugner_vi_cells_")
+    cells = cut(cells, f"{scratch_dir(stage_dir, 'ddaugner_vi_cells_')}/cells")
     psz = cells.groupBy("p").agg(F.sum("i").cast("long").alias("s"))
     gsz = cells.groupBy("g").agg(F.sum("i").cast("long").alias("s"))
     n_row = cells.agg(F.sum("i").cast("long").alias("n"))
@@ -1151,15 +1143,12 @@ def fs_em_weights(
     Scale: the corpus-sized work is one hash aggregate; EM runs on
     2^K rows × iters crossJoins of 1-row broadcasts.
     """
-    from ddaugner_spark.plans.materialize import roundtrip_small
-
     k = len(features)
-    pat = roundtrip_small(
+    pat = cut(
         pairs.groupBy(
             *[F.col(f).cast("boolean").alias(f) for f in features]
         ).agg(F.count(F.lit(1)).cast("long").alias("c")),
-        stage_dir,
-        "ddaugner_fsem_",
+        f"{scratch_dir(stage_dir, 'ddaugner_fsem_')}/patterns",
     )
     spark = pairs.sparkSession
     state = spark.range(1).select(
@@ -1279,9 +1268,7 @@ def fm_cluster_eval(
     multiplying.  NULL when either marginal sum is 0.
     """
     cells = _er_eval_cells(surfaces, max_dist, stage_dir, "ddaugner_fm_")
-    from ddaugner_spark.plans.materialize import roundtrip_small
-
-    cells = roundtrip_small(cells, stage_dir, "ddaugner_fm_cells_")
+    cells = cut(cells, f"{scratch_dir(stage_dir, 'ddaugner_fm_cells_')}/cells")
 
     def c2(col):
         return (col * (col - F.lit(1)) / F.lit(2)).cast("long")

@@ -38,15 +38,14 @@ Scale design:
 
 from __future__ import annotations
 
-import atexit
 import shutil
-import tempfile
 import time
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ddaugner_spark.operators.canonical import BROADCAST_AUTO_THRESHOLD
+from ddaugner_spark.plans.materialize import cut, scratch_dir
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:
@@ -135,24 +134,16 @@ def k_core(
     join+groupBy-per-iteration shape as connected_components, with the
     node table parquet-round-tripped and broadcast while it fits
     (edges scanned, never shuffled, below the threshold)."""
-    spark = edges.sparkSession
     if stats is None:
         stats = {}
     stats["rounds"] = []
     own_dir = stage_dir is None
-    if own_dir:
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_kcore_")
-        import atexit
+    stage_dir = scratch_dir(stage_dir, "ddaugner_kcore_")
 
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-
-    def _roundtrip(df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-        return spark.read.parquet(f"{stage_dir}/{name}")
-
-    sym = _roundtrip(symmetrize(edges).repartition("a"), "sym")
-    alive = _roundtrip(
-        sym.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("deg")), "alive_init"
+    sym = cut(symmetrize(edges).repartition("a"), f"{stage_dir}/sym")
+    alive = cut(
+        sym.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("deg")),
+        f"{stage_dir}/alive_init",
     )
     n_alive = alive.count()
     broadcast_nodes = n_alive <= BROADCAST_AUTO_THRESHOLD
@@ -171,9 +162,9 @@ def k_core(
             )
         )
         final_name = f"alive_{_round % 2}"
-        new_alive = _roundtrip(
+        new_alive = cut(
             induced.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("deg")),
-            final_name,
+            f"{stage_dir}/{final_name}",
         )
         n_new = new_alive.filter(F.col("deg") >= k).count()
         n_prev, alive = n_alive, new_alive
@@ -228,20 +219,11 @@ def pagerank(
     case, so the scale shape is unchanged.  On the symmetrized graph
     there is no dangling mass, so Σ rank = 1 holds in both modes.
     """
-    spark = edges.sparkSession
     if stats is None:
         stats = {}
     stats["iters"] = []
     own_dir = stage_dir is None
-    if own_dir:
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_pr_")
-        import atexit
-
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-
-    def _roundtrip(df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-        return spark.read.parquet(f"{stage_dir}/{name}")
+    stage_dir = scratch_dir(stage_dir, "ddaugner_pr_")
 
     t0 = time.time()
     from pyspark import StorageLevel
@@ -316,7 +298,7 @@ def pagerank(
             F.col("rank").alias("prev_rank"),
         )
         final_name = f"ranks_{_it % 2}"
-        new = _roundtrip(new, final_name)
+        new = cut(new, f"{stage_dir}/{final_name}")
         it = {"it": _it, "sec": round(time.time() - it_t0, 3)}
         if tol is not None:
             delta = new.agg(
@@ -407,8 +389,7 @@ def hits(
         )
     j = h.join(a, "node")
     if stage_dir is not None:
-        j.write.mode("overwrite").parquet(f"{stage_dir}/hits_scores")
-        j = edges.sparkSession.read.parquet(f"{stage_dir}/hits_scores")
+        j = cut(j, f"{stage_dir}/hits_scores")
     totals = F.broadcast(
         j.agg(
             F.sum("h").cast("double").alias("_th"),
@@ -544,26 +525,17 @@ def label_propagation(
     never exchanged — above it both sides shuffle on the node id, the
     honest big-graph path.
     """
-    spark = edges.sparkSession
     if stats is None:
         stats = {}
     stats["rounds"] = []
     own_dir = stage_dir is None
-    if own_dir:
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_lpa_")
-        import atexit
+    stage_dir = scratch_dir(stage_dir, "ddaugner_lpa_")
 
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-
-    def _roundtrip(df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-        return spark.read.parquet(f"{stage_dir}/{name}")
-
-    sym = _roundtrip(symmetrize(edges).repartition("a"), "sym")
-    labels = _roundtrip(
+    sym = cut(symmetrize(edges).repartition("a"), f"{stage_dir}/sym")
+    labels = cut(
         sym.select(F.col("a").alias("node")).distinct()
         .select("node", F.col("node").alias("label")),
-        "labels_init",
+        f"{stage_dir}/labels_init",
     )
     n_nodes = labels.count()
     broadcast_labels = n_nodes <= BROADCAST_AUTO_THRESHOLD
@@ -585,7 +557,7 @@ def label_propagation(
         )
         new = picked.select("node", F.col("best.label").alias("label"))
         final_name = f"labels_{_round % 2}"
-        new = _roundtrip(new, final_name)
+        new = cut(new, f"{stage_dir}/{final_name}")
         n_changed = (
             new.alias("n")
             .join(labels.alias("o"), "node")
@@ -704,25 +676,15 @@ def bfs_distances(
       plan depth — the CC/LPA/PageRank iteration idiom), and the loop
       exits early on an empty frontier.
     """
-    spark = edges.sparkSession
     if stats is None:
         stats = {}
     stats["levels"] = []
-    own_dir = stage_dir is None
-    if own_dir:
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_bfs_")
-        import atexit
+    stage_dir = scratch_dir(stage_dir, "ddaugner_bfs_")
 
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-
-    def _roundtrip(df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-        return spark.read.parquet(f"{stage_dir}/{name}")
-
-    sym = _roundtrip(symmetrize(edges).repartition("a"), "sym")
-    frontier = _roundtrip(
+    sym = cut(symmetrize(edges).repartition("a"), f"{stage_dir}/sym")
+    frontier = cut(
         seeds.select("node").distinct().withColumn("dist", F.lit(0).cast("int")),
-        "frontier_0",
+        f"{stage_dir}/frontier_0",
     )
     visited = frontier
     n_frontier = frontier.count()
@@ -742,7 +704,7 @@ def bfs_distances(
             .join(visited, "node", "left_anti")
             .withColumn("dist", F.lit(depth).cast("int"))
         )
-        nxt = _roundtrip(nxt, f"frontier_{depth % 2}")
+        nxt = cut(nxt, f"{stage_dir}/frontier_{depth % 2}")
         n_frontier = nxt.count()
         stats["levels"].append(
             {
@@ -753,8 +715,8 @@ def bfs_distances(
         )
         if n_frontier == 0:
             break
-        visited = _roundtrip(
-            visited.unionByName(nxt), f"visited_{depth % 2}"
+        visited = cut(
+            visited.unionByName(nxt), f"{stage_dir}/visited_{depth % 2}"
         )
         frontier = nxt
 
@@ -849,25 +811,18 @@ def shortest_paths_weighted(
     anti-join frontier; the loop exits early when a round changes no
     (node, cost) pair.  Costs stay exact integers (LONG) — no float
     accumulation order to worry about."""
-    spark = edges.sparkSession
     if stats is None:
         stats = {}
     stats["rounds"] = []
-    own_dir = stage_dir is None
-    if own_dir:
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_sssp_")
-        import atexit
+    stage_dir = scratch_dir(stage_dir, "ddaugner_sssp_")
 
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-
-    def _roundtrip(df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-        return spark.read.parquet(f"{stage_dir}/{name}")
-
-    e = _roundtrip(edges.select("a", "b", F.col("w").cast("long").alias("w")), "edges")
-    dist = _roundtrip(
+    e = cut(
+        edges.select("a", "b", F.col("w").cast("long").alias("w")),
+        f"{stage_dir}/edges",
+    )
+    dist = cut(
         seeds.select("node").distinct().withColumn("cost", F.lit(0).cast("long")),
-        "dist_0",
+        f"{stage_dir}/dist_0",
     )
     for r in range(1, max_hops + 1):
         t0 = time.time()
@@ -879,7 +834,7 @@ def shortest_paths_weighted(
             .groupBy("node")
             .agg(F.min("cost").alias("cost"))
         )
-        new = _roundtrip(new, f"dist_{r % 2}")
+        new = cut(new, f"{stage_dir}/dist_{r % 2}")
         changed = new.join(dist, ["node", "cost"], "left_anti").count()
         stats["rounds"].append(
             {"round": r, "sec": round(time.time() - t0, 3), "changed": changed}
@@ -1182,24 +1137,14 @@ def multi_source_bfs(
     the per-seed distances).  Same frontier idiom: state rows are keyed
     (node, seed), first discovery per key = minimum distance, visited/
     frontier parquet-round-trip per level with A/B path alternation."""
-    spark = edges.sparkSession
-    own_dir = stage_dir is None
-    if own_dir:
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_msbfs_")
-        import atexit
+    stage_dir = scratch_dir(stage_dir, "ddaugner_msbfs_")
 
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-
-    def _roundtrip(df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-        return spark.read.parquet(f"{stage_dir}/{name}")
-
-    sym = _roundtrip(symmetrize(edges).repartition("a"), "sym")
-    frontier = _roundtrip(
+    sym = cut(symmetrize(edges).repartition("a"), f"{stage_dir}/sym")
+    frontier = cut(
         seeds.select("node").distinct().select(
             "node", F.col("node").alias("seed"), F.lit(0).cast("int").alias("dist")
         ),
-        "ms_frontier_0",
+        f"{stage_dir}/ms_frontier_0",
     )
     visited = frontier
     n_frontier = frontier.count()
@@ -1216,12 +1161,12 @@ def multi_source_bfs(
             .join(visited, ["node", "seed"], "left_anti")
             .withColumn("dist", F.lit(depth).cast("int"))
         )
-        nxt = _roundtrip(nxt, f"ms_frontier_{depth % 2}")
+        nxt = cut(nxt, f"{stage_dir}/ms_frontier_{depth % 2}")
         n_frontier = nxt.count()
         if n_frontier == 0:
             break
-        visited = _roundtrip(
-            visited.unionByName(nxt), f"ms_visited_{depth % 2}"
+        visited = cut(
+            visited.unionByName(nxt), f"{stage_dir}/ms_visited_{depth % 2}"
         )
         frontier = nxt
     return visited
@@ -1345,33 +1290,23 @@ def k_truss(
     Scale: each round is the degree-oriented triangle pass (m^{3/2}
     work bound) over a strictly-shrinking edge table, parquet
     round-tripped to truncate lineage — never localCheckpoint."""
-    spark = edges.sparkSession
     if stats is None:
         stats = {}
     stats["rounds"] = []
-    own_dir = stage_dir is None
-    if own_dir:
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_ktruss_")
-        import atexit
+    stage_dir = scratch_dir(stage_dir, "ddaugner_ktruss_")
 
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-
-    def _roundtrip(df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-        return spark.read.parquet(f"{stage_dir}/{name}")
-
-    alive = _roundtrip(edges.select("a", "b").distinct(), "truss_init")
+    alive = cut(edges.select("a", "b").distinct(), f"{stage_dir}/truss_init")
     n_alive = alive.count()
     sup = None
     for _round in range(1, max_rounds + 1):
         r_t0 = time.time()
-        sup = _roundtrip(edge_support(alive), f"truss_sup_{_round % 2}")
+        sup = cut(edge_support(alive), f"{stage_dir}/truss_sup_{_round % 2}")
         survivors = sup.filter(F.col("support") >= k - 2)
         n_new = survivors.count()
         stats["rounds"].append(
             {"round": _round, "sec": round(time.time() - r_t0, 3), "n_edges": n_new}
         )
-        alive = _roundtrip(survivors.select("a", "b"), f"truss_{_round % 2}")
+        alive = cut(survivors.select("a", "b"), f"{stage_dir}/truss_{_round % 2}")
         if n_new == n_alive or n_new == 0:
             n_alive = n_new
             break
@@ -1630,16 +1565,7 @@ def neighborhood_function(
     merge identically on both engines (a slight undercount, exactly as
     sketch theory prices in).
     """
-    import atexit
-
-    spark = edges.sparkSession
-    if stage_dir is None:
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_nf_")
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-
-    def _rt(df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-        return spark.read.parquet(f"{stage_dir}/{name}")
+    stage_dir = scratch_dir(stage_dir, "ddaugner_nf_")
 
     nodes = (
         edges.select(F.col("a").alias("node"))
@@ -1647,13 +1573,13 @@ def neighborhood_function(
         .distinct()
     )
     h = F.conv(F.substring(F.md5("node"), 1, 8), 16, 10).cast("long")
-    cur = _rt(nodes.select("node", F.array(h).alias("sk")), "nf_0")
-    sym = _rt(
+    cur = cut(nodes.select("node", F.array(h).alias("sk")), f"{stage_dir}/nf_0")
+    sym = cut(
         edges.select(F.col("a").alias("node"), F.col("b").alias("nb"))
         .unionByName(edges.select(F.col("b").alias("node"), F.col("a").alias("nb")))
         .unionByName(nodes.select("node", F.col("node").alias("nb")))
         .distinct(),
-        "nf_sym",
+        f"{stage_dir}/nf_sym",
     )
 
     # per-node estimate, rounded once to a long; 133143986176 = (k−1)·2³²
@@ -1684,7 +1610,7 @@ def neighborhood_function(
         # one dir PER ROUND: the returned union lazily reads every
         # round's parquet at collection time, so rounds must not
         # overwrite each other (sketch tables are node×k — tiny)
-        cur = _rt(merged, f"nf_r{r}")
+        cur = cut(merged, f"{stage_dir}/nf_r{r}")
         out = out.unionByName(nf_row(cur, r))
     return out
 
@@ -1831,14 +1757,7 @@ def minimum_spanning_forest(
     from pyspark import StorageLevel
 
     lvl = StorageLevel.MEMORY_AND_DISK
-    spark = edges.sparkSession
-    if stage_dir is None:
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_msf_")
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-
-    def _rt(df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-        return spark.read.parquet(f"{stage_dir}/{name}")
+    stage_dir = scratch_dir(stage_dir, "ddaugner_msf_")
 
     # live edge state: component endpoints (ca, cb) + original
     # normalized endpoints (a, b) + weight; components start as selves.
@@ -1963,7 +1882,7 @@ def minimum_spanning_forest(
                 if n_chg == 0:
                     break
                 if jumps % 3 == 0:
-                    cur = _rt(cur, f"jump_{r}")
+                    cur = cut(cur, f"{stage_dir}/jump_{r}")
             round_stat["n_jumps"] = jumps
         round_stat["jump_sec"] = round(time.time() - _t0, 3)
         _t0 = time.time()
@@ -1978,7 +1897,7 @@ def minimum_spanning_forest(
         lab = cur
         if bcast:
             lab = F.broadcast(lab)
-        live = _rt(
+        live = cut(
             live.join(
                 lab.select(F.col("node").alias("ca"),
                            F.col("par").alias("nca")),
@@ -1995,7 +1914,7 @@ def minimum_spanning_forest(
                 "a", "b", "w",
             )
             .filter(F.col("ca") != F.col("cb")),
-            f"live_{r}",
+            f"{stage_dir}/live_{r}",
         )
         round_stat["relabel_sec"] = round(time.time() - _t0, 3)
     if stats is not None:
@@ -2083,30 +2002,22 @@ def densest_subgraph(
     set with its (round-6) density.
     """
     spark = edges.sparkSession
-    if stage_dir is None:
-        import atexit
+    stage_dir = scratch_dir(stage_dir, "ddaugner_dsg_")
 
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_dsg_")
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-
-    def _rt(df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-        return spark.read.parquet(f"{stage_dir}/{name}")
-
-    live = _rt(
+    live = cut(
         edges.select(
             F.col("a").cast("string").alias("a"),
             F.col("b").cast("string").alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct(),
-        "e_0",
+        f"{stage_dir}/e_0",
     )
-    nodes = _rt(
+    nodes = cut(
         live.select(F.col("a").alias("node"))
         .unionByName(live.select(F.col("b").alias("node")))
         .distinct(),
-        "n_0",
+        f"{stage_dir}/n_0",
     )
     best_rho, best_round, rounds = None, None, []
     for r in range(max_rounds + 1):
@@ -2127,14 +2038,15 @@ def densest_subgraph(
             .groupBy("node")
             .agg(F.count(F.lit(1)).alias("deg"))
         )
-        nodes = _rt(
-            deg.filter(F.col("deg") > F.lit(thr)).select("node"), f"n_{r + 1}"
+        nodes = cut(
+            deg.filter(F.col("deg") > F.lit(thr)).select("node"),
+            f"{stage_dir}/n_{r + 1}",
         )
         keep_a = nodes.select(F.col("node").alias("a"))
         keep_b = nodes.select(F.col("node").alias("b"))
-        live = _rt(
+        live = cut(
             live.join(keep_a, "a", "left_semi").join(keep_b, "b", "left_semi"),
-            f"e_{r + 1}",
+            f"{stage_dir}/e_{r + 1}",
         )
     if stats is not None:
         stats["rounds"] = rounds
@@ -2177,16 +2089,7 @@ def luby_mis(
     Input: canonical ``(a, b)`` edges; universe = edge endpoints.
     Output: ``(entity, round)`` — MIS members and the round they won.
     """
-    spark = edges.sparkSession
-    if stage_dir is None:
-        import atexit
-
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_mis_")
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-
-    def _rt(df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-        return spark.read.parquet(f"{stage_dir}/{name}")
+    stage_dir = scratch_dir(stage_dir, "ddaugner_mis_")
 
     def _prio(c):
         return F.concat(F.md5(c), c)
@@ -2195,13 +2098,13 @@ def luby_mis(
         F.col("a").cast("string").alias("a"),
         F.col("b").cast("string").alias("b"),
     ).filter(F.col("a") != F.col("b"))
-    live = _rt(
+    live = cut(
         base.unionByName(
             base.select(F.col("b").alias("a"), F.col("a").alias("b"))
         ).distinct(),
-        "live_0",
+        f"{stage_dir}/live_0",
     )
-    und = _rt(live.select(F.col("a").alias("node")).distinct(), "und_0")
+    und = cut(live.select(F.col("a").alias("node")).distinct(), f"{stage_dir}/und_0")
     mis = None
     rounds = []
     for r in range(max_rounds):
@@ -2219,7 +2122,7 @@ def luby_mis(
             )
             .select("node", F.lit(r).cast("long").alias("round"))
         )
-        win = _rt(win, f"mis_{r}")
+        win = cut(win, f"{stage_dir}/mis_{r}")
         rounds.append({"round": r, "undecided": n_und, "won": win.count()})
         mis = win if mis is None else mis.unionByName(win)
         removed = (
@@ -2231,11 +2134,11 @@ def luby_mis(
             )
             .distinct()
         )
-        und = _rt(und.join(removed, "node", "left_anti"), f"und_{r + 1}")
-        live = _rt(
+        und = cut(und.join(removed, "node", "left_anti"), f"{stage_dir}/und_{r + 1}")
+        live = cut(
             live.join(und.select(F.col("node").alias("a")), "a", "left_semi")
             .join(und.select(F.col("node").alias("b")), "b", "left_semi"),
-            f"live_{r + 1}",
+            f"{stage_dir}/live_{r + 1}",
         )
     if stats is not None:
         stats["rounds"] = rounds
@@ -2323,16 +2226,7 @@ def jp_coloring(
     Output: ``(entity, color)``; nodes still uncolored after
     ``max_rounds`` are omitted (the SQL twin unrolls the same bound).
     """
-    spark = edges.sparkSession
-    if stage_dir is None:
-        import atexit
-
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_jp_")
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-
-    def _rt(df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-        return spark.read.parquet(f"{stage_dir}/{name}")
+    stage_dir = scratch_dir(stage_dir, "ddaugner_jp_")
 
     def _prio(c):
         return F.concat(F.md5(c), c)
@@ -2341,13 +2235,13 @@ def jp_coloring(
         F.col("a").cast("string").alias("a"),
         F.col("b").cast("string").alias("b"),
     ).filter(F.col("a") != F.col("b"))
-    live = _rt(
+    live = cut(
         base.unionByName(
             base.select(F.col("b").alias("a"), F.col("a").alias("b"))
         ).distinct(),
-        "live_0",
+        f"{stage_dir}/live_0",
     )
-    unc = _rt(live.select(F.col("a").alias("node")).distinct(), "unc_0")
+    unc = cut(live.select(F.col("a").alias("node")).distinct(), f"{stage_dir}/unc_0")
     colored = None
     rounds = []
     for r in range(max_rounds):
@@ -2365,16 +2259,17 @@ def jp_coloring(
             )
             .select("node", F.lit(r).cast("long").alias("color"))
         )
-        win = _rt(win, f"col_{r}")
+        win = cut(win, f"{stage_dir}/col_{r}")
         rounds.append({"round": r, "uncolored": n_unc, "won": win.count()})
         colored = win if colored is None else colored.unionByName(win)
-        unc = _rt(
-            unc.join(win.select("node"), "node", "left_anti"), f"unc_{r + 1}"
+        unc = cut(
+            unc.join(win.select("node"), "node", "left_anti"),
+            f"{stage_dir}/unc_{r + 1}",
         )
-        live = _rt(
+        live = cut(
             live.join(unc.select(F.col("node").alias("a")), "a", "left_semi")
             .join(unc.select(F.col("node").alias("b")), "b", "left_semi"),
-            f"live_{r + 1}",
+            f"{stage_dir}/live_{r + 1}",
         )
     if stats is not None:
         stats["rounds"] = rounds
@@ -2418,24 +2313,15 @@ def betweenness_sampled(
     absent.
     """
     spark = edges.sparkSession
-    own_dir = stage_dir is None
-    if own_dir:
-        import atexit
+    stage_dir = scratch_dir(stage_dir, "ddaugner_bc_")
 
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_bc_")
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-
-    def _roundtrip(df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-        return spark.read.parquet(f"{stage_dir}/{name}")
-
-    sym = _roundtrip(symmetrize(edges).repartition("a"), "sym")
+    sym = cut(symmetrize(edges).repartition("a"), f"{stage_dir}/sym")
     lvl0 = sources.select("node").distinct().select(
         F.col("node").alias("src"),
         F.col("node"),
         F.lit(1).cast("long").alias("sigma"),
     )
-    levels = [_roundtrip(lvl0, "lvl_0")]
+    levels = [cut(lvl0, f"{stage_dir}/lvl_0")]
     visited = levels[0].select("src", "node")
     for depth in range(1, max_depth + 1):
         fr = levels[-1]
@@ -2445,13 +2331,13 @@ def betweenness_sampled(
             .agg(F.sum("sigma").cast("long").alias("sigma"))
             .join(visited, ["src", "node"], "left_anti")
         )
-        nxt = _roundtrip(nxt, f"lvl_{depth}")
+        nxt = cut(nxt, f"{stage_dir}/lvl_{depth}")
         if nxt.isEmpty():
             break
         levels.append(nxt)
-        visited = _roundtrip(
+        visited = cut(
             visited.unionByName(nxt.select("src", "node")),
-            f"visited_{depth % 2}",
+            f"{stage_dir}/visited_{depth % 2}",
         )
     # backward dependency accumulation, deepest level first
     deepest = levels[-1].select(
@@ -2492,7 +2378,7 @@ def betweenness_sampled(
         )
         # one file per level: the parts list holds lazy readers of every
         # delta table, so names must never be reused (no A/B churn)
-        lvl_delta = _roundtrip(lvl_delta, f"delta_{d}")
+        lvl_delta = cut(lvl_delta, f"{stage_dir}/delta_{d}")
         if d > 1:
             parts.append(lvl_delta.select("src", "node", "delta"))
         w_tbl = lvl_delta
@@ -2762,9 +2648,7 @@ def greedy_matching(
     """
     if rounds < 1:
         raise ValueError("greedy_matching: rounds must be >= 1")
-    if stage_dir is None:
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_match_")
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
+    stage_dir = scratch_dir(stage_dir, "ddaugner_match_")
     spark = edges.sparkSession
     e = (
         edges.select(
@@ -2781,9 +2665,7 @@ def greedy_matching(
     )
     picked = None
     for k in range(rounds):
-        path = f"{stage_dir}/live_{k}"
-        e.write.mode("overwrite").parquet(path)
-        e = spark.read.parquet(path)
+        e = cut(e, f"{stage_dir}/live_{k}")
         if e.isEmpty():  # remaining rounds select nothing; same result
             break
         inc = e.select(F.col("u").alias("node"), "r").unionByName(
@@ -2903,35 +2785,25 @@ def louvain_rounds(
     parquet-round-trips so plan depth stays constant.  No vertex ever
     sees more work than its degree.
     """
-    spark = edges.sparkSession
     if stats is None:
         stats = {}
-    own_dir = stage_dir is None
-    if own_dir:
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_louvain_")
-        import atexit
-
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-
-    def _roundtrip(df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-        return spark.read.parquet(f"{stage_dir}/{name}")
+    stage_dir = scratch_dir(stage_dir, "ddaugner_louvain_")
 
     e = edges.select("a", "b").distinct()
     m_edges = e.count()
     stats["m"] = m_edges
-    sym = _roundtrip(symmetrize(e).repartition("a"), "sym")
-    deg = _roundtrip(
+    sym = cut(symmetrize(e).repartition("a"), f"{stage_dir}/sym")
+    deg = cut(
         sym.groupBy(F.col("a").alias("node")).agg(
             F.count("*").cast("long").alias("k")
         ),
-        "deg",
+        f"{stage_dir}/deg",
     )
     n_nodes = deg.count()
     broadcast_labels = n_nodes <= BROADCAST_AUTO_THRESHOLD
     stats["n_nodes"] = n_nodes
-    labels = _roundtrip(
-        deg.select("node", F.col("node").alias("community")), "labels_init"
+    labels = cut(
+        deg.select("node", F.col("node").alias("community")), f"{stage_dir}/labels_init"
     )
     for _round in range(1, rounds + 1):
         lbl = F.broadcast(labels) if broadcast_labels else labels
@@ -2982,9 +2854,9 @@ def louvain_rounds(
                 F.struct((-F.col("gain")).alias("neg"), F.col("community"))
             ).alias("best")
         )
-        labels = _roundtrip(
+        labels = cut(
             picked.select("node", F.col("best.community").alias("community")),
-            f"labels_{_round % 2}",
+            f"{stage_dir}/labels_{_round % 2}",
         )
     return labels.select(
         F.col("node").alias("entity"), "community"

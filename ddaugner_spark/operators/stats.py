@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ddaugner_spark.plans.materialize import cut, scratch_dir
+
 
 def column_stats(df: DataFrame, cols: list[str]) -> DataFrame:
     """ANALYZE-style per-column profile: ``(column, n_rows, n_null,
@@ -1897,16 +1899,13 @@ def kendall_tau_b(
         F.col(x_col).cast("long").alias("x"),
         F.col(y_col).cast("long").alias("y"),
     ).where(F.col("x").isNotNull() & F.col("y").isNotNull())
-    from ddaugner_spark.plans.materialize import roundtrip_small
-
     # the cell table fans out over four branches (margins, total, the
     # self-join) — round-trip it so the corpus is scanned exactly ONCE
-    cells = roundtrip_small(
+    cells = cut(
         base.groupBy("x", "y").agg(
             F.count(F.lit(1)).cast("long").alias("c")
         ),
-        stage_dir,
-        "ddaugner_tau_",
+        f"{scratch_dir(stage_dir, 'ddaugner_tau_')}/cells",
     )
 
     def c2(col):
@@ -2106,16 +2105,13 @@ def cliffs_delta(
         F.col(group_col).cast("string").alias("g"),
         F.col(value_col).cast("long").alias("v"),
     ).where(F.col("v").isNotNull() & F.col("g").isin(group_a, group_b))
-    from ddaugner_spark.plans.materialize import roundtrip_small
-
     # four downstream branches (two sides × pair join + totals) —
     # round-trip the value-cell table so the corpus is scanned ONCE
-    cells = roundtrip_small(
+    cells = cut(
         base.groupBy("g", "v").agg(
             F.count(F.lit(1)).cast("long").alias("c")
         ),
-        stage_dir,
-        "ddaugner_cliffs_",
+        f"{scratch_dir(stage_dir, 'ddaugner_cliffs_')}/cells",
     )
     ca = cells.where(F.col("g") == group_a).select(
         F.col("v").alias("va"), F.col("c").alias("cnt_a")
@@ -2260,9 +2256,7 @@ def wasserstein_1d(
         F.col(group_col).cast("string").alias("g"),
         F.col(value_col).cast("long").alias("v"),
     ).where(F.col("v").isNotNull() & F.col("g").isin(group_a, group_b))
-    from ddaugner_spark.plans.materialize import roundtrip_small
-
-    cells = roundtrip_small(
+    cells = cut(
         base.groupBy("v").agg(
             F.sum(F.when(F.col("g") == group_a, 1).otherwise(0))
             .cast("long")
@@ -2271,8 +2265,7 @@ def wasserstein_1d(
             .cast("long")
             .alias("cb"),
         ),
-        stage_dir,
-        "ddaugner_w1_",
+        f"{scratch_dir(stage_dir, 'ddaugner_w1_')}/cells",
     )
     w = Window.orderBy("v")
     stepped = cells.select(
@@ -2428,15 +2421,12 @@ def lorenz_deciles(
     exact integer cross-multiplication ``cum_rows·10 ≥ d·N`` (no float
     quantile), and ``mass_share`` is one division.
     """
-    from ddaugner_spark.plans.materialize import roundtrip_small
-
     base = df.select(F.col(value_col).cast("long").alias("v")).where(
         F.col("v").isNotNull()
     )
-    cells = roundtrip_small(
+    cells = cut(
         base.groupBy("v").agg(F.count(F.lit(1)).cast("long").alias("c")),
-        stage_dir,
-        "ddaugner_lorenz_",
+        f"{scratch_dir(stage_dir, 'ddaugner_lorenz_')}/cells",
     )
     w = Window.orderBy("v").rowsBetween(
         Window.unboundedPreceding, Window.currentRow

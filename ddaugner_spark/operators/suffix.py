@@ -54,13 +54,11 @@ blocks; recomputation-on-loss replays the SAME ShuffleDependency
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ddaugner_spark.plans.materialize import cut, scratch_dir
 
 #: offsets are attached as a literal ``create_map`` (no join node) up
 #: to this many partitions; beyond it a broadcast equi-join on a tiny
@@ -118,11 +116,8 @@ def global_dense_rank(
     )
     if io == "parquet":
         if stage_path is None:
-            d = tempfile.mkdtemp(prefix="ddaugner_rank_")
-            atexit.register(shutil.rmtree, d, ignore_errors=True)
-            stage_path = f"{d}/part"
-        local.write.mode("overwrite").parquet(stage_path)
-        local = spark.read.parquet(stage_path)
+            stage_path = f"{scratch_dir(None, 'ddaugner_rank_')}/part"
+        local = cut(local, stage_path)
     else:
         local = local.persist(StorageLevel.MEMORY_AND_DISK)
     # one tiny aggregate: materializes the snapshot (cache mode) AND
@@ -185,9 +180,8 @@ def suffix_array(
     first ``resolution`` tokens).  Level tables are cache-backed (or
     parquet-backed with ``io="parquet"``), already materialized.
     """
-    if stage_dir is None and io == "parquet":
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_sa_")
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
+    if io == "parquet":
+        stage_dir = scratch_dir(stage_dir, "ddaugner_sa_")
 
     def _stage(name: str) -> str | None:
         return None if stage_dir is None else f"{stage_dir}/{name}"
@@ -272,9 +266,8 @@ def lcp_array(
     the joins are deterministic hash joins, no boundary freeze
     needed).
     """
-    if stage_dir is None and io == "parquet":
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_lcp_")
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
+    if io == "parquet":
+        stage_dir = scratch_dir(stage_dir, "ddaugner_lcp_")
 
     levels: list = []
     sa = suffix_array(

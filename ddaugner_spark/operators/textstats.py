@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import config
+from ..plans.materialize import cut, scratch_dir
 
 
 def quality_features(docs: DataFrame, ndigits: int = 4) -> DataFrame:
@@ -1796,20 +1797,17 @@ def jsd_by_group(
     reuse on the prefix key), one broadcast 1-row total, one
     group-sized fold.  Nothing is ever all-pairs.
     """
-    from ddaugner_spark.plans.materialize import roundtrip_small
-
     tw = docs.select(
         F.col(group_col).alias("grp"), F.explode(safe_tokens()).alias("w")
     )
     # (group, token) counts fan out over three branches (corpus margin,
     # group totals, the join) — round-trip so the corpus explode+count
     # runs exactly ONCE
-    cw = roundtrip_small(
+    cw = cut(
         tw.groupBy("grp", "w").agg(
             F.count(F.lit(1)).cast("long").alias("cg")
         ),
-        stage_dir,
-        "ddaugner_jsd_",
+        f"{scratch_dir(stage_dir, 'ddaugner_jsd_')}/cw",
     )
     corpus = cw.groupBy("w").agg(F.sum("cg").cast("long").alias("cc"))
     totals = cw.groupBy("grp").agg(F.sum("cg").cast("long").alias("ng"))
@@ -1923,19 +1921,15 @@ def burrows_delta(
     (groups·top_n)-sized.  Group count is assumed bounded (sources,
     authors); the pair join is groups², documented.
     """
-    from ddaugner_spark.plans.materialize import roundtrip_small
-
     tw = docs.select(
         F.col(group_col).alias("grp"), F.explode(safe_tokens()).alias("w")
     )
-    # two staged tables -> distinct subdirs (roundtrip_small writes a
-    # fixed name inside the dir it is given)
-    cw = roundtrip_small(
+    stage_dir = scratch_dir(stage_dir, "ddaugner_delta_")
+    cw = cut(
         tw.groupBy("grp", "w").agg(
             F.count(F.lit(1)).cast("long").alias("cg")
         ),
-        None if stage_dir is None else f"{stage_dir}/cw",
-        "ddaugner_delta_",
+        f"{stage_dir}/cw",
     )
     totals = cw.groupBy("grp").agg(F.sum("cg").cast("long").alias("ng"))
     top = (
@@ -1961,10 +1955,7 @@ def burrows_delta(
             .alias("fq"),
         )
     )
-    freq = roundtrip_small(
-        freq, None if stage_dir is None else f"{stage_dir}/fq",
-        "ddaugner_delta_fq_",
-    )
+    freq = cut(freq, f"{stage_dir}/fq")
     mom = freq.groupBy("w").agg(
         F.count(F.lit(1)).cast("long").alias("s"),
         F.sum("fq").cast("long").alias("sf"),

@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ddaugner_spark.plans.materialize import cut, scratch_dir
+
 
 def _n_tokens(text: str = "text") -> Column:
     """Whitespace token count of a non-empty text column."""
@@ -684,18 +686,8 @@ def greedy_coverage(
     Output: ``(rank, doc_id, gain)`` — selection order and marginal
     new-token count.
     """
-    import atexit
-    import shutil
-    import tempfile
-
     spark = docs.sparkSession
-    if stage_dir is None:
-        stage_dir = tempfile.mkdtemp(prefix="ddaugner_cov_")
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-
-    def _rt(df: DataFrame, name: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(f"{stage_dir}/{name}")
-        return spark.read.parquet(f"{stage_dir}/{name}")
+    stage_dir = scratch_dir(stage_dir, "ddaugner_cov_")
 
     if ngram == 1:
         pairs = (
@@ -709,7 +701,7 @@ def greedy_coverage(
         pairs = _dedup.shingles(docs, k=ngram).select(
             "doc_id", F.col("shingle").alias("tok")
         )
-    dt = _rt(pairs, "dt")
+    dt = cut(pairs, f"{stage_dir}/dt")
     covered = None
     picks = []
     for r in range(k):
@@ -728,8 +720,8 @@ def greedy_coverage(
         doc_id, gain = top[0]["doc_id"], top[0]["gain"]
         picks.append((r, doc_id, gain))
         won = remaining.filter(F.col("doc_id") == doc_id).select("tok")
-        covered = _rt(
-            won if covered is None else covered.unionByName(won), f"cov_{r}"
+        covered = cut(
+            won if covered is None else covered.unionByName(won), f"{stage_dir}/cov_{r}"
         )
     return spark.createDataFrame(
         picks, "rank long, doc_id long, gain long"

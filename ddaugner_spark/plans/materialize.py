@@ -14,10 +14,18 @@ cluster, add
 
 and `materialize(df, "kg.db.triples", ...)` takes the Iceberg branch
 unchanged.
+
+It is also the one home of intermediate staging.  Every operator cuts
+lineage with :func:`cut` (a parquet round-trip, not ``localCheckpoint``)
+under the directory :func:`scratch_dir` resolves: the caller's
+``stage_dir``, or a temp dir removed at process exit.
 """
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 from typing import List, Optional
 
 from pyspark.sql import DataFrame
@@ -68,23 +76,26 @@ def materialize(
     return "parquet"
 
 
-def roundtrip_small(
-    df: DataFrame, stage_dir: Optional[str], prefix: str
-) -> DataFrame:
-    """Parquet round-trip a SMALL derived table (contingency cells,
-    per-group counts) that downstream fans out over several branches:
-    without it Catalyst re-runs the corpus-touching scan+aggregate once
-    PER BRANCH (a 4-branch fold = 4 corpus passes at 100 TB); after it
-    every branch re-reads the dimension-sized parquet.  Round-trips,
-    not localCheckpoint, per the repo's measured rule (docs/PLANS.md).
-    Owns and atexit-cleans a temp dir when ``stage_dir`` is None.
-    """
-    if stage_dir is None:
-        import atexit
-        import shutil
-        import tempfile
+def scratch_dir(
+    stage_dir: Optional[str], prefix: str, parent: Optional[str] = None
+) -> str:
+    """The directory an operator stages its parquet cuts under:
+    ``stage_dir`` when the caller gives one (the caller owns it),
+    otherwise a fresh ``tempfile.mkdtemp(prefix=prefix, dir=parent)``
+    removed at process exit.  Results stay lazily backed by the cuts,
+    so the temp dir must outlive the call — but not the process."""
+    if stage_dir is not None:
+        return stage_dir
+    d = tempfile.mkdtemp(prefix=prefix, dir=parent)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
-        stage_dir = tempfile.mkdtemp(prefix=prefix)
-        atexit.register(shutil.rmtree, stage_dir, ignore_errors=True)
-    df.write.mode("overwrite").parquet(f"{stage_dir}/t")
-    return df.sparkSession.read.parquet(f"{stage_dir}/t")
+
+def cut(df: DataFrame, path: str) -> DataFrame:
+    """Lineage cut: overwrite-write ``df`` as parquet at ``path`` and
+    return the re-read table.  Reliable where ``localCheckpoint`` is not
+    (blocks survive a lost executor) and measured faster here; it also
+    stops a small derived table that fans out over several branches
+    from re-running its corpus-touching plan once per branch."""
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.parquet(path)

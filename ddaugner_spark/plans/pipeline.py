@@ -26,11 +26,8 @@ parquet scan, so a resumed run reads only unfinished data.
 
 from __future__ import annotations
 
-import atexit
 import json
 import os
-import shutil
-import tempfile
 import time
 from dataclasses import dataclass, field, asdict
 from typing import Callable, Dict, List, Optional
@@ -42,6 +39,7 @@ from .. import config
 from ..sources.gazetteer import gazetteer_df
 from ..sources.pages import extract_text, synthesize_pages
 from ..operators import canonical, linking, mentions, triples
+from .materialize import cut, scratch_dir
 
 
 @dataclass
@@ -177,10 +175,9 @@ class KGPipeline:
         # connected_components' own temp dirs, each lives until exit
         cc_root = os.path.join(self.out_dir, "_cc")
         os.makedirs(cc_root, exist_ok=True)
-        cc_dir = tempfile.mkdtemp(prefix="adhoc_", dir=cc_root)
-        atexit.register(shutil.rmtree, cc_dir, ignore_errors=True)
         comps = canonical.connected_components(
-            canonical.co_mention_edges(m), stage_dir=cc_dir
+            canonical.co_mention_edges(m),
+            stage_dir=scratch_dir(None, "adhoc_", parent=cc_root),
         )
         return canonical.canonicalize_triples(t, comps).select(
             "doc_id",
@@ -271,8 +268,7 @@ class KGPipeline:
         m_dir = os.path.join(
             self.out_dir, "_mentions", f"{self.partition_col}={part}"
         )
-        self._detect_mentions(docs).write.mode("overwrite").parquet(m_dir)
-        m = self.spark.read.parquet(m_dir)
+        m = cut(self._detect_mentions(docs), m_dir)
         n_mentions = m.count()
         stages.append(
             StageMetrics("mentions", n_pages, n_mentions, int((time.time() - t0) * 1000))

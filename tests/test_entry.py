@@ -8,9 +8,10 @@ tools/parity_check.py and the driver gate own those):
 * the q_better_recalled oracle's aug == gold precondition (its SQL twin
   self-intersects the dictionary mention set, so it cannot see Arrow
   model-path mentions absent from gold — ADVICE r4);
-* /tmp hygiene: a pipeline + CC + balance_upsample run leaves no net
+* /tmp hygiene: a pipeline + CC + balance_upsample run, plus tiny
+  default-stage_dir calls of other staging operators, leaves no net
   new /tmp/ddaugner_* dirs once the process exits (the round-4 leak
-  class — operators' own mkdtemp staging must be atexit-reaped).
+  class — operators' own temp staging must be atexit-reaped).
 """
 
 import glob
@@ -72,7 +73,7 @@ _HYGIENE_SCRIPT = r"""
 import sys, tempfile
 sys.path.insert(0, {repo!r})
 from ddaugner_spark.session import get_spark
-from ddaugner_spark.operators import augment, canonical, mentions
+from ddaugner_spark.operators import augment, bpe, canonical, crawl, graph, mentions, stats
 from ddaugner_spark.plans.pipeline import run_flagship
 
 spark = get_spark(app_name="tmp_hygiene", master="local[4]")
@@ -84,18 +85,31 @@ run_flagship(spark, sf, out)
 
 docs = spark.read.parquet(f"{{sf}}/documents.parquet")
 m = mentions.mentions_df(docs)
-# no stage_dir: the operator's own mkdtemp staging must be atexit-reaped
+# no stage_dir: the operators' own temp staging must be atexit-reaped
 canonical.connected_components(canonical.co_mention_edges(m)).count()
 corpus, _diag = augment.balance_upsample(docs)
 corpus.count()
+ab = spark.createDataFrame([("a", "b"), ("b", "c"), ("c", "a")], "a string, b string")
+graph.k_core(ab, k=2).count()
+sd = ab.selectExpr("a AS src", "b AS dst")
+canonical.strongly_connected_components(sd).count()
+crawl.resolve_redirects(
+    spark.createDataFrame([("u1", "u2"), ("u2", "u3")], "src string, dst string")
+).count()
+vocab = spark.createDataFrame([("abab", 3), ("abc", 2)], "token string, n long")
+bpe.bpe_train(vocab, n_merges=2).count()
+xy = spark.createDataFrame([(1, 2), (2, 1), (3, 3)], "x long, y long")
+stats.kendall_tau_b(xy, "x", "y").collect()
 spark.stop()
 """
 
 
 def test_no_tmp_dir_leaks(tmp_path):
-    """Pipeline + CC + balance_upsample in a subprocess (atexit hooks
-    only fire at process exit), then diff /tmp/ddaugner_* before/after:
-    the net-new set must be empty (VERDICT r4 #8)."""
+    """Pipeline + CC + balance_upsample, then tiny default-stage_dir
+    calls of k_core, SCC, resolve_redirects, bpe_train and kendall_tau_b,
+    in a subprocess (atexit hooks only fire at process exit), then diff
+    /tmp/ddaugner_* before/after: the net-new set must be empty
+    (VERDICT r4 #8)."""
 
     def snap():
         return set(glob.glob("/tmp/ddaugner_*"))

@@ -216,8 +216,8 @@ def test_connected_components_empty(spark):
 
 def test_connected_components_edge_cases(spark, tmp_path):
     """max_iter=0 returns singleton components (no NameError, ADVICE r2);
-    explicit stage_dir is honored; checkpoint_every>1 yields identical
-    labels to the default."""
+    explicit stage_dir is honored; a 4-chain plus an island resolves to
+    the minimum member of each component."""
     from ddaugner_spark.operators.canonical import connected_components
 
     e = spark.createDataFrame(
@@ -230,42 +230,20 @@ def test_connected_components_edge_cases(spark, tmp_path):
     assert zero == {(n, n) for n in ["a", "b", "c", "x", "y"]}
 
     d1 = str(tmp_path / "cc1")
-    d3 = str(tmp_path / "cc3")
     full = {
         (r["entity"], r["component"])
         for r in connected_components(e, stage_dir=d1).collect()
     }
-    k3 = {
-        (r["entity"], r["component"])
-        for r in connected_components(e, stage_dir=d3, checkpoint_every=3).collect()
-    }
-    assert full == k3 == {
+    assert full == {
         ("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x"),
     }
     import os
     assert os.path.isdir(d1)  # caller-owned dir left intact
 
-
-def test_checkpoint_policy_auto_tune(spark):
-    """checkpoint_every=None resolves to eager per-iteration
-    checkpointing at EVERY size — the round-4 k=3 batching branch was
-    retired after the 6M-node A/B measured it 2× slower (lazy 3-chains
-    recompute the join work; see checkpoint_policy's docstring); labels
-    are identical under either k (idempotent fixed-point iterations)."""
-    assert canonical.checkpoint_policy(0) == 1
-    assert canonical.checkpoint_policy(canonical.CHECKPOINT_AUTO_THRESHOLD) == 1
-    assert canonical.checkpoint_policy(canonical.CHECKPOINT_AUTO_THRESHOLD + 1) == 1
-
-    edges = spark.createDataFrame(
+    chain = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("d", "c"), ("x", "y")], "a string, b string"
     )
-    auto = {tuple(r) for r in canonical.connected_components(edges).collect()}
-    k3 = {
-        tuple(r)
-        for r in canonical.connected_components(edges, checkpoint_every=3).collect()
-    }
-    assert auto == k3
-    assert auto == {
+    assert {tuple(r) for r in connected_components(chain).collect()} == {
         ("a", "a"), ("b", "a"), ("c", "a"), ("d", "a"), ("x", "x"), ("y", "x")
     }
 
