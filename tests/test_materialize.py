@@ -25,8 +25,9 @@ def test_staging_only_through_materialize():
         if re.search(r"tempfile\.mkdtemp|atexit\.register", text)
     )
     assert owners == ["plans/materialize.py"]
+    # `[_]` keeps this file from matching a plain grep for the retired names
     retired = re.compile(
-        r"def _(rt|roundtrip)\(|roundtrip_small|checkpoint_every|checkpoint_policy"
+        r"def _(rt|roundtrip)\(|roundtrip[_]small|checkpoint[_](every|policy)"
     )
     assert sorted(name for name, text in src.items() if retired.search(text)) == []
 
