@@ -16,11 +16,19 @@ exploratory lives here instead (per the optimization-round rules):
   single-task union-find kernel at its size limit, with the wall and
   the peak RSS of the PySpark worker processes (the kernel's memory
   lives there, outside the JVM and its event-log metrics);
+* ``bigdictbuild`` — the broadcast-join mention detector on a
+  20k-surface dictionary with ~4k distinct first tokens over lengths
+  1-3, built inline (bench.py's ``bigdict_gazetteer`` reuses the real
+  gazetteer's few first tokens, so it cannot show this): ``build_s`` is
+  the ``mentions_bigdict_df`` call (its dictionary-meta collect plus
+  the driver-side plan build, no action on the result), ``action_s``
+  the first ``count()`` of the result — the driver-side share that
+  task metrics never see, next to the job it feeds;
 * ``scale64`` — one flagship leg at ×(AMPLIFY·64) amplification
   (VERDICT r5 #6 scale rehearsal) watching wall and plan-construction
   cost.
 
-Usage: python bench_extra.py [noop|ccnb|cckernel|scale64 ...]   (default: noop ccnb)
+Usage: python bench_extra.py [noop|ccnb|cckernel|bigdictbuild|scale64 ...]   (default: noop ccnb)
 Prints one JSON line per section.
 """
 
@@ -39,7 +47,7 @@ from pyspark.sql import functions as F
 
 from ddaugner_spark.session import get_spark
 from ddaugner_spark.sources import gazetteer_df, synthesize_pages, extract_text
-from ddaugner_spark.operators import canonical, linking, mentions, triples
+from ddaugner_spark.operators import bigdict, canonical, linking, mentions, triples
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -226,6 +234,55 @@ def ccnb_section(spark, n_nodes: int = 1_000_000, chain: int = 64) -> dict:
     }
 
 
+def bigdictbuild_section(spark) -> dict:
+    """``bigdict.mentions_bigdict_df`` build vs first action, min of 2.
+    Dictionary: 2,000 unigrams (2,000 first tokens) plus 9,000 bigrams
+    and 9,000 trigrams over 1,000 first tokens each — 20,000 surfaces,
+    4,000 first tokens.  Corpus: 2,000 seeded 30-token
+    documents drawn from the dictionary's tokens and noise.  One
+    untimed warm-up call on 200 documents comes first."""
+    import random
+
+    surfaces = [f"u{k}" for k in range(2000)]
+    surfaces += [f"b{k % 1000} x{k}" for k in range(9000)]
+    surfaces += [f"c{k % 1000} y{k % 7} z{k}" for k in range(9000)]
+    gaz = spark.createDataFrame(
+        [(s, ("PER", "LOC", "ORG")[k % 3]) for k, s in enumerate(surfaces)],
+        "surface string, tag string",
+    ).persist()
+    gaz.count()
+    vocab = [t for s in surfaces[::7] for t in s.split(" ")] + [
+        f"noise{k}" for k in range(500)
+    ]
+    rng = random.Random(7)
+    docs = spark.createDataFrame(
+        [(i, " ".join(rng.choice(vocab) for _ in range(30))) for i in range(2000)],
+        "doc_id long, text string",
+    ).persist()
+    docs.count()
+    # warm the detector's codegen shapes, as bench.py's bigdict leg does
+    bigdict.mentions_bigdict_df(docs.limit(200), gaz).count()
+    build, action, n = [], [], None
+    for _ in range(2):
+        spark.sparkContext.setJobDescription("bench_extra: bigdictbuild")
+        t0 = time.time()
+        m = bigdict.mentions_bigdict_df(docs, gaz)
+        build.append(time.time() - t0)
+        t0 = time.time()
+        n = m.count()
+        action.append(time.time() - t0)
+    spark.sparkContext.setJobDescription(None)
+    gaz.unpersist()
+    docs.unpersist()
+    return {
+        "surfaces": len(surfaces),
+        "first_tokens": len({s.split(" ")[0] for s in surfaces}),
+        "mentions": n,
+        "build_s": round(min(build), 3),
+        "action_s": round(min(action), 3),
+    }
+
+
 def scale64_section(spark) -> dict:
     """One flagship mention+triple pass at ×(AMPLIFY·64) — watches wall
     and driver-side plan-construction cost at rehearsal scale."""
@@ -269,6 +326,10 @@ def main():
                 print(json.dumps({"section": "ccnb", **ccnb_section(spark)}))
             elif s == "cckernel":
                 print(json.dumps({"section": "cckernel", **cckernel_section(spark)}))
+            elif s == "bigdictbuild":
+                print(
+                    json.dumps({"section": "bigdictbuild", **bigdictbuild_section(spark)})
+                )
             elif s == "scale64":
                 print(json.dumps({"section": "scale64", **scale64_section(spark)}))
             else:

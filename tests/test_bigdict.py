@@ -9,7 +9,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from ddaugner_spark import config
-from ddaugner_spark.operators.bigdict import detect_mentions, mentions_bigdict_df
+from ddaugner_spark.operators.bigdict import (
+    _window_structs,
+    candidate_windows,
+    detect_mentions,
+    mentions_bigdict_df,
+)
 from ddaugner_spark.operators.mentions import mentions_df
 
 
@@ -223,6 +228,13 @@ def test_bigdict_plan_shape(spark):
     # build (dimension dedup) or above the join (hits groupBy)
     n_exchanges = plan.count("+- Exchange") + plan.count(":- Exchange")
     assert n_exchanges <= 2, plan
+    # past the optimizer's InSet threshold (10 literals) each bucket's
+    # first-token prefilter is a hash probe, not a linear IN/array scan
+    lengths_firsts = [(1, [f"w{k}" for k in range(12)]), (2, [f"v{k}" for k in range(12)])]
+    opt = candidate_windows(docs, lengths_firsts)._jdf.queryExecution().optimizedPlan()
+    assert "INSET" in opt.toString(), opt.toString()
+    # a bucket without first tokens spawns no windows (SQL has no `IN ()`)
+    assert candidate_windows(docs, [(1, []), (2, ["hash"])]).count() == 1
 
 
 def test_detect_mentions_duplicate_surface_consistent(spark):
@@ -237,3 +249,104 @@ def test_detect_mentions_duplicate_surface_consistent(spark):
     gdf = spark.createDataFrame(entries, "surface string, tag string")
     big = _collect(detect_mentions(docs, gdf, inline_threshold=1))  # broadcast
     assert small == big == [(1, 0, 0, 1, "acme corp", "LOC")]  # min(tag)
+
+
+def test_detect_mentions_null_surface(spark):
+    """A null surface can never equal a window surface: both paths drop
+    it and give the answer of the same dictionary without it (the
+    broadcast path used to crash sorting a null entry length)."""
+    docs = spark.createDataFrame(
+        [(1, "acme corp hires spark people"), (2, "nothing here")],
+        "doc_id long, text string",
+    )
+    entries = [("acme corp", "ORG"), ("spark", "PER"), (None, "LOC")]
+    clean = _collect(detect_mentions(docs, entries[:2]))
+    assert clean  # the fixture really has hits
+    inline = _collect(detect_mentions(docs, entries))
+    gdf = spark.createDataFrame(entries, "surface string, tag string")
+    big = _collect(detect_mentions(docs, gdf, inline_threshold=1))
+    assert inline == big == clean == _collect(mentions_bigdict_df(docs, gdf))
+
+
+#: tokens that a SQL-text prefilter could misparse: quotes of every
+#: kind, backslashes (which ``spark.sql.parser.escapedStringLiterals``
+#: reinterprets), LIKE wildcards, an escape sequence spelled out, a
+#: SQL-injection fragment, non-ASCII, and the empty token of a
+#: double-spaced surface
+_ADVERSARIAL = [
+    "it's", "back\\slash", "\\'", "')", "%_", "\\u0041", "`b`", '"q"',
+    "日本", "OR", "(1=1",
+]
+
+
+def test_bigdict_adversarial_tokens_under_both_parser_modes(spark):
+    """First tokens that are quotes, backslashes and SQL fragments must
+    match exactly as the Python reference does, under both settings of
+    ``spark.sql.parser.escapedStringLiterals``; every length bucket has
+    more than 10 first tokens, so the prefilter runs as an InSet."""
+    gaz = {}
+    for k, a in enumerate(_ADVERSARIAL + ["w0", "w1"]):
+        gaz[a] = "PER"
+        gaz[f"{a} tail{k % 3}"] = "LOC"
+        gaz[f"{a} mid {a}"] = "ORG"
+    gaz["') OR (1=1"] = "MISC"
+    gaz["日本 語"] = "LOC"
+    gaz["beta  gamma"] = "ORG"
+    texts = [
+        "it's back\\slash \\' ') %_ \\u0041 `b` \"q\" 日本 OR (1=1",
+        "x ') OR (1=1 y 日本 語 z beta  gamma end",
+        "it's tail0 it's mid it's back\\slash tail1 `b` mid `b`",
+        f"\\' tail2 {config.SENT_TERM} \"q\" mid \"q\" %_ tail1 A \\u0041",
+        # near misses: what a mis-escaped literal would have matched
+        "it\\'s back\\\\slash ' \\\\' u0041 b q % _ beta gamma 日本語",
+    ]
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    gdf = spark.createDataFrame(list(gaz.items()), "surface string, tag string")
+    want = sorted(
+        (i, sent, s, e, surf, c)
+        for i, t in enumerate(texts)
+        for sent, s, e, surf, c in _ref_mentions(t.split(" "), gaz)
+    )
+    assert len(want) >= 15  # every adversarial token really hits
+    key = "spark.sql.parser.escapedStringLiterals"
+    before = spark.conf.get(key)
+    try:
+        for mode in ("false", "true"):
+            spark.conf.set(key, mode)
+            assert _collect(mentions_bigdict_df(docs, gdf)) == want, mode
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_window_structs_build_cost_constant_in_dictionary(spark, monkeypatch):
+    """Building the prefilter costs the same number of py4j commands for
+    100 and for 10,000 first tokens per bucket: no per-literal JVM call
+    (``Column.isin`` made one ``lit`` call per first token)."""
+    from pyspark import SparkContext
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    client = SparkContext._gateway._gateway_client
+
+    def n_commands(n_firsts: int) -> int:
+        lengths_firsts = [
+            (m, [f"t{m}_{k}" for k in range(n_firsts)]) for m in (1, 2, 3)
+        ]
+        sent = []
+        real = client.send_command
+
+        def counting(command, *args, **kwargs):
+            # object releases from Python's GC ride the same channel at
+            # arbitrary times; they are not plan-building calls
+            if not command.startswith(MEMORY_COMMAND_NAME):
+                sent.append(command)
+            return real(command, *args, **kwargs)
+
+        with monkeypatch.context() as mp:
+            mp.setattr(client, "send_command", counting)
+            _window_structs(lengths_firsts)
+        return len(sent)
+
+    small, large = n_commands(100), n_commands(10_000)
+    assert small == large, (small, large)
