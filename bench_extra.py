@@ -16,6 +16,12 @@ exploratory lives here instead (per the optimization-round rules):
   single-task union-find kernel at its size limit, with the wall and
   the peak RSS of the PySpark worker processes (the kernel's memory
   lives there, outside the JVM and its event-log metrics);
+* ``msfkernel`` — ``graph.minimum_spanning_forest`` on a chain graph
+  just under ``canonical.BROADCAST_AUTO_THRESHOLD`` nodes with
+  md5-derived weights (bench.py's ``graph_msf_20k`` weighting): the
+  first Borůvka round streams ~2M parent-pointer rows through the
+  single-task union-find kernel, the largest table that branch takes;
+  reports the wall, rounds, forest size and the worker peak RSS;
 * ``bigdictbuild`` — the broadcast-join mention detector on a
   20k-surface dictionary with ~4k distinct first tokens over lengths
   1-3, built inline (bench.py's ``bigdict_gazetteer`` reuses the real
@@ -28,7 +34,7 @@ exploratory lives here instead (per the optimization-round rules):
   (VERDICT r5 #6 scale rehearsal) watching wall and plan-construction
   cost.
 
-Usage: python bench_extra.py [noop|ccnb|cckernel|bigdictbuild|scale64 ...]   (default: noop ccnb)
+Usage: python bench_extra.py [noop|ccnb|cckernel|msfkernel|bigdictbuild|scale64 ...]   (default: noop ccnb)
 Prints one JSON line per section.
 """
 
@@ -47,7 +53,9 @@ from pyspark.sql import functions as F
 
 from ddaugner_spark.session import get_spark
 from ddaugner_spark.sources import gazetteer_df, synthesize_pages, extract_text
-from ddaugner_spark.operators import bigdict, canonical, linking, mentions, triples
+from ddaugner_spark.operators import (
+    bigdict, canonical, graph, linking, mentions, triples,
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -171,6 +179,49 @@ def cckernel_section(spark, chain: int = 64) -> dict:
         "n_iters": len(st["iters"]),
         "n_components": n_comp,
         "components_expected": n_nodes // chain,
+        "worker_peak_rss_mb": rss,
+    }
+
+
+def msfkernel_section(spark, chain: int = 64) -> dict:
+    """Minimum spanning forest on the ``cckernel`` chain graph (~1000
+    nodes fewer than ``BROADCAST_AUTO_THRESHOLD``, whole chains), each
+    edge weighted by the first 32 bits of md5(a || b) as in bench.py's
+    ``graph_msf_20k`` leg.  Every round has ≤ threshold live edges, so
+    each contraction runs the single-task union-find kernel; round 1
+    sends one pointer row per node through it.  Reports the MSF wall
+    (to the forest count), the Borůvka rounds, the forest size and the
+    peak RSS of the PySpark worker processes (read after the call, as
+    in ``cckernel``; run it as the only section)."""
+    import shutil
+
+    n_nodes = (canonical.BROADCAST_AUTO_THRESHOLD - 1000) // chain * chain
+    edges = _chain_edges(spark, n_nodes, chain, "/tmp/ddaugner_extra_msfk_e")
+    edges = edges.select(
+        "a",
+        "b",
+        (
+            F.conv(F.substring(F.md5(F.concat("a", "b")), 1, 8), 16, 10)
+            .cast("double")
+            / F.lit(4294967296.0)
+        ).alias("w"),
+    )
+    st: dict = {}
+    t0 = time.time()
+    n_forest = graph.minimum_spanning_forest(
+        edges, stage_dir="/tmp/ddaugner_extra_msfk", stats=st
+    ).count()
+    wall = round(time.time() - t0, 3)
+    rss = _worker_peak_rss_mb(spark)
+    spark.catalog.clearCache()
+    shutil.rmtree("/tmp/ddaugner_extra_msfk_e", ignore_errors=True)
+    shutil.rmtree("/tmp/ddaugner_extra_msfk", ignore_errors=True)
+    return {
+        "msf_sec": wall,
+        "n_nodes": n_nodes,
+        "rounds": len(st["rounds"]),
+        "forest_edges": n_forest,
+        "forest_expected": n_nodes - n_nodes // chain,
         "worker_peak_rss_mb": rss,
     }
 
@@ -326,6 +377,8 @@ def main():
                 print(json.dumps({"section": "ccnb", **ccnb_section(spark)}))
             elif s == "cckernel":
                 print(json.dumps({"section": "cckernel", **cckernel_section(spark)}))
+            elif s == "msfkernel":
+                print(json.dumps({"section": "msfkernel", **msfkernel_section(spark)}))
             elif s == "bigdictbuild":
                 print(
                     json.dumps({"section": "bigdictbuild", **bigdictbuild_section(spark)})

@@ -74,11 +74,14 @@ def co_mention_edges(mentions: DataFrame) -> DataFrame:
 BROADCAST_AUTO_THRESHOLD = 2_000_000
 
 
-def _union_find(batches):
+def union_find(batches):
     """Single-task connected components over streamed ``(a, b)`` edge
     batches: union by smaller root (so every root IS its set's minimum
     member) with path compression; emits ``(entity, component)`` for
-    every node."""
+    every node.  Run as ``repartition(1).mapInPandas`` by
+    :func:`connected_components` and by
+    :func:`~ddaugner_spark.operators.graph.minimum_spanning_forest`,
+    which streams its Borůvka parent pointers through it."""
     import pandas as pd
 
     parent: dict = {}
@@ -198,7 +201,7 @@ def connected_components(
             sym.where(F.col("a") <= F.col("b"))
             .repartition(1)
             .mapInPandas(
-                _union_find, f"entity {node_type}, component {node_type}"
+                union_find, f"entity {node_type}, component {node_type}"
             ),
             f"{stage_dir}/components",
         )

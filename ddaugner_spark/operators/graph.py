@@ -34,6 +34,15 @@ Scale design:
   symmetrized co-mention graph every node has out-degree ≥ 1, so there
   is no dangling mass to redistribute and Σ rank = 1 is preserved
   exactly (pinned in tests).
+* **Broadcast-vs-shuffle**: the O(|V|) table of PageRank, k-core,
+  label propagation, Louvain, (multi-source) BFS and MSF broadcasts
+  while it holds ≤ BROADCAST_AUTO_THRESHOLD rows and both join sides
+  shuffle on the node id above it.  HITS, SALSA, Katz and
+  ``dag_layers`` run on host- or hierarchy-sized graphs and ALWAYS
+  broadcast their score table.
+* **Single-task kernel**: MSF's broadcast-sized contraction streams
+  its parent pointers through ``canonical.union_find``, the kernel
+  ``connected_components`` runs — the only ``mapInPandas`` here.
 """
 
 from __future__ import annotations
@@ -44,7 +53,7 @@ import time
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ddaugner_spark.operators.canonical import BROADCAST_AUTO_THRESHOLD
+from ddaugner_spark.operators.canonical import BROADCAST_AUTO_THRESHOLD, union_find
 from ddaugner_spark.plans.materialize import cut, scratch_dir
 
 
@@ -190,7 +199,6 @@ def pagerank(
     max_iter: int = 20,
     tol: float | None = 1e-6,
     stage_dir: str | None = None,
-    broadcast_ranks: bool | None = None,
     stats: dict | None = None,
     seeds: DataFrame | None = None,
 ) -> DataFrame:
@@ -242,9 +250,8 @@ def pagerank(
     ).persist(StorageLevel.MEMORY_AND_DISK)
     n_nodes = deg.count()
     stats["n_nodes"] = n_nodes
-    if broadcast_ranks is None:
-        broadcast_ranks = n_nodes <= BROADCAST_AUTO_THRESHOLD
-    stats["broadcast_ranks"] = bool(broadcast_ranks)
+    broadcast_ranks = n_nodes <= BROADCAST_AUTO_THRESHOLD
+    stats["broadcast_ranks"] = broadcast_ranks
     if seeds is None:
         base = (1.0 - damping) / n_nodes
         ranks = deg.select(
@@ -321,7 +328,6 @@ def hits(
     edges: DataFrame,
     iters: int = 2,
     ndigits: int = 6,
-    broadcast_scores: bool = True,
     stage_dir: str | None = None,
 ) -> DataFrame:
     """(node, hub, authority) — Kleinberg HITS over a DIRECTED edge
@@ -342,14 +348,12 @@ def hits(
 
     Scale shape: per half-step ONE equi-join of the edge table with the
     O(|V|) score table on its shuffle key + one partial-aggregable
-    groupBy on the opposite endpoint; with ``broadcast_scores`` (the
-    default — host graphs: |V| = hosts, orders of magnitude under the
-    edge count) the O(|V|) score table broadcasts and the edge table is
-    scanned map-side, never exchanged; disable it past
-    BROADCAST_AUTO_THRESHOLD for the honest shuffled join.  Fixed
-    ``iters`` keeps the
-    lazy plan bounded; nodes with no in-edges carry authority 0, no
-    out-edges hub 0 (left joins against the node set).
+    groupBy on the opposite endpoint.  The O(|V|) score table ALWAYS
+    broadcasts (host graphs: |V| = hosts, orders of magnitude under the
+    edge count), so the edge table is scanned map-side, never
+    exchanged.  Fixed ``iters`` keeps the lazy plan bounded; nodes
+    with no in-edges carry authority 0, no out-edges hub 0 (left joins
+    against the node set).
 
     The final (h, a) table is referenced TWICE — by the totals
     aggregate and by the output projection — so with ``stage_dir`` it
@@ -369,7 +373,7 @@ def hits(
     h = nodes.withColumn("h", F.lit(1).cast("long"))
     a = None
     for _ in range(iters):
-        hb = F.broadcast(h) if broadcast_scores else h
+        hb = F.broadcast(h)
         a_raw = (
             e.join(hb, e.src == hb.node)
             .groupBy(F.col("dst").alias("node2"))
@@ -378,7 +382,7 @@ def hits(
         a = nodes.join(a_raw, nodes.node == a_raw.node2, "left").select(
             "node", F.coalesce(F.col("a"), F.lit(0)).cast("long").alias("a")
         )
-        ab = F.broadcast(a) if broadcast_scores else a
+        ab = F.broadcast(a)
         h_raw = (
             e.join(ab, e.dst == ab.node)
             .groupBy(F.col("src").alias("node2"))
@@ -679,17 +683,39 @@ def bfs_distances(
     if stats is None:
         stats = {}
     stats["levels"] = []
-    stage_dir = scratch_dir(stage_dir, "ddaugner_bfs_")
-
-    sym = cut(symmetrize(edges).repartition("a"), f"{stage_dir}/sym")
-    frontier = cut(
+    visited, stats["n_seeds"] = _frontier_bfs(
+        edges,
         seeds.select("node").distinct().withColumn("dist", F.lit(0).cast("int")),
-        f"{stage_dir}/frontier_0",
+        ["node"],
+        scratch_dir(stage_dir, "ddaugner_bfs_"),
+        "",
+        max_depth,
+        stats["levels"],
     )
-    visited = frontier
-    n_frontier = frontier.count()
-    stats["n_seeds"] = n_frontier
+    return visited
 
+
+def _frontier_bfs(
+    edges: DataFrame,
+    start: DataFrame,
+    key: list[str],
+    stage_dir: str,
+    prefix: str,
+    max_depth: int,
+    levels: list,
+) -> tuple[DataFrame, int]:
+    """The frontier loop behind :func:`bfs_distances` and
+    :func:`multi_source_bfs` (their docstrings give the shape).  State
+    rows are ``key`` + ``dist``; ``key[0]`` is the node, the rest ride
+    along from the frontier row that discovered it.  ``start`` is the
+    depth-0 frontier; stage dirs are ``{prefix}frontier_*`` /
+    ``{prefix}visited_*`` (A/B alternation) plus ``sym``.  Appends one
+    ``{depth, sec, n_discovered}`` entry per level to ``levels``.
+    Returns the visited table and the start row count."""
+    sym = cut(symmetrize(edges).repartition("a"), f"{stage_dir}/sym")
+    frontier = cut(start, f"{stage_dir}/{prefix}frontier_0")
+    visited = frontier
+    n_frontier = n_start = frontier.count()
     for depth in range(1, max_depth + 1):
         l_t0 = time.time()
         fr = (
@@ -699,14 +725,14 @@ def bfs_distances(
         )
         nxt = (
             sym.join(fr, sym.a == fr.node)
-            .select(F.col("b").alias("node"))
+            .select(F.col("b").alias("node"), *key[1:])
             .distinct()
-            .join(visited, "node", "left_anti")
+            .join(visited, key, "left_anti")
             .withColumn("dist", F.lit(depth).cast("int"))
         )
-        nxt = cut(nxt, f"{stage_dir}/frontier_{depth % 2}")
+        nxt = cut(nxt, f"{stage_dir}/{prefix}frontier_{depth % 2}")
         n_frontier = nxt.count()
-        stats["levels"].append(
+        levels.append(
             {
                 "depth": depth,
                 "sec": round(time.time() - l_t0, 3),
@@ -716,11 +742,10 @@ def bfs_distances(
         if n_frontier == 0:
             break
         visited = cut(
-            visited.unionByName(nxt), f"{stage_dir}/visited_{depth % 2}"
+            visited.unionByName(nxt), f"{stage_dir}/{prefix}visited_{depth % 2}"
         )
         frontier = nxt
-
-    return visited
+    return visited, n_start
 
 
 def degree_assortativity(edges: DataFrame, ndigits: int = 6) -> DataFrame:
@@ -1137,39 +1162,17 @@ def multi_source_bfs(
     the per-seed distances).  Same frontier idiom: state rows are keyed
     (node, seed), first discovery per key = minimum distance, visited/
     frontier parquet-round-trip per level with A/B path alternation."""
-    stage_dir = scratch_dir(stage_dir, "ddaugner_msbfs_")
-
-    sym = cut(symmetrize(edges).repartition("a"), f"{stage_dir}/sym")
-    frontier = cut(
+    return _frontier_bfs(
+        edges,
         seeds.select("node").distinct().select(
             "node", F.col("node").alias("seed"), F.lit(0).cast("int").alias("dist")
         ),
-        f"{stage_dir}/ms_frontier_0",
-    )
-    visited = frontier
-    n_frontier = frontier.count()
-    for depth in range(1, max_depth + 1):
-        fr = (
-            F.broadcast(frontier)
-            if n_frontier <= BROADCAST_AUTO_THRESHOLD
-            else frontier
-        )
-        nxt = (
-            sym.join(fr, sym.a == fr.node)
-            .select(F.col("b").alias("node"), "seed")
-            .distinct()
-            .join(visited, ["node", "seed"], "left_anti")
-            .withColumn("dist", F.lit(depth).cast("int"))
-        )
-        nxt = cut(nxt, f"{stage_dir}/ms_frontier_{depth % 2}")
-        n_frontier = nxt.count()
-        if n_frontier == 0:
-            break
-        visited = cut(
-            visited.unionByName(nxt), f"{stage_dir}/ms_visited_{depth % 2}"
-        )
-        frontier = nxt
-    return visited
+        ["node", "seed"],
+        scratch_dir(stage_dir, "ddaugner_msbfs_"),
+        "ms_",
+        max_depth,
+        [],
+    )[0]
 
 
 def harmonic_centrality_sample(
@@ -1648,40 +1651,6 @@ def effective_diameter(nf: DataFrame, q: float = 0.9) -> DataFrame:
         ).alias("eff_diameter"),
     )
 
-def _compress_pointers(batches):
-    """Single-task exact pointer compression for Borůvka contraction:
-    (node, par) rows whose only cycles are self-loops → every node
-    mapped to its chain root (iterative union-find path compression —
-    the label PARTITION is identical to the pointer-doubling fixpoint,
-    which is all any consumer reads).  Runs only on the executor-
-    memory-sized branch of :func:`minimum_spanning_forest`; raises on
-    a non-self-loop cycle rather than spinning (the re-rooted
-    pseudoforest invariant makes one impossible)."""
-    import pandas as pd
-
-    par: dict = {}
-    for b in batches:
-        par.update(zip(b["node"], b["par"]))
-    bound = len(par) + 1
-    for n in list(par):
-        chain = []
-        x = n
-        steps = 0
-        while par.get(x, x) != x:
-            chain.append(x)
-            x = par[x]
-            steps += 1
-            if steps > bound:
-                raise ValueError(
-                    "pointer cycle in Borůvka contraction (re-rooting broken)"
-                )
-        for c in chain:
-            par[c] = x
-    yield pd.DataFrame(
-        {"node": list(par.keys()), "par": list(par.values())},
-        dtype="object",
-    )
-
 
 def minimum_spanning_forest(
     edges: DataFrame,
@@ -1704,36 +1673,39 @@ def minimum_spanning_forest(
     ``(component, partner-component)`` parent pointers, form a
     pseudoforest whose only cycles are 2-cycles (two components whose
     mutual min edge is the same — the classic Borůvka argument under a
-    strict total order).  Re-rooting each 2-cycle at its smaller
-    member and POINTER-DOUBLING to the root labels every component in
-    O(log chain) one-join rounds.  The new labels compose with the old
-    ones directly on the live-edge endpoints (``ca``/``cb`` already
-    carry the previous round's labels), so NO full-forest connected-
+    strict total order).  Labelling each pseudotree as one component
+    contracts the round.  The new labels compose with the old ones
+    directly on the live-edge endpoints (``ca``/``cb`` already carry
+    the previous round's labels), so NO full-forest connected-
     components run is needed — rounds ≤ 5 re-ran hash-min CC over the
     ENTIRE accumulated forest every round (5 × sym/init/iterate
     parquet ladders on the bench graph; the contraction graph here is
-    component-sized and halves per round).  Label VALUES differ from
-    the CC formulation (pseudotree root vs min member) but only the
-    PARTITION they induce is ever consumed — picks group by it, live
-    edges drop intra-component rows by it — so the picked edge set,
-    the per-round live counts and the forest are bit-identical.
+    component-sized and halves per round).  Label VALUES differ by
+    branch (min member on the kernel branch, pseudotree root on the
+    doubling branch) but only the PARTITION they induce is ever
+    consumed — picks group by it, live edges drop intra-component rows
+    by it — so the picked edge set, the per-round live counts and the
+    forest are bit-identical.
 
     Scale shape: each round is one component-keyed packed-argmin
     aggregate (``min(struct(w, a, b, cb))`` — map-side combinable)
-    over the live edge set, pointer compression of the component-sized
-    parent table, and two label joins onto the live edges (broadcast
-    while the component table is small, shuffle above
+    over the live edge set, contraction of the component-sized parent
+    table, and two label joins onto the live edges (broadcast while
+    the component table is small, shuffle above
     :data:`~ddaugner_spark.operators.canonical.
     BROADCAST_AUTO_THRESHOLD` — the honest big-graph path).  The
-    compression itself is branch-matched to the same threshold: at or
-    below it the parent table is ALREADY guaranteed executor-memory-
-    sized (it is broadcast whole into every join), so one single-task
-    Arrow kernel (:func:`_compress_pointers`) resolves every chain
-    exactly in one job — the O(log chain) broadcast-join +
-    convergence-count ladder it replaces was ~6 driver-scheduled jobs
-    per round over a tiny table (round-6 A/B: jump phase 8.0 s →
-    0.07 s, leg 15.1 → 9.1 s warm standalone); above the threshold
-    the distributed pointer-doubling ladder runs unchanged.  The live
+    contraction is branch-matched to the same threshold: at or below
+    it the parent table is executor-memory-sized (it is broadcast
+    whole into the relabel joins), so its ``(component, partner)``
+    rows stream through canonical's single-task union-find kernel
+    (:func:`~ddaugner_spark.operators.canonical.union_find`, the one
+    ``connected_components`` runs) in one job — the O(log chain)
+    broadcast-join + convergence-count ladder it replaces was ~6
+    driver-scheduled jobs per round over a tiny table (round-6 A/B:
+    jump phase 8.0 s → 0.07 s, leg 15.1 → 9.1 s warm standalone);
+    above the threshold each mutual-min 2-cycle is re-rooted at its
+    smaller member and the distributed pointer-doubling ladder runs
+    to the roots.  The live
     table parquet-round-trips once per round: the FULL lineage cut is
     what keeps per-round planning cost constant (measured A/B: a lazy
     live chain, even with linear plan growth and every intermediate
@@ -1807,66 +1779,63 @@ def minimum_spanning_forest(
         keep.append(pick)
         picks.append(pick.select("a", "b", "w").distinct())
 
-        # parent pointers (node=component, par=partner component);
-        # re-root each mutual-min 2-cycle at its smaller member.
-        # pick is NOT counted separately — the first doubling step's
-        # convergence count materializes it en route (one job fewer per
-        # round).  All pointer-table joins below broadcast the lookup
-        # side while the component table is executor-memory-sized
-        # (|pick| ≤ 2·n_live, so n_live bounds it — a non-broadcast
-        # tiny self-join costs two exchanges + AQE stage scheduling per
-        # step, measured ~3× the step wall)
+        # contract: the picks, read as (component → partner component)
+        # parent pointers, form a pseudoforest whose only cycles are
+        # mutual-min 2-cycles; map every component to one label per
+        # pseudotree.  pick is NOT counted separately — the contraction
+        # materializes it en route (one job fewer per round).
         bcast = n_live <= BROADCAST_AUTO_THRESHOLD
-        _bc = F.broadcast if bcast else (lambda df: df)
-        par = pick.select(F.col("ca").alias("node"), "par")
-        gpar = _bc(par.select(F.col("node").alias("par"),
-                              F.col("par").alias("gpar")))
-        cur = par.join(gpar, "par").select(
-            "node",
-            F.when(
-                (F.col("gpar") == F.col("node"))
-                & (F.col("node") < F.col("par")),
-                F.col("node"),
-            ).otherwise(F.col("par")).alias("par"),
-        )
-
-        def _hop(f: DataFrame) -> DataFrame:
-            """par(v) ← par(par(v)) — one pointer jump."""
-            g = _bc(f.select(F.col("node").alias("par"),
-                             F.col("par").alias("g")))
-            return f.join(g, "par").select("node", F.col("g").alias("par"))
-
         _t0 = time.time()
         if bcast:
-            # the pointer table is already guaranteed executor-memory-
-            # sized on this branch (it is broadcast whole below and in
-            # every _hop); compress it to roots EXACTLY, in one
-            # single-task Arrow kernel (union-find path compression),
-            # instead of O(log chain) broadcast-join + convergence-
-            # count rounds — each of those is 2-3 driver-scheduled
-            # jobs over a tiny table, and the job floor, not the data,
-            # was the round wall (round-6 A/B: 8.0 s jump phase → one
-            # job).  Sequential pointer-chasing is exactly the
-            # "semantics demand it" case for the sanctioned iterator
-            # mapInPandas form; the >threshold branch keeps the
-            # distributed doubling ladder (the honest big-graph path).
-            cur = (
-                cur.coalesce(1)
-                .mapInPandas(_compress_pointers, "node string, par string")
+            # the pointer table is executor-memory-sized on this branch
+            # (|pick| ≤ 2·n_live): stream it through canonical's
+            # single-task union-find kernel, which labels each
+            # pseudotree by its min member in one job (a 2-cycle is two
+            # unions) instead of O(log chain) join + convergence-count
+            # rounds — each 2-3 driver-scheduled jobs over a tiny table,
+            # where the job floor, not the data, was the round wall
+            # (round-6 A/B: 8.0 s jump phase → one job)
+            lab = (
+                pick.select(F.col("ca").alias("a"), F.col("par").alias("b"))
+                .repartition(1)
+                .mapInPandas(union_find, "entity string, component string")
+                .select(F.col("entity").alias("node"),
+                        F.col("component").alias("par"))
                 .persist(lvl)
             )
-            keep.append(cur)
+            keep.append(lab)
             round_stat["n_jumps"] = 0
         else:
-            # pointer doubling, two jumps per materialized step (4×
-            # chain compression per convergence count); the self-join
-            # doubles the logical plan per jump, so parquet-cut every
-            # 3 steps (rarely reached — pseudotree chains are short)
+            # distributed pointer doubling (the honest big-graph path):
+            # re-root each mutual-min 2-cycle at its smaller member, so
+            # the only cycles left are self-loops, then jump to roots
+            par = pick.select(F.col("ca").alias("node"), "par")
+            gpar = par.select(F.col("node").alias("par"),
+                              F.col("par").alias("gpar"))
+            lab = par.join(gpar, "par").select(
+                "node",
+                F.when(
+                    (F.col("gpar") == F.col("node"))
+                    & (F.col("node") < F.col("par")),
+                    F.col("node"),
+                ).otherwise(F.col("par")).alias("par"),
+            )
+
+            def _hop(f: DataFrame) -> DataFrame:
+                """par(v) ← par(par(v)) — one pointer jump."""
+                g = f.select(F.col("node").alias("par"),
+                             F.col("par").alias("g"))
+                return f.join(g, "par").select("node", F.col("g").alias("par"))
+
+            # two jumps per materialized step (4× chain compression per
+            # convergence count); the self-join doubles the logical
+            # plan per jump, so parquet-cut every 3 steps (rarely
+            # reached — pseudotree chains are short)
             jumps = 0
             while True:
-                mid = _hop(cur)
-                g2 = _bc(mid.select(F.col("node").alias("par"),
-                                    F.col("par").alias("g")))
+                mid = _hop(lab)
+                g2 = mid.select(F.col("node").alias("par"),
+                                F.col("par").alias("g"))
                 nxt = (
                     mid.join(g2, "par")
                     .select(
@@ -1877,12 +1846,12 @@ def minimum_spanning_forest(
                 )
                 keep.append(nxt)
                 n_chg = nxt.filter("chg").count()
-                cur = nxt.select("node", "par")
+                lab = nxt.select("node", "par")
                 jumps += 1
                 if n_chg == 0:
                     break
                 if jumps % 3 == 0:
-                    cur = cut(cur, f"{stage_dir}/jump_{r}")
+                    lab = cut(lab, f"{stage_dir}/jump_{r}")
             round_stat["n_jumps"] = jumps
         round_stat["jump_sec"] = round(time.time() - _t0, 3)
         _t0 = time.time()
@@ -1892,9 +1861,8 @@ def minimum_spanning_forest(
         # every plan the next round builds on (measured: letting the
         # live chain grow lazily, even linearly, doubled the round
         # walls by round 4 from planning/canonicalization cost alone).
-        # Broadcast while the component table is executor-memory-sized
+        # The label table broadcasts while it is executor-memory-sized
         # (same threshold + rationale as canonical.connected_components)
-        lab = cur
         if bcast:
             lab = F.broadcast(lab)
         live = cut(
@@ -2397,7 +2365,6 @@ def katz(
     depth: int = 3,
     beta_denom: int = 4,
     ndigits: int = 9,
-    broadcast_counts: bool = True,
 ) -> DataFrame:
     """(node, katz) — Katz centrality (Katz, Psychometrika 1953)
     truncated at walk length ``depth``: katz(v) = Σ_{k=1..depth}
@@ -2417,9 +2384,9 @@ def katz(
 
     Scale shape: per level ONE equi-join of the edge table with the
     O(|V|) count table on the walk frontier + one partial-aggregable
-    groupBy on the destination; with ``broadcast_counts`` (hosts-sized
-    graphs) the count table broadcasts and the edge table is scanned
-    map-side, never exchanged.  Fixed ``depth`` keeps the lazy plan
+    groupBy on the destination.  The count table ALWAYS broadcasts
+    (hosts-sized graphs), so the edge table is scanned map-side, never
+    exchanged.  Fixed ``depth`` keeps the lazy plan
     bounded.  Overflow bound: walks_k ≤ (max indeg)^k must stay under
     2^63/beta_denom^depth — at depth 3 / denom 4 that allows indeg up
     to ~5·10^5; truncate hot in-degrees or lower depth past that.
@@ -2448,7 +2415,7 @@ def katz(
             .agg(F.sum("ki").cast("long").alias("ki"))
         )
         if k < depth:
-            wb = F.broadcast(w) if broadcast_counts else w
+            wb = F.broadcast(w)
             w = (
                 e.join(wb, e.src == wb.node)
                 .groupBy(F.col("dst").alias("node"))
@@ -2559,7 +2526,6 @@ def simrank(
 def dag_layers(
     edges: DataFrame,
     iters: int = 8,
-    broadcast_layers: bool = True,
 ) -> DataFrame:
     """(node, layer) — longest-path layering of a DAG: ``layer(v)`` =
     length of the longest directed path ending at v (sources = 0), the
@@ -2583,9 +2549,9 @@ def dag_layers(
 
     Scale shape per round: one equi-join of the edge table with the
     O(|V|) layer table + one partial-aggregable groupBy(dst) + one
-    left join back to nodes; with ``broadcast_layers`` (dimension-
-    sized hierarchies) the layer table broadcasts both times and the
-    edge table is never exchanged.  Fixed ``iters`` keeps the lazy
+    left join back to nodes.  The layer table ALWAYS broadcasts, both
+    times (dimension-sized hierarchies), so the edge table is never
+    exchanged.  Fixed ``iters`` keeps the lazy
     plan bounded, same device as :func:`katz`.
     """
     if iters < 1:
@@ -2598,13 +2564,13 @@ def dag_layers(
     )
     cur = nodes.select("node", F.lit(0).cast("long").alias("layer"))
     for _ in range(iters):
-        cb = F.broadcast(cur) if broadcast_layers else cur
+        cb = F.broadcast(cur)
         step = (
             e.join(cb, e.src == cb.node)
             .groupBy(F.col("dst").alias("node"))
             .agg((F.max("layer") + F.lit(1)).cast("long").alias("inl"))
         )
-        sb = F.broadcast(step) if broadcast_layers else step
+        sb = F.broadcast(step)
         cur = nodes.join(sb, "node", "left").select(
             "node",
             F.coalesce(F.col("inl"), F.lit(0)).cast("long").alias("layer"),
@@ -2868,7 +2834,6 @@ def salsa(
     iters: int = 2,
     scale: int = 10**12,
     ndigits: int = 6,
-    broadcast_scores: bool = True,
 ) -> DataFrame:
     """(node, hub, authority) — SALSA (Lempel & Moran, WWW 2000; the
     link-analysis core of production who-to-follow systems) over the
@@ -2887,9 +2852,9 @@ def salsa(
     10¹², i.e. below the rounding grain by ~5 orders.
 
     Scale shape identical to :func:`hits`: per half-step one edge⋈
-    score equi-join (score+degree tables broadcast under the usual
-    threshold) + one partial-aggregable groupBy on the opposite
-    endpoint; fixed ``iters`` bounds the plan.
+    score equi-join (score and degree tables ALWAYS broadcast) + one
+    partial-aggregable groupBy on the opposite endpoint; fixed
+    ``iters`` bounds the plan.
     """
     if iters < 1:
         raise ValueError("salsa: iters must be >= 1")
@@ -2907,14 +2872,10 @@ def salsa(
     )
     h = nodes.withColumn("h", F.lit(scale).cast("long"))
     a = None
-
-    def bc(df):
-        return F.broadcast(df) if broadcast_scores else df
-
     for _ in range(iters):
         a_raw = (
-            e.join(bc(h.withColumnRenamed("node", "src")), "src")
-            .join(bc(outd.withColumnRenamed("node", "src")), "src")
+            e.join(F.broadcast(h.withColumnRenamed("node", "src")), "src")
+            .join(F.broadcast(outd.withColumnRenamed("node", "src")), "src")
             .select(F.col("dst"), F.expr("h DIV od").alias("t"))
             .groupBy(F.col("dst").alias("node2"))
             .agg(F.sum("t").cast("long").alias("a"))
@@ -2923,8 +2884,8 @@ def salsa(
             "node", F.coalesce(F.col("a"), F.lit(0)).cast("long").alias("a")
         )
         h_raw = (
-            e.join(bc(a.withColumnRenamed("node", "dst")), "dst")
-            .join(bc(ind.withColumnRenamed("node", "dst")), "dst")
+            e.join(F.broadcast(a.withColumnRenamed("node", "dst")), "dst")
+            .join(F.broadcast(ind.withColumnRenamed("node", "dst")), "dst")
             .select(F.col("src"), F.expr("a DIV indeg").alias("t"))
             .groupBy(F.col("src").alias("node2"))
             .agg(F.sum("t").cast("long").alias("h"))

@@ -119,7 +119,15 @@ def _candidates(levels: dict[int, list[tuple[str, str]]] | None = None) -> Colum
     """array<struct<start int, n int, tag string>> — every gazetteer window
     hit, all levels.  One `filter` per dictionary length bucket; the
     gazetteer is inlined as literal arrays (broadcast-join variant for
-    dictionaries too large to inline: operators/bigdict.py)."""
+    dictionaries too large to inline: operators/bigdict.py).
+
+    The array is already in the reference's pass order: n desc, then
+    start asc (fix_ner.py:201 outer loop 5..1, inner loop left-to-
+    right).  The levels iterate n descending and ``filter`` preserves
+    position order within a level, so no sort is needed (pinned by
+    test_candidates_are_in_pass_order); a comparator array_sort
+    measurably slowed the whole stage (interpreted per-comparison
+    lambdas)."""
     if levels is None:
         levels = config.GAZ_LEVELS
     n = F.col("n_tokens")
@@ -177,21 +185,6 @@ def _candidates(levels: dict[int, list[tuple[str, str]]] | None = None) -> Colum
     return per_level[0] if len(per_level) == 1 else F.concat(*per_level)
 
 
-def _sorted_candidates(
-    levels: dict[int, list[tuple[str, str]]] | None = None
-) -> Column:
-    """Candidates in the reference's pass order: n desc, then start asc
-    (fix_ner.py:201 outer loop 5..1, inner loop left-to-right).
-
-    No sort is needed: the levels dict iterates n descending and
-    ``filter`` preserves position order within a level, so the
-    concatenated array is already in pass order (pinned by
-    test_candidates_are_in_pass_order).  A comparator array_sort here
-    measurably slowed the whole stage (interpreted per-comparison
-    lambdas)."""
-    return _candidates(levels)
-
-
 def _fold_tags(cands: Column | None = None) -> Column:
     """Final BIO tags array: fold the (pass-ordered) candidates over an
     all-'O' array, applying a window iff it covers ≥1 'O', overwriting
@@ -216,7 +209,7 @@ def _fold_tags(cands: Column | None = None) -> Column:
         return _expr_cached(
             "fold",
             config.GAZ_LEVELS,
-            lambda: _fold_tags(_sorted_candidates()),
+            lambda: _fold_tags(_candidates()),
         )
     n = F.col("n_tokens")
     all_o = F.transform(_seq(n, 1), lambda i: F.lit("O"))
@@ -291,7 +284,7 @@ def spans_expr(levels: dict[int, list[tuple[str, str]]] | None = None) -> Column
         levels = config.GAZ_LEVELS
 
     def build() -> Column:
-        z = F.array(F.struct(_sorted_candidates(levels).alias("cs")))
+        z = F.array(F.struct(_candidates(levels).alias("cs")))
         return F.element_at(
             F.transform(
                 z,

@@ -441,7 +441,7 @@ def hll_estimate(
 def ams_f2(
     tokens_long: DataFrame, item_col: str = "tok", n_estimators: int = 16
 ) -> DataFrame:
-    """AMS second-frequency-moment sketch (Alon–Matias–Szegedy 1996):
+    r"""AMS second-frequency-moment sketch (Alon–Matias–Szegedy 1996):
     k independent ±1 estimators Z_e = Σ_item sign_e(item)·count(item);
     E[Z²] = F2 = Σ count², the self-join-size statistic an optimizer
     wants before planning an equi-join.

@@ -147,6 +147,30 @@ def test_column_fold_equals_kernel(spark):
         assert got[doc_id] == model.tag_tokens(toks), (doc_id, text)
 
 
+def test_candidates_are_in_pass_order(spark):
+    """``_candidates`` needs no sort: its array already comes in
+    fix_ner's pass order (n desc, then start asc), the order the fold
+    consumes."""
+    rows = [(i, t) for i, (t, _w) in enumerate(CASES)]
+    rows += [
+        (100, "fast hash join big data"),
+        (101, "row column sort stream table hash"),
+        (102, "value slow hash data row slow slow"),
+    ]
+    df = (
+        spark.createDataFrame(rows, "doc_id long, text string")
+        .select(F.split("text", " ").alias("tokens"))
+        .withColumn("n_tokens", F.size("tokens"))
+    )
+    got = [
+        [(c["n"], c["start"]) for c in r["cs"]]
+        for r in df.select(mentions._candidates().alias("cs")).collect()
+    ]
+    assert any(len({n for n, _s in cs}) > 1 for cs in got)
+    for cs in got:
+        assert cs == sorted(cs, key=lambda c: (-c[0], c[1]))
+
+
 def test_mentions_decode_matches_kernel_spans(spark):
     """Decoded spans (mentions_df) == kernel entities on the engineered
     corpus, including the merged-span quirk."""

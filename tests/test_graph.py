@@ -387,6 +387,94 @@ class TestBfsDistances:
         assert got == {"zzz": 0}
 
 
+def test_bfs_equals_multi_source_min_over_seeds(spark, tmp_path):
+    """``bfs_distances`` (any seed) equals ``multi_source_bfs`` (per
+    seed) grouped by node with ``min(dist)`` — the two share one
+    frontier loop and differ only in the state key.  Seeded random
+    graph; one seed is not a graph node and stays at distance 0."""
+    rng = random.Random(41)
+    nodes = [f"g{i:02d}" for i in range(40)]
+    pairs = {tuple(sorted(rng.sample(nodes, 2))) for _ in range(50)}
+    e = _edges(spark, pairs)
+    seeds = spark.createDataFrame(
+        [(n,) for n in ("g03", "g17", "g31", "zz")], "node string"
+    )
+    single = {
+        r["node"]: r["dist"]
+        for r in graph.bfs_distances(
+            e, seeds, max_depth=4, stage_dir=str(tmp_path / "one")
+        ).collect()
+    }
+    multi = graph.multi_source_bfs(
+        e, seeds, max_depth=4, stage_dir=str(tmp_path / "ms")
+    )
+    per_node = {
+        r["node"]: r["d"]
+        for r in multi.groupBy("node").agg(F.min("dist").alias("d")).collect()
+    }
+    assert single == per_node
+    assert single["zz"] == 0 and max(single.values()) >= 3
+
+
+#: a deterministic 27-node graph: a ring with chords plus a pendant
+#: 3-edge tail (k-core peels it over several rounds), so every operator
+#: below runs more than one round / level
+_ARM_PAIRS = sorted(
+    {(f"n{i:02d}", f"n{(i + 1) % 24:02d}") for i in range(24)}
+    | {(f"n{i:02d}", f"n{(i * 7 + 5) % 24:02d}") for i in range(0, 24, 3)}
+    | {("n00", "t0"), ("t0", "t1"), ("t1", "t2")}
+)
+
+
+def _arm_run(spark, op, stage_dir, stats):
+    e = _edges(spark, _ARM_PAIRS)
+    seeds = spark.createDataFrame([("n00",), ("n13",)], "node string")
+    if op == "pagerank":
+        return graph.pagerank(e, max_iter=4, tol=None, stage_dir=stage_dir,
+                              stats=stats)
+    if op == "k_core":
+        return graph.k_core(e, k=2, stage_dir=stage_dir, stats=stats)
+    if op == "label_propagation":
+        return graph.label_propagation(e, max_rounds=4, stage_dir=stage_dir,
+                                       stats=stats)
+    if op == "louvain_rounds":
+        return graph.louvain_rounds(e, rounds=2, stage_dir=stage_dir,
+                                    stats=stats)
+    if op == "bfs_distances":
+        return graph.bfs_distances(e, seeds, max_depth=3, stage_dir=stage_dir,
+                                   stats=stats)
+    return graph.multi_source_bfs(e, seeds, max_depth=3, stage_dir=stage_dir)
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["pagerank", "k_core", "label_propagation", "louvain_rounds",
+     "bfs_distances", "multi_source_bfs"],
+)
+def test_shuffle_arm_matches_broadcast_arm(spark, tmp_path, monkeypatch, op):
+    """Each operator's above-threshold arm (both join sides shuffle on
+    the node id) gives the same rows as its broadcast arm: run at the
+    default threshold, then with ``BROADCAST_AUTO_THRESHOLD`` patched
+    to 0.  PageRank ranks are compared at 12 digits (float sums may
+    fold in another order); everything else exactly."""
+
+    def rows(name):
+        stats = {}
+        got = _arm_run(spark, op, str(tmp_path / name), stats).collect()
+        flags = {k: v for k, v in stats.items() if k.startswith("broadcast")}
+        return sorted(
+            tuple(round(v, 12) if isinstance(v, float) else v for v in r)
+            for r in got
+        ), flags
+
+    bcast, bcast_flags = rows("bcast")
+    monkeypatch.setattr(graph, "BROADCAST_AUTO_THRESHOLD", 0)
+    shuffled, shuffled_flags = rows("shuffled")
+    assert bcast and shuffled == bcast
+    assert all(bcast_flags.values()) and not any(shuffled_flags.values())
+    assert set(bcast_flags) == set(shuffled_flags)
+
+
 class TestHits:
     def _hits(self, spark, pairs, iters=2):
         e = spark.createDataFrame(pairs, "src string, dst string")
@@ -706,22 +794,34 @@ def test_msf_ties_match_kruskal_total_order(spark, tmp_path):
     assert got == _kruskal(pairs)
 
 
-def test_compress_pointers_kernel_unit():
-    """Round-6 contraction kernel: chains/trees compress to their
-    self-loop roots; a 2-cycle (impossible after re-rooting) raises
-    instead of spinning."""
+def test_union_find_on_pointer_rows():
+    """MSF's broadcast-sized contraction streams its Borůvka parent
+    pointers (component → partner component) through canonical's
+    union-find kernel: a chain, a tree and a mutual-min 2-cycle each
+    resolve to one component labelled by its min member; the 2-cycle
+    needs no re-rooting first."""
     import pandas as pd
 
-    df = pd.DataFrame(
-        {"node": ["a", "b", "c", "x", "y"], "par": ["a", "a", "b", "x", "a"]}
-    )
-    (out,) = list(graph._compress_pointers(iter([df])))
-    assert dict(zip(out["node"], out["par"])) == {
-        "a": "a", "b": "a", "c": "a", "x": "x", "y": "a"}
+    from ddaugner_spark.operators.canonical import union_find
 
-    cyc = pd.DataFrame({"node": ["a", "b"], "par": ["b", "a"]})
-    with pytest.raises(ValueError, match="pointer cycle"):
-        list(graph._compress_pointers(iter([cyc])))
+    def run(*batches):
+        frames = [
+            pd.DataFrame({"a": [n for n, _p in rows], "b": [p for _n, p in rows]})
+            for rows in batches
+        ]
+        (out,) = list(union_find(iter(frames)))
+        return dict(zip(out["entity"], out["component"]))
+
+    # chain d → c → b → a, rooted at a self-loop, split over two batches
+    assert run([("d", "c"), ("c", "b")], [("b", "a"), ("a", "a")]) == {
+        n: "a" for n in "abcd"}
+    # tree under root r plus a separate self-loop singleton x
+    tree = [("r", "r"), ("s", "r"), ("t", "r"), ("u", "s"), ("v", "t"),
+            ("x", "x")]
+    assert run(tree) == {**{n: "r" for n in "rstuv"}, "x": "x"}
+    # mutual-min 2-cycle b ⇄ c with chains hanging off both ends
+    cyc = [("b", "c"), ("c", "b"), ("d", "c"), ("e", "d"), ("a", "b")]
+    assert run(cyc) == {n: "a" for n in "abcde"}
 
 
 def test_msf_nonbroadcast_branch_matches_kernel(spark, tmp_path, monkeypatch):
