@@ -32,9 +32,12 @@ exploratory lives here instead (per the optimization-round rules):
   task metrics never see, next to the job it feeds;
 * ``scale64`` — one flagship leg at ×(AMPLIFY·64) amplification
   (VERDICT r5 #6 scale rehearsal) watching wall and plan-construction
-  cost.
+  cost;
+* ``pipeline`` — ``KGPipeline.run`` wall on the ×AMPLIFY corpus (the
+  third end-to-end number): the dictionary path, and the model path
+  with page dedup; a fresh output dir per rep, min of 2.
 
-Usage: python bench_extra.py [noop|ccnb|cckernel|msfkernel|bigdictbuild|scale64 ...]   (default: noop ccnb)
+Usage: python bench_extra.py [noop|ccnb|cckernel|msfkernel|bigdictbuild|scale64|pipeline ...]   (default: noop ccnb)
 Prints one JSON line per section.
 """
 
@@ -363,6 +366,35 @@ def scale64_section(spark) -> dict:
     }
 
 
+def pipeline_section(spark) -> dict:
+    """``KGPipeline.run(resume=False)`` over the ×AMPLIFY pages, once
+    per detection path; each rep writes to a fresh output dir."""
+    import shutil
+    import tempfile
+
+    from ddaugner_spark.plans.pipeline import KGPipeline
+
+    corpus_dir = "/tmp/ddaugner_extra_pipeline"
+    shutil.rmtree(corpus_dir, ignore_errors=True)
+    _amplified(spark, AMPLIFY).write.parquet(corpus_dir)
+    pages = synthesize_pages(spark.read.parquet(corpus_dir))
+    out: dict = {"amplify": AMPLIFY, "pages": pages.count()}
+    legs = (
+        ("pipeline_dict", {}),
+        ("pipeline_model_dedup", {"use_model": True, "dedup_pages": True}),
+    )
+    dirs: list = []
+    for name, opts in legs:
+        def run(opts=opts):
+            dirs.append(tempfile.mkdtemp(prefix="ddaugner_extra_kg_"))
+            KGPipeline(spark, dirs[-1], **opts).run(pages, resume=False)
+
+        _leg(spark, name, run, out)
+    for d in dirs + [corpus_dir]:
+        shutil.rmtree(d, ignore_errors=True)
+    return out
+
+
 def main():
     sections = sys.argv[1:] or ["noop", "ccnb"]
     spark = get_spark(
@@ -385,6 +417,8 @@ def main():
                 )
             elif s == "scale64":
                 print(json.dumps({"section": "scale64", **scale64_section(spark)}))
+            elif s == "pipeline":
+                print(json.dumps({"section": "pipeline", **pipeline_section(spark)}))
             else:
                 print(json.dumps({"error": f"unknown section {s}"}))
     finally:

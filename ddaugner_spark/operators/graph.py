@@ -1804,6 +1804,8 @@ def minimum_spanning_forest(
                 .persist(lvl)
             )
             keep.append(lab)
+            # run the kernel here, so jump_sec (not relabel_sec) bills it
+            lab.count()
             round_stat["n_jumps"] = 0
         else:
             # distributed pointer doubling (the honest big-graph path):

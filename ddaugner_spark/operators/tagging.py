@@ -7,11 +7,8 @@ reference's ``predict`` (/root/reference/ddaugner/predict.py:15-138):
 * the model loads **once per task** (iterator-of-batches pattern — the
   reference's analogue is building the DataLoader/model before the batch
   loop, predict.py:37-45);
-* each Arrow batch is tagged vectorized, tags come back as an
-  ``array<string>`` column aligned with the tokens (predict.py:77-106
-  maps wordpieces back to tokens; our stub tags at token granularity so
-  the alignment step is the identity — the seam where a real HF model
-  drops in is marked below);
+* each Arrow batch is tagged document by document, sentence by sentence
+  (:func:`tag_doc_tokens`; the 512-wordpiece cap applies per sentence);
 * the default tag is ``"O"`` (predict.py:88).
 
 The real BERT checkpoint/transformers stack is not in this container, so
@@ -20,15 +17,18 @@ the longest-match semantics of the column-native detector
 (operators/mentions.py) — which gives a strong differential test: the
 Arrow path and the codegen path must produce identical mention sets.
 
-Merging model tags with dictionary tags follows fix_ner.py's precedence
-(dictionary evidence wins on conflict, fix_ner.py:195-252): implemented
-as a per-position ``coalesce`` where 'O' yields to the other source.
+Gazetteer injection follows fix_ner.py's precedence (fix_ner.py:195-252):
+per position a non-'O' dictionary tag wins and the model fills 'O'.
+:func:`merged_mentions_udf` tags, merges, BIO-decodes and assigns sentence
+ids in one ``mapInPandas`` pass (per-document kernel :func:`doc_mentions`);
+composing :func:`tagged_docs_udf` with ``mentions.with_bio`` instead scans
+the pages three times, joins twice on ``doc_id`` and runs the JVM fold.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator, List, Optional
+from typing import Iterator, List, Optional, Tuple
 
 import pandas as pd
 
@@ -38,6 +38,7 @@ from pyspark.sql.types import ArrayType, LongType, StringType, StructField, Stru
 
 from .. import config
 from ..kernels import (
+    Entity,
     align_wordpiece_predictions,
     entities_from_bio_tags,
     featurize_with_context,
@@ -240,10 +241,61 @@ def tagged_docs_udf(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return docs.select(F.col(id_col), F.col("text")).mapInPandas(run, TAGGED_SCHEMA)
 
 
+def doc_mentions(
+    text: Optional[str], model, gazetteer: Optional[DictTaggerModel] = None
+) -> List[Tuple[int, Entity]]:
+    """(sent_id, entity) for each mention of one document: tokens by
+    ``mentions.with_tokens``' rule (null/empty text has none), ``model``
+    tags per sentence (:func:`tag_doc_tokens`), merged by
+    :func:`merge_tag_sources`' rule with the ``gazetteer``'s whole-doc
+    tags when given (so the dictionary still tags a sentence tail the
+    model truncated), reference BIO decode (utils.py:111-166), and
+    ``sent_id`` = terminators before the mention (datas.py:303-313)."""
+    toks = text.split(" ") if text else []
+    tags = tag_doc_tokens(model, toks)
+    if gazetteer is not None:
+        tags = [
+            d if d != "O" else m for d, m in zip(gazetteer.tag_tokens(toks), tags)
+        ]
+    sent_ids, c = [], 0
+    for t in toks:
+        sent_ids.append(c)
+        if t == config.SENT_TERM:
+            c += 1
+    return [(sent_ids[e.start_idx], e) for e in entities_from_bio_tags(toks, tags)]
+
+
+def _mention_frame(rows) -> pd.DataFrame:
+    """MENTION_SCHEMA frame of ``(doc_id, sent_id, entity)`` rows."""
+    return pd.DataFrame(
+        [(int(d), int(s), e.start_idx, e.end_idx, e.surface, e.tag)
+         for d, s, e in rows],
+        columns=MENTION_SCHEMA.fieldNames(),
+    )
+
+
+def _mentions_pass(docs: DataFrame, id_col: str, inject: bool) -> DataFrame:
+    """One ``mapInPandas`` pass of :func:`doc_mentions` emitting
+    MENTION_SCHEMA rows; the model (and the gazetteer tagger when
+    ``inject``) loads once per task."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        model = load_model()
+        gazetteer = DictTaggerModel() if inject else None
+        for pdf in batches:
+            yield _mention_frame(
+                (d, s, e)
+                for d, text in zip(pdf[id_col], pdf["text"])
+                for s, e in doc_mentions(text, model, gazetteer)
+            )
+
+    return docs.select(F.col(id_col), F.col("text")).mapInPandas(run, MENTION_SCHEMA)
+
+
 def mentions_udf(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Mention rows via the Arrow tagging path — same contract as
-    operators.mentions.mentions_df, decoded with the pure kernel
-    (utils.py:111-166 semantics) inside the same UDF pass.
+    """Mention rows via the Arrow tagging path (model tags only) — same
+    contract as operators.mentions.mentions_df, decoded with the pure
+    kernel (utils.py:111-166 semantics) inside the same UDF pass.
 
     Equality with the column path (and the shared SQL oracle) holds for
     sentences under the per-sentence 512-wordpiece cap — the reference's
@@ -251,42 +303,15 @@ def mentions_udf(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     this path inherits the model-path contract.  The precondition is
     pinned on the gate corpora by
     test_corpus_sentences_below_truncation_cap."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = load_model()
-        for pdf in batches:
-            out = {k.name: [] for k in MENTION_SCHEMA.fields}
-            for doc_id, text in zip(pdf[id_col], pdf["text"]):
-                toks = text.split(" ") if text else []
-                tags = tag_doc_tokens(model, toks)
-                # sentence ids: running terminator count (datas.py:303-313)
-                sent_ids, c = [], 0
-                for t in toks:
-                    sent_ids.append(c)
-                    if t == config.SENT_TERM:
-                        c += 1
-                for e in entities_from_bio_tags(toks, tags):
-                    out["doc_id"].append(int(doc_id))
-                    out["sent_id"].append(sent_ids[e.start_idx])
-                    out["start_idx"].append(e.start_idx)
-                    out["end_idx"].append(e.end_idx)
-                    out["surface"].append(e.surface)
-                    out["tag"].append(e.tag)
-            yield pd.DataFrame(out)
-
-    return docs.select(F.col(id_col), F.col("text")).mapInPandas(run, MENTION_SCHEMA)
+    return _mentions_pass(docs, id_col, inject=False)
 
 
-TAGGED_MENTION_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("sent_id", LongType()),
-        StructField("start_idx", LongType()),
-        StructField("end_idx", LongType()),
-        StructField("surface", StringType()),
-        StructField("tag", StringType()),
-    ]
-)
+def merged_mentions_udf(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Mention rows of model tags merged with the gazetteer's tags, in
+    one Arrow pass: :func:`mentions_from_tagged` over
+    :func:`merge_tag_sources` of :func:`tagged_docs_udf` and
+    ``mentions.with_bio``, with ``mentions.sent_id_at`` sentence ids."""
+    return _mentions_pass(docs, id_col, inject=True)
 
 
 def mentions_from_tagged(tagged: DataFrame) -> DataFrame:
@@ -301,21 +326,16 @@ def mentions_from_tagged(tagged: DataFrame) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = {k.name: [] for k in TAGGED_MENTION_SCHEMA.fields}
-            for doc_id, sent_id, toks, tags in zip(
-                pdf["doc_id"], pdf["sent_id"], pdf["tokens"], pdf["tags"]
-            ):
-                for e in entities_from_bio_tags(list(toks), list(tags)):
-                    out["doc_id"].append(int(doc_id))
-                    out["sent_id"].append(int(sent_id))
-                    out["start_idx"].append(e.start_idx)
-                    out["end_idx"].append(e.end_idx)
-                    out["surface"].append(e.surface)
-                    out["tag"].append(e.tag)
-            yield pd.DataFrame(out)
+            yield _mention_frame(
+                (d, s, e)
+                for d, s, toks, tags in zip(
+                    pdf["doc_id"], pdf["sent_id"], pdf["tokens"], pdf["tags"]
+                )
+                for e in entities_from_bio_tags(list(toks), list(tags))
+            )
 
     return tagged.select("doc_id", "sent_id", "tokens", "tags").mapInPandas(
-        run, TAGGED_MENTION_SCHEMA
+        run, MENTION_SCHEMA
     )
 
 
@@ -383,11 +403,9 @@ def mention_embeddings_udf(
             flat: List[int] = []  # piece row-indices, all mentions concatenated
             offsets: List[int] = []  # mention i pools flat[offsets[i]:offsets[i+1]]
             for doc_id, text in zip(pdf[id_col], pdf["text"]):
-                toks = text.split(" ") if text else []
-                tags = tag_doc_tokens(model, toks)
-                for e in entities_from_bio_tags(toks, tags):
+                for _sent_id, e in doc_mentions(text, model):
                     ix: List[int] = []
-                    for tok in toks[e.start_idx : e.end_idx + 1]:
+                    for tok in e.tokens:
                         ix.extend(rows_for(tok))
                     offsets.append(len(flat))
                     flat.extend(ix)

@@ -842,6 +842,36 @@ def test_msf_nonbroadcast_branch_matches_kernel(spark, tmp_path, monkeypatch):
     assert doubling == kernel == _kruskal(pairs)
 
 
+def test_msf_kernel_labels_cached_before_relabel(spark, tmp_path, monkeypatch):
+    """On the kernel branch the union-find job runs in the jump phase:
+    when each round's relabel cut starts, that round's label table is
+    already in the block manager, so ``jump_sec`` bills the kernel and
+    ``relabel_sec`` only the relabel."""
+    def cached_labels():
+        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        return sum(
+            "union_find" in i.name() and i.numCachedPartitions() > 0 for i in infos
+        )
+
+    seen = []
+    real_cut = graph.cut
+
+    def spy(df, path):
+        if "/live_" in path:
+            seen.append(cached_labels() - before)
+        return real_cut(df, path)
+
+    monkeypatch.setattr(graph, "cut", spy)
+    before = cached_labels()
+    # a path: round 1 pairs neighbours, later rounds contract the pairs
+    pairs = [(f"v{i}", f"v{i + 1}", float((i * 7) % 11 + 1)) for i in range(8)]
+    stats: dict = {}
+    df = spark.createDataFrame(pairs, "a string, b string, w double")
+    graph.minimum_spanning_forest(df, stage_dir=str(tmp_path / "m"), stats=stats)
+    assert len(stats["rounds"]) >= 2
+    assert seen == list(range(1, len(stats["rounds"]) + 1))
+
+
 def _uf_components(pairs):
     """Union-find CC over (a, b) pairs → {node: min-member label}."""
     parent = {}
