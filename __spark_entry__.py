@@ -444,17 +444,13 @@ def q_canonical_cc(spark, sf):
 
 
 def q_canonical_star(spark, sf):
-    """Connected components by alternating LARGE-STAR/SMALL-STAR
-    contraction (Kiveris SoCC'14) — the O(log² n)-round,
-    diameter-independent A/B to q_canonical_cc's hash-min label
-    propagation, contract-identical labels (equality pinned in
-    test_operators; shares q_canonical_cc's oracle).  Measured 2.1×
-    slower than hash-min+pointer-jumping at 5.9M edges (docs/PLANS.md)
-    — kept as the correctness A/B and for the non-broadcastable-label
-    hub-skew regime (operators/canonical.py
-    connected_components_star)."""
+    """Connected components of the co-mention graph — the same
+    operator and oracle as q_canonical_cc.  The name once selected the
+    large-star/small-star contraction (Kiveris SoCC'14), measured 2.1×
+    slower than hash-min with pointer jumping at 5.9M edges
+    (docs/PLANS.md) and retired for that."""
     m = mentions.mentions_df(_docs(spark, sf))
-    return canonical.connected_components_star(
+    return canonical.connected_components(
         canonical.co_mention_edges(m), stage_dir=_scratch("q_canonical_star_")
     )
 

@@ -6,11 +6,15 @@ exploratory lives here instead (per the optimization-round rules):
 * ``noop``  — noop-sink isolation of the flagship computations (guide
   §1.4: ``df.write.format("noop")`` computes every column of every row
   and discards it, so the number is the computation, not the sink);
-* ``ccnb``  — connected components with ``broadcast_labels=False`` on
-  an amplified co-mention graph: the 10^12-doc fallback path (VERDICT
-  r5 #4) gets a measured number and a plan assertion (labels exchanged,
-  edges scanned — SortMergeJoin/ShuffledHashJoin, no BroadcastHashJoin
-  in the iteration);
+* ``ccnb``  — connected components on the hash-min loop branch
+  (``canonical.BROADCAST_AUTO_THRESHOLD`` patched to 0) over a 1M-node
+  chain graph: the 10^12-doc fallback path (VERDICT r5 #4) gets a
+  measured number and a plan assertion (labels exchanged, edges
+  scanned — SortMergeJoin/ShuffledHashJoin, no BroadcastHashJoin in
+  the iteration);
+* ``graphlegs`` — bench.py's ``kg_canonical_cc``, ``graph_pagerank5``
+  and ``graph_msf_20k`` shapes standalone: bench.py's warm pass where
+  it has one, then the min of 2, one wall per leg;
 * ``cckernel`` — connected components in auto mode on a chain graph
   just under ``canonical.BROADCAST_AUTO_THRESHOLD`` nodes: the
   single-task union-find kernel at its size limit, with the wall and
@@ -37,7 +41,7 @@ exploratory lives here instead (per the optimization-round rules):
   third end-to-end number): the dictionary path, and the model path
   with page dedup; a fresh output dir per rep, min of 2.
 
-Usage: python bench_extra.py [noop|ccnb|cckernel|msfkernel|bigdictbuild|scale64|pipeline ...]   (default: noop ccnb)
+Usage: python bench_extra.py [noop|ccnb|graphlegs|cckernel|msfkernel|bigdictbuild|scale64|pipeline ...]   (default: noop ccnb)
 Prints one JSON line per section.
 """
 
@@ -70,15 +74,17 @@ def _noop(df):
 
 
 def _leg(spark, name, fn, out, reps=2):
-    best = None
+    """Records the min of ``reps`` walls as ``out[name]``; returns every
+    wall in run order."""
+    walls = []
     for _ in range(max(1, reps)):
         spark.sparkContext.setJobDescription(f"bench_extra: {name}")
         t0 = time.time()
         fn()
-        w = time.time() - t0
-        best = w if best is None else min(best, w)
+        walls.append(round(time.time() - t0, 3))
     spark.sparkContext.setJobDescription(None)
-    out[name] = round(best, 3)
+    out[name] = min(walls)
+    return walls
 
 
 def _amplified(spark, factor):
@@ -129,6 +135,20 @@ def _chain_edges(spark, n_nodes: int, chain: int, path: str):
     )
     ids.filter(F.col("b").isNotNull()).write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)
+
+
+def _md5_weighted(edges):
+    """``(a, b, w)`` with bench.py's ``graph_msf_20k`` weighting: the
+    first 32 bits of md5(a || b), scaled to [0, 1)."""
+    return edges.select(
+        "a",
+        "b",
+        (
+            F.conv(F.substring(F.md5(F.concat("a", "b")), 1, 8), 16, 10)
+            .cast("double")
+            / F.lit(4294967296.0)
+        ).alias("w"),
+    )
 
 
 def _worker_peak_rss_mb(spark) -> float:
@@ -200,15 +220,7 @@ def msfkernel_section(spark, chain: int = 64) -> dict:
 
     n_nodes = (canonical.BROADCAST_AUTO_THRESHOLD - 1000) // chain * chain
     edges = _chain_edges(spark, n_nodes, chain, "/tmp/ddaugner_extra_msfk_e")
-    edges = edges.select(
-        "a",
-        "b",
-        (
-            F.conv(F.substring(F.md5(F.concat("a", "b")), 1, 8), 16, 10)
-            .cast("double")
-            / F.lit(4294967296.0)
-        ).alias("w"),
-    )
+    edges = _md5_weighted(edges)
     st: dict = {}
     t0 = time.time()
     n_forest = graph.minimum_spanning_forest(
@@ -230,19 +242,19 @@ def msfkernel_section(spark, chain: int = 64) -> dict:
 
 
 def ccnb_section(spark, n_nodes: int = 1_000_000, chain: int = 64) -> dict:
-    """Non-broadcast CC (broadcast_labels=False) on a synthetic chain
+    """Loop-branch CC (threshold patched to 0) on a synthetic chain
     graph whose label table (1M string nodes) is past the 8 MB
     auto-broadcast threshold, so the per-iteration hash-min join
     genuinely EXCHANGES the label table — the 10^12-doc fallback path
     (VERDICT r5 #4).  The iteration-join plan is asserted, not
     eyeballed: it must be a SortMergeJoin or ShuffledHashJoin, not a
     BroadcastHashJoin (the co-mention bench graph is 13 nodes — any
-    leg built on it auto-broadcasts no matter what the flag says)."""
+    leg built on it takes the single-task kernel)."""
     edges = _chain_edges(spark, n_nodes, chain, "/tmp/ddaugner_extra_ccnb_e")
 
-    # plan pin: one hash-min iteration exactly as the operator builds it
-    # with broadcast_labels=False (parquet-backed label table, as in the
-    # loop) — the join over the 1M-row label side must not broadcast
+    # plan pin: one hash-min iteration exactly as the operator's loop
+    # builds it (parquet-backed label table) — the join over the 1M-row
+    # label side must not broadcast
     sym = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
     labels = sym.groupBy(F.col("a").alias("node")).agg(
         F.least(F.min("a"), F.min("b")).alias("label")
@@ -260,19 +272,21 @@ def ccnb_section(spark, n_nodes: int = 1_000_000, chain: int = 64) -> dict:
     assert join_exchanges, "iteration join unexpectedly broadcast"
 
     st: dict = {}
-    t0 = time.time()
-    n_comp = (
-        canonical.connected_components(
-            edges,
-            stage_dir="/tmp/ddaugner_extra_ccnb",
-            broadcast_labels=False,
-            stats=st,
+    threshold = canonical.BROADCAST_AUTO_THRESHOLD
+    canonical.BROADCAST_AUTO_THRESHOLD = 0
+    try:
+        t0 = time.time()
+        n_comp = (
+            canonical.connected_components(
+                edges, stage_dir="/tmp/ddaugner_extra_ccnb", stats=st
+            )
+            .select("component")
+            .distinct()
+            .count()
         )
-        .select("component")
-        .distinct()
-        .count()
-    )
-    wall = round(time.time() - t0, 3)
+        wall = round(time.time() - t0, 3)
+    finally:
+        canonical.BROADCAST_AUTO_THRESHOLD = threshold
     import shutil
 
     shutil.rmtree("/tmp/ddaugner_extra_ccnb_e", ignore_errors=True)
@@ -286,6 +300,72 @@ def ccnb_section(spark, n_nodes: int = 1_000_000, chain: int = 64) -> dict:
         "iters": st.get("iters"),
         "iteration_join_exchanges": join_exchanges,
     }
+
+
+def graphlegs_section(spark) -> dict:
+    """bench.py's ``kg_canonical_cc``, ``graph_pagerank5`` and
+    ``graph_msf_20k`` legs on the same inputs and stage dirs: the CC
+    warm pass on 500 documents and the PageRank warm pass come first,
+    as in bench.py; every leg is the min of 2 (bench.py times MSF
+    once).  ``rep_walls`` lists both reps of each leg: a second rep
+    can reuse what the first left persisted."""
+    import shutil
+
+    bench_docs = _amplified(spark, 1)
+    out: dict = {}
+    reps: dict = {}
+    wm = mentions.mentions_df(bench_docs.limit(500))
+    canonical.connected_components(
+        canonical.co_mention_edges(wm), stage_dir="/tmp/ddaugner_bench_cc"
+    ).count()
+    reps["kg_canonical_cc"] = _leg(
+        spark,
+        "kg_canonical_cc",
+        lambda: canonical.connected_components(
+            canonical.co_mention_edges(mentions.mentions_df(bench_docs)),
+            stage_dir="/tmp/ddaugner_bench_cc",
+        ).count(),
+        out,
+    )
+
+    edges_dir = "/tmp/ddaugner_extra_graph_edges"
+    canonical.co_mention_edges(mentions.mentions_df(bench_docs)).write.mode(
+        "overwrite"
+    ).parquet(edges_dir)
+    edges = spark.read.parquet(edges_dir)
+
+    def pagerank5():
+        graph.pagerank(
+            edges, max_iter=5, tol=None, stage_dir="/tmp/ddaugner_bench_pr"
+        ).count()
+
+    pagerank5()
+    reps["graph_pagerank5"] = _leg(spark, "graph_pagerank5", pagerank5, out)
+
+    # bench.py's 20k-node graph: 64-node chains, md5-derived weights
+    ids = spark.range(20_000).select(
+        F.lpad(F.col("id").cast("string"), 7, "0").alias("a"),
+        F.when(
+            (F.col("id") + 1) % 64 != 0,
+            F.lpad((F.col("id") + 1).cast("string"), 7, "0"),
+        ).alias("b"),
+    )
+    msf_dir = "/tmp/ddaugner_extra_msf_e"
+    _md5_weighted(ids.filter(F.col("b").isNotNull())).write.mode(
+        "overwrite"
+    ).parquet(msf_dir)
+    msf_edges = spark.read.parquet(msf_dir)
+    reps["graph_msf_20k"] = _leg(
+        spark,
+        "graph_msf_20k",
+        lambda: graph.minimum_spanning_forest(
+            msf_edges, stage_dir="/tmp/ddaugner_bench_msf"
+        ).count(),
+        out,
+    )
+    for d in (edges_dir, msf_dir):
+        shutil.rmtree(d, ignore_errors=True)
+    return {**out, "rep_walls": reps}
 
 
 def bigdictbuild_section(spark) -> dict:
@@ -407,6 +487,8 @@ def main():
                 print(json.dumps({"section": "noop", **noop_section(spark)}))
             elif s == "ccnb":
                 print(json.dumps({"section": "ccnb", **ccnb_section(spark)}))
+            elif s == "graphlegs":
+                print(json.dumps({"section": "graphlegs", **graphlegs_section(spark)}))
             elif s == "cckernel":
                 print(json.dumps({"section": "cckernel", **cckernel_section(spark)}))
             elif s == "msfkernel":

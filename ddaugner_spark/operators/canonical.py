@@ -6,8 +6,8 @@ consolidating all occurrences of a surface to one label; here we
 consolidate co-occurring entities into components whose canonical id is
 the minimum member.
 
-:func:`connected_components` has two branches, chosen by the size of
-the label table (one row per node):
+:func:`connected_components` is one algorithm — union by minimum label
+— with two size branches, picked by the node count alone:
 
 * **single-task union-find** (≤ :data:`BROADCAST_AUTO_THRESHOLD`
   nodes): the edges stream through one
@@ -19,8 +19,8 @@ the label table (one row per node):
   exchange into the single task keeps the stages that feed it
   parallel;
 
-* **distributed hash-min + pointer jumping** (larger label tables, or
-  ``broadcast_labels=False``) — a driver loop with bounded lineage::
+* **distributed hash-min + pointer jumping** (larger label tables) —
+  a loop with bounded lineage::
 
       label(v) ← v
       repeat: label(v) ← min(label(v), min over neighbors u of label(u))
@@ -33,7 +33,8 @@ the label table (one row per node):
   blows up around iteration ~15).  ``localCheckpoint`` is NOT used: it
   pins blocks to executors, so on a real cluster one lost executor
   kills the job mid-flight (CLAUDE.md).  Convergence is a changed-label
-  count; the jump makes rounds O(log n) on path-like graphs.
+  count; the jump makes rounds O(log n) on path-like graphs.  The loop
+  runs through :func:`~ddaugner_spark.plans.materialize.fixpoint`.
 
 Both branches reach the same fixpoint: every node labelled with the
 lexicographically smallest member of its component.
@@ -41,13 +42,12 @@ lexicographically smallest member of its component.
 
 from __future__ import annotations
 
-import shutil
 import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ddaugner_spark.plans.materialize import cut, scratch_dir
+from ddaugner_spark.plans.materialize import cut, fixpoint, scratch_dir
 
 
 def co_mention_edges(mentions: DataFrame) -> DataFrame:
@@ -113,7 +113,6 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
     stage_dir: str | None = None,
-    broadcast_labels: bool | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
     """(entity, component) with component = min entity id reachable.
@@ -126,18 +125,17 @@ def connected_components(
     lifetime of the result; pass an explicit ``stage_dir`` to control
     that lifetime (the pipeline does).  Nothing stays persisted.
 
-    ``broadcast_labels`` picks the branch (module docstring).  None or
-    True is auto: the union-find kernel while the label table has ≤
-    :data:`BROADCAST_AUTO_THRESHOLD` nodes, the loop above that; the
-    node count is the one the loop's init step takes anyway, so the big
-    graph pays nothing for the branch test.  ``False`` runs the loop.
+    The node count picks the branch (module docstring): the union-find
+    kernel while the label table has ≤ :data:`BROADCAST_AUTO_THRESHOLD`
+    nodes, the loop above that; the count is the one the loop's init
+    step takes anyway, so the big graph pays nothing for the test.
 
     Loop-branch knobs: ``max_iter`` bounds the rounds (the kernel always
     reaches the fixpoint; ``max_iter`` < 1 returns singleton components
     on both branches); every round parquet-materializes the label
-    table and checks convergence.  The loop broadcasts
-    nothing: it runs for label tables too big to broadcast (or on
-    request), so both join sides of a round exchange on the node id.
+    table and checks convergence.  The loop broadcasts nothing: it runs
+    for label tables too big to broadcast, so both join sides of a
+    round exchange on the node id.
 
     ``stats`` (optional dict) is filled in place: ``broadcast_labels``
     (the kernel ran), ``n_nodes``, per-round ``iters`` walls (one entry
@@ -188,8 +186,9 @@ def connected_components(
     n_nodes = init.count()
     stats["n_nodes"] = n_nodes
     stats["init_sec"] = round(time.time() - t0, 3)
+    stats["broadcast_labels"] = n_nodes <= BROADCAST_AUTO_THRESHOLD
 
-    if broadcast_labels is not False and n_nodes <= BROADCAST_AUTO_THRESHOLD:
+    if stats["broadcast_labels"]:
         # one job: stream each undirected edge once through a single-task
         # union-find (sequential pointer-chasing is exactly the "semantics
         # demand it" case for the sanctioned iterator mapInPandas form).
@@ -206,20 +205,13 @@ def connected_components(
             f"{stage_dir}/components",
         )
         sym.unpersist()
-        stats["broadcast_labels"] = True
         stats["n_checkpoints"] = 1
         stats["iters"].append(
             {"it": 1, "sec": round(time.time() - t0, 3), "ckpt": True}
         )
         return comps
 
-    stats["broadcast_labels"] = False
-
-    labels = init
-    final_name = "labels_init"
-    n_ckpt = 0
-    for _it in range(1, max_iter + 1):
-        it_t0 = time.time()
+    def step(labels: DataFrame) -> DataFrame:
         # (1) hash-min: pull the minimum neighbor label; both sides
         # shuffle on the node id.
         neighbor_min = (
@@ -247,45 +239,31 @@ def connected_components(
         parent = stepped.select(
             F.col("node").alias("p_node"), F.col("label").alias("p_label")
         )
-        jumped = (
-            stepped.join(parent, stepped.label == F.col("p_node"), "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("p_label"), F.col("label"))
-                ).alias("new_label"),
-                (
-                    F.col("changed")
-                    | (F.col("p_label") < F.col("label"))
-                ).alias("changed"),
-            )
+        return stepped.join(
+            parent, stepped.label == F.col("p_node"), "left"
+        ).select(
+            "node",
+            F.least(
+                F.col("label"), F.coalesce(F.col("p_label"), F.col("label"))
+            ).alias("label"),
+            (F.col("changed") | (F.col("p_label") < F.col("label"))).alias(
+                "changed"
+            ),
         )
-        # alternate A/B dirs so a crashed write never clobbers the
-        # last good checkpoint (restartable at checkpoint granularity)
-        final_name = f"labels_{n_ckpt % 2}"
-        jumped = cut(jumped, f"{stage_dir}/{final_name}")
-        n_ckpt += 1
-        stats["n_checkpoints"] = n_ckpt
-        n_changed = jumped.filter(F.col("changed")).count()
-        labels = jumped.select("node", F.col("new_label").alias("label"))
-        stats["iters"].append(
-            {"it": _it, "sec": round(time.time() - it_t0, 3),
-             "ckpt": True, "n_changed": n_changed}
-        )
-        if n_changed == 0:
-            break
+
+    def measure(new: DataFrame, _old: DataFrame):
+        n_changed = new.filter(F.col("changed")).count()
+        return n_changed == 0, {"ckpt": True, "n_changed": n_changed}
+
+    labels = fixpoint(
+        init, step, measure, stage_dir, "labels", max_iter, stats["iters"],
+        key="it", own_dir=own_dir,
+    )
+    stats["n_checkpoints"] = len(stats["iters"])
     # the result is backed by the final parquet checkpoint: release the
     # loop-invariant persists
     sym.unpersist()
     init.unpersist()
-
-    # drop the intermediates that don't back the returned DataFrame
-    # (the final checkpoint stays — it IS the result)
-    if own_dir:
-        keep = {final_name}
-        for name in ("sym", "labels_init", "labels_0", "labels_1"):
-            if name not in keep:
-                shutil.rmtree(f"{stage_dir}/{name}", ignore_errors=True)
     return labels.select(
         F.col("node").alias("entity"), F.col("label").alias("component")
     )
@@ -371,17 +349,14 @@ def strongly_connected_components(
         """Propagate min labels along edges (s -> d for 'f', reversed
         for 'b') within the active subgraph until fixpoint."""
         s_col, d_col = ("s", "d") if out_col == "f" else ("d", "s")
-        lab = cut(
-            active.select("node", F.col("node").alias("lbl")), f"{stage_dir}/{tag}_it0"
-        )
-        for it in range(max_fix_rounds):
-            t0 = time.time()
+
+        def step(lab: DataFrame) -> DataFrame:
             cand = (
                 edges_df.join(lab, edges_df[s_col] == lab["node"])
                 .groupBy(F.col(d_col).alias("cnode"))
                 .agg(F.min("lbl").alias("nlbl"))
             )
-            merged = lab.join(cand, lab["node"] == cand["cnode"], "left").select(
+            return lab.join(cand, lab["node"] == cand["cnode"], "left").select(
                 lab["node"].alias("node"),
                 F.least(
                     F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))
@@ -390,16 +365,18 @@ def strongly_connected_components(
                     "chg"
                 ),
             )
-            merged = cut(merged, f"{stage_dir}/{tag}_it{it + 1}")
-            n_chg = merged.filter("chg").count()
-            lab = merged.select("node", "lbl")
-            stats["peels"].append(
-                {"fix": tag, "it": it + 1, "changed": n_chg,
-                 "sec": round(time.time() - t0, 3)}
-            )
-            if n_chg == 0:
-                break
-        else:
+
+        def measure(new: DataFrame, _old: DataFrame):
+            n_chg = new.filter("chg").count()
+            return n_chg == 0, {"fix": tag, "changed": n_chg}
+
+        lab = fixpoint(
+            active.select("node", F.col("node").alias("lbl")), step, measure,
+            stage_dir, out_col, max_fix_rounds, stats["peels"], key="it",
+        )
+        # the last entry is this fixpoint's final round; with no round
+        # run it is a peel summary (no "changed") or missing
+        if not stats["peels"] or stats["peels"][-1].get("changed", 1):
             raise RuntimeError(
                 f"SCC label fixpoint did not converge in {max_fix_rounds} "
                 f"iterations (component diameter exceeds the budget)"
@@ -443,121 +420,3 @@ def strongly_connected_components(
         out = out.union(p)
     return cut(out, f"{stage_dir}/scc_final")
 
-
-def connected_components_star(
-    edges: DataFrame,
-    max_iter: int = 50,
-    stage_dir: str | None = None,
-    stats: dict | None = None,
-) -> DataFrame:
-    """(entity, component) by alternating LARGE-STAR / SMALL-STAR
-    contraction (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC'14) — the O(log² n)-round alternative to
-    :func:`connected_components`' hash-min label propagation, kept as
-    a contract-identical A/B: same string node ids, same
-    lexicographic-min component labels, same edge-list input.
-
-    Per round over the current edge set E:
-
-    * large-star: for every node u, m = min(Γ(u) ∪ {u}); re-hang every
-      STRICTLY LARGER neighbor v > u onto m — long chains collapse
-      toward minima without ever moving a smaller node;
-    * small-star: orient every edge to its larger endpoint, m = min of
-      u's smaller neighbors ∪ {u}; re-hang those neighbors and u onto
-      m — local stars flatten.
-
-    The fixpoint is a forest of depth-1 stars rooted at each
-    component's minimum; the star edges ARE the label table.  Rounds
-    are O(log² n) independent of diameter — the classic MapReduce
-    argument against plain label propagation.  MEASURED VERDICT
-    (local[32], the 6M-node/5.9M-edge chain-64 graph from the
-    SPARK_GRAFT_CC_SCALE leg, interleaved quiet-box run, stats in
-    docs/PLANS.md): star 111.7 s / 7 rounds vs
-    :func:`connected_components` 53.6 s / 6 iterations — OUR hash-min
-    is not plain label-prop: it pointer-jumps (log rounds, not
-    diameter) and broadcasts the label table, while star contraction's
-    edge set stays ≈|V| on chain graphs (every non-root keeps exactly
-    one star edge), so its per-round cost never shrinks.  Kept as the
-    contract-identical correctness A/B and for the regime the
-    measurement doesn't cover (label tables too big to broadcast with
-    skewed hub degrees, where rewriting edges toward minima relieves
-    the join skew hash-min re-pays every round).
-    Convergence is detected by (count, sum-of-hashes) of the edge set
-    — exact for set equality up to hash collision on the 64-bit
-    xxhash, and one cheap aggregate per round instead of a subtract.
-
-    Same determinism/checkpoint contract as hash-min: parquet
-    round-trip per round under ``stage_dir``, results invariant under
-    repartition.
-    """
-    if stats is None:
-        stats = {}
-    stats["rounds"] = []
-    stage_dir = scratch_dir(stage_dir, "ddaugner_ccstar_")
-
-    def _sig(e: DataFrame):
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
-        return row["n"], row["h"]
-
-    def large_star(e: DataFrame) -> DataFrame:
-        sym = e.select("a", "b").unionByName(
-            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        mins = sym.groupBy("a").agg(F.min("b").alias("mn"))
-        mins = mins.select("a", F.least("mn", F.col("a")).alias("m"))
-        return (
-            sym.join(mins, "a")
-            .where(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-        )
-
-    def small_star(e: DataFrame) -> DataFrame:
-        o = e.select(
-            F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-        ).distinct()
-        mins = o.groupBy("a").agg(F.min("b").alias("m"))
-        hang_nbrs = o.join(mins, "a").select(F.col("b").alias("a"), "m")
-        hang_self = mins.select("a", "m")
-        return (
-            hang_nbrs.unionByName(hang_self.select(F.col("a"), F.col("m")))
-            .where(F.col("a") != F.col("m"))
-            .select("a", F.col("m").alias("b"))
-            .distinct()
-        )
-
-    nodes = cut(
-        edges.select(F.col("a").alias("entity"))
-        .unionByName(edges.select(F.col("b").alias("entity")))
-        .distinct(),
-        f"{stage_dir}/nodes",
-    )
-    e = cut(
-        edges.select("a", "b").where(F.col("a") != F.col("b")).distinct(),
-        f"{stage_dir}/e_0",
-    )
-    sig = _sig(e)
-    for it in range(1, max_iter + 1):
-        t0 = time.time()
-        e = cut(small_star(large_star(e)), f"{stage_dir}/e_{it % 2 + 1}")
-        new_sig = _sig(e)
-        stats["rounds"].append(
-            {"round": it, "sec": round(time.time() - t0, 3), "n_edges": new_sig[0]}
-        )
-        if new_sig == sig:
-            break
-        sig = new_sig
-    # fixpoint: e is (child, root) star edges; roots label themselves
-    labels = e.select(F.col("a").alias("entity"), F.col("b").alias("component"))
-    return cut(
-        nodes.join(labels, "entity", "left").select(
-            "entity", F.coalesce("component", F.col("entity")).alias("component")
-        ),
-        f"{stage_dir}/labels_final",
-    )

@@ -43,18 +43,27 @@ Scale design:
 * **Single-task kernel**: MSF's broadcast-sized contraction streams
   its parent pointers through ``canonical.union_find``, the kernel
   ``connected_components`` runs — the only ``mapInPandas`` here.
+* **One fixpoint loop**: k-core, PageRank, label propagation, weighted
+  shortest paths and k-truss keep only their step and convergence
+  measure; ``materialize.fixpoint`` owns the A/B parquet cut, the
+  round stats, the stop and the temp-dir clean-up.  Loops over more
+  than one table (the BFS frontier, MSF's Borůvka rounds, Luby MIS,
+  Jones-Plassmann colouring, densest subgraph, sampled betweenness,
+  Louvain) stay hand-rolled.
+* **Release**: PageRank and MSF, the only operators here that
+  persist, unpersist everything before they return a parquet-backed
+  result.
 """
 
 from __future__ import annotations
 
-import shutil
 import time
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ddaugner_spark.operators.canonical import BROADCAST_AUTO_THRESHOLD, union_find
-from ddaugner_spark.plans.materialize import cut, scratch_dir
+from ddaugner_spark.plans.materialize import cut, fixpoint, scratch_dir
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:
@@ -152,14 +161,13 @@ def k_core(
     sym = cut(symmetrize(edges).repartition("a"), f"{stage_dir}/sym")
     alive = cut(
         sym.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("deg")),
-        f"{stage_dir}/alive_init",
+        f"{stage_dir}/alive_0",
     )
     n_alive = alive.count()
     broadcast_nodes = n_alive <= BROADCAST_AUTO_THRESHOLD
     stats["broadcast_nodes"] = broadcast_nodes
-    final_name = "alive_init"
-    for _round in range(1, max_rounds + 1):
-        r_t0 = time.time()
+
+    def step(alive: DataFrame) -> DataFrame:
         survivors = alive.filter(F.col("deg") >= k).select("node")
         s = F.broadcast(survivors) if broadcast_nodes else survivors
         induced = (
@@ -170,24 +178,19 @@ def k_core(
                 "left_semi",
             )
         )
-        final_name = f"alive_{_round % 2}"
-        new_alive = cut(
-            induced.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("deg")),
-            f"{stage_dir}/{final_name}",
+        return induced.groupBy(F.col("a").alias("node")).agg(
+            F.count("*").alias("deg")
         )
-        n_new = new_alive.filter(F.col("deg") >= k).count()
-        n_prev, alive = n_alive, new_alive
-        n_alive = n_new
-        stats["rounds"].append(
-            {"round": _round, "sec": round(time.time() - r_t0, 3), "n_alive": n_new}
-        )
-        if n_new == n_prev or n_new == 0:
-            break
 
-    if own_dir:
-        for name in ("sym", "alive_init", "alive_0", "alive_1"):
-            if name != final_name:
-                shutil.rmtree(f"{stage_dir}/{name}", ignore_errors=True)
+    def measure(new: DataFrame, _old: DataFrame):
+        nonlocal n_alive
+        n_prev, n_alive = n_alive, new.filter(F.col("deg") >= k).count()
+        return n_alive in (n_prev, 0), {"n_alive": n_alive}
+
+    alive = fixpoint(
+        alive, step, measure, stage_dir, "alive", max_rounds, stats["rounds"],
+        own_dir=own_dir,
+    )
     return alive.filter(F.col("deg") >= k).select(
         F.col("node").alias("entity"), F.col("deg").cast("long").alias("deg")
     )
@@ -266,6 +269,8 @@ def pagerank(
         s_count = flagged.filter(F.col("_s") == 1).count()
         stats["n_seeds"] = s_count
         if s_count == 0:
+            sym.unpersist()
+            deg.unpersist()
             raise ValueError("personalized pagerank: no seed is a graph node")
         is_seed = F.col("_s") == 1
         ranks = flagged.select(
@@ -280,9 +285,7 @@ def pagerank(
         )
     stats["init_sec"] = round(time.time() - t0, 3)
 
-    final_name = None
-    for _it in range(1, max_iter + 1):
-        it_t0 = time.time()
+    def step(ranks: DataFrame) -> DataFrame:
         r = F.broadcast(ranks) if broadcast_ranks else ranks
         contrib = (
             sym.join(r, sym.a == F.col("node"))
@@ -294,7 +297,7 @@ def pagerank(
             contrib = F.broadcast(contrib)
         # every node of the symmetric graph has deg ≥ 1 in-edges, so the
         # left join never actually misses; kept for shape-safety
-        new = ranks.join(contrib, ranks.node == F.col("node2"), "left").select(
+        return ranks.join(contrib, ranks.node == F.col("node2"), "left").select(
             "node",
             "deg",
             "base_v",
@@ -304,23 +307,22 @@ def pagerank(
             ).alias("rank"),
             F.col("rank").alias("prev_rank"),
         )
-        final_name = f"ranks_{_it % 2}"
-        new = cut(new, f"{stage_dir}/{final_name}")
-        it = {"it": _it, "sec": round(time.time() - it_t0, 3)}
-        if tol is not None:
-            delta = new.agg(
-                F.max(F.abs(F.col("rank") - F.col("prev_rank"))).alias("d")
-            ).collect()[0]["d"]
-            it["linf_delta"] = float(delta)
-        stats["iters"].append(it)
-        ranks = new.select("node", "deg", "base_v", "rank")
-        if tol is not None and it["linf_delta"] < tol:
-            break
 
-    if own_dir:
-        for name in ("sym", "deg", "ranks_0", "ranks_1"):
-            if name != final_name:
-                shutil.rmtree(f"{stage_dir}/{name}", ignore_errors=True)
+    def measure(new: DataFrame, _old: DataFrame):
+        if tol is None:
+            return False, {}
+        delta = float(
+            new.agg(F.max(F.abs(F.col("rank") - F.col("prev_rank")))).first()[0]
+        )
+        return delta < tol, {"linf_delta": delta}
+
+    ranks = fixpoint(
+        ranks, step, measure, stage_dir, "ranks", max_iter, stats["iters"],
+        key="it", own_dir=own_dir,
+    )
+    # the result is backed by the final rank cut
+    sym.unpersist()
+    deg.unpersist()
     return ranks.select(F.col("node").alias("entity"), "rank")
 
 
@@ -539,16 +541,14 @@ def label_propagation(
     labels = cut(
         sym.select(F.col("a").alias("node")).distinct()
         .select("node", F.col("node").alias("label")),
-        f"{stage_dir}/labels_init",
+        f"{stage_dir}/labels_0",
     )
     n_nodes = labels.count()
     broadcast_labels = n_nodes <= BROADCAST_AUTO_THRESHOLD
     stats["n_nodes"] = n_nodes
     stats["broadcast_labels"] = broadcast_labels
 
-    final_name = "labels_init"
-    for _round in range(1, max_rounds + 1):
-        r_t0 = time.time()
+    def step(labels: DataFrame) -> DataFrame:
         lbl = F.broadcast(labels) if broadcast_labels else labels
         votes = sym.join(lbl, sym.a == lbl.node).select(
             F.col("b").alias("node"), "label"
@@ -559,26 +559,21 @@ def label_propagation(
         picked = counts.groupBy("node").agg(
             F.min(F.struct((-F.col("cnt")).alias("neg"), F.col("label"))).alias("best")
         )
-        new = picked.select("node", F.col("best.label").alias("label"))
-        final_name = f"labels_{_round % 2}"
-        new = cut(new, f"{stage_dir}/{final_name}")
+        return picked.select("node", F.col("best.label").alias("label"))
+
+    def measure(new: DataFrame, old: DataFrame):
         n_changed = (
             new.alias("n")
-            .join(labels.alias("o"), "node")
+            .join(old.alias("o"), "node")
             .filter(F.col("n.label") != F.col("o.label"))
             .count()
         )
-        labels = new
-        stats["rounds"].append(
-            {"round": _round, "sec": round(time.time() - r_t0, 3), "n_changed": n_changed}
-        )
-        if n_changed == 0:
-            break
+        return n_changed == 0, {"n_changed": n_changed}
 
-    if own_dir:
-        for name in ("sym", "labels_init", "labels_0", "labels_1"):
-            if name != final_name:
-                shutil.rmtree(f"{stage_dir}/{name}", ignore_errors=True)
+    labels = fixpoint(
+        labels, step, measure, stage_dir, "labels", max_rounds, stats["rounds"],
+        own_dir=own_dir,
+    )
     return labels.select(F.col("node").alias("entity"), F.col("label").alias("community"))
 
 
@@ -839,6 +834,7 @@ def shortest_paths_weighted(
     if stats is None:
         stats = {}
     stats["rounds"] = []
+    own_dir = stage_dir is None
     stage_dir = scratch_dir(stage_dir, "ddaugner_sssp_")
 
     e = cut(
@@ -849,25 +845,25 @@ def shortest_paths_weighted(
         seeds.select("node").distinct().withColumn("cost", F.lit(0).cast("long")),
         f"{stage_dir}/dist_0",
     )
-    for r in range(1, max_hops + 1):
-        t0 = time.time()
+
+    def step(dist: DataFrame) -> DataFrame:
         relaxed = dist.join(e, dist.node == e.a).select(
             F.col("b").alias("node"), (F.col("cost") + F.col("w")).alias("cost")
         )
-        new = (
+        return (
             dist.unionByName(relaxed)
             .groupBy("node")
             .agg(F.min("cost").alias("cost"))
         )
-        new = cut(new, f"{stage_dir}/dist_{r % 2}")
-        changed = new.join(dist, ["node", "cost"], "left_anti").count()
-        stats["rounds"].append(
-            {"round": r, "sec": round(time.time() - t0, 3), "changed": changed}
-        )
-        dist = new
-        if changed == 0:
-            break
-    return dist
+
+    def measure(new: DataFrame, old: DataFrame):
+        changed = new.join(old, ["node", "cost"], "left_anti").count()
+        return changed == 0, {"changed": changed}
+
+    return fixpoint(
+        dist, step, measure, stage_dir, "dist", max_hops, stats["rounds"],
+        own_dir=own_dir,
+    )
 
 
 def link_prediction(
@@ -1296,29 +1292,30 @@ def k_truss(
     if stats is None:
         stats = {}
     stats["rounds"] = []
+    own_dir = stage_dir is None
     stage_dir = scratch_dir(stage_dir, "ddaugner_ktruss_")
 
-    alive = cut(edges.select("a", "b").distinct(), f"{stage_dir}/truss_init")
+    alive = cut(edges.select("a", "b").distinct(), f"{stage_dir}/truss_0")
     n_alive = alive.count()
-    sup = None
-    for _round in range(1, max_rounds + 1):
-        r_t0 = time.time()
-        sup = cut(edge_support(alive), f"{stage_dir}/truss_sup_{_round % 2}")
-        survivors = sup.filter(F.col("support") >= k - 2)
-        n_new = survivors.count()
-        stats["rounds"].append(
-            {"round": _round, "sec": round(time.time() - r_t0, 3), "n_edges": n_new}
+
+    def step(alive: DataFrame) -> DataFrame:
+        # support within the previous survivors; the state keeps only
+        # the edges that still qualify
+        return edge_support(alive.select("a", "b")).filter(
+            F.col("support") >= k - 2
         )
-        alive = cut(survivors.select("a", "b"), f"{stage_dir}/truss_{_round % 2}")
-        if n_new == n_alive or n_new == 0:
-            n_alive = n_new
-            break
-        n_alive = n_new
-    # fixed point (or bound): sup rows for the surviving edges carry the
-    # induced support of the final set
-    return sup.filter(F.col("support") >= k - 2).select(
-        "a", "b", F.col("support").cast("long").alias("support")
-    )
+
+    def measure(new: DataFrame, _old: DataFrame):
+        nonlocal n_alive
+        n_prev, n_alive = n_alive, new.count()
+        return n_alive in (n_prev, 0), {"n_edges": n_alive}
+
+    # fixed point (or bound): the surviving edges carry the induced
+    # support of the final set
+    return fixpoint(
+        alive, step, measure, stage_dir, "truss", max_rounds, stats["rounds"],
+        own_dir=own_dir,
+    ).select("a", "b", F.col("support").cast("long").alias("support"))
 
 
 def wl_refinement(edges: DataFrame, rounds: int = 2) -> DataFrame:
@@ -1717,7 +1714,9 @@ def minimum_spanning_forest(
     pointer jumps (4× chain compression per convergence count — the
     count job, not the join, is the per-step cost at bench scale),
     parquet-cut every 3 steps for deep chains.
-    Output: the forest's original ``(a, b, w)`` edges.
+    Output: the forest's original ``(a, b, w)`` edges, cut into one
+    parquet table under ``stage_dir``; every persisted table is
+    released before return.
 
     The Borůvka FIXPOINT itself is not SQL-replayable (union-find
     state), but the RESULT is: under a strict total edge order,
@@ -1750,7 +1749,7 @@ def minimum_spanning_forest(
         .persist(lvl)
     )
     picks: list[DataFrame] = []
-    keep: list[DataFrame] = [live]
+    persisted: list[DataFrame] = [live]
     rounds = []
     for r in range(1, max_rounds + 1):
         _t0 = time.time()
@@ -1776,8 +1775,8 @@ def minimum_spanning_forest(
             )
             .persist(lvl)
         )
-        keep.append(pick)
-        picks.append(pick.select("a", "b", "w").distinct())
+        persisted.append(pick)
+        picks.append(pick.select("a", "b", "w"))
 
         # contract: the picks, read as (component → partner component)
         # parent pointers, form a pseudoforest whose only cycles are
@@ -1803,7 +1802,7 @@ def minimum_spanning_forest(
                         F.col("component").alias("par"))
                 .persist(lvl)
             )
-            keep.append(lab)
+            persisted.append(lab)
             # run the kernel here, so jump_sec (not relabel_sec) bills it
             lab.count()
             round_stat["n_jumps"] = 0
@@ -1846,7 +1845,7 @@ def minimum_spanning_forest(
                     )
                     .persist(lvl)
                 )
-                keep.append(nxt)
+                persisted.append(nxt)
                 n_chg = nxt.filter("chg").count()
                 lab = nxt.select("node", "par")
                 jumps += 1
@@ -1889,16 +1888,17 @@ def minimum_spanning_forest(
         round_stat["relabel_sec"] = round(time.time() - _t0, 3)
     if stats is not None:
         stats["rounds"] = rounds
-    if not picks:
-        return live.select("a", "b", "w").limit(0)
-    out = picks[0]
-    for p in picks[1:]:
-        out = out.unionByName(p)
-    # pick tables stay persisted for the result's lifetime (tiny,
-    # already materialized by the per-round counts); `keep` holds the
-    # references so a caller-side GC cannot drop them mid-consumption
-    out._ddaugner_msf_keep = keep  # type: ignore[attr-defined]
-    return out
+    forest = live.select("a", "b", "w").limit(0)
+    for p in picks:
+        forest = forest.unionByName(p)
+    # one forest-sized table backs the result, so nothing stays
+    # persisted.  A mutual-min edge is picked by both its components;
+    # no edge is picked in two rounds (its endpoints then share a
+    # component), so one distinct over the union dedups every round.
+    forest = cut(forest.distinct(), f"{stage_dir}/forest")
+    for df in persisted:
+        df.unpersist()
+    return forest
 
 
 def single_link_clusters(

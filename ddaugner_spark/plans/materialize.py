@@ -18,15 +18,18 @@ unchanged.
 It is also the one home of intermediate staging.  Every operator cuts
 lineage with :func:`cut` (a parquet round-trip, not ``localCheckpoint``)
 under the directory :func:`scratch_dir` resolves: the caller's
-``stage_dir``, or a temp dir removed at process exit.
+``stage_dir``, or a temp dir removed at process exit.  The iterative
+graph operators run their single-table loops through :func:`fixpoint`.
 """
 
 from __future__ import annotations
 
 import atexit
+import os
 import shutil
 import tempfile
-from typing import List, Optional
+import time
+from typing import Callable, List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 
@@ -76,17 +79,15 @@ def materialize(
     return "parquet"
 
 
-def scratch_dir(
-    stage_dir: Optional[str], prefix: str, parent: Optional[str] = None
-) -> str:
+def scratch_dir(stage_dir: Optional[str], prefix: str) -> str:
     """The directory an operator stages its parquet cuts under:
     ``stage_dir`` when the caller gives one (the caller owns it),
-    otherwise a fresh ``tempfile.mkdtemp(prefix=prefix, dir=parent)``
-    removed at process exit.  Results stay lazily backed by the cuts,
-    so the temp dir must outlive the call — but not the process."""
+    otherwise a fresh ``tempfile.mkdtemp(prefix=prefix)`` removed at
+    process exit.  Results stay lazily backed by the cuts, so the temp
+    dir must outlive the call — but not the process."""
     if stage_dir is not None:
         return stage_dir
-    d = tempfile.mkdtemp(prefix=prefix, dir=parent)
+    d = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, d, ignore_errors=True)
     return d
 
@@ -99,3 +100,43 @@ def cut(df: DataFrame, path: str) -> DataFrame:
     from re-running its corpus-touching plan once per branch."""
     df.write.mode("overwrite").parquet(path)
     return df.sparkSession.read.parquet(path)
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    measure: Callable[[DataFrame, DataFrame], Tuple[bool, dict]],
+    stage_dir: str,
+    name: str,
+    max_rounds: int,
+    rounds: list,
+    key: str = "round",
+    own_dir: bool = False,
+) -> DataFrame:
+    """Iterate ``state ← cut(step(state))`` until ``measure`` reports
+    convergence or ``max_rounds`` rounds ran; returns the last state
+    (``state`` itself when ``max_rounds`` < 1).
+
+    Round ``r`` cuts to ``{stage_dir}/{name}_{r % 2}``: the two dirs
+    alternate, so a crashed write never clobbers the last good state,
+    and a caller that cuts its initial state to ``{name}_0`` reuses
+    the pair.  ``measure(new, old)`` returns ``(converged, fields)``;
+    ``{key: r, "sec": round wall, **fields}`` is appended to
+    ``rounds``.  With ``own_dir`` (``stage_dir`` is the operator's
+    private temp dir, nothing else in it backs the result) every entry
+    but the final state's dir is removed on return."""
+    final = f"{name}_0"
+    for r in range(1, max_rounds + 1):
+        t0 = time.time()
+        final = f"{name}_{r % 2}"
+        new = cut(step(state), f"{stage_dir}/{final}")
+        done, fields = measure(new, state)
+        rounds.append({key: r, "sec": round(time.time() - t0, 3), **fields})
+        state = new
+        if done:
+            break
+    if own_dir:
+        for entry in os.listdir(stage_dir):
+            if entry != final:
+                shutil.rmtree(os.path.join(stage_dir, entry), ignore_errors=True)
+    return state

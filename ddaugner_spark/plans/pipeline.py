@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass, field, asdict
 from typing import Callable, Dict, List, Optional
@@ -39,7 +40,7 @@ from .. import config
 from ..sources.gazetteer import gazetteer_df
 from ..sources.pages import extract_text, synthesize_pages
 from ..operators import canonical, linking, mentions, tagging, triples
-from .materialize import cut, scratch_dir
+from .materialize import cut
 
 
 @dataclass
@@ -135,38 +136,6 @@ class KGPipeline:
             )
 
     # -- the dataflow -----------------------------------------------------
-    def triples_for(self, pages: DataFrame) -> DataFrame:
-        """The logical plan for one partition's pages (lazy).
-
-        Each call checkpoints its connected components into its own
-        ``_cc/adhoc_*`` dir under ``out_dir``, which backs the result;
-        the dir is removed when the process exits."""
-        docs = pages.select(
-            "doc_id", extract_text(F.col("html")).alias("text")
-        )
-        t = triples.triples_df(docs)
-        m = mentions.mentions_df(docs)
-        # CC checkpoints live under the pipeline's own output tree (the
-        # returned DataFrame is lazily backed by the final one — a bare
-        # tempdir would leak for the life of the box), one dir per call
-        # so results held from earlier calls stay intact; like
-        # connected_components' own temp dirs, each lives until exit
-        cc_root = os.path.join(self.out_dir, "_cc")
-        os.makedirs(cc_root, exist_ok=True)
-        comps = canonical.connected_components(
-            canonical.co_mention_edges(m),
-            stage_dir=scratch_dir(None, "adhoc_", parent=cc_root),
-        )
-        return canonical.canonicalize_triples(t, comps).select(
-            "doc_id",
-            "sent_id",
-            F.col("subj_canon").alias("subj"),
-            "pred",
-            F.col("obj_canon").alias("obj"),
-            F.col("subj").alias("subj_surface"),
-            F.col("obj").alias("obj_surface"),
-        )
-
     def run(
         self, pages: DataFrame, resume: bool = True, max_concurrent: int = 1
     ) -> RunReport:
@@ -223,13 +192,18 @@ class KGPipeline:
         docs = ppages.select("doc_id", extract_text(F.col("html")).alias("text"))
         n_pages = docs.count()
 
+        docs_dir = os.path.join(
+            self.out_dir, "_docs", f"{self.partition_col}={part}"
+        )
         if self.dedup_pages:
             keep = (
                 docs.groupBy(F.md5("text").alias("h"))
                 .agg(F.min("doc_id").alias("doc_id"))
                 .select("doc_id")
             )
-            docs = docs.join(keep, "doc_id", "left_semi")
+            # cut once: the count, the mention cut and the triple write
+            # would each re-run the scan, extract, md5 group-by and join
+            docs = cut(docs.join(keep, "doc_id", "left_semi"), docs_dir)
             n_kept = docs.count()
             stages.append(
                 StageMetrics(
@@ -280,6 +254,8 @@ class KGPipeline:
         )
         part_dir = os.path.join(self.out_dir, f"{self.partition_col}={part}")
         out.write.mode("overwrite").parquet(part_dir)
+        # the deduped docs are not a restart unit (the mention table is)
+        shutil.rmtree(docs_dir, ignore_errors=True)
         n_triples = self.spark.read.parquet(part_dir).count()
         stages.append(
             StageMetrics("triples", n_mentions, n_triples, int((time.time() - t0) * 1000))

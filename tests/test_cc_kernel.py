@@ -1,7 +1,6 @@
-"""Connected components: the single-task union-find kernel (auto branch
-on broadcast-sized graphs) against the distributed hash-min loop
-(``broadcast_labels=False``), plus the release of everything the
-operator persists."""
+"""Connected components: the single-task union-find kernel (graphs of
+at most ``BROADCAST_AUTO_THRESHOLD`` nodes) against the distributed
+hash-min loop (the threshold patched below every node count)."""
 
 import random
 
@@ -10,27 +9,24 @@ import pytest
 from ddaugner_spark.operators import canonical, mentions
 
 
-def _release_all(spark):
-    spark.catalog.clearCache()
-    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-        rdd.unpersist(True)
-
-
-def _both(edges, tmp_path, **kw):
+def _both(edges, tmp_path):
     """(kernel labels, loop labels, kernel stats) as sets of rows."""
     st: dict = {}
     kernel = {
         tuple(r)
         for r in canonical.connected_components(
-            edges, stage_dir=str(tmp_path / "kernel"), stats=st, **kw
+            edges, stage_dir=str(tmp_path / "kernel"), stats=st
         ).collect()
     }
-    loop = {
-        tuple(r)
-        for r in canonical.connected_components(
-            edges, stage_dir=str(tmp_path / "loop"), broadcast_labels=False, **kw
-        ).collect()
-    }
+    with pytest.MonkeyPatch.context() as mp:
+        # below every node count, the empty table's 0 included
+        mp.setattr(canonical, "BROADCAST_AUTO_THRESHOLD", -1)
+        loop = {
+            tuple(r)
+            for r in canonical.connected_components(
+                edges, stage_dir=str(tmp_path / "loop")
+            ).collect()
+        }
     return kernel, loop, st
 
 
@@ -90,10 +86,9 @@ def test_kernel_matches_loop_on_co_mention_graph(spark, docs, tmp_path):
     assert st["n_nodes"] == len(kernel)
 
 
-@pytest.mark.parametrize("broadcast_labels", [None, True])
-def test_auto_runs_loop_past_threshold(spark, tmp_path, monkeypatch, broadcast_labels):
-    """None and True are both auto: a graph with more nodes than the
-    threshold runs the loop, with the same labels."""
+def test_auto_runs_loop_past_threshold(spark, tmp_path, monkeypatch):
+    """A graph with more nodes than the threshold runs the loop, with
+    the same labels."""
     monkeypatch.setattr(canonical, "BROADCAST_AUTO_THRESHOLD", 5)
     e = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("x", "y"), ("y", "z")], "a string, b string"
@@ -102,22 +97,8 @@ def test_auto_runs_loop_past_threshold(spark, tmp_path, monkeypatch, broadcast_l
     got = {
         tuple(r)
         for r in canonical.connected_components(
-            e, stage_dir=str(tmp_path / "cc"), broadcast_labels=broadcast_labels,
-            stats=st,
+            e, stage_dir=str(tmp_path / "cc"), stats=st
         ).collect()
     }
     assert got == {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x"), ("z", "x")}
     assert st["broadcast_labels"] is False and st["n_nodes"] == 6
-
-
-@pytest.mark.parametrize("broadcast_labels", [None, False])
-def test_cc_leaves_nothing_persisted(spark, tmp_path, broadcast_labels):
-    _release_all(spark)
-    e = spark.createDataFrame(
-        [("b", "a"), ("c", "b"), ("x", "y")], "a string, b string"
-    )
-    out = canonical.connected_components(
-        e, stage_dir=str(tmp_path / "cc"), broadcast_labels=broadcast_labels
-    )
-    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
-    assert out.count() == 5

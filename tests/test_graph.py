@@ -17,7 +17,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from ddaugner_spark.operators import graph
+from ddaugner_spark.operators import canonical, graph
 
 
 def _edges(spark, pairs):
@@ -475,6 +475,62 @@ def test_shuffle_arm_matches_broadcast_arm(spark, tmp_path, monkeypatch, op):
     assert set(bcast_flags) == set(shuffled_flags)
 
 
+def _release_all(spark):
+    spark.catalog.clearCache()
+    for rdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
+
+
+def _persist_run(spark, op):
+    """``op`` on the _ARM_PAIRS graph with ``stage_dir=None``."""
+    e = _edges(spark, _ARM_PAIRS)
+    seeds = spark.createDataFrame([("n00",), ("n13",)], "node string")
+    weighted = spark.createDataFrame(
+        [(a, b, float(i + 1)) for i, (a, b) in enumerate(_ARM_PAIRS)],
+        "a string, b string, w double",
+    )
+    if op.startswith("cc_"):
+        return canonical.connected_components(e)
+    if op == "scc":
+        return canonical.strongly_connected_components(
+            spark.createDataFrame(_ARM_PAIRS, "src string, dst string")
+        )
+    if op == "k_core":
+        return graph.k_core(e, k=2)
+    if op == "pagerank":
+        return graph.pagerank(e, max_iter=3)
+    if op == "label_propagation":
+        return graph.label_propagation(e, max_rounds=3)
+    if op == "shortest_paths_weighted":
+        return graph.shortest_paths_weighted(weighted, seeds)
+    if op == "k_truss":
+        return graph.k_truss(e, k=2)
+    return graph.minimum_spanning_forest(weighted)
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["cc_kernel", "cc_loop", "scc", "k_core", "pagerank", "label_propagation",
+     "shortest_paths_weighted", "k_truss", "msf_kernel", "msf_doubling"],
+)
+def test_leaves_nothing_persisted(spark, monkeypatch, op):
+    """Each iterative operator, on both size branches where it has two,
+    returns with the storage list empty, and its result — backed by
+    the operator's own temp dir — still reads."""
+    _release_all(spark)
+    if op == "cc_loop":
+        monkeypatch.setattr(canonical, "BROADCAST_AUTO_THRESHOLD", 0)
+    if op == "msf_doubling":
+        monkeypatch.setattr(graph, "BROADCAST_AUTO_THRESHOLD", 0)
+    out = _persist_run(spark, op)
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+    rows = out.collect()
+    assert rows
+    if op.startswith("msf_"):
+        pairs = [(a, b, float(i + 1)) for i, (a, b) in enumerate(_ARM_PAIRS)]
+        assert sorted(tuple(r) for r in rows) == _kruskal(pairs)
+
+
 class TestHits:
     def _hits(self, spark, pairs, iters=2):
         e = spark.createDataFrame(pairs, "src string, dst string")
@@ -563,8 +619,11 @@ class TestPersonalizedPagerank:
             assert abs(got[n] - r[idx[n]]) < 1e-9, n
 
     def test_seed_not_in_graph_raises(self, spark, tmp_path):
+        _release_all(spark)
         with pytest.raises(Exception, match="no seed"):
             self._run(spark, tmp_path, [("a", "b")], ["zz"])
+        # the raise releases what the call persisted
+        assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
 
     def test_uniform_mode_unchanged(self, spark, tmp_path):
         """seeds=None still sums to 1 with uniform teleport (regression

@@ -248,11 +248,10 @@ def test_connected_components_edge_cases(spark, tmp_path):
     }
 
 
-def test_cc_broadcast_and_shuffle_paths_agree(spark):
-    """The broadcast-labels iteration (small graphs: edge table scanned,
-    never exchanged) and the shuffle-join fallback (big graphs) must
-    produce identical labels; the auto policy picks broadcast for a
-    small label table and reports it in stats."""
+def test_cc_broadcast_and_shuffle_paths_agree(spark, monkeypatch):
+    """The single-task kernel (small graphs) and the shuffle-join loop
+    (big graphs) must produce identical labels; the node count picks
+    the kernel for a small label table and reports it in stats."""
     edges = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("d", "c"), ("e", "d"), ("x", "y")],
         "a string, b string",
@@ -264,51 +263,11 @@ def test_cc_broadcast_and_shuffle_paths_agree(spark):
     }
     assert st["broadcast_labels"] is True
     assert st["n_checkpoints"] >= 1 and st["iters"]
+    monkeypatch.setattr(canonical, "BROADCAST_AUTO_THRESHOLD", 0)
+    sh_st: dict = {}
     sh = {
         tuple(r)
-        for r in canonical.connected_components(
-            edges, broadcast_labels=False
-        ).collect()
+        for r in canonical.connected_components(edges, stats=sh_st).collect()
     }
+    assert sh_st["broadcast_labels"] is False
     assert bc == sh
-
-
-def test_cc_star_equals_hash_min(spark, sf_dir, tmp_path):
-    """Large-star/small-star contraction is contract-identical to
-    hash-min label propagation: same labels on the real co-mention
-    graph AND on an adversarial long-chain + islands graph (the shape
-    star contraction exists for)."""
-    from ddaugner_spark.operators import mentions as mentions_mod
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    e = canonical.co_mention_edges(mentions_mod.mentions_df(docs))
-    want = {
-        tuple(r)
-        for r in canonical.connected_components(
-            e, stage_dir=str(tmp_path / "hm")
-        ).collect()
-    }
-    got = {
-        tuple(r)
-        for r in canonical.connected_components_star(
-            e, stage_dir=str(tmp_path / "st")
-        ).collect()
-    }
-    assert want and got == want
-
-    # 200-node chain + two islands + a self-loop + duplicate/reversed edges
-    rows = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(199)]
-    rows += [("z1", "z2"), ("z2", "z1"), ("solo", "solo"), ("y1", "y2")]
-    edges = spark.createDataFrame(rows, ["a", "b"])
-    stats = {}
-    got2 = {
-        tuple(r)
-        for r in canonical.connected_components_star(
-            edges, stage_dir=str(tmp_path / "st2"), stats=stats
-        ).collect()
-    }
-    want2 = {(f"n{i:03d}", "n000") for i in range(200)}
-    want2 |= {("z1", "z1"), ("z2", "z1"), ("y1", "y1"), ("y2", "y1"), ("solo", "solo")}
-    assert got2 == want2
-    # O(log^2 n) rounds on a 200-chain, far under the diameter
-    assert 1 <= len(stats["rounds"]) <= 12

@@ -191,23 +191,3 @@ def test_decode_null_payload(spark):
     assert rows["u1"]["n_bytes"] is None
     assert rows["u1"]["payload_sha"] is None
     assert rows["u1"]["feature"] is None
-
-
-def test_triples_for_results_do_not_share_cc_dir(spark, docs, tmp_path):
-    """Each triples_for call checkpoints its CC into its own dir under
-    the output tree, so a result held from an earlier call still reads
-    its own components after a later call."""
-    pipe = KGPipeline(spark, str(tmp_path / "kg"))
-    pages = synthesize_pages(docs.limit(60))
-    first = pipe.triples_for(pages.filter(F.col("doc_id") % 2 == 0))
-    want = {tuple(r) for r in first.collect()}
-    second = pipe.triples_for(pages.filter(F.col("doc_id") % 2 == 1))
-    assert want and {tuple(r) for r in second.collect()} != want
-
-    def cc_dirs(df):
-        return {
-            f.split("/_cc/")[1].split("/")[0] for f in df.inputFiles() if "/_cc/" in f
-        }
-
-    assert cc_dirs(first) and cc_dirs(first).isdisjoint(cc_dirs(second))
-    assert {tuple(r) for r in first.collect()} == want
