@@ -86,18 +86,21 @@ def test_kernel_matches_loop_on_co_mention_graph(spark, docs, tmp_path):
     assert st["n_nodes"] == len(kernel)
 
 
-def test_auto_runs_loop_past_threshold(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("caller_dir", [None, True])
+def test_auto_runs_loop_past_threshold(spark, tmp_path, monkeypatch, caller_dir):
     """A graph with more nodes than the threshold runs the loop, with
-    the same labels."""
+    the same labels, staged in the operator's own temp dir (None, whose
+    non-final round dirs the loop removes) or in the caller's (True)."""
     monkeypatch.setattr(canonical, "BROADCAST_AUTO_THRESHOLD", 5)
     e = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("x", "y"), ("y", "z")], "a string, b string"
     )
     st: dict = {}
+    stage_dir = str(tmp_path / "cc") if caller_dir else None
     got = {
         tuple(r)
         for r in canonical.connected_components(
-            e, stage_dir=str(tmp_path / "cc"), stats=st
+            e, stage_dir=stage_dir, stats=st
         ).collect()
     }
     assert got == {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x"), ("z", "x")}
