@@ -143,11 +143,12 @@ def q_mentions_udf(spark, sf):
 
 
 def q_mentions_bigdict(spark, sf):
-    """Broadcast-join detector for dictionaries too large to inline
-    (J1 at reference scale — conll_entities.py:7-26 is 3.5k names):
-    windows prefiltered by the dictionary's first-token InSet, broadcast
-    hash join on surface, hits-only shuffle, same overwrite semantics.
-    Must equal the inline matcher, so it shares q_mentions' oracle."""
+    """Detector for dictionaries too large to inline (J1 at reference
+    scale — conll_entities.py:7-26 is 3.5k names): the deduped
+    dictionary collected once into the fix_ner tagger, then one
+    map-only Arrow pass that tags, decodes and assigns sentence ids per
+    document, same overwrite semantics.  Must equal the inline matcher,
+    so it shares q_mentions' oracle."""
     from ddaugner_spark.operators.bigdict import mentions_bigdict_df
 
     gaz = spark.createDataFrame(

@@ -26,14 +26,19 @@ exploratory lives here instead (per the optimization-round rules):
   first Borůvka round streams ~2M parent-pointer rows through the
   single-task union-find kernel, the largest table that branch takes;
   reports the wall, rounds, forest size and the worker peak RSS;
-* ``bigdictbuild`` — the broadcast-join mention detector on a
+* ``bigdictbuild`` — the big-dictionary mention detector on a
   20k-surface dictionary with ~4k distinct first tokens over lengths
   1-3, built inline (bench.py's ``bigdict_gazetteer`` reuses the real
   gazetteer's few first tokens, so it cannot show this): ``build_s`` is
-  the ``mentions_bigdict_df`` call (its dictionary-meta collect plus
-  the driver-side plan build, no action on the result), ``action_s``
-  the first ``count()`` of the result — the driver-side share that
-  task metrics never see, next to the job it feeds;
+  the ``mentions_bigdict_df`` call (the deduped dictionary's collect
+  and the tagger build, no action on the result), ``action_s`` the
+  first ``count()`` of the result — the driver-side share that task
+  metrics never see, next to the job it feeds;
+* ``bigdictscale`` — bench.py's ``kg_mentions_bigdict_30k`` shape
+  standalone: the ×AMPLIFY corpus materialized under a temp dir,
+  bench.py's ``bigdict_gazetteer``, one warm-up call on 200 documents
+  per arm, then the min of 2 ``count()`` walls with ``prefilter`` on
+  and off, each with its mention count;
 * ``scale64`` — one flagship leg at ×(AMPLIFY·64) amplification
   (VERDICT r5 #6 scale rehearsal) watching wall and plan-construction
   cost;
@@ -41,7 +46,7 @@ exploratory lives here instead (per the optimization-round rules):
   third end-to-end number): the dictionary path, and the model path
   with page dedup; a fresh output dir per rep, min of 2.
 
-Usage: python bench_extra.py [noop|ccnb|graphlegs|cckernel|msfkernel|bigdictbuild|scale64|pipeline ...]   (default: noop ccnb)
+Usage: python bench_extra.py [noop|ccnb|graphlegs|cckernel|msfkernel|bigdictbuild|bigdictscale|scale64|pipeline ...]   (default: noop ccnb)
 Prints one JSON line per section.
 """
 
@@ -87,7 +92,8 @@ def _leg(spark, name, fn, out, reps=2):
     return walls
 
 
-def _amplified(spark, factor):
+def _bench():
+    """The frozen bench.py, loaded as a module."""
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
@@ -95,7 +101,11 @@ def _amplified(spark, factor):
     )
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
-    return bench.amplified_docs(spark, SF_DIR, factor)
+    return bench
+
+
+def _amplified(spark, factor):
+    return _bench().amplified_docs(spark, SF_DIR, factor)
 
 
 def noop_section(spark) -> dict:
@@ -369,7 +379,8 @@ def graphlegs_section(spark) -> dict:
 
 
 def bigdictbuild_section(spark) -> dict:
-    """``bigdict.mentions_bigdict_df`` build vs first action, min of 2.
+    """``bigdict.mentions_bigdict_df`` build (the deduped dictionary's
+    collect and the tagger build) vs first action, min of 2.
     Dictionary: 2,000 unigrams (2,000 first tokens) plus 9,000 bigrams
     and 9,000 trigrams over 1,000 first tokens each — 20,000 surfaces,
     4,000 first tokens.  Corpus: 2,000 seeded 30-token
@@ -415,6 +426,39 @@ def bigdictbuild_section(spark) -> dict:
         "build_s": round(min(build), 3),
         "action_s": round(min(action), 3),
     }
+
+
+def bigdictscale_section(spark) -> dict:
+    """bench.py's ``kg_mentions_bigdict_30k`` and ``_nofilter`` legs
+    standalone: ``bigdict.mentions_bigdict_df(docs, gaz,
+    prefilter=...).count()`` over the ×AMPLIFY corpus with bench.py's
+    30k-extra dictionary, min of 2 per arm after one 200-document
+    warm-up call."""
+    import shutil
+    import tempfile
+
+    bench = _bench()
+    corpus_dir = tempfile.mkdtemp(prefix="ddaugner_extra_bigdict_")
+    bench.amplified_docs(spark, SF_DIR, AMPLIFY).write.mode("overwrite").parquet(
+        corpus_dir
+    )
+    docs = spark.read.parquet(corpus_dir)
+    gaz = bench.bigdict_gazetteer(spark)
+    out: dict = {"amplify": AMPLIFY, "docs": docs.count()}
+    for arm, name in ((True, "bigdict_30k"), (False, "bigdict_30k_nofilter")):
+        bigdict.mentions_bigdict_df(docs.limit(200), gaz, prefilter=arm).count()
+        counts = []
+        out[f"{name}_walls"] = _leg(
+            spark,
+            name,
+            lambda arm=arm: counts.append(
+                bigdict.mentions_bigdict_df(docs, gaz, prefilter=arm).count()
+            ),
+            out,
+        )
+        out[f"{name}_mentions"] = counts[-1]
+    shutil.rmtree(corpus_dir, ignore_errors=True)
+    return out
 
 
 def scale64_section(spark) -> dict:
@@ -496,6 +540,10 @@ def main():
             elif s == "bigdictbuild":
                 print(
                     json.dumps({"section": "bigdictbuild", **bigdictbuild_section(spark)})
+                )
+            elif s == "bigdictscale":
+                print(
+                    json.dumps({"section": "bigdictscale", **bigdictscale_section(spark)})
                 )
             elif s == "scale64":
                 print(json.dumps({"section": "scale64", **scale64_section(spark)}))

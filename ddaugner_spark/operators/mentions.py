@@ -17,9 +17,9 @@ Scale design: everything here is **narrow** — per-row array expressions
 (``filter``/``transform``/``aggregate`` higher-order functions) that stay
 inside whole-stage codegen.  There is *no shuffle and no Python* in mention
 detection: a 100 TB pages scan streams through map-only stages, and the
-gazetteer never leaves the closure (it is inlined as literal arrays — the
-broadcast-join formulation in :mod:`.linking` is used when the dictionary
-is too big to inline, with ``F.broadcast`` keeping it off the shuffle).
+gazetteer never leaves the closure (it is inlined as literal arrays; a
+dictionary too big to inline goes to :mod:`.bigdict`'s map-only Arrow
+tagger pass instead).
 
 The reference's sequential window scan is an ``F.aggregate`` fold over
 the candidate array sorted by (n desc, start asc) — the exact pass order
@@ -118,8 +118,9 @@ def _seq(n: Column, lvl: int) -> Column:
 def _candidates(levels: dict[int, list[tuple[str, str]]] | None = None) -> Column:
     """array<struct<start int, n int, tag string>> — every gazetteer window
     hit, all levels.  One `filter` per dictionary length bucket; the
-    gazetteer is inlined as literal arrays (broadcast-join variant for
-    dictionaries too large to inline: operators/bigdict.py).
+    gazetteer is inlined as literal arrays (for dictionaries too large
+    to inline, operators/bigdict.py runs the same pass as one Arrow
+    tagger pass).
 
     The array is already in the reference's pass order: n desc, then
     start asc (fix_ner.py:201 outer loop 5..1, inner loop left-to-

@@ -23,6 +23,11 @@ per position a non-'O' dictionary tag wins and the model fills 'O'.
 ids in one ``mapInPandas`` pass (per-document kernel :func:`doc_mentions`);
 composing :func:`tagged_docs_udf` with ``mentions.with_bio`` instead scans
 the pages three times, joins twice on ``doc_id`` and runs the JVM fold.
+
+:class:`DictTaggerModel` is the one fix_ner dictionary tagger: the
+gazetteer injection above, the big-dictionary detector
+(operators/bigdict.py: the same pass over a collected dictionary, no
+model) and the benchmark reference all run its ``tag_tokens``.
 """
 
 from __future__ import annotations
@@ -60,14 +65,30 @@ class DictTaggerModel:
     everything around it (task-level load, Arrow batching, schema) stays.
     """
 
-    def __init__(self):
+    def __init__(self, entries=None):
+        """``entries``: (surface, tag) pairs, the engine gazetteer
+        (``config.GAZ_LEVELS``) when omitted.  A surface listed twice
+        keeps its min tag and a null surface is dropped, the rules the
+        dictionary detectors apply (operators/bigdict.py)."""
         # length-bucketed surface -> class maps, longest level first
-        self.levels = [
-            (lvl, {s: c for s, c in entries})
-            for lvl, entries in config.GAZ_LEVELS.items()
-        ]
+        if entries is None:
+            self.levels = [
+                (lvl, {s: c for s, c in es}) for lvl, es in config.GAZ_LEVELS.items()
+            ]
+            return
+        levels: dict[int, dict[str, str]] = {}
+        for s, c in entries:
+            if s is not None:
+                lv = levels.setdefault(len(s.split(" ")), {})
+                lv[s] = c if s not in lv else min(lv[s], c)
+        self.levels = sorted(levels.items(), reverse=True)
 
-    def tag_tokens(self, toks: List[str]) -> List[str]:
+    def first_tokens(self) -> List[set]:
+        """Per level of ``levels``, the first tokens of its surfaces:
+        the ``firsts`` of :meth:`tag_tokens`."""
+        return [{s.split(" ", 1)[0] for s in es} for _lvl, es in self.levels]
+
+    def tag_tokens(self, toks: List[str], firsts=None) -> List[str]:
         """The reference's windowed pass (fix_ner.py:195-215): for
         n = 5..1, left-to-right, retag a dictionary window covering ≥1
         'O' position as B-X I-X…, overwriting previous tags.  The
@@ -76,14 +97,21 @@ class DictTaggerModel:
         level each position is read exactly once, before any same-level
         fix touches it, so the guard sees the LEVEL-START snapshot while
         writes land live (fuzz-proven equivalent to the literal lazy
-        port in tests/test_gazetteer_general.py)."""
+        port in tests/test_gazetteer_general.py).
+
+        ``firsts`` (:meth:`first_tokens`) looks up only the windows whose
+        first token starts an entry of that level; the tags are the
+        same, the surface joins and lookups fewer."""
         n = len(toks)
         tags = ["O"] * n
-        for lvl, entries in self.levels:
+        for k, (lvl, entries) in enumerate(self.levels):
+            first = None if firsts is None else firsts[k]
             snap = tags[:]  # level-start snapshot read by the guard
             for i in range(n - lvl + 1):
+                if first is not None and toks[i] not in first:
+                    continue
                 cls = entries.get(" ".join(toks[i : i + lvl]))
-                if cls is not None and any(t == "O" for t in snap[i : i + lvl]):
+                if cls is not None and "O" in snap[i : i + lvl]:
                     tags[i : i + lvl] = [f"B-{cls}"] + [f"I-{cls}"] * (lvl - 1)
         return tags
 
@@ -242,7 +270,10 @@ def tagged_docs_udf(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def doc_mentions(
-    text: Optional[str], model, gazetteer: Optional[DictTaggerModel] = None
+    text: Optional[str],
+    model,
+    gazetteer: Optional[DictTaggerModel] = None,
+    firsts=None,
 ) -> List[Tuple[int, Entity]]:
     """(sent_id, entity) for each mention of one document: tokens by
     ``mentions.with_tokens``' rule (null/empty text has none), ``model``
@@ -250,13 +281,18 @@ def doc_mentions(
     :func:`merge_tag_sources`' rule with the ``gazetteer``'s whole-doc
     tags when given (so the dictionary still tags a sentence tail the
     model truncated), reference BIO decode (utils.py:111-166), and
-    ``sent_id`` = terminators before the mention (datas.py:303-313)."""
+    ``sent_id`` = terminators before the mention (datas.py:303-313).
+    With ``model`` None the gazetteer's tags alone decode (the
+    big-dictionary detector, operators/bigdict.py); ``firsts`` is
+    passed to its :meth:`DictTaggerModel.tag_tokens`."""
     toks = text.split(" ") if text else []
-    tags = tag_doc_tokens(model, toks)
-    if gazetteer is not None:
-        tags = [
-            d if d != "O" else m for d, m in zip(gazetteer.tag_tokens(toks), tags)
-        ]
+    if model is None:
+        tags = gazetteer.tag_tokens(toks, firsts)
+    else:
+        tags = tag_doc_tokens(model, toks)
+        if gazetteer is not None:
+            dict_tags = gazetteer.tag_tokens(toks, firsts)
+            tags = [d if d != "O" else m for d, m in zip(dict_tags, tags)]
     sent_ids, c = [], 0
     for t in toks:
         sent_ids.append(c)
@@ -274,19 +310,24 @@ def _mention_frame(rows) -> pd.DataFrame:
     )
 
 
-def _mentions_pass(docs: DataFrame, id_col: str, inject: bool) -> DataFrame:
-    """One ``mapInPandas`` pass of :func:`doc_mentions` emitting
-    MENTION_SCHEMA rows; the model (and the gazetteer tagger when
-    ``inject``) loads once per task."""
+def _mentions_pass(
+    docs: DataFrame,
+    id_col: str,
+    use_model: bool,
+    gazetteer: Optional[DictTaggerModel] = None,
+    firsts=None,
+) -> DataFrame:
+    """One map-only ``mapInPandas`` pass of :func:`doc_mentions` emitting
+    MENTION_SCHEMA rows; the model (when ``use_model``) loads once per
+    task, the ``gazetteer`` tagger ships with the function."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        model = load_model()
-        gazetteer = DictTaggerModel() if inject else None
+        model = load_model() if use_model else None
         for pdf in batches:
             yield _mention_frame(
                 (d, s, e)
                 for d, text in zip(pdf[id_col], pdf["text"])
-                for s, e in doc_mentions(text, model, gazetteer)
+                for s, e in doc_mentions(text, model, gazetteer, firsts)
             )
 
     return docs.select(F.col(id_col), F.col("text")).mapInPandas(run, MENTION_SCHEMA)
@@ -303,7 +344,7 @@ def mentions_udf(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     this path inherits the model-path contract.  The precondition is
     pinned on the gate corpora by
     test_corpus_sentences_below_truncation_cap."""
-    return _mentions_pass(docs, id_col, inject=False)
+    return _mentions_pass(docs, id_col, use_model=True)
 
 
 def merged_mentions_udf(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -311,7 +352,7 @@ def merged_mentions_udf(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     one Arrow pass: :func:`mentions_from_tagged` over
     :func:`merge_tag_sources` of :func:`tagged_docs_udf` and
     ``mentions.with_bio``, with ``mentions.sent_id_at`` sentence ids."""
-    return _mentions_pass(docs, id_col, inject=True)
+    return _mentions_pass(docs, id_col, use_model=True, gazetteer=DictTaggerModel())
 
 
 def mentions_from_tagged(tagged: DataFrame) -> DataFrame:

@@ -211,10 +211,10 @@ def test_bigdict_randomized_differential(spark):
 
 
 def test_bigdict_plan_shape(spark):
-    """Scale property pinned: the corpus side reaches the dictionary
-    via a BroadcastHashJoin, and the only non-broadcast exchanges are
-    the dimension's own dedup and the hits-only groupBy — the corpus is
-    never shuffled (no Exchange between the scan and the join)."""
+    """Scale property pinned: detection is one map-only pass — the
+    executed plan of ``mentions_bigdict_df`` has no Exchange and no
+    join, so the corpus is never shuffled and the dictionary never
+    joined (it ships with the tagger)."""
     docs = spark.createDataFrame(
         [(1, "hash join the spark")], "doc_id long, text string"
     )
@@ -222,12 +222,9 @@ def test_bigdict_plan_shape(spark):
         [(s, c) for s, c, _w in config.GAZETTEER], "surface string, tag string"
     )
     plan = mentions_bigdict_df(docs, gaz)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    # corpus scan -> window Generate -> join must have no exchange in
-    # between: every plain Exchange sits either under the broadcast
-    # build (dimension dedup) or above the join (hits groupBy)
-    n_exchanges = plan.count("+- Exchange") + plan.count(":- Exchange")
-    assert n_exchanges <= 2, plan
+    assert "MapInPandas" in plan, plan
+    assert "Exchange" not in plan, plan
+    assert "Join" not in plan, plan
     # past the optimizer's InSet threshold (10 literals) each bucket's
     # first-token prefilter is a hash probe, not a linear IN/array scan
     lengths_firsts = [(1, [f"w{k}" for k in range(12)]), (2, [f"v{k}" for k in range(12)])]
@@ -350,3 +347,78 @@ def test_window_structs_build_cost_constant_in_dictionary(spark, monkeypatch):
 
     small, large = n_commands(100), n_commands(10_000)
     assert small == large, (small, large)
+
+
+def test_bigdict_kernel_across_arrow_batches(spark):
+    """The tagger pass vs the Python reference port when the dictionary
+    collect and the documents both span several Arrow batches, with a
+    null-text and an empty-text document (no mentions, no failure)."""
+    gaz = {}
+    for i in range(300):
+        gaz[f"n{i}"] = ("PER", "LOC", "ORG")[i % 3]
+        gaz[f"n{i} s{i % 7}"] = "LOC"
+        gaz[f"p{i} of q{i % 5}"] = "ORG"
+    texts = [
+        f"n{i} s{i % 7} x n{i + 1} p{i} of q{i % 5} {config.SENT_TERM} n{i * 3}"
+        for i in range(40)
+    ]
+    rows = [(i, t) for i, t in enumerate(texts)] + [(100, None), (101, "")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    gdf = spark.createDataFrame(list(gaz.items()), "surface string, tag string")
+    want = sorted(
+        (i, sent, s, e, surf, c)
+        for i, t in enumerate(texts)
+        for sent, s, e, surf, c in _ref_mentions(t.split(" "), gaz)
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "7")
+        got = _collect(mentions_bigdict_df(docs, gdf))
+        got_off = _collect(mentions_bigdict_df(docs, gdf, prefilter=False))
+    finally:
+        spark.conf.set(key, before)
+    assert len(want) >= 100  # every document really has hits
+    assert got == got_off == want
+
+
+def _jobs_started(spark, fn):
+    """(fn's result, number of Spark jobs started while it ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"detect_mentions_jobs_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the jobs of one call")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n = len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, n
+
+
+def test_detect_mentions_one_dictionary_collect(spark):
+    """``detect_mentions`` over a dictionary DataFrame starts only the
+    jobs of ONE deduped dictionary collect before its result runs; the
+    inline-vs-tagger choice reads that collect (no separate head job,
+    no second dedup under a join), and the list path starts none."""
+    docs = spark.createDataFrame(
+        [(1, "acme corp hires spark people")], "doc_id long, text string"
+    )
+    entries = [(f"name{k}", "PER") for k in range(200)] + [("acme corp", "ORG")]
+    gdf = spark.createDataFrame(entries, "surface string, tag string")
+    one_collect = _jobs_started(
+        spark, lambda: gdf.groupBy("surface").agg(F.min("tag")).toPandas()
+    )[1]
+    m, n = _jobs_started(spark, lambda: detect_mentions(docs, gdf))
+    assert 1 <= n <= one_collect, (n, one_collect)
+    assert _collect(m) == [(1, 0, 0, 1, "acme corp", "ORG")]
+    m_list, n_list = _jobs_started(spark, lambda: detect_mentions(docs, entries))
+    assert n_list == 0
+    assert _collect(m_list) == _collect(m)
+    # the inline branch takes its entries from the same collect
+    small = gdf.where(F.col("surface") == "acme corp")
+    m_inline, n_inline = _jobs_started(spark, lambda: detect_mentions(docs, small))
+    assert n_inline <= one_collect
+    assert _collect(m_inline) == _collect(m)
