@@ -12,9 +12,11 @@ exploratory lives here instead (per the optimization-round rules):
   measured number and a plan assertion (labels exchanged, edges
   scanned — SortMergeJoin/ShuffledHashJoin, no BroadcastHashJoin in
   the iteration);
-* ``graphlegs`` — bench.py's ``kg_canonical_cc``, ``graph_pagerank5``
-  and ``graph_msf_20k`` shapes standalone: bench.py's warm pass where
-  it has one, then the min of 2, one wall per leg;
+* ``graphlegs`` — bench.py's ``kg_canonical_cc``, ``graph_triangles``,
+  ``graph_pagerank5`` and ``graph_msf_20k`` shapes standalone, plus
+  k-truss, Luby MIS, Jones-Plassmann colouring and Louvain on the
+  same co-mention edge table: bench.py's warm pass where it has one,
+  then the min of 2, one wall per leg;
 * ``cckernel`` — connected components in auto mode on a chain graph
   just under ``canonical.BROADCAST_AUTO_THRESHOLD`` nodes: the
   single-task union-find kernel at its size limit, with the wall and
@@ -313,12 +315,16 @@ def ccnb_section(spark, n_nodes: int = 1_000_000, chain: int = 64) -> dict:
 
 
 def graphlegs_section(spark) -> dict:
-    """bench.py's ``kg_canonical_cc``, ``graph_pagerank5`` and
-    ``graph_msf_20k`` legs on the same inputs and stage dirs: the CC
-    warm pass on 500 documents and the PageRank warm pass come first,
-    as in bench.py; every leg is the min of 2 (bench.py times MSF
-    once).  ``rep_walls`` lists both reps of each leg: a second rep
-    can reuse what the first left persisted."""
+    """bench.py's ``kg_canonical_cc``, ``graph_triangles``,
+    ``graph_pagerank5`` and ``graph_msf_20k`` legs on the same inputs
+    and stage dirs: the CC warm pass on 500 documents and the
+    triangle and PageRank warm passes come first, as in bench.py.
+    ``graph_k_truss`` (k=4, 3 rounds), ``graph_luby_mis``,
+    ``graph_jp_coloring`` and ``graph_louvain2`` (2 rounds) run on the
+    triangle leg's edge table, each with its own stage dir.  Every leg
+    is the min of 2 (bench.py times MSF once).  ``rep_walls`` lists
+    both reps of each leg: a second rep can reuse what the first left
+    persisted."""
     import shutil
 
     bench_docs = _amplified(spark, 1)
@@ -343,6 +349,10 @@ def graphlegs_section(spark) -> dict:
         "overwrite"
     ).parquet(edges_dir)
     edges = spark.read.parquet(edges_dir)
+    graph.triangle_counts(edges).count()
+    reps["graph_triangles"] = _leg(
+        spark, "graph_triangles", lambda: graph.triangle_counts(edges).count(), out
+    )
 
     def pagerank5():
         graph.pagerank(
@@ -351,6 +361,22 @@ def graphlegs_section(spark) -> dict:
 
     pagerank5()
     reps["graph_pagerank5"] = _leg(spark, "graph_pagerank5", pagerank5, out)
+
+    stage = "/tmp/ddaugner_extra_graph_stage"
+    for name, op, kw in (
+        ("graph_k_truss", graph.k_truss, {"k": 4, "max_rounds": 3}),
+        ("graph_luby_mis", graph.luby_mis, {}),
+        ("graph_jp_coloring", graph.jp_coloring, {}),
+        ("graph_louvain2", graph.louvain_rounds, {"rounds": 2}),
+    ):
+        reps[name] = _leg(
+            spark,
+            name,
+            lambda op=op, kw=kw, d=f"{stage}/{name}": op(
+                edges, stage_dir=d, **kw
+            ).count(),
+            out,
+        )
 
     # bench.py's 20k-node graph: 64-node chains, md5-derived weights
     ids = spark.range(20_000).select(
@@ -373,7 +399,7 @@ def graphlegs_section(spark) -> dict:
         ).count(),
         out,
     )
-    for d in (edges_dir, msf_dir):
+    for d in (edges_dir, msf_dir, stage):
         shutil.rmtree(d, ignore_errors=True)
     return {**out, "rep_walls": reps}
 

@@ -24,7 +24,8 @@ Scale design:
   is generated exactly once (at its minimum-order vertex) and closure
   is checked with an equi-join against the canonical edge set, so the
   whole operator is three shuffles (degrees, wedges, closure) with no
-  driver-side state.
+  driver-side state.  One enumeration, ``_triangles``, feeds
+  ``triangle_counts`` and ``edge_support`` (and so k-truss).
 * **PageRank** is the CC loop's shape re-used for ranks: one
   join+groupBy stage per iteration, lineage truncated by a parquet
   round-trip of the O(|V|) rank table, rank table broadcast into the
@@ -36,20 +37,24 @@ Scale design:
   exactly (pinned in tests).
 * **Broadcast-vs-shuffle**: the O(|V|) table of PageRank, k-core,
   label propagation, Louvain, (multi-source) BFS and MSF broadcasts
-  while it holds ≤ BROADCAST_AUTO_THRESHOLD rows and both join sides
-  shuffle on the node id above it.  HITS, SALSA, Katz and
+  while it holds ≤ ``canonical.BROADCAST_AUTO_THRESHOLD`` rows and
+  both join sides shuffle on the node id above it.  Every site reads
+  that one constant at call time, so it is the one patch point for
+  CC and the graph operators alike.  HITS, SALSA, Katz and
   ``dag_layers`` run on host- or hierarchy-sized graphs and ALWAYS
   broadcast their score table.
 * **Single-task kernel**: MSF's broadcast-sized contraction streams
   its parent pointers through ``canonical.union_find``, the kernel
   ``connected_components`` runs — the only ``mapInPandas`` here.
 * **One fixpoint loop**: k-core, PageRank, label propagation, weighted
-  shortest paths and k-truss keep only their step and convergence
+  shortest paths, k-truss and Louvain (a fixed round count: its
+  measure never converges) keep only their step and convergence
   measure; ``materialize.fixpoint`` owns the A/B parquet cut, the
-  round stats, the stop and the temp-dir clean-up.  Loops over more
-  than one table (the BFS frontier, MSF's Borůvka rounds, Luby MIS,
-  Jones-Plassmann colouring, densest subgraph, sampled betweenness,
-  Louvain) stay hand-rolled.
+  round stats, the stop and the temp-dir clean-up.  Luby MIS and
+  Jones-Plassmann colouring share one local-minimum round loop,
+  ``_local_min_rounds``.  The other loops over more than one table
+  (the BFS frontier, MSF's Borůvka rounds, densest subgraph, sampled
+  betweenness) stay hand-rolled.
 * **Release**: PageRank and MSF, the only operators here that
   persist, unpersist everything before they return a parquet-backed
   result.
@@ -57,12 +62,14 @@ Scale design:
 
 from __future__ import annotations
 
+import shutil
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ddaugner_spark.operators.canonical import BROADCAST_AUTO_THRESHOLD, union_find
+from ddaugner_spark.operators import canonical
 from ddaugner_spark.plans.materialize import cut, fixpoint, scratch_dir
 
 
@@ -82,19 +89,14 @@ def degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangle_counts(edges: DataFrame) -> DataFrame:
-    """(entity, triangles): number of triangles each node participates
-    in, zero-count nodes included.
-
-    ``edges`` must be distinct undirected pairs with ``a < b`` (the
-    contract of co_mention_edges).  Orientation: lower (deg, node) →
-    higher, which caps out-degree at O(√m); wedges are the self-join of
-    the oriented edges on their source, and a wedge (v, w) closes into
-    a triangle iff (v, w) is an edge — checked against the canonical
-    a < b table, so each triangle materializes exactly once, at its
-    minimum-(deg, node) vertex."""
-    e = edges.select("a", "b").distinct()
-    deg = degrees(e)
+def _triangles(e: DataFrame, deg: DataFrame) -> DataFrame:
+    """(src, v, w): every triangle of the distinct a < b edge table
+    ``e`` (``deg`` = ``degrees(e)``), once, at its minimum-(deg, node)
+    vertex ``src``, with v < w.  Orientation: lower (deg, node) →
+    higher, which caps out-degree at O(√m); wedges are the self-join
+    of the oriented edges on their source, and a wedge (v, w) closes
+    into a triangle iff (v, w) is an edge — a semi-join against ``e``
+    itself."""
     ed = (
         e.join(deg.select(F.col("node").alias("a"), F.col("deg").alias("da")), "a")
         .join(deg.select(F.col("node").alias("b"), F.col("deg").alias("db")), "b")
@@ -115,9 +117,21 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
         .select("src", F.col("x.dst").alias("v"), F.col("y.dst").alias("w"))
     )
     closing = e.select(F.col("a").alias("v"), F.col("b").alias("w"))
-    tri = wedges.join(closing, ["v", "w"], "left_semi")
+    return wedges.join(closing, ["v", "w"], "left_semi")
+
+
+def triangle_counts(edges: DataFrame) -> DataFrame:
+    """(entity, triangles): number of triangles each node participates
+    in, zero-count nodes included.
+
+    ``edges`` must be distinct undirected pairs with ``a < b`` (the
+    contract of co_mention_edges).  :func:`_triangles` enumerates each
+    triangle once; this counts its three corners per node."""
+    e = edges.select("a", "b").distinct()
+    deg = degrees(e)
     per_node = (
-        tri.select(F.explode(F.array("src", "v", "w")).alias("entity"))
+        _triangles(e, deg)
+        .select(F.explode(F.array("src", "v", "w")).alias("entity"))
         .groupBy("entity")
         .agg(F.count("*").alias("triangles"))
     )
@@ -164,7 +178,7 @@ def k_core(
         f"{stage_dir}/alive_0",
     )
     n_alive = alive.count()
-    broadcast_nodes = n_alive <= BROADCAST_AUTO_THRESHOLD
+    broadcast_nodes = n_alive <= canonical.BROADCAST_AUTO_THRESHOLD
     stats["broadcast_nodes"] = broadcast_nodes
 
     def step(alive: DataFrame) -> DataFrame:
@@ -253,7 +267,7 @@ def pagerank(
     ).persist(StorageLevel.MEMORY_AND_DISK)
     n_nodes = deg.count()
     stats["n_nodes"] = n_nodes
-    broadcast_ranks = n_nodes <= BROADCAST_AUTO_THRESHOLD
+    broadcast_ranks = n_nodes <= canonical.BROADCAST_AUTO_THRESHOLD
     stats["broadcast_ranks"] = broadcast_ranks
     if seeds is None:
         base = (1.0 - damping) / n_nodes
@@ -544,7 +558,7 @@ def label_propagation(
         f"{stage_dir}/labels_0",
     )
     n_nodes = labels.count()
-    broadcast_labels = n_nodes <= BROADCAST_AUTO_THRESHOLD
+    broadcast_labels = n_nodes <= canonical.BROADCAST_AUTO_THRESHOLD
     stats["n_nodes"] = n_nodes
     stats["broadcast_labels"] = broadcast_labels
 
@@ -715,7 +729,7 @@ def _frontier_bfs(
         l_t0 = time.time()
         fr = (
             F.broadcast(frontier)
-            if n_frontier <= BROADCAST_AUTO_THRESHOLD
+            if n_frontier <= canonical.BROADCAST_AUTO_THRESHOLD
             else frontier
         )
         nxt = (
@@ -1215,34 +1229,13 @@ def edge_support(edges: DataFrame) -> DataFrame:
     """(a, b, support): number of triangles each canonical a < b edge
     participates in (edges in no triangle get support 0).
 
-    Same degree-oriented wedge enumeration as ``triangle_counts`` —
-    each triangle materializes exactly once at its minimum-(deg, node)
-    vertex, out-degree capped at O(√m) — but the inner closure JOIN
-    keeps the triangle's corners so the three member edges can be
+    Same triangle enumeration as :func:`triangle_counts` (the shared
+    :func:`_triangles`: each triangle once, at its minimum-(deg, node)
+    vertex ``src``, with v < w), so the three member edges are
     re-canonicalized (least/greatest) and counted.  Three shuffles
     (degrees, wedges, support aggregate); no driver state."""
     e = edges.select("a", "b").distinct()
-    deg = degrees(e)
-    ed = (
-        e.join(deg.select(F.col("node").alias("a"), F.col("deg").alias("da")), "a")
-        .join(deg.select(F.col("node").alias("b"), F.col("deg").alias("db")), "b")
-    )
-    a_first = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    oriented = ed.select(
-        F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
-        F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
-    )
-    x, y = oriented.alias("x"), oriented.alias("y")
-    wedges = (
-        x.join(y, "src")
-        .where(F.col("x.dst") < F.col("y.dst"))
-        .select("src", F.col("x.dst").alias("v"), F.col("y.dst").alias("w"))
-    )
-    closing = e.select(F.col("a").alias("v"), F.col("b").alias("w"))
-    tri = wedges.join(closing, ["v", "w"], "left_semi")
-    member = tri.select(
+    member = _triangles(e, degrees(e)).select(
         F.explode(
             F.array(
                 F.struct(
@@ -1410,12 +1403,7 @@ def rich_club(
     in one pass, and ALL thresholds are conditional sums inside one
     aggregate (the edge table is touched once regardless of |ks|).
     """
-    deg = (
-        edges.select(F.col("a").alias("v"))
-        .unionAll(edges.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
+    deg = degrees(edges).withColumnRenamed("node", "v")
     ncnt = deg.agg(
         *[
             F.sum((F.col("deg") > k).cast("long"))
@@ -1476,16 +1464,7 @@ def hub_robustness(
     the canonicalizer uses, so the probe exercises the
     production path twice on graph-sized inputs.
     """
-    from pyspark.sql import Window
-
-    from ddaugner_spark.operators.canonical import connected_components
-
-    deg = (
-        edges.select(F.col("a").alias("v"))
-        .unionAll(edges.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
+    deg = degrees(edges).withColumnRenamed("node", "v")
     w = Window.orderBy(F.col("deg").desc(), F.col("v").asc())
     hubs = (
         deg.withColumn("rn", F.row_number().over(w))
@@ -1499,7 +1478,7 @@ def hub_robustness(
     )
 
     def _stats(e: DataFrame, phase: str, sub: str) -> DataFrame:
-        comps = connected_components(
+        comps = canonical.connected_components(
             e, stage_dir=None if stage_dir is None else f"{stage_dir}/{sub}"
         )
         sizes = comps.groupBy("component").agg(
@@ -1783,7 +1762,7 @@ def minimum_spanning_forest(
         # mutual-min 2-cycles; map every component to one label per
         # pseudotree.  pick is NOT counted separately — the contraction
         # materializes it en route (one job fewer per round).
-        bcast = n_live <= BROADCAST_AUTO_THRESHOLD
+        bcast = n_live <= canonical.BROADCAST_AUTO_THRESHOLD
         _t0 = time.time()
         if bcast:
             # the pointer table is executor-memory-sized on this branch
@@ -1797,7 +1776,7 @@ def minimum_spanning_forest(
             lab = (
                 pick.select(F.col("ca").alias("a"), F.col("par").alias("b"))
                 .repartition(1)
-                .mapInPandas(union_find, "entity string, component string")
+                .mapInPandas(canonical.union_find, "entity string, component string")
                 .select(F.col("entity").alias("node"),
                         F.col("component").alias("par"))
                 .persist(lvl)
@@ -1926,10 +1905,8 @@ def single_link_clusters(
     with cluster = min member id, forest nodes only (nodes whose every
     forest edge is cut stay as singletons).
     """
-    from ddaugner_spark.operators.canonical import connected_components
-
     kept = forest.filter(F.col("w") <= F.lit(float(threshold)))
-    labels = connected_components(kept.select("a", "b"), stage_dir=stage_dir)
+    labels = canonical.connected_components(kept.select("a", "b"), stage_dir=stage_dir)
     nodes = (
         forest.select(F.col("a").alias("entity"))
         .unionByName(forest.select(F.col("b").alias("entity")))
@@ -2031,6 +2008,98 @@ def densest_subgraph(
     )
 
 
+def _local_min_rounds(
+    edges: DataFrame,
+    max_rounds: int,
+    stage_dir: str | None,
+    stats: dict | None,
+    name: str,
+    col: str,
+    pending_key: str,
+    drop_neighbours: bool,
+) -> DataFrame:
+    """The round loop behind :func:`luby_mis` and :func:`jp_coloring`
+    (their docstrings give the algorithms).  Per round, every pending
+    node whose ``md5(node) || node`` priority is a strict minimum over
+    its pending neighbours wins, tagged ``col`` = round index; winners
+    leave the pending set, and with ``drop_neighbours`` their
+    neighbours too.  One neighbour-min aggregate over the live
+    (both-ends-pending) edges, then anti/semi-joins shrink both
+    tables.
+
+    Winner cuts ``{name}_{r}`` back the result and stay; the pending
+    and live tables alternate between ``{name}_pending_{0,1}`` and
+    ``{name}_live_{0,1}``, removed on return when the dir is the
+    operator's own.  Appends ``{round, pending_key, won}`` per round
+    to ``stats["rounds"]``.  Output: ``(entity, col)``."""
+    own_dir = stage_dir is None
+    stage_dir = scratch_dir(stage_dir, f"ddaugner_{name}_")
+
+    def _prio(c):
+        return F.concat(F.md5(c), c)
+
+    base = edges.select(
+        F.col("a").cast("string").alias("a"),
+        F.col("b").cast("string").alias("b"),
+    ).filter(F.col("a") != F.col("b"))
+    live = cut(
+        base.unionByName(
+            base.select(F.col("b").alias("a"), F.col("a").alias("b"))
+        ).distinct(),
+        f"{stage_dir}/{name}_live_0",
+    )
+    pending = cut(
+        live.select(F.col("a").alias("node")).distinct(),
+        f"{stage_dir}/{name}_pending_0",
+    )
+    wins, rounds = [], []
+    for r in range(max_rounds):
+        n_pending = pending.count()
+        if n_pending == 0:
+            break
+        nb_min = live.groupBy(F.col("a").alias("node")).agg(
+            F.min(_prio(F.col("b"))).alias("nb_prio")
+        )
+        win = (
+            pending.join(nb_min, "node", "left")
+            .filter(
+                F.col("nb_prio").isNull()
+                | (_prio(F.col("node")) < F.col("nb_prio"))
+            )
+            .select("node", F.lit(r).cast("long").alias(col))
+        )
+        win = cut(win, f"{stage_dir}/{name}_{r}")
+        rounds.append({"round": r, pending_key: n_pending, "won": win.count()})
+        wins.append(win)
+        removed = win.select("node")
+        if drop_neighbours:
+            removed = removed.unionByName(
+                live.join(
+                    win.select(F.col("node").alias("a")), "a", "left_semi"
+                ).select(F.col("b").alias("node"))
+            ).distinct()
+        pending = cut(
+            pending.join(removed, "node", "left_anti"),
+            f"{stage_dir}/{name}_pending_{(r + 1) % 2}",
+        )
+        live = cut(
+            live.join(pending.select(F.col("node").alias("a")), "a", "left_semi")
+            .join(pending.select(F.col("node").alias("b")), "b", "left_semi"),
+            f"{stage_dir}/{name}_live_{(r + 1) % 2}",
+        )
+    if stats is not None:
+        stats["rounds"] = rounds
+    if own_dir:
+        for table in ("pending", "live"):
+            for i in (0, 1):
+                shutil.rmtree(f"{stage_dir}/{name}_{table}_{i}", ignore_errors=True)
+    if not wins:
+        return edges.sparkSession.createDataFrame([], f"entity string, {col} long")
+    return reduce(DataFrame.unionByName, wins).select(
+        F.col("node").alias("entity"), col
+    )
+
+
 def luby_mis(
     edges: DataFrame,
     max_rounds: int = 12,
@@ -2048,75 +2117,20 @@ def luby_mis(
 
     Per round, every undecided node whose priority is a strict local
     minimum among its undecided neighbors joins the MIS; winners and
-    their neighbors leave the undecided set.  Each round is ONE
-    neighbor-min aggregate (map-side combinable) over the live edge
-    set + two anti-joins to shrink it; parquet round-trips cut
-    lineage.  No two adjacent nodes can both win a round (one of them
-    has the larger priority) ⇒ independence; a node only leaves
-    undecided by winning or having a winning neighbor ⇒ maximality at
-    the fixpoint.  The global minimum always wins ⇒ progress.
+    their neighbors leave the undecided set.  The rounds run in
+    :func:`_local_min_rounds`: ONE neighbor-min aggregate (map-side
+    combinable) over the live edge set + joins to shrink it; parquet
+    round-trips cut lineage.  No two adjacent nodes can both win a
+    round (one of them has the larger priority) ⇒ independence; a node
+    only leaves undecided by winning or having a winning neighbor ⇒
+    maximality at the fixpoint.  The global minimum always wins ⇒ progress.
 
     Input: canonical ``(a, b)`` edges; universe = edge endpoints.
     Output: ``(entity, round)`` — MIS members and the round they won.
     """
-    stage_dir = scratch_dir(stage_dir, "ddaugner_mis_")
-
-    def _prio(c):
-        return F.concat(F.md5(c), c)
-
-    base = edges.select(
-        F.col("a").cast("string").alias("a"),
-        F.col("b").cast("string").alias("b"),
-    ).filter(F.col("a") != F.col("b"))
-    live = cut(
-        base.unionByName(
-            base.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ).distinct(),
-        f"{stage_dir}/live_0",
+    return _local_min_rounds(
+        edges, max_rounds, stage_dir, stats, "mis", "round", "undecided", True
     )
-    und = cut(live.select(F.col("a").alias("node")).distinct(), f"{stage_dir}/und_0")
-    mis = None
-    rounds = []
-    for r in range(max_rounds):
-        n_und = und.count()
-        if n_und == 0:
-            break
-        nb_min = live.groupBy(F.col("a").alias("node")).agg(
-            F.min(_prio(F.col("b"))).alias("nb_prio")
-        )
-        win = (
-            und.join(nb_min, "node", "left")
-            .filter(
-                F.col("nb_prio").isNull()
-                | (_prio(F.col("node")) < F.col("nb_prio"))
-            )
-            .select("node", F.lit(r).cast("long").alias("round"))
-        )
-        win = cut(win, f"{stage_dir}/mis_{r}")
-        rounds.append({"round": r, "undecided": n_und, "won": win.count()})
-        mis = win if mis is None else mis.unionByName(win)
-        removed = (
-            win.select("node")
-            .unionByName(
-                live.join(
-                    win.select(F.col("node").alias("a")), "a", "left_semi"
-                ).select(F.col("b").alias("node"))
-            )
-            .distinct()
-        )
-        und = cut(und.join(removed, "node", "left_anti"), f"{stage_dir}/und_{r + 1}")
-        live = cut(
-            live.join(und.select(F.col("node").alias("a")), "a", "left_semi")
-            .join(und.select(F.col("node").alias("b")), "b", "left_semi"),
-            f"{stage_dir}/live_{r + 1}",
-        )
-    if stats is not None:
-        stats["rounds"] = rounds
-    if mis is None:
-        return und.select(
-            F.col("node").alias("entity"), F.lit(0).cast("long").alias("round")
-        ).limit(0)
-    return mis.select(F.col("node").alias("entity"), "round")
 
 
 def partition_edge_cut(edges: DataFrame, ks: list[int] = (4, 8, 16)) -> DataFrame:
@@ -2187,67 +2201,18 @@ def jp_coloring(
     conflict-free scheduling of KG mutations — all nodes of one color
     commit concurrently.
 
-    Identical per-round plan to :func:`luby_mis` (ONE neighbor-min
-    aggregate + anti-joins; parquet round-trips cut lineage) except
-    winners' NEIGHBORS stay in play — so rounds = the longest
-    priority-decreasing path, O(log V / log log V) w.h.p. for random
-    priorities rather than Luby's O(log V).
+    The same round loop as :func:`luby_mis`, :func:`_local_min_rounds`
+    (ONE neighbor-min aggregate + joins; parquet round-trips cut
+    lineage), except winners' NEIGHBORS stay in play — so rounds = the
+    longest priority-decreasing path, O(log V / log log V) w.h.p. for
+    random priorities rather than Luby's O(log V).
 
     Output: ``(entity, color)``; nodes still uncolored after
     ``max_rounds`` are omitted (the SQL twin unrolls the same bound).
     """
-    stage_dir = scratch_dir(stage_dir, "ddaugner_jp_")
-
-    def _prio(c):
-        return F.concat(F.md5(c), c)
-
-    base = edges.select(
-        F.col("a").cast("string").alias("a"),
-        F.col("b").cast("string").alias("b"),
-    ).filter(F.col("a") != F.col("b"))
-    live = cut(
-        base.unionByName(
-            base.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ).distinct(),
-        f"{stage_dir}/live_0",
+    return _local_min_rounds(
+        edges, max_rounds, stage_dir, stats, "jp", "color", "uncolored", False
     )
-    unc = cut(live.select(F.col("a").alias("node")).distinct(), f"{stage_dir}/unc_0")
-    colored = None
-    rounds = []
-    for r in range(max_rounds):
-        n_unc = unc.count()
-        if n_unc == 0:
-            break
-        nb_min = live.groupBy(F.col("a").alias("node")).agg(
-            F.min(_prio(F.col("b"))).alias("nb_prio")
-        )
-        win = (
-            unc.join(nb_min, "node", "left")
-            .filter(
-                F.col("nb_prio").isNull()
-                | (_prio(F.col("node")) < F.col("nb_prio"))
-            )
-            .select("node", F.lit(r).cast("long").alias("color"))
-        )
-        win = cut(win, f"{stage_dir}/col_{r}")
-        rounds.append({"round": r, "uncolored": n_unc, "won": win.count()})
-        colored = win if colored is None else colored.unionByName(win)
-        unc = cut(
-            unc.join(win.select("node"), "node", "left_anti"),
-            f"{stage_dir}/unc_{r + 1}",
-        )
-        live = cut(
-            live.join(unc.select(F.col("node").alias("a")), "a", "left_semi")
-            .join(unc.select(F.col("node").alias("b")), "b", "left_semi"),
-            f"{stage_dir}/live_{r + 1}",
-        )
-    if stats is not None:
-        stats["rounds"] = rounds
-    if colored is None:
-        return unc.select(
-            F.col("node").alias("entity"), F.lit(0).cast("long").alias("color")
-        ).limit(0)
-    return colored.select(F.col("node").alias("entity"), "color")
 
 
 def betweenness_sampled(
@@ -2354,8 +2319,6 @@ def betweenness_sampled(
         w_tbl = lvl_delta
     if not parts:
         return spark.createDataFrame([], "node string, bc double")
-    from functools import reduce
-
     allparts = reduce(DataFrame.unionByName, parts)
     return allparts.groupBy("node").agg(
         F.round(F.sum("delta"), ndigits).alias("bc")
@@ -2750,11 +2713,14 @@ def louvain_rounds(
     node-id shuffle), one (node, community) count aggregate, one
     community-degree aggregate (community-sized), one
     min(struct(-gain, c)) hash-aggregate argmax; the label table
-    parquet-round-trips so plan depth stays constant.  No vertex ever
+    parquet-round-trips through :func:`materialize.fixpoint` so plan
+    depth stays constant.  No vertex ever
     sees more work than its degree.
     """
     if stats is None:
         stats = {}
+    stats["rounds"] = []
+    own_dir = stage_dir is None
     stage_dir = scratch_dir(stage_dir, "ddaugner_louvain_")
 
     e = edges.select("a", "b").distinct()
@@ -2768,12 +2734,13 @@ def louvain_rounds(
         f"{stage_dir}/deg",
     )
     n_nodes = deg.count()
-    broadcast_labels = n_nodes <= BROADCAST_AUTO_THRESHOLD
+    broadcast_labels = n_nodes <= canonical.BROADCAST_AUTO_THRESHOLD
     stats["n_nodes"] = n_nodes
     labels = cut(
-        deg.select("node", F.col("node").alias("community")), f"{stage_dir}/labels_init"
+        deg.select("node", F.col("node").alias("community")), f"{stage_dir}/labels_0"
     )
-    for _round in range(1, rounds + 1):
+
+    def step(labels: DataFrame) -> DataFrame:
         lbl = F.broadcast(labels) if broadcast_labels else labels
         tot = (
             labels.join(deg, "node")
@@ -2822,13 +2789,14 @@ def louvain_rounds(
                 F.struct((-F.col("gain")).alias("neg"), F.col("community"))
             ).alias("best")
         )
-        labels = cut(
-            picked.select("node", F.col("best.community").alias("community")),
-            f"{stage_dir}/labels_{_round % 2}",
-        )
-    return labels.select(
-        F.col("node").alias("entity"), "community"
+        return picked.select("node", F.col("best.community").alias("community"))
+
+    # a fixed round count: the measure never reports convergence
+    labels = fixpoint(
+        labels, step, lambda _new, _old: (False, {}), stage_dir, "labels",
+        rounds, stats["rounds"], own_dir=own_dir,
     )
+    return labels.select(F.col("node").alias("entity"), "community")
 
 
 def salsa(

@@ -74,10 +74,6 @@ def _tok(i: Column) -> Column:
     return F.element_at(F.col("tokens"), (i + F.lit(1)).cast("int"))
 
 
-def _bigram(i: Column) -> Column:
-    return F.concat(_tok(i), F.lit(" "), _tok(i + F.lit(1)))
-
-
 def with_tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Whitespace tokenization — matches the oracle's ``string_split``.
 
@@ -101,11 +97,6 @@ def sent_id_at(pos: Column) -> Column:
             lambda t: t == F.lit(config.SENT_TERM),
         )
     ).cast("long")
-
-
-def _ngram_at(i: Column, n: int) -> Column:
-    """Surface of the n-token window starting at 0-based position i."""
-    return F.array_join(F.slice(F.col("tokens"), (i + F.lit(1)).cast("int"), n), " ")
 
 
 def _seq(n: Column, lvl: int) -> Column:

@@ -468,7 +468,7 @@ def test_shuffle_arm_matches_broadcast_arm(spark, tmp_path, monkeypatch, op):
         ), flags
 
     bcast, bcast_flags = rows("bcast")
-    monkeypatch.setattr(graph, "BROADCAST_AUTO_THRESHOLD", 0)
+    monkeypatch.setattr(canonical, "BROADCAST_AUTO_THRESHOLD", 0)
     shuffled, shuffled_flags = rows("shuffled")
     assert bcast and shuffled == bcast
     assert all(bcast_flags.values()) and not any(shuffled_flags.values())
@@ -518,10 +518,8 @@ def test_leaves_nothing_persisted(spark, monkeypatch, op):
     returns with the storage list empty, and its result — backed by
     the operator's own temp dir — still reads."""
     _release_all(spark)
-    if op == "cc_loop":
+    if op in ("cc_loop", "msf_doubling"):
         monkeypatch.setattr(canonical, "BROADCAST_AUTO_THRESHOLD", 0)
-    if op == "msf_doubling":
-        monkeypatch.setattr(graph, "BROADCAST_AUTO_THRESHOLD", 0)
     out = _persist_run(spark, op)
     assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
     rows = out.collect()
@@ -529,6 +527,31 @@ def test_leaves_nothing_persisted(spark, monkeypatch, op):
     if op.startswith("msf_"):
         pairs = [(a, b, float(i + 1)) for i, (a, b) in enumerate(_ARM_PAIRS)]
         assert sorted(tuple(r) for r in rows) == _kruskal(pairs)
+
+
+@pytest.mark.parametrize("op", ["luby_mis", "jp_coloring", "louvain_rounds"])
+def test_own_dir_keeps_only_result_dirs(spark, tmp_path, monkeypatch, op):
+    """With ``stage_dir=None`` the operator's temp dir holds, on
+    return, only the dirs its result reads, and the result reads the
+    same rows as a run in a caller-owned stage dir."""
+    import os
+    import tempfile
+    from urllib.parse import urlparse
+
+    e = _edges(spark, _ARM_PAIRS)
+    run = getattr(graph, op)
+    want = sorted(run(e, stage_dir=str(tmp_path / "caller")).collect())
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    os.mkdir(tmp_path / "tmp")
+    out = run(e)
+    (own,) = [d for d in os.listdir(tmp_path / "tmp") if d.startswith("ddaugner_")]
+    own = tmp_path / "tmp" / own
+    backing = {
+        os.path.relpath(urlparse(f).path, own).split(os.sep)[0]
+        for f in out.inputFiles()
+    }
+    assert set(os.listdir(own)) == backing
+    assert want and sorted(out.collect()) == want
 
 
 class TestHits:
@@ -686,6 +709,27 @@ def test_edge_support_fixture(spark):
     sq = [("f", "g"), ("g", "h"), ("h", "i"), ("f", "i")]
     got = {(r.a, r.b): r.support for r in graph.edge_support(_edges(spark, sq)).collect()}
     assert set(got.values()) == {0}
+
+
+def test_edge_support_sums_to_twice_triangle_counts(spark):
+    """Every triangle at a node puts two of its edges at that node, so
+    the supports of a node's incident edges sum to 2 × its triangle
+    count — on a seeded random graph dense enough that most nodes sit
+    in several triangles."""
+    rng = random.Random(61)
+    nodes = [f"t{i:02d}" for i in range(30)]
+    seen = set()
+    while len(seen) < 120:
+        a, b = rng.sample(nodes, 2)
+        seen.add((min(a, b), max(a, b)))
+    e = _edges(spark, seen)
+    tri = _tri_map(graph.triangle_counts(e))
+    incident = dict.fromkeys(tri, 0)
+    for r in graph.edge_support(e).collect():
+        incident[r.a] += r.support
+        incident[r.b] += r.support
+    assert sum(tri.values()) > 0
+    assert incident == {v: 2 * t for v, t in tri.items()}
 
 
 def test_k_truss_keeps_core_drops_pendant_triangle(spark):
@@ -896,7 +940,7 @@ def test_msf_nonbroadcast_branch_matches_kernel(spark, tmp_path, monkeypatch):
     ws = rng.sample(range(1, 9999), len(seen))
     pairs = [(a, b, float(w)) for (a, b), w in zip(sorted(seen), ws)]
     kernel = _msf(spark, pairs, tmp_path / "k")
-    monkeypatch.setattr(graph, "BROADCAST_AUTO_THRESHOLD", 0)
+    monkeypatch.setattr(canonical, "BROADCAST_AUTO_THRESHOLD", 0)
     doubling = _msf(spark, pairs, tmp_path / "d")
     assert doubling == kernel == _kruskal(pairs)
 
