@@ -7,28 +7,34 @@ consolidate co-occurring entities into components whose canonical id is
 the minimum member.
 
 :func:`connected_components` is one algorithm — union by minimum label
-— with two size branches, picked by the node count alone:
+— with two size branches:
 
-* **single-task union-find** (≤ :data:`BROADCAST_AUTO_THRESHOLD`
-  nodes): the edges stream through one
-  ``repartition(1).mapInPandas`` kernel — union by smaller root, path
-  compression — that emits ``(entity, component = min member)`` into
-  ONE parquet table.  Two Spark jobs in place of the loop's ~10 per
-  round (on small graphs the job floor, not the data, was the cost):
-  the count that sizes the label table, then the kernel.  The
-  exchange into the single task keeps the stages that feed it
-  parallel;
+* **single-task union-find**, tried first: the non-null edges stream
+  through one ``repartition(1).mapInPandas`` kernel — union by smaller
+  root, path compression — that emits ``(entity, component = min
+  member)`` into ONE parquet table.  The pass is optimistic: the kernel
+  counts distinct nodes itself and reports the count through an
+  accumulator, so a graph of ≤ :data:`BROADCAST_AUTO_THRESHOLD` nodes
+  costs one pass — the exchange, the kernel's write and the schema
+  read of its parquet: 3 Spark jobs where counting the label table
+  first took 8.  On small graphs the job floor, not the data, is the
+  cost.  The exchange into the single task keeps the stages that feed
+  it parallel;
 
-* **distributed hash-min + pointer jumping** (larger label tables) —
-  a loop with bounded lineage::
+* **distributed hash-min + pointer jumping**, when the kernel sees
+  more than :data:`BROADCAST_AUTO_THRESHOLD` nodes: it stops, yields
+  nothing, and the Spark driver removes its empty output and runs a loop
+  with bounded lineage::
 
       label(v) ← v
       repeat: label(v) ← min(label(v), min over neighbors u of label(u))
               label(v) ← label(label(v))
       until no label changes
 
-  Both join sides hash-partition on the node id; lineage is truncated
-  every iteration by a RELIABLE parquet round-trip of the label table
+  The big graph pays for the aborted pass: one exchange of the edge
+  table and the kernel's batches up to the threshold.  Both join sides
+  hash-partition on the node id; lineage is truncated every iteration
+  by a RELIABLE parquet round-trip of the label table
   (without it the plan quadruples per iteration and the optimizer
   blows up around iteration ~15).  ``localCheckpoint`` is NOT used: it
   pins blocks to executors, so on a real cluster one lost executor
@@ -42,8 +48,11 @@ lexicographically smallest member of its component.
 
 from __future__ import annotations
 
+import shutil
 import time
+from functools import partial
 
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -74,14 +83,29 @@ def co_mention_edges(mentions: DataFrame) -> DataFrame:
 BROADCAST_AUTO_THRESHOLD = 2_000_000
 
 
-def union_find(batches):
+class _MaxNodes(AccumulatorParam):
+    """Accumulator of the largest node count a kernel task reported:
+    max, not sum, so a re-run task cannot double it."""
+
+    def zero(self, value):
+        return 0
+
+    def addInPlace(self, a, b):
+        return max(a, b)
+
+
+def union_find(batches, max_nodes=None, n_nodes=None):
     """Single-task connected components over streamed ``(a, b)`` edge
     batches: union by smaller root (so every root IS its set's minimum
     member) with path compression; emits ``(entity, component)`` for
     every node.  Run as ``repartition(1).mapInPandas`` by
     :func:`connected_components` and by
     :func:`~ddaugner_spark.operators.graph.minimum_spanning_forest`,
-    which streams its Borůvka parent pointers through it."""
+    which streams its Borůvka parent pointers through it.
+
+    ``n_nodes`` (an accumulator) receives the number of nodes seen.
+    With ``max_nodes`` the kernel stops reading once it has seen more
+    nodes than that and yields nothing."""
     import pandas as pd
 
     parent: dict = {}
@@ -94,6 +118,7 @@ def union_find(batches):
             parent[x], x = root, parent[x]
         return root
 
+    limit = float("inf") if max_nodes is None else max_nodes
     for b in batches:
         for u, v in zip(b["a"].tolist(), b["b"].tolist()):
             parent.setdefault(u, u)
@@ -103,6 +128,12 @@ def union_find(batches):
                 if rv < ru:
                     ru, rv = rv, ru
                 parent[rv] = ru
+        if len(parent) > limit:
+            break
+    if n_nodes is not None:
+        n_nodes.add(len(parent))
+    if len(parent) > limit:
+        return
     nodes = list(parent)
     yield pd.DataFrame(
         {"entity": nodes, "component": [find(n) for n in nodes]}, dtype="object"
@@ -125,10 +156,13 @@ def connected_components(
     lifetime of the result; pass an explicit ``stage_dir`` to control
     that lifetime (the pipeline does).  Nothing stays persisted.
 
-    The node count picks the branch (module docstring): the union-find
-    kernel while the label table has ≤ :data:`BROADCAST_AUTO_THRESHOLD`
-    nodes, the loop above that; the count is the one the loop's init
-    step takes anyway, so the big graph pays nothing for the test.
+    One pass first (module docstring): the edges stream through the
+    union-find kernel into ``{stage_dir}/components``, which is the
+    result when the graph has ≤ :data:`BROADCAST_AUTO_THRESHOLD` nodes.
+    Past that the kernel gives up, its dir is removed and the loop
+    runs; the loop's init step takes its own node count, so the big
+    graph pays one aborted pass over the exchanged edge table, not a
+    second count.
 
     Loop-branch knobs: ``max_iter`` bounds the rounds (the kernel always
     reaches the fixpoint; ``max_iter`` < 1 returns singleton components
@@ -138,8 +172,8 @@ def connected_components(
     round exchange on the node id.
 
     ``stats`` (optional dict) is filled in place: ``broadcast_labels``
-    (the kernel ran), ``n_nodes``, per-round ``iters`` walls (one entry
-    for the kernel pass) and ``n_checkpoints``.
+    (the kernel's result was kept), ``n_nodes``, per-round ``iters``
+    walls (one entry for the kernel pass) and ``n_checkpoints``.
     """
     if stats is None:
         stats = {}
@@ -161,9 +195,33 @@ def connected_components(
             f"{stage_dir}/labels_init",
         )
 
+    t0 = time.time()
+    # one pass: stream each edge once through a single-task union-find
+    # (sequential pointer-chasing is exactly the "semantics demand it"
+    # case for the sanctioned iterator mapInPandas form).  repartition,
+    # not coalesce: the exchange keeps the stages that feed it parallel
+    # instead of folding them into the one task
+    seen = edges.sparkSession.sparkContext.accumulator(0, _MaxNodes())
+    node_type = edges.schema["a"].dataType.simpleString()
+    comps_dir = f"{stage_dir}/components"
+    comps = cut(
+        edges.repartition(1).mapInPandas(
+            partial(union_find, max_nodes=BROADCAST_AUTO_THRESHOLD, n_nodes=seen),
+            f"entity {node_type}, component {node_type}",
+        ),
+        comps_dir,
+    )
+    stats["broadcast_labels"] = seen.value <= BROADCAST_AUTO_THRESHOLD
+    if stats["broadcast_labels"]:
+        stats["n_nodes"] = seen.value
+        stats["n_checkpoints"] = 1
+        stats["init_sec"] = round(time.time() - t0, 3)
+        stats["iters"].append({"it": 1, "sec": stats["init_sec"], "ckpt": True})
+        return comps
+    shutil.rmtree(comps_dir, ignore_errors=True)
+
     from pyspark import StorageLevel
 
-    t0 = time.time()
     # the symmetric edge table is loop-INVARIANT: persist it (released
     # before return — the result is parquet-backed); iteration
     # checkpoints below stay parquet — the label self-joins quadruple
@@ -176,40 +234,15 @@ def connected_components(
     # step is label(v) ← min(v, min neighbor id) — ONE aggregate over
     # the symmetric edge table, no join (saves a full join round).
     # Persisted, not parquet: the one count below materializes it and
-    # sym, and sizes the label table for the branch — one job total.
+    # sym, and sizes the label table — one job total.
     init = (
         sym.groupBy(F.col("a").alias("node")).agg(
             # min("a") is the group key itself (constant per group)
             F.least(F.min("a"), F.min("b")).alias("label")
         )
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    n_nodes = init.count()
-    stats["n_nodes"] = n_nodes
+    stats["n_nodes"] = init.count()
     stats["init_sec"] = round(time.time() - t0, 3)
-    stats["broadcast_labels"] = n_nodes <= BROADCAST_AUTO_THRESHOLD
-
-    if stats["broadcast_labels"]:
-        # one job: stream each undirected edge once through a single-task
-        # union-find (sequential pointer-chasing is exactly the "semantics
-        # demand it" case for the sanctioned iterator mapInPandas form).
-        # repartition, not coalesce: the exchange keeps the stages that
-        # feed it parallel instead of folding them into the one task
-        init.unpersist()
-        node_type = edges.schema["a"].dataType.simpleString()
-        comps = cut(
-            sym.where(F.col("a") <= F.col("b"))
-            .repartition(1)
-            .mapInPandas(
-                union_find, f"entity {node_type}, component {node_type}"
-            ),
-            f"{stage_dir}/components",
-        )
-        sym.unpersist()
-        stats["n_checkpoints"] = 1
-        stats["iters"].append(
-            {"it": 1, "sec": round(time.time() - t0, 3), "ckpt": True}
-        )
-        return comps
 
     def step(labels: DataFrame) -> DataFrame:
         # (1) hash-min: pull the minimum neighbor label; both sides

@@ -239,9 +239,9 @@ class KGPipeline:
         # mentions, and detection does not run again (noop, local[4], 165
         # long docs / 44k tokens: 0.81-1.00 s vs map-only 1.76-2.09 s)
         t = triples.triples_df(docs, mentions_table=m)
+        cc_dir = os.path.join(self.out_dir, "_cc", f"{self.partition_col}={part}")
         comps = canonical.connected_components(
-            canonical.co_mention_edges(m),
-            stage_dir=os.path.join(self.out_dir, "_cc", f"{self.partition_col}={part}"),
+            canonical.co_mention_edges(m), stage_dir=cc_dir
         )
         out = canonical.canonicalize_triples(t, comps).select(
             "doc_id",
@@ -254,8 +254,10 @@ class KGPipeline:
         )
         part_dir = os.path.join(self.out_dir, f"{self.partition_col}={part}")
         out.write.mode("overwrite").parquet(part_dir)
-        # the deduped docs are not a restart unit (the mention table is)
+        # neither the deduped docs nor the CC checkpoints are a restart
+        # unit (the mention table is), and nothing reads them after the write
         shutil.rmtree(docs_dir, ignore_errors=True)
+        shutil.rmtree(cc_dir, ignore_errors=True)
         n_triples = self.spark.read.parquet(part_dir).count()
         stages.append(
             StageMetrics("triples", n_mentions, n_triples, int((time.time() - t0) * 1000))

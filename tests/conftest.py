@@ -25,3 +25,24 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
+
+
+@pytest.fixture
+def jobs_started(spark):
+    """``run(fn)`` → (fn's result, number of Spark jobs started while it
+    ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"jobs_started_{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "count the jobs of one call")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -382,23 +382,7 @@ def test_bigdict_kernel_across_arrow_batches(spark):
     assert got == got_off == want
 
 
-def _jobs_started(spark, fn):
-    """(fn's result, number of Spark jobs started while it ran)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"detect_mentions_jobs_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "count the jobs of one call")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    n = len(sc.statusTracker().getJobIdsForGroup(group))
-    return out, n
-
-
-def test_detect_mentions_one_dictionary_collect(spark):
+def test_detect_mentions_one_dictionary_collect(spark, jobs_started):
     """``detect_mentions`` over a dictionary DataFrame starts only the
     jobs of ONE deduped dictionary collect before its result runs; the
     inline-vs-tagger choice reads that collect (no separate head job,
@@ -408,17 +392,17 @@ def test_detect_mentions_one_dictionary_collect(spark):
     )
     entries = [(f"name{k}", "PER") for k in range(200)] + [("acme corp", "ORG")]
     gdf = spark.createDataFrame(entries, "surface string, tag string")
-    one_collect = _jobs_started(
-        spark, lambda: gdf.groupBy("surface").agg(F.min("tag")).toPandas()
+    one_collect = jobs_started(
+        lambda: gdf.groupBy("surface").agg(F.min("tag")).toPandas()
     )[1]
-    m, n = _jobs_started(spark, lambda: detect_mentions(docs, gdf))
+    m, n = jobs_started(lambda: detect_mentions(docs, gdf))
     assert 1 <= n <= one_collect, (n, one_collect)
     assert _collect(m) == [(1, 0, 0, 1, "acme corp", "ORG")]
-    m_list, n_list = _jobs_started(spark, lambda: detect_mentions(docs, entries))
+    m_list, n_list = jobs_started(lambda: detect_mentions(docs, entries))
     assert n_list == 0
     assert _collect(m_list) == _collect(m)
     # the inline branch takes its entries from the same collect
     small = gdf.where(F.col("surface") == "acme corp")
-    m_inline, n_inline = _jobs_started(spark, lambda: detect_mentions(docs, small))
+    m_inline, n_inline = jobs_started(lambda: detect_mentions(docs, small))
     assert n_inline <= one_collect
     assert _collect(m_inline) == _collect(m)

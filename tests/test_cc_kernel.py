@@ -2,6 +2,7 @@
 at most ``BROADCAST_AUTO_THRESHOLD`` nodes) against the distributed
 hash-min loop (the threshold patched below every node count)."""
 
+import os
 import random
 
 import pytest
@@ -105,3 +106,25 @@ def test_auto_runs_loop_past_threshold(spark, tmp_path, monkeypatch, caller_dir)
     }
     assert got == {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x"), ("z", "x")}
     assert st["broadcast_labels"] is False and st["n_nodes"] == 6
+    if caller_dir:
+        # the aborted kernel pass leaves no components dir behind
+        assert not os.path.exists(os.path.join(stage_dir, "components"))
+
+
+def test_kernel_branch_is_one_pass(spark, tmp_path, jobs_started):
+    """Under the threshold CC is one optimistic kernel pass: 3 Spark
+    jobs on a createDataFrame edge table (the exchange's map stage, the
+    kernel's write, the schema read of its parquet; the count-first
+    form took 8), and nothing stays persisted."""
+    rows = [(f"n{i:04d}", f"n{i + 1:04d}") for i in range(50)]
+    edges = spark.createDataFrame(rows, "a string, b string")
+    st: dict = {}
+    comps, n_jobs = jobs_started(
+        lambda: canonical.connected_components(
+            edges, stage_dir=str(tmp_path / "cc"), stats=st
+        )
+    )
+    assert n_jobs == 3
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == 0
+    assert st["broadcast_labels"] is True and st["n_nodes"] == 51
+    assert set(comps.collect()) == {(f"n{i:04d}", "n0000") for i in range(51)}

@@ -9,6 +9,7 @@ reference-semantics kernel into span tables, scored by the Spark
 operator, and compared against the perl script's PER line.
 """
 
+import os
 import random
 import re
 import shutil
@@ -21,9 +22,12 @@ from ddaugner_spark.operators import scoring
 
 CONLLEVAL = "/root/reference/tests/conlleval.pl"
 
-pytestmark = pytest.mark.skipif(
-    shutil.which("perl") is None, reason="perl not available"
-)
+pytestmark = [
+    pytest.mark.skipif(shutil.which("perl") is None, reason="perl not available"),
+    pytest.mark.skipif(
+        not os.path.exists(CONLLEVAL), reason=f"{CONLLEVAL} not found"
+    ),
+]
 
 
 def _conlleval(tags, preds, tmp_path):

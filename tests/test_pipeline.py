@@ -1,5 +1,6 @@
 """End-to-end pipeline: lineage manifests, metrics, and resume."""
 
+import glob
 import json
 import os
 
@@ -24,6 +25,8 @@ def test_pipeline_run_and_resume(spark, docs, tmp_path):
         names = [s["stage"] for s in man["stages"]]
         assert names == ["mentions", "link_scores", "triples"]
         assert all(s["wall_ms"] >= 0 for s in man["stages"])
+    # the CC checkpoints are removed once their partition is written
+    assert not glob.glob(os.path.join(out, "_cc", "*"))
 
     # triples landed under partition dirs and are readable
     total = spark.read.parquet(out + "/lang=*").count()
