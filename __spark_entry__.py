@@ -137,17 +137,17 @@ def q_mentions(spark, sf):
 
 
 def q_mentions_udf(spark, sf):
-    """Arrow-batched tagging path (M1) — must equal the codegen path, so
-    it shares q_mentions' oracle."""
+    """Arrow-batched tagging path (M1) — must equal the dictionary
+    detector, so it shares q_mentions' oracle."""
     return tagging.mentions_udf(_docs(spark, sf))
 
 
 def q_mentions_bigdict(spark, sf):
-    """Detector for dictionaries too large to inline (J1 at reference
+    """Detector for a dictionary given as a table (J1 at reference
     scale — conll_entities.py:7-26 is 3.5k names): the deduped
     dictionary collected once into the fix_ner tagger, then one
     map-only Arrow pass that tags, decodes and assigns sentence ids per
-    document, same overwrite semantics.  Must equal the inline matcher,
+    document, same overwrite semantics.  Must equal ``mentions_df``,
     so it shares q_mentions' oracle."""
     from ddaugner_spark.operators.bigdict import mentions_bigdict_df
 

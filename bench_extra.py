@@ -48,8 +48,14 @@ exploratory lives here instead (per the optimization-round rules):
   third end-to-end number): the dictionary path, and the model path
   with page dedup; a fresh output dir per rep, min of 2.
 
-Usage: python bench_extra.py [noop|ccnb|graphlegs|cckernel|msfkernel|bigdictbuild|bigdictscale|scale64|pipeline ...]   (default: noop ccnb)
-Prints one JSON line per section.
+Every section runs on one ``local[SPARK_GRAFT_CPUS]`` session; the
+variable defaults to 32, so on a smaller box set it to the core count
+(``SPARK_GRAFT_CPUS=4``) or the sections time an oversubscribed
+``local[32]``.  ``SPARK_GRAFT_SF_DIR`` (the sf0.1 corpus by default)
+and ``SPARK_GRAFT_AMPLIFY`` (default 20) pick the corpus.
+
+Usage: [SPARK_GRAFT_CPUS=N] python bench_extra.py [noop|ccnb|graphlegs|cckernel|msfkernel|bigdictbuild|bigdictscale|scale64|pipeline ...]   (default: noop ccnb; master local[SPARK_GRAFT_CPUS], default local[32])
+Prints one JSON line per section, with the master it ran on.
 """
 
 from __future__ import annotations
@@ -545,36 +551,28 @@ def pipeline_section(spark) -> dict:
     return out
 
 
+SECTIONS = {
+    "noop": noop_section,
+    "ccnb": ccnb_section,
+    "graphlegs": graphlegs_section,
+    "cckernel": cckernel_section,
+    "msfkernel": msfkernel_section,
+    "bigdictbuild": bigdictbuild_section,
+    "bigdictscale": bigdictscale_section,
+    "scale64": scale64_section,
+    "pipeline": pipeline_section,
+}
+
+
 def main():
     sections = sys.argv[1:] or ["noop", "ccnb"]
-    spark = get_spark(
-        app_name="bench_extra", master=f"local[{CPUS}]", shuffle_partitions=CPUS
-    )
+    master = f"local[{CPUS}]"
+    spark = get_spark(app_name="bench_extra", master=master, shuffle_partitions=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     try:
         for s in sections:
-            if s == "noop":
-                print(json.dumps({"section": "noop", **noop_section(spark)}))
-            elif s == "ccnb":
-                print(json.dumps({"section": "ccnb", **ccnb_section(spark)}))
-            elif s == "graphlegs":
-                print(json.dumps({"section": "graphlegs", **graphlegs_section(spark)}))
-            elif s == "cckernel":
-                print(json.dumps({"section": "cckernel", **cckernel_section(spark)}))
-            elif s == "msfkernel":
-                print(json.dumps({"section": "msfkernel", **msfkernel_section(spark)}))
-            elif s == "bigdictbuild":
-                print(
-                    json.dumps({"section": "bigdictbuild", **bigdictbuild_section(spark)})
-                )
-            elif s == "bigdictscale":
-                print(
-                    json.dumps({"section": "bigdictscale", **bigdictscale_section(spark)})
-                )
-            elif s == "scale64":
-                print(json.dumps({"section": "scale64", **scale64_section(spark)}))
-            elif s == "pipeline":
-                print(json.dumps({"section": "pipeline", **pipeline_section(spark)}))
+            if s in SECTIONS:
+                print(json.dumps({"section": s, "master": master, **SECTIONS[s](spark)}))
             else:
                 print(json.dumps({"error": f"unknown section {s}"}))
     finally:

@@ -70,7 +70,7 @@ GAZETTEER = (
 )
 
 #: surface -> class for all entries, and per-length buckets (n desc) —
-#: the shape both the column-native matcher and the Arrow tagger consume.
+#: the shape the fix_ner tagger (tagging.DictTaggerModel) consumes.
 GAZ_CLASS = {s: c for s, c, _w in GAZETTEER}
 GAZ_LEVELS: dict[int, list[tuple[str, str]]] = {}
 for _s, _c, _w in GAZETTEER:

@@ -36,8 +36,8 @@ def inject_gazetteer(
     pool: list[str] | None = None,
     name_fn=None,
 ) -> DataFrame:
-    """Replace every token tagged ``B-PER`` by the general gazetteer fold
-    with a deterministic pool name (PER entries are unigram-only by config
+    """Replace every token tagged ``B-PER`` by the general gazetteer pass
+    (``with_bio``) with a deterministic pool name (PER entries are unigram-only by config
     invariant, so B-PER positions are exactly the PER mentions).
 
     Returns (doc_id, n_replaced, new_text).  Multi-token ORG/LOC mentions
@@ -54,8 +54,8 @@ def inject_gazetteer(
     seq1 = F.when(n >= 1, F.sequence(F.lit(0), n - 1)).otherwise(
         F.array().cast("array<int>")
     )
-    # zip tags with positions ONCE so the tag fold is not re-evaluated per
-    # element (no CSE inside lambda bodies — CLAUDE.md hard rule)
+    # zip tags with positions ONCE so the tags are not re-read per element
+    # (no CSE inside lambda bodies — CLAUDE.md hard rule)
     arr = F.zip_with(
         F.col("tags"), seq1, lambda t, i: F.struct(t.alias("t"), i.alias("i"))
     )

@@ -1,20 +1,18 @@
-"""Mention detection for LARGE gazetteers (J1 at scale).
+"""Mention detection with the dictionary as DATA (J1 at scale).
 
-The inline matcher (operators/mentions.py) compiles every dictionary
-entry into literal column expressions — ideal for small dictionaries
-(zero shuffle, zero join), but the expression tree and generated code
-grow with |dictionary|; the reference's real gazetteers are far past
-that point (CoNLL PER alone is 3,528 names,
-/root/reference/ddaugner/resources/conll_entities.py:7-26; Elder
-Scrolls 22,748 first names, the_elder_scrolls.py:8-85).  This module
-reproduces the same fix_ner.py:195-215 semantics with the dictionary as
-DATA instead of code, in one map-only Arrow pass:
+The reference's real gazetteers are large (CoNLL PER alone is 3,528
+names, ddaugner/resources/conll_entities.py:7-26; Elder Scrolls 22,748
+first names, the_elder_scrolls.py:8-85) and arrive as
+tables, not as the engine's ``config.GAZ_LEVELS``.  This module runs
+fix_ner.py:195-215 over such a dictionary in one map-only Arrow pass:
 
 1. the deduped dictionary (one tag per surface, min tag; null surfaces
    dropped) is collected once through Arrow and built into the fix_ner
-   tagger, ``tagging.DictTaggerModel`` — the kernel the model path's
-   gazetteer injection and the benchmark reference also run;
-2. one ``mapInPandas`` pass over the documents (``tagging._mentions_pass``)
+   tagger, ``tagging.DictTaggerModel`` — the one kernel every mention
+   path runs (``mentions.mentions_df``, the model path's gazetteer
+   injection and the benchmark reference);
+2. one ``mapInPandas`` pass over the documents (``tagging._mentions_pass``,
+   the pass ``mentions.mentions_df`` runs over the engine gazetteer)
    tokenizes each one by ``mentions.with_tokens``' rule, runs the
    windowed pass (levels n-descending, level-start snapshot guard),
    BIO-decodes (utils.py:111-166) and assigns sentence ids from the
@@ -27,11 +25,10 @@ entry of its length (``prefilter=True``), so long runs of non-name
 tokens cost one set probe each.
 
 The column-side window builder (:func:`candidate_windows`, per-length
-first-token InSet prefilters) is no longer on the detector's path; it
-stays to count candidate windows for the benchmarks.  Differential-
-tested against the inline matcher (identical output on the shared
-dictionary, tests/test_bigdict.py) and against a generated 30k-entry
-dictionary.
+first-token InSet prefilters) is not on the detector's path; it stays
+to count candidate windows for the benchmarks.  Tested against a
+literal Python port of the reference loops, on crafted overlap cases,
+seeded fuzz and a generated 30k-entry dictionary (tests/test_bigdict.py).
 """
 
 from __future__ import annotations
@@ -40,7 +37,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import config
-from .mentions import _seq, _tok, mentions_df, with_tokens
+from .mentions import _seq, _tok, with_tokens
 from .tagging import DictTaggerModel, _mentions_pass
 
 
@@ -190,31 +187,14 @@ def mentions_bigdict_df(
     return _tagger_pass(docs, _tagger(gazetteer), id_col, prefilter)
 
 
-def _levels(entries: list[tuple[str, str]]) -> dict[int, list[tuple[str, str]]]:
-    lv: dict[int, list[tuple[str, str]]] = {}
-    for s, c in entries:
-        lv.setdefault(len(s.split(" ")), []).append((s, c))
-    return dict(sorted(lv.items(), reverse=True))
-
-
-def detect_mentions(
-    docs: DataFrame,
-    gazetteer,
-    id_col: str = "doc_id",
-    inline_threshold: int = 64,
-) -> DataFrame:
-    """Auto-select the matcher by dictionary size: ≤ ``inline_threshold``
-    entries inline as literal expressions (zero shuffle, zero join);
-    larger dictionaries take the tagger pass of
-    :func:`mentions_bigdict_df`.  ``gazetteer`` is either a list of
-    (surface, tag) pairs or a (surface, tag) DataFrame, collected once.
-    Duplicate surfaces resolve to min(tag) on BOTH paths, and null
-    surfaces are dropped on both (they can never match a window)."""
+def detect_mentions(docs: DataFrame, gazetteer, id_col: str = "doc_id") -> DataFrame:
+    """Mention rows of ``gazetteer`` — a list of (surface, tag) pairs or
+    a (surface, tag) DataFrame, collected once — by the tagger pass of
+    :func:`mentions_bigdict_df`.  Duplicate surfaces resolve to min(tag)
+    and null surfaces are dropped (they can never match a window); an
+    empty dictionary gives no rows."""
     if isinstance(gazetteer, DataFrame):
         tagger = _tagger(gazetteer)
     else:
         tagger = DictTaggerModel(gazetteer)
-    entries = sorted((s, c) for _lvl, es in tagger.levels for s, c in es.items())
-    if len(entries) <= inline_threshold:
-        return mentions_df(docs, id_col, levels=_levels(entries))
     return _tagger_pass(docs, tagger, id_col)

@@ -440,7 +440,7 @@ def pmi_edges(mentions: DataFrame, ndigits: int = 6) -> DataFrame:
     double expression; the rounded value is the contract).
 
     Scale shape: the per-sentence self-join is bounded by mention
-    density (≤ ~10 surfaces/sentence — the triples_map_only bound), so
+    density (≤ ~10 surfaces/sentence), so
     pair fan-out is O(d²) per sentence, and the pair aggregate collapses
     it map-side.  Entity counts are vocabulary-sized and broadcast onto
     the pair table twice (a-side, b-side); N rides as a broadcast 1-row

@@ -1,4 +1,4 @@
-"""Dictionary-augmented mention detection (the ddaugNER core, Spark-first).
+"""Dictionary-augmented mention detection (the ddaugNER core).
 
 Reference semantics being lifted (SURVEY.md J1/W2/W3/P1):
 
@@ -13,60 +13,47 @@ Reference semantics being lifted (SURVEY.md J1/W2/W3/P1):
 * sentence ids from running terminator counts —
   /root/reference/ddaugner/datas/datas.py:303-313.
 
-Scale design: everything here is **narrow** — per-row array expressions
-(``filter``/``transform``/``aggregate`` higher-order functions) that stay
-inside whole-stage codegen.  There is *no shuffle and no Python* in mention
-detection: a 100 TB pages scan streams through map-only stages, and the
-gazetteer never leaves the closure (it is inlined as literal arrays; a
-dictionary too big to inline goes to :mod:`.bigdict`'s map-only Arrow
-tagger pass instead).
+The windowed pass has ONE implementation, ``tagging.DictTaggerModel``'s
+``tag_tokens``, and every dictionary-only API here runs it in Arrow
+batches (the tagger, gazetteer included, ships with the function):
 
-The reference's sequential window scan is an ``F.aggregate`` fold over
-the candidate array sorted by (n desc, start asc) — the exact pass order
-of fix_ner.py's nested loops.  Candidates are sparse (dictionary hits
-only), so the fold is O(c) steps of O(n_tokens) work per document.
-Complexity note: per-doc work is O(c·n); tagging is intended to run on
-sentence-bounded rows at crawl scale (re-segment with
-operators/sentences.py first — the reference also tags per sentence), so
-the quadratic-ish terms stay trivially small.
+* :func:`mentions_df` — mention rows from one map-only ``mapInPandas``
+  pass (``tagging._mentions_pass``, the pass the big-dictionary
+  detector, operators/bigdict.py, also runs);
+* :func:`with_bio` — the BIO ``tags`` array, an iterator-form Arrow UDF
+  over ``tokens``;
+* :func:`spans_expr` — the decoded span array, the same kind of UDF
+  with ``entities_from_bio_tags`` output.
+
+No shuffle and no join: a pages scan streams through one narrow stage.
+Per-doc work is one set probe per token plus a surface lookup per window
+whose first token starts an entry of that length.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import pandas as pd
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
 from .. import config
+from ..kernels import entities_from_bio_tags
+from .tagging import DictTaggerModel, _mentions_pass
 
-
-#: Plan-construction cache.  Building the inlined-gazetteer expression
-#: tree costs thousands of py4j round-trips (~3-8 s of driver time per
-#: call — profiled: 8.7k socket round-trips, 86% of ``mentions_df``'s
-#: build wall).  The tree is a pure function of the level config and
-#: references only the ``tokens``/``n_tokens`` columns, so the
-#: unresolved Column is built once per JVM gateway and reused across
-#: DataFrames and queries.  Keys are content-based (so callers passing
-#: custom ``levels`` or monkeypatching ``config.GAZ_LEVELS`` resolve
-#: correctly); values carry the gateway object so a JVM restart — which
-#: invalidates every Column — misses the cache instead of returning a
-#: dead reference.
-_EXPR_CACHE: dict[tuple, tuple[object, Column]] = {}
-
-
-def _expr_cached(kind: str, levels, build) -> Column:
-    from pyspark import SparkContext
-
-    gw = SparkContext._gateway
-    key = (
-        kind,
-        tuple((lvl, tuple(entries)) for lvl, entries in sorted(levels.items())),
+_SPANS_TYPE = ArrayType(
+    StructType(
+        [
+            StructField("start_idx", LongType()),
+            StructField("end_idx", LongType()),
+            StructField("surface", StringType()),
+            StructField("tag", StringType()),
+        ]
     )
-    hit = _EXPR_CACHE.get(key)
-    if hit is not None and hit[0] is gw:
-        return hit[1]
-    col = build()
-    _EXPR_CACHE[key] = (gw, col)
-    return col
+)
 
 
 def _tok(i: Column) -> Column:
@@ -106,188 +93,44 @@ def _seq(n: Column, lvl: int) -> Column:
     )
 
 
-def _candidates(levels: dict[int, list[tuple[str, str]]] | None = None) -> Column:
-    """array<struct<start int, n int, tag string>> — every gazetteer window
-    hit, all levels.  One `filter` per dictionary length bucket; the
-    gazetteer is inlined as literal arrays (for dictionaries too large
-    to inline, operators/bigdict.py runs the same pass as one Arrow
-    tagger pass).
-
-    The array is already in the reference's pass order: n desc, then
-    start asc (fix_ner.py:201 outer loop 5..1, inner loop left-to-
-    right).  The levels iterate n descending and ``filter`` preserves
-    position order within a level, so no sort is needed (pinned by
-    test_candidates_are_in_pass_order); a comparator array_sort
-    measurably slowed the whole stage (interpreted per-comparison
-    lambdas)."""
+def _tagger(levels: dict[int, list[tuple[str, str]]] | None) -> DictTaggerModel:
+    """The fix_ner tagger of ``levels`` (length → [(surface, tag)]); the
+    engine gazetteer (``config.GAZ_LEVELS``) when None."""
     if levels is None:
-        levels = config.GAZ_LEVELS
-    n = F.col("n_tokens")
-
-    def _entry_match(i: Column, words: list[str]) -> Column:
-        """Window == entry, as pure element_at equality — NO slice/join
-        allocation per checked position (the interpreted HOF evaluator
-        allocates per expression node; string building per window was the
-        dominant allocation source and capped 8→32-core scaling at ~0.73;
-        elementwise compares are allocation-free).  Positions come from
-        _seq(n, lvl) so every element_at index is in range (ANSI-safe)."""
-        cond = _tok(i) == words[0]
-        for j, w in enumerate(words[1:], start=1):
-            cond = cond & (_tok(i + F.lit(j)) == w)
-        return cond
-
-    def _hit_filter(lvl: int, entries: list[tuple[str, str]]):
-        firsts = sorted({s.split(" ")[0] for s, _c in entries})
-        if lvl == 1:
-            return lambda i: _tok(i).isin(firsts)
-        split = [s.split(" ") for s, _c in entries]
-
-        def f(i):
-            cond = None
-            for words in split:
-                m = _entry_match(i, words)
-                cond = m if cond is None else cond | m
-            # first-token prefilter short-circuits the per-entry compares
-            return _tok(i).isin(firsts) & cond
-
-        return f
-
-    def _mk_struct(lvl: int, entries: list[tuple[str, str]]):
-        classes = sorted({c for _s, c in entries})
-
-        def mk(i):
-            tag = None
-            for c in classes:
-                c_entries = [s.split(" ") for s, cc in entries if cc == c]
-                cond = None
-                for words in c_entries:
-                    m = _entry_match(i, words)
-                    cond = m if cond is None else cond | m
-                tag = F.when(cond, F.lit(c)) if tag is None else tag.when(cond, F.lit(c))
-            return F.struct(
-                i.cast("int").alias("start"), F.lit(lvl).alias("n"), tag.alias("tag")
-            )
-
-        return mk
-
-    per_level = []
-    for lvl, entries in sorted(levels.items(), reverse=True):
-        hits = F.filter(_seq(n, lvl), _hit_filter(lvl, entries))
-        per_level.append(F.transform(hits, _mk_struct(lvl, entries)))
-    return per_level[0] if len(per_level) == 1 else F.concat(*per_level)
+        return DictTaggerModel()
+    return DictTaggerModel(e for entries in levels.values() for e in entries)
 
 
-def _fold_tags(cands: Column | None = None) -> Column:
-    """Final BIO tags array: fold the (pass-ordered) candidates over an
-    all-'O' array, applying a window iff it covers ≥1 'O', overwriting
-    the whole window on apply.  ``cands`` may be a lambda variable
-    (let-bound candidate array) — defaults to the inline expression.
+def _over_tokens(levels, return_type, emit) -> Column:
+    """Iterator-form Arrow UDF over the ``tokens`` column: each row's
+    value is ``emit(tokens, tags)``, ``tags`` from the fix_ner tagger of
+    ``levels`` (first-token prefiltered)."""
+    tagger = _tagger(levels)
+    firsts = tagger.first_tokens()
 
-    The ``any(tag == "O")`` guard (fix_ner.py:205-213) reads tags through
-    a lazy ``more_itertools.windowed`` iterator over the list ``fix()``
-    mutates in place: within one level every position is read exactly
-    once, BEFORE any same-level fix can touch it, so the guard evaluates
-    against the LEVEL-START snapshot while writes land live (same
-    lazy-read timing as the lowercase-PER pass in operators/aliases.py;
-    equivalence fuzz-proven in tests/test_gazetteer_general.py).  The
-    accumulator therefore carries (live tags, level-start snapshot,
-    current level); the snapshot refreshes whenever the candidate level
-    changes — candidates arrive level-grouped (n desc, start asc).
+    def run(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
+        for col in batches:
+            out = []
+            for t in col:
+                toks = list(t)
+                out.append(emit(toks, tagger.tag_tokens(toks, firsts)))
+            yield pd.Series(out)
 
-    The default (inline-candidates) form is memoized per level config
-    (see _EXPR_CACHE); lambda-variable ``cands`` forms are caller-scoped
-    and never cached."""
-    if cands is None:
-        return _expr_cached(
-            "fold",
-            config.GAZ_LEVELS,
-            lambda: _fold_tags(_candidates()),
-        )
-    n = F.col("n_tokens")
-    all_o = F.transform(_seq(n, 1), lambda i: F.lit("O"))
-    init = F.struct(
-        all_o.alias("tags"), all_o.alias("snap"), F.lit(0).alias("lvl")
-    )
-
-    def merge(acc, c):
-        snap = F.when(c["n"] != acc["lvl"], acc["tags"]).otherwise(acc["snap"])
-        covered = F.slice(snap, c["start"] + F.lit(1), c["n"])
-        applies = F.exists(covered, lambda t: t == F.lit("O"))
-        rewritten = F.transform(
-            acc["tags"],
-            lambda t, i: F.when(
-                (i >= c["start"]) & (i < c["start"] + c["n"]),
-                F.when(i == c["start"], F.concat(F.lit("B-"), c["tag"])).otherwise(
-                    F.concat(F.lit("I-"), c["tag"])
-                ),
-            ).otherwise(t),
-        )
-        return F.struct(
-            F.when(applies, rewritten).otherwise(acc["tags"]).alias("tags"),
-            snap.alias("snap"),
-            c["n"].alias("lvl"),
-        )
-
-    return F.aggregate(cands, init, merge, lambda acc: acc["tags"])
+    return F.pandas_udf(run, return_type)(F.col("tokens"))
 
 
-def _fast_spans(cands: Column) -> Column:
-    """Span array when no two candidates overlap: every window applies
-    and IS a span — no fold, no decode.  Same struct type as
-    _decode_spans' output."""
-    return F.transform(
-        cands,
-        lambda c: F.struct(
-            c["start"].cast("long").alias("start_idx"),
-            (c["start"] + c["n"] - 1).cast("long").alias("end_idx"),
-            F.array_join(
-                F.slice(F.col("tokens"), (c["start"] + 1).cast("int"), c["n"]), " "
-            ).alias("surface"),
-            c["tag"].alias("tag"),
-        ),
-    )
-
-
-def _has_overlap(cands: Column) -> Column:
-    """Any two distinct candidate windows intersect (O(c²), c = dictionary
-    hits per doc — sparse)."""
-    return F.exists(
-        cands,
-        lambda a: F.exists(
-            cands,
-            lambda b: ((b["start"] != a["start"]) | (b["n"] != a["n"]))
-            & (b["start"] <= a["start"] + a["n"] - 1)
-            & (a["start"] <= b["start"] + b["n"] - 1),
-        ),
-    )
+def _span_dicts(toks: list[str], tags: list[str]) -> list[dict]:
+    return [
+        {"start_idx": e.start_idx, "end_idx": e.end_idx, "surface": e.surface, "tag": e.tag}
+        for e in entities_from_bio_tags(toks, tags)
+    ]
 
 
 def spans_expr(levels: dict[int, list[tuple[str, str]]] | None = None) -> Column:
-    """array<struct<start_idx, end_idx, surface, tag>> mention spans.
-
-    The candidate array is LET-BOUND (single-element-array transform) so
-    it is evaluated once per row; the common no-overlap case takes the
-    direct candidates→spans path, and only rows with overlapping windows
-    run the sequential fold + BIO decode (CaseWhen evaluates one branch
-    per row).  Measured ~4× over always-folding at sf0.1.
-
-    The built Column is memoized per level config (see _EXPR_CACHE)."""
-    if levels is None:
-        levels = config.GAZ_LEVELS
-
-    def build() -> Column:
-        z = F.array(F.struct(_candidates(levels).alias("cs")))
-        return F.element_at(
-            F.transform(
-                z,
-                lambda zz: F.when(
-                    _has_overlap(zz["cs"]), _decode_spans(_fold_tags(zz["cs"]))
-                ).otherwise(_fast_spans(zz["cs"])),
-            ),
-            1,
-        )
-
-    return _expr_cached("spans", levels, build)
+    """array<struct<start_idx, end_idx, surface, tag>> mention spans of
+    the ``tokens`` column: the fix_ner tags BIO-decoded with the
+    reference decoder (utils.py:111-166), in one Arrow UDF."""
+    return _over_tokens(levels, _SPANS_TYPE, _span_dicts)
 
 
 def _decode_spans(tags: Column, n: Column | None = None) -> Column:
@@ -297,7 +140,8 @@ def _decode_spans(tags: Column, n: Column | None = None) -> Column:
     opening tag); an orphan ``I-`` opens a run (resolve_inconsistencies).
 
     Single fold over (tag, position) pairs; ``tags`` is consumed exactly
-    once (zip_with) so the tag fold is not re-evaluated per element.
+    once (zip_with) so a computed tag array is not re-evaluated per
+    element.
     ``n`` is the token count; defaults to the ``n_tokens`` column (pass
     e.g. ``F.size("tags")`` when decoding a plain tagged table)."""
     if n is None:
@@ -386,15 +230,10 @@ def _decode_spans(tags: Column, n: Column | None = None) -> Column:
 def with_bio(docs: DataFrame) -> DataFrame:
     """Adds ``tokens``, ``n_tokens`` and the final BIO ``tags`` array
     (general n = 5..1 gazetteer matching with the reference's overwrite
-    semantics).  All narrow expressions.
-
-    Deliberately does NOT also attach the decoded span array: carrying
-    the fold through a chain of named columns defeats Catalyst's
-    project-collapse/pruning around Generate and re-evaluates the fold
-    ~4× (measured 11.7s vs 2.7s at sf0.1) — span consumers build
-    ``_decode_spans(_fold_tags())`` inline instead (mentions_df,
-    triples_map_only)."""
-    return with_tokens(docs).withColumn("tags", _fold_tags())
+    semantics), the tags from an Arrow UDF over ``tokens``."""
+    return with_tokens(docs).withColumn(
+        "tags", _over_tokens(None, ArrayType(StringType()), lambda _toks, tags: tags)
+    )
 
 
 def with_naive_bio(docs: DataFrame) -> DataFrame:
@@ -425,20 +264,11 @@ def mentions_df(
 
     ``end_idx`` inclusive (reference convention utils.py:19-22);
     ``start_idx``/``end_idx`` are document-level 0-based token positions.
+    ``levels`` (length → [(surface, tag)]) replaces the engine gazetteer.
     """
-    df = with_tokens(docs)
-    exploded = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col("tokens"),
-        F.explode(spans_expr(levels)).alias("m"),
-    )
-    return exploded.select(
-        "doc_id",
-        sent_id_at(F.col("m.start_idx")).alias("sent_id"),
-        F.col("m.start_idx").alias("start_idx"),
-        F.col("m.end_idx").alias("end_idx"),
-        F.col("m.surface").alias("surface"),
-        F.col("m.tag").alias("tag"),
+    tagger = _tagger(levels)
+    return _mentions_pass(
+        docs, id_col, use_model=False, gazetteer=tagger, firsts=tagger.first_tokens()
     )
 
 

@@ -13,21 +13,25 @@ reference's ``predict`` (/root/reference/ddaugner/predict.py:15-138):
 
 The real BERT checkpoint/transformers stack is not in this container, so
 ``load_model`` returns a deterministic dictionary tagger with *exactly*
-the longest-match semantics of the column-native detector
+the longest-match semantics of the dictionary detector
 (operators/mentions.py) — which gives a strong differential test: the
-Arrow path and the codegen path must produce identical mention sets.
+model path and a literal Python port of fix_ner's loops
+(tests/test_gazetteer_general.py) must produce identical mention sets.
 
 Gazetteer injection follows fix_ner.py's precedence (fix_ner.py:195-252):
 per position a non-'O' dictionary tag wins and the model fills 'O'.
 :func:`merged_mentions_udf` tags, merges, BIO-decodes and assigns sentence
 ids in one ``mapInPandas`` pass (per-document kernel :func:`doc_mentions`);
 composing :func:`tagged_docs_udf` with ``mentions.with_bio`` instead scans
-the pages three times, joins twice on ``doc_id`` and runs the JVM fold.
+the pages three times and joins twice on ``doc_id``.
 
-:class:`DictTaggerModel` is the one fix_ner dictionary tagger: the
-gazetteer injection above, the big-dictionary detector
-(operators/bigdict.py: the same pass over a collected dictionary, no
-model) and the benchmark reference all run its ``tag_tokens``.
+:class:`DictTaggerModel` is the one fix_ner dictionary tagger, and there
+is no column-native copy of it: the gazetteer injection above, every
+dictionary-only mention API (operators/mentions.py: ``mentions_df``,
+``with_bio``, ``spans_expr``; raw-document triples,
+operators/triples.py; the big-dictionary detector, operators/bigdict.py)
+and the benchmark reference all run its ``tag_tokens`` in Arrow
+batches.
 """
 
 from __future__ import annotations
@@ -338,7 +342,7 @@ def mentions_udf(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     contract as operators.mentions.mentions_df, decoded with the pure
     kernel (utils.py:111-166 semantics) inside the same UDF pass.
 
-    Equality with the column path (and the shared SQL oracle) holds for
+    Equality with ``mentions_df`` (and the shared SQL oracle) holds for
     sentences under the per-sentence 512-wordpiece cap — the reference's
     model path truncates there while its dictionary pass doesn't, and
     this path inherits the model-path contract.  The precondition is

@@ -22,15 +22,26 @@ All three join inputs hash-partition on (doc_id, sent_id): Catalyst
 plans a single exchange per input and the range predicates run as join
 residuals.  The gap bound keeps candidate pairs linear in sentence
 length.
+
+Over raw documents (no mention table yet) the same rule runs inside the
+mention pass instead: :func:`triples_map_only` tags, decodes and pairs
+each document in one map-only Arrow pass.
 """
 
 from __future__ import annotations
 
+from bisect import bisect_right
+from typing import Iterator
+
+import pandas as pd
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .. import config
-from .mentions import mentions_df, with_tokens, _tok, sent_id_at
+from .mentions import with_tokens, _tok, sent_id_at
+from .tagging import DictTaggerModel, doc_mentions
 
 
 def preds_by_sentence(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -111,99 +122,71 @@ def triples_from_mentions(
     )
 
 
+_TRIPLE_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("sent_id", LongType()),
+        StructField("subj", StringType()),
+        StructField("subj_tag", StringType()),
+        StructField("pred", StringType()),
+        StructField("obj", StringType()),
+        StructField("obj_tag", StringType()),
+        StructField("subj_start", LongType()),
+        StructField("obj_start", LongType()),
+    ]
+)
+
+
+def _doc_triples(toks, ments, pred_words, max_gap):
+    """(sent_id, subj, subj_tag, pred, obj, obj_tag, subj_start,
+    obj_start) of one document: :func:`triples_from_mentions`' rule over
+    its ``(sent_id, entity)`` mentions in span order (non-overlapping,
+    sorted by start) — same sentence, object start 2..max_gap + 1 tokens
+    past the subject end, and the leftmost ``pred_words`` token strictly
+    between them as the relation."""
+    preds = [i for i, t in enumerate(toks) if t in pred_words]
+    out = []
+    for k, (sid, s) in enumerate(ments):
+        j = bisect_right(preds, s.end_idx)
+        if j == len(preds):
+            continue
+        for oid, o in ments[k + 1 :]:
+            if o.start_idx > s.end_idx + 1 + max_gap or oid != sid:
+                break
+            if o.start_idx > s.end_idx + 1 and preds[j] < o.start_idx:
+                out.append(
+                    (sid, s.surface, s.tag, toks[preds[j]], o.surface, o.tag,
+                     s.start_idx, o.start_idx)
+                )
+    return out
+
+
 def triples_map_only(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Zero-shuffle triple extraction: mention and predicate arrays are
-    built per document and pairs are generated inside array expressions —
-    the whole stage is a single map over the pages scan (measured 2.4×
-    the join formulation at bench scale, and no exchange at all at
-    100 TB).
+    """Zero-shuffle triple extraction: one map-only ``mapInPandas`` pass
+    in which each document's mentions come from
+    ``tagging.doc_mentions`` (the fix_ner tagger over the engine
+    gazetteer, as ``mentions.mentions_df``) and are paired by
+    :func:`_doc_triples` — no exchange at any corpus size.  Pairing is
+    O(m · max_gap) per document (the object scan stops at the gap bound
+    or the sentence end)."""
+    tagger = DictTaggerModel()
+    firsts = tagger.first_tokens()
+    pred_words = frozenset(config.PRED_WORDS)
+    max_gap = config.TRIPLE_MAX_GAP
 
-    Complexity bound: O(m² · n) per doc with m = mentions and n = tokens.
-    The mention array (which now embeds the general gazetteer fold) is
-    LET-BOUND via a single-element-array ``transform`` so the nested pair
-    lambdas reference a lambda variable instead of re-evaluating the fold
-    per outer element (the no-CSE-in-lambdas rule).  Natural web text has
-    bounded mention density so this is effectively linear; for
-    adversarial all-dictionary documents prefer
-    :func:`triples_from_mentions` over a materialized mention table."""
-    from .. import config as _c
-    from .mentions import _tok, sent_id_at, spans_expr, with_tokens
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for d, text in zip(pdf[id_col], pdf["text"]):
+                ments = doc_mentions(text, None, tagger, firsts)
+                if len(ments) > 1:
+                    rows.extend(
+                        (int(d), *t)
+                        for t in _doc_triples(text.split(" "), ments, pred_words, max_gap)
+                    )
+            yield pd.DataFrame(rows, columns=_TRIPLE_SCHEMA.fieldNames())
 
-    df = with_tokens(docs)
-    n = F.col("n_tokens")
-    seq1 = F.when(n >= 1, F.sequence(F.lit(0), n - 1)).otherwise(
-        F.array().cast("array<int>")
-    )
-
-    # decoded spans (general n=5..1 gazetteer fold) + per-mention sent_id;
-    # built INLINE, not via named columns (see mentions.with_bio note)
-    m_all = F.transform(
-        spans_expr(),
-        lambda m: F.struct(
-            m["start_idx"].alias("start_idx"),
-            m["end_idx"].alias("end_idx"),
-            m["surface"].alias("surface"),
-            m["tag"].alias("tag"),
-            sent_id_at(m["start_idx"]).alias("sent_id"),
-        ),
-    )
-    preds = F.transform(
-        F.filter(seq1, lambda i: _tok(i).isin(_c.PRED_WORDS)),
-        lambda i: F.struct(i.cast("long").alias("pos"), _tok(i).alias("tok")),
-    )
-    # let-binding: evaluate (ments, preds) ONCE per row, bind to z
-    def pair_expr(z):
-        ments, pred_arr = z["ms"], z["ps"]
-        return F.flatten(
-            F.transform(
-                ments,
-                lambda s: F.transform(
-                    F.filter(
-                        ments,
-                        lambda o: (o["start_idx"] > s["end_idx"] + 1)
-                        & (o["start_idx"] <= s["end_idx"] + 1 + _c.TRIPLE_MAX_GAP)
-                        & (o["sent_id"] == s["sent_id"]),
-                    ),
-                    lambda o: F.struct(
-                        s["sent_id"].alias("sent_id"),
-                        s["surface"].alias("subj"),
-                        s["tag"].alias("subj_tag"),
-                        F.array_min(
-                            F.filter(
-                                pred_arr,
-                                lambda p: (p["pos"] > s["end_idx"])
-                                & (p["pos"] < o["start_idx"]),
-                            )
-                        )["tok"].alias("pred"),
-                        o["surface"].alias("obj"),
-                        o["tag"].alias("obj_tag"),
-                        s["start_idx"].alias("subj_start"),
-                        o["start_idx"].alias("obj_start"),
-                    ),
-                ),
-            )
-        )
-
-    pair = F.element_at(
-        F.transform(
-            F.array(F.struct(m_all.alias("ms"), preds.alias("ps"))), pair_expr
-        ),
-        1,
-    )
-    out = df.select(F.col(id_col).alias("doc_id"), F.explode(pair).alias("t")).filter(
-        F.col("t.pred").isNotNull()
-    )
-    return out.select(
-        "doc_id",
-        "t.sent_id",
-        "t.subj",
-        "t.subj_tag",
-        "t.pred",
-        "t.obj",
-        "t.obj_tag",
-        "t.subj_start",
-        "t.obj_start",
-    )
+    return docs.select(F.col(id_col), F.col("text")).mapInPandas(run, _TRIPLE_SCHEMA)
 
 
 def triples_df(

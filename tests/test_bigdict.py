@@ -1,12 +1,13 @@
-"""Broadcast-join big-dictionary detector (operators/bigdict.py) vs
-(a) the inline matcher on the shared config.GAZETTEER over real sf0.001
-documents, (b) a direct Python port of fix_ner.py:195-215 + the
-reference decoder on crafted overlap/fragment cases, and (c) a
-generated 30k-entry dictionary (reference scale) that the inline
-matcher could never compile."""
+"""Big-dictionary detector (operators/bigdict.py) vs Python ports of
+fix_ner.py:195-215 + the reference decoder — the literal lazy port
+(test_gazetteer_general.reference_tagger) and the level-snapshot port
+below — on (a) the shared config.GAZETTEER over real sf0.001 documents,
+(b) crafted overlap/fragment cases and seeded fuzz, and (c) a generated
+30k-entry dictionary (reference scale)."""
 
 import pytest
 from pyspark.sql import functions as F
+from test_gazetteer_general import reference_tagger
 
 from ddaugner_spark import config
 from ddaugner_spark.operators.bigdict import (
@@ -18,23 +19,24 @@ from ddaugner_spark.operators.bigdict import (
 from ddaugner_spark.operators.mentions import mentions_df
 
 
-def _ref_mentions(tokens, gaz, term=config.SENT_TERM, max_n=5):
+def _ref_mentions(tokens, gaz, term=config.SENT_TERM, max_n=5, tags=None):
     """Direct port of the reference matcher (fix_ner.py:195-215: windows
     n=max..1 left-to-right, apply iff >=1 'O' in the LEVEL-START
     snapshot — the guard reads tags through the lazy windowed iterator,
     so same-level writes are invisible to it; writes land live) + the
     reference BIO decoder (utils.py:111-166: I- extends any open run,
     orphan I- opens one).  Snapshot-vs-lazy equivalence is fuzz-proven
-    in test_gazetteer_general."""
-    tags = ["O"] * len(tokens)
-    for n in range(max_n, 0, -1):
-        snap = tags[:]
-        for i in range(0, len(tokens) - n + 1):
-            surf = " ".join(tokens[i : i + n])
-            if surf in gaz and any(t == "O" for t in snap[i : i + n]):
-                tags[i] = "B-" + gaz[surf]
-                for j in range(i + 1, i + n):
-                    tags[j] = "I-" + gaz[surf]
+    in test_gazetteer_general.  ``tags`` given: decode those instead."""
+    if tags is None:
+        tags = ["O"] * len(tokens)
+        for n in range(max_n, 0, -1):
+            snap = tags[:]
+            for i in range(0, len(tokens) - n + 1):
+                surf = " ".join(tokens[i : i + n])
+                if surf in gaz and any(t == "O" for t in snap[i : i + n]):
+                    tags[i] = "B-" + gaz[surf]
+                    for j in range(i + 1, i + n):
+                        tags[j] = "I-" + gaz[surf]
     spans, cur = [], None
     for i, t in enumerate(tags):
         if t.startswith("B-"):
@@ -57,6 +59,17 @@ def _ref_mentions(tokens, gaz, term=config.SENT_TERM, max_n=5):
     return out
 
 
+def _lazy_ref(rows, gaz):
+    """Sorted mention rows of ``(doc_id, text)`` rows by the literal
+    lazy port of the reference loops, reference-decoded."""
+    out = []
+    for doc_id, text in rows:
+        toks = text.split(" ") if text else []
+        tags = reference_tagger(toks, gaz)
+        out += [(doc_id, *m) for m in _ref_mentions(toks, gaz, tags=tags)]
+    return sorted(out)
+
+
 def _collect(df):
     return sorted(
         (r["doc_id"], r["sent_id"], r["start_idx"], r["end_idx"], r["surface"], r["tag"])
@@ -65,20 +78,21 @@ def _collect(df):
 
 
 def test_bigdict_equals_inline_on_corpus(spark, sf_dir):
-    """The broadcast path must reproduce the inline matcher EXACTLY on
-    the shared dictionary over real documents."""
+    """The dictionary-as-data path must reproduce ``mentions_df`` and
+    the lazy reference port EXACTLY on the shared dictionary over real
+    documents."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    gaz = spark.createDataFrame(
-        [(s, c) for s, c, _w in config.GAZETTEER], "surface string, tag string"
-    )
-    assert _collect(mentions_bigdict_df(docs, gaz)) == _collect(mentions_df(docs))
+    entries = [(s, c) for s, c, _w in config.GAZETTEER]
+    gaz = spark.createDataFrame(entries, "surface string, tag string")
+    want = _lazy_ref([(r["doc_id"], r["text"]) for r in docs.collect()], dict(entries))
+    assert want
+    assert _collect(mentions_bigdict_df(docs, gaz)) == _collect(mentions_df(docs)) == want
 
 
 def test_bigdict_prefilter_off_identical(spark, sf_dir):
-    """The bench A/B arm (prefilter=False: windows at every position,
-    broadcast join does all the filtering) must produce the identical
-    mention set — the prefilter is a cost optimization, never a
-    semantic one."""
+    """The bench A/B arm (prefilter=False: every window is looked up)
+    must produce the identical mention set — the prefilter is a cost
+    optimization, never a semantic one."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     gaz = spark.createDataFrame(
         [(s, c) for s, c, _w in config.GAZETTEER], "surface string, tag string"
@@ -133,8 +147,8 @@ def test_bigdict_sent_ids_with_terminator_inside_window(spark):
 
 def test_bigdict_30k_dictionary(spark):
     """Reference-scale dictionary (30k entries — conll_entities.py is
-    3.5k PER names alone): the inline matcher cannot compile this; the
-    broadcast path must match the Python reference port."""
+    3.5k PER names alone): the detector must match the Python reference
+    port."""
     gaz = {}
     for i in range(30_000):
         if i % 3 == 0:
@@ -165,25 +179,36 @@ def test_bigdict_30k_dictionary(spark):
 
 
 def test_detect_mentions_autoselect(spark, sf_dir):
-    """Auto-select: a small dictionary list routes to the inline matcher
-    and a large DataFrame routes to the broadcast path — both equal."""
+    """A dictionary list and the same dictionary as a DataFrame give the
+    same rows as ``mentions_df`` and the lazy reference port."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
     entries = [(s, c) for s, c, _w in config.GAZETTEER]
-    small = _collect(detect_mentions(docs, entries))
+    want = _lazy_ref([(r["doc_id"], r["text"]) for r in docs.collect()], dict(entries))
+    from_list = _collect(detect_mentions(docs, entries))
     gdf = spark.createDataFrame(entries, "surface string, tag string")
-    forced_big = _collect(detect_mentions(docs, gdf, inline_threshold=1))
-    assert small == forced_big == _collect(mentions_df(docs))
+    from_df = _collect(detect_mentions(docs, gdf))
+    assert want and from_list == from_df == _collect(mentions_df(docs)) == want
+
+
+def test_empty_dictionary_gives_no_mentions(spark):
+    """An empty dictionary — a list, an empty (surface, tag) DataFrame or
+    empty ``levels`` — tags nothing and gives 0 rows, not an error."""
+    docs = spark.createDataFrame(
+        [(1, "acme corp hires spark people"), (2, ""), (3, None)],
+        "doc_id long, text string",
+    )
+    empty = spark.createDataFrame([], "surface string, tag string")
+    assert detect_mentions(docs, []).count() == 0
+    assert detect_mentions(docs, empty).count() == 0
+    assert mentions_df(docs, levels={}).count() == 0
 
 
 def test_bigdict_randomized_differential(spark):
     """Seeded fuzz: random corpora + random overlapping dictionaries,
-    inline matcher vs broadcast path must agree exactly (spans, tags,
-    surfaces, sentence ids) — including adversarial overlap chains and
-    terminator tokens inside entities."""
+    the detector vs the lazy reference port must agree exactly (spans,
+    tags, surfaces, sentence ids) — including adversarial overlap chains
+    and terminator tokens inside entities."""
     import random
-
-    from ddaugner_spark.operators.bigdict import _levels
-    from ddaugner_spark.operators.mentions import mentions_df as inline_df
 
     vocab = ["aa", "bb", "cc", "dd", "ee", "ff", config.SENT_TERM]
     for seed in range(4):
@@ -204,10 +229,7 @@ def test_bigdict_randomized_differential(spark):
             list(entries.items()), "surface string, tag string"
         )
         got_big = _collect(mentions_bigdict_df(ddf, gdf))
-        got_inline = _collect(
-            inline_df(ddf, levels=_levels(sorted(entries.items())))
-        )
-        assert got_big == got_inline, f"seed {seed} diverged"
+        assert got_big == _lazy_ref(docs, entries), f"seed {seed} diverged"
 
 
 def test_bigdict_plan_shape(spark):
@@ -235,34 +257,38 @@ def test_bigdict_plan_shape(spark):
 
 
 def test_detect_mentions_duplicate_surface_consistent(spark):
-    """A duplicate-surface gazetteer resolves to min(tag) on BOTH the
-    inline and broadcast paths — the auto-selector never changes the
-    answer for identical input (review finding, round 3)."""
+    """A duplicate-surface gazetteer resolves to min(tag) whether it is
+    passed as a list or as a DataFrame, as the reference port over the
+    min-tag dictionary does."""
     docs = spark.createDataFrame(
         [(1, "acme corp builds things")], "doc_id long, text string"
     )
     entries = [("acme corp", "ORG"), ("acme corp", "LOC")]
-    small = _collect(detect_mentions(docs, entries))  # inline path
+    from_list = _collect(detect_mentions(docs, entries))
     gdf = spark.createDataFrame(entries, "surface string, tag string")
-    big = _collect(detect_mentions(docs, gdf, inline_threshold=1))  # broadcast
-    assert small == big == [(1, 0, 0, 1, "acme corp", "LOC")]  # min(tag)
+    from_df = _collect(detect_mentions(docs, gdf))
+    want = _lazy_ref([(1, "acme corp builds things")], {"acme corp": "LOC"})
+    assert from_list == from_df == want == [(1, 0, 0, 1, "acme corp", "LOC")]
 
 
 def test_detect_mentions_null_surface(spark):
-    """A null surface can never equal a window surface: both paths drop
-    it and give the answer of the same dictionary without it (the
-    broadcast path used to crash sorting a null entry length)."""
+    """A null surface can never equal a window surface: the list and the
+    DataFrame forms drop it and give the reference port's answer for the
+    same dictionary without it (the DataFrame path used to crash sorting
+    a null entry length)."""
     docs = spark.createDataFrame(
         [(1, "acme corp hires spark people"), (2, "nothing here")],
         "doc_id long, text string",
     )
     entries = [("acme corp", "ORG"), ("spark", "PER"), (None, "LOC")]
-    clean = _collect(detect_mentions(docs, entries[:2]))
+    clean = _lazy_ref(
+        [(1, "acme corp hires spark people"), (2, "nothing here")], dict(entries[:2])
+    )
     assert clean  # the fixture really has hits
-    inline = _collect(detect_mentions(docs, entries))
+    from_list = _collect(detect_mentions(docs, entries))
     gdf = spark.createDataFrame(entries, "surface string, tag string")
-    big = _collect(detect_mentions(docs, gdf, inline_threshold=1))
-    assert inline == big == clean == _collect(mentions_bigdict_df(docs, gdf))
+    from_df = _collect(detect_mentions(docs, gdf))
+    assert from_list == from_df == clean == _collect(mentions_bigdict_df(docs, gdf))
 
 
 #: tokens that a SQL-text prefilter could misparse: quotes of every
@@ -384,9 +410,9 @@ def test_bigdict_kernel_across_arrow_batches(spark):
 
 def test_detect_mentions_one_dictionary_collect(spark, jobs_started):
     """``detect_mentions`` over a dictionary DataFrame starts only the
-    jobs of ONE deduped dictionary collect before its result runs; the
-    inline-vs-tagger choice reads that collect (no separate head job,
-    no second dedup under a join), and the list path starts none."""
+    jobs of ONE deduped dictionary collect before its result runs (no
+    separate head job, no second dedup under a join), and the list path
+    starts none."""
     docs = spark.createDataFrame(
         [(1, "acme corp hires spark people")], "doc_id long, text string"
     )
@@ -401,8 +427,8 @@ def test_detect_mentions_one_dictionary_collect(spark, jobs_started):
     m_list, n_list = jobs_started(lambda: detect_mentions(docs, entries))
     assert n_list == 0
     assert _collect(m_list) == _collect(m)
-    # the inline branch takes its entries from the same collect
+    # a small dictionary takes the same single collect
     small = gdf.where(F.col("surface") == "acme corp")
-    m_inline, n_inline = jobs_started(lambda: detect_mentions(docs, small))
-    assert n_inline <= one_collect
-    assert _collect(m_inline) == _collect(m)
+    m_small, n_small = jobs_started(lambda: detect_mentions(docs, small))
+    assert n_small <= one_collect
+    assert _collect(m_small) == _collect(m)

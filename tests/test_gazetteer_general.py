@@ -10,13 +10,13 @@ semantics (/root/reference/fix_ner.py:195-215) on hand-built sentences:
   leaves orphan I-X tags that the decoder (utils.py:111-166) absorbs
   into the new span — the span's class comes from the opening B- tag.
 
-Three implementations must agree: the Arrow tagger kernel
-(DictTaggerModel.tag_tokens — a verbatim transcription of fix_ner's
-loops), the column-native fold (operators/mentions.with_bio), and the
-hand-computed expectation.
+Three implementations must agree: the engine's one tagger kernel
+(DictTaggerModel.tag_tokens, which mentions_df, with_bio and the
+big-dictionary detector all run in Arrow batches), the literal lazy port
+of fix_ner's loops (:func:`reference_tagger`), and the hand-computed
+expectation.
 """
 
-import pyspark.sql.functions as F
 import pytest
 
 from ddaugner_spark import config
@@ -122,12 +122,12 @@ def test_kernel_equals_reference_on_random_corpus(docs):
         assert model.tag_tokens(toks) == reference_tagger(toks)
 
 
-def test_column_fold_equals_kernel(spark):
-    """The Catalyst fold (with_bio) must equal the Python kernel on a
+def test_with_bio_equals_reference(spark):
+    """``with_bio``'s tags must equal the lazy reference port on a
     corpus engineered to hit every overlap path, including a head
     overwrite (4-gram applied, then a later-level window overwriting its
     head is blocked by any-O; heads get overwritten only by same-or-later
-    windows whose left part is O)."""
+    windows whose left part is O), and on null and empty text."""
     rows = [(i, t) for i, (t, _w) in enumerate(CASES)]
     rows += [
         (100, "fast hash join big data"),       # two trigrams chained
@@ -135,45 +135,22 @@ def test_column_fold_equals_kernel(spark):
         (102, "value slow hash data row slow slow"), # 4-gram then 5-gram tail
         (103, "customer hash join sort merge window"),
         (104, ""),                                # empty text
+        (105, None),                              # null text
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["doc_id"]: r["tags"]
         for r in mentions.with_bio(df).select("doc_id", "tags").collect()
     }
-    model = DictTaggerModel()
     for doc_id, text in rows:
         toks = text.split(" ") if text else []
-        assert got[doc_id] == model.tag_tokens(toks), (doc_id, text)
-
-
-def test_candidates_are_in_pass_order(spark):
-    """``_candidates`` needs no sort: its array already comes in
-    fix_ner's pass order (n desc, then start asc), the order the fold
-    consumes."""
-    rows = [(i, t) for i, (t, _w) in enumerate(CASES)]
-    rows += [
-        (100, "fast hash join big data"),
-        (101, "row column sort stream table hash"),
-        (102, "value slow hash data row slow slow"),
-    ]
-    df = (
-        spark.createDataFrame(rows, "doc_id long, text string")
-        .select(F.split("text", " ").alias("tokens"))
-        .withColumn("n_tokens", F.size("tokens"))
-    )
-    got = [
-        [(c["n"], c["start"]) for c in r["cs"]]
-        for r in df.select(mentions._candidates().alias("cs")).collect()
-    ]
-    assert any(len({n for n, _s in cs}) > 1 for cs in got)
-    for cs in got:
-        assert cs == sorted(cs, key=lambda c: (-c[0], c[1]))
+        assert got[doc_id] == reference_tagger(toks), (doc_id, text)
 
 
 def test_mentions_decode_matches_kernel_spans(spark):
-    """Decoded spans (mentions_df) == kernel entities on the engineered
-    corpus, including the merged-span quirk."""
+    """Decoded spans (mentions_df, and spans_expr over the same rows) ==
+    the reference port's entities on the engineered corpus, including
+    the merged-span quirk."""
     from ddaugner_spark.kernels import entities_from_bio_tags
 
     rows = [
@@ -186,13 +163,19 @@ def test_mentions_decode_matches_kernel_spans(spark):
         (r["doc_id"], r["start_idx"], r["end_idx"], r["surface"], r["tag"])
         for r in mentions.mentions_df(df).collect()
     )
-    model = DictTaggerModel()
+    got_spans = sorted(
+        (r["doc_id"], *s)
+        for r in mentions.with_tokens(df)
+        .select("doc_id", mentions.spans_expr().alias("spans"))
+        .collect()
+        for s in r["spans"]
+    )
     want = []
     for doc_id, text in rows:
         toks = text.split(" ")
-        for e in entities_from_bio_tags(toks, model.tag_tokens(toks)):
+        for e in entities_from_bio_tags(toks, reference_tagger(toks)):
             want.append((doc_id, e.start_idx, e.end_idx, e.surface, e.tag))
-    assert got == sorted(want)
+    assert got == got_spans == sorted(want)
 
 
 def test_level_snapshot_divergence(spark):
@@ -254,9 +237,10 @@ def test_dictionary_pass_fuzz_lazy_vs_snapshot():
 
 
 def test_engine_fuzz_vs_lazy_port(spark):
-    """Seeded fuzz of BOTH Spark matchers (inline fold + bigdict
-    broadcast-join replay) against the lazy-windowed reference port on
-    dense random corpora over a random overlapping dictionary."""
+    """Seeded fuzz of both dictionary entry points (mentions_df with
+    custom levels, and the big-dictionary detector over a dictionary
+    DataFrame) against the lazy-windowed reference port on dense random
+    corpora over a random overlapping dictionary."""
     import random
 
     from ddaugner_spark.kernels import entities_from_bio_tags
@@ -286,11 +270,11 @@ def test_engine_fuzz_vs_lazy_port(spark):
                 text.split(" "), reference_tagger(text.split(" "), dic)
             )
         )
-        got_inline = sorted(
+        got_levels = sorted(
             (r["doc_id"], r["start_idx"], r["end_idx"], r["surface"], r["tag"])
             for r in mentions.mentions_df(df, levels=levels).collect()
         )
-        assert got_inline == want, (round_, dic)
+        assert got_levels == want, (round_, dic)
         gaz = spark.createDataFrame(sorted(dic.items()), "surface string, tag string")
         got_big = sorted(
             (r["doc_id"], r["start_idx"], r["end_idx"], r["surface"], r["tag"])

@@ -91,6 +91,38 @@ def test_triples_reference_mentions(spark):
     assert ("spark", "filter", "customer") in rows
 
 
+def test_triples_raw_docs_equal_mention_table_form(spark):
+    """Seeded fuzz: ``triples_df`` over raw documents (the per-document
+    Arrow kernel) equals the join form over a ``mentions_df`` table,
+    with null and empty text, adjacent mentions, and mention pairs
+    within the gap but across a sentence terminator (never paired)."""
+    import random
+
+    rng = random.Random(2024)
+    vocab = [
+        "spark", "customer", "hash", "join", "stream", "window", "table",
+        "scan", "filter", "group", "order", config.SENT_TERM, "x",
+    ]
+    rows = [
+        (i, " ".join(rng.choice(vocab) for _ in range(rng.randint(1, 30))))
+        for i in range(120)
+    ]
+    crossing = f"spark filter {config.SENT_TERM} window group customer"
+    rows += [(1000, None), (1001, ""), (1002, crossing), (1003, "spark window filter x")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    raw = sorted(tuple(r) for r in triples.triples_df(df).collect())
+    joined = sorted(
+        tuple(r)
+        for r in triples.triples_df(df, mentions_table=mentions.mentions_df(df)).collect()
+    )
+    assert len(raw) > 50 and raw == joined
+    # across the terminator only window→customer (sentence 1) pairs
+    assert [t[2:7] for t in raw if t[0] == 1002] == [
+        ("window", "LOC", "group", "customer", "PER")
+    ]
+    assert not [t for t in raw if t[0] in (1000, 1001, 1003)]
+
+
 def test_linking_salt_invariance(spark, docs):
     """Two-phase salted aggregation must be exactly invariant in the salt
     bucket count (the whole point of the rewrite)."""

@@ -1,15 +1,27 @@
 """Arrow-batched tagging path (M1): differential identity with the
-codegen path, and merge precedence rules."""
+literal reference port of the dictionary pass, and merge precedence
+rules."""
 
-import pyspark.sql.functions as F
+from test_gazetteer_general import reference_tagger
 
+from ddaugner_spark import config
+from ddaugner_spark.kernels import entities_from_bio_tags
 from ddaugner_spark.operators import mentions, tagging
 
 
-def test_udf_path_identical_to_codegen_path(spark, docs):
+def test_udf_path_identical_to_reference(spark, docs):
+    """The model path (wordpiece stack over per-sentence dictionary
+    tags) and ``mentions_df`` both equal the lazy reference port's
+    decoded mentions on the corpus."""
+    want = set()
+    for r in docs.select("doc_id", "text").collect():
+        toks = r["text"].split(" ") if r["text"] else []
+        for e in entities_from_bio_tags(toks, reference_tagger(toks)):
+            sent = toks[: e.start_idx].count(config.SENT_TERM)
+            want.add((r["doc_id"], sent, e.start_idx, e.end_idx, e.surface, e.tag))
     a = {tuple(r) for r in tagging.mentions_udf(docs).collect()}
     b = {tuple(r) for r in mentions.mentions_df(docs).collect()}
-    assert a and a == b
+    assert want and a == want and b == want
 
 
 def test_tagged_docs_default_o(spark):

@@ -185,7 +185,7 @@ def test_per_sentence_truncation():
 
 def test_corpus_sentences_below_truncation_cap(spark):
     """The Arrow tagger paths truncate per sentence at 512 wordpieces;
-    the DuckDB oracle fold (and the inline column path) has no cap, so
+    the DuckDB oracle fold (and the dictionary-only pass) has no cap, so
     engine/oracle parity relies on every gate-corpus sentence fitting
     under it.  Pin that precondition here (truncation behavior itself
     is pinned by test_per_sentence_truncation) — if a future corpus
