@@ -41,7 +41,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .. import config
 from .mentions import with_tokens, _tok, sent_id_at
-from .tagging import DictTaggerModel, doc_mentions
+from .tagging import DictTaggerModel, doc_mentions, mentions_from_tagged
 
 
 def preds_by_sentence(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -213,8 +213,6 @@ def triples_from_tagged(
     tokens, tags) — the model-output path: mention spans decoded with
     reference BIO semantics, predicates looked up in ``pred_words``.
     Positions are sentence-local."""
-    from .tagging import mentions_from_tagged
-
     m = mentions_from_tagged(tagged)
     n = F.size("tokens")
     seq1 = F.when(n >= 1, F.sequence(F.lit(0), n - 1)).otherwise(
