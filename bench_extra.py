@@ -46,7 +46,15 @@ exploratory lives here instead (per the optimization-round rules):
   cost;
 * ``pipeline`` — ``KGPipeline.run`` wall on the ×AMPLIFY corpus (the
   third end-to-end number): the dictionary path, and the model path
-  with page dedup; a fresh output dir per rep, min of 2.
+  with page dedup; a fresh output dir per rep, min of 2;
+* ``dedup`` — bench.py's ``dedup_exact_substr`` (after its warm pass),
+  ``dedup_minhash_lsh`` and ``dedup_suffix_lcp`` shapes with both rep
+  walls (rep 2 must not read what rep 1 left persisted), then one
+  wall each for the gate-only dedup operators
+  ``jaccard_pairs_inverted``, ``all_pairs_jaccard_prefix``,
+  ``containment_pairs`` and ``minhash_estimate_error`` on the
+  dup-amplified sf corpus; ``persisted_left`` counts the storage list
+  afterwards.
 
 Every section runs on one ``local[SPARK_GRAFT_CPUS]`` session; the
 variable defaults to 32, so on a smaller box set it to the core count
@@ -54,7 +62,7 @@ variable defaults to 32, so on a smaller box set it to the core count
 ``local[32]``.  ``SPARK_GRAFT_SF_DIR`` (the sf0.1 corpus by default)
 and ``SPARK_GRAFT_AMPLIFY`` (default 20) pick the corpus.
 
-Usage: [SPARK_GRAFT_CPUS=N] python bench_extra.py [noop|ccnb|graphlegs|cckernel|msfkernel|bigdictbuild|bigdictscale|scale64|pipeline ...]   (default: noop ccnb; master local[SPARK_GRAFT_CPUS], default local[32])
+Usage: [SPARK_GRAFT_CPUS=N] python bench_extra.py [noop|ccnb|graphlegs|cckernel|msfkernel|bigdictbuild|bigdictscale|scale64|pipeline|dedup ...]   (default: noop ccnb; master local[SPARK_GRAFT_CPUS], default local[32])
 Prints one JSON line per section, with the master it ran on.
 """
 
@@ -74,7 +82,7 @@ from pyspark.sql import functions as F
 from ddaugner_spark.session import get_spark
 from ddaugner_spark.sources import gazetteer_df, synthesize_pages, extract_text
 from ddaugner_spark.operators import (
-    bigdict, canonical, graph, linking, mentions, triples,
+    bigdict, canonical, dedup, graph, linking, mentions, triples,
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -551,6 +559,47 @@ def pipeline_section(spark) -> dict:
     return out
 
 
+def dedup_section(spark) -> dict:
+    """bench.py's three dedup legs with both rep walls, and one wall
+    per gate-only dedup operator (module docstring)."""
+    import shutil
+
+    from ddaugner_spark.operators.suffix import lcp_array
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    amp = dedup.with_dup_corpus(docs)
+    out: dict = {}
+    reps: dict = {}
+    dedup.exact_substring_pairs(amp.limit(500)).count()  # bench.py's warm pass
+    reps["dedup_exact_substr"] = _leg(
+        spark, "dedup_exact_substr",
+        lambda: dedup.exact_substring_pairs(amp).count(), out,
+    )
+    reps["dedup_minhash_lsh"] = _leg(
+        spark, "dedup_minhash_lsh",
+        lambda: dedup.minhash_near_duplicates(dedup.with_dup_corpus(docs)).count(),
+        out,
+    )
+    toks_dir = "/tmp/ddaugner_extra_satoks"
+    docs.filter(F.coalesce(F.col("text"), F.lit("")) != "").select(
+        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
+    ).withColumn("pos", F.col("pos").cast("long")).write.mode(
+        "overwrite"
+    ).parquet(toks_dir)
+    toks = spark.read.parquet(toks_dir)
+    reps["dedup_suffix_lcp"] = _leg(
+        spark, "dedup_suffix_lcp",
+        lambda: lcp_array(toks, stage_dir="/tmp/ddaugner_bench_sa").count(), out,
+    )
+    for name in ("jaccard_pairs_inverted", "all_pairs_jaccard_prefix",
+                 "containment_pairs", "minhash_estimate_error"):
+        op = getattr(dedup, name)
+        _leg(spark, name, lambda op=op: op(amp).count(), out, reps=1)
+    shutil.rmtree(toks_dir, ignore_errors=True)
+    persisted_left = len(spark.sparkContext._jsc.getPersistentRDDs())
+    return {**out, "rep_walls": reps, "persisted_left": persisted_left}
+
+
 SECTIONS = {
     "noop": noop_section,
     "ccnb": ccnb_section,
@@ -561,6 +610,7 @@ SECTIONS = {
     "bigdictscale": bigdictscale_section,
     "scale64": scale64_section,
     "pipeline": pipeline_section,
+    "dedup": dedup_section,
 }
 
 

@@ -154,7 +154,7 @@ def connected_components(
     is lazily BACKED by the final checkpoint under ``stage_dir`` — when
     ``stage_dir`` is None the backing temp dir is left on disk for the
     lifetime of the result; pass an explicit ``stage_dir`` to control
-    that lifetime (the pipeline does).  Nothing stays persisted.
+    that lifetime (the pipeline does).  Nothing is persisted.
 
     One pass first (module docstring): the edges stream through the
     union-find kernel into ``{stage_dir}/components``, which is the
@@ -220,27 +220,24 @@ def connected_components(
         return comps
     shutil.rmtree(comps_dir, ignore_errors=True)
 
-    from pyspark import StorageLevel
-
-    # the symmetric edge table is loop-INVARIANT: persist it (released
-    # before return — the result is parquet-backed); iteration
-    # checkpoints below stay parquet — the label self-joins quadruple
-    # the logical plan per iteration, which only a real lineage cut
-    # resets.
-    sym = edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    sym = sym.repartition("a").persist(StorageLevel.MEMORY_AND_DISK)
+    # the symmetric edge table is loop-INVARIANT, yet it is not
+    # persisted: re-reading and re-exchanging it each round was faster
+    # cold than keeping it, on a 1M-node chain too (docs/PLANS.md, "One
+    # scoped persist").  Iteration checkpoints stay parquet — the label
+    # self-joins quadruple the logical plan per iteration, which only a
+    # real lineage cut resets.
+    sym = edges.union(
+        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
+    ).repartition("a")
 
     # iteration 1 fused into init: with label(v)=v, the first hash-min
     # step is label(v) ← min(v, min neighbor id) — ONE aggregate over
-    # the symmetric edge table, no join (saves a full join round).
-    # Persisted, not parquet: the one count below materializes it and
-    # sym, and sizes the label table — one job total.
-    init = (
-        sym.groupBy(F.col("a").alias("node")).agg(
-            # min("a") is the group key itself (constant per group)
-            F.least(F.min("a"), F.min("b")).alias("label")
-        )
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # the symmetric edge table, no join (saves a full join round).  The
+    # count sizes the label table; round 1 recomputes the aggregate.
+    init = sym.groupBy(F.col("a").alias("node")).agg(
+        # min("a") is the group key itself (constant per group)
+        F.least(F.min("a"), F.min("b")).alias("label")
+    )
     stats["n_nodes"] = init.count()
     stats["init_sec"] = round(time.time() - t0, 3)
 
@@ -293,10 +290,6 @@ def connected_components(
         key="it", own_dir=own_dir,
     )
     stats["n_checkpoints"] = len(stats["iters"])
-    # the result is backed by the final parquet checkpoint: release the
-    # loop-invariant persists
-    sym.unpersist()
-    init.unpersist()
     return labels.select(
         F.col("node").alias("entity"), F.col("label").alias("component")
     )

@@ -212,18 +212,17 @@ def jaccard_pairs_inverted(
     At 100 TB the max_doc_freq cap is the load-bearing guard: web text
     has power-law shingle frequencies, and the cap bounds any single
     shingle's pair fan-out exactly like LSH's bucket cap."""
-    from pyspark import StorageLevel
-
-    # shingle table feeds three branches, the df-kept postings two —
-    # persist so the explode/distinct runs once (round 6; same
-    # rationale as minhash_near_duplicates)
-    sh = shingles(corpus, k).persist(StorageLevel.MEMORY_AND_DISK)
+    # the shingle table feeds three branches and the df-kept postings
+    # two; neither is persisted: keeping them (and cutting the result
+    # so they can be released) was no faster cold than re-running the
+    # explode per branch (docs/PLANS.md, "One scoped persist")
+    sh = shingles(corpus, k)
     df_counts = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     kept = sh.join(
         df_counts.filter(F.col("df") <= max_doc_freq).select("shingle"),
         "shingle",
         "left_semi",
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = kept.select(F.col("doc_id").alias("a"), "shingle")
     b = kept.select(F.col("doc_id").alias("b"), "shingle")
@@ -277,18 +276,16 @@ def all_pairs_jaccard_prefix(
     before the exact verification join, which is sized by surviving
     candidates, not corpus².
     """
-    from pyspark import StorageLevel
-
-    # sh feeds two branches, keyed three, the prefix postings two —
-    # persist each so the heavy stages run once (round 6)
-    sh = shingles(corpus, k).persist(StorageLevel.MEMORY_AND_DISK)
+    # sh feeds two branches, keyed three, the prefix postings two; none
+    # is persisted, as in jaccard_pairs_inverted (no cold win)
+    sh = shingles(corpus, k)
     dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     keyed = sh.join(dfreq, "shingle").select(
         "doc_id",
         F.concat(
             F.lpad(F.col("df").cast("string"), 10, "0"), F.lit("#"), F.col("shingle")
         ).alias("skey"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     sizes = keyed.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     w = Window.partitionBy("doc_id").orderBy(F.col("skey").asc())
     # plain join, NOT broadcast: sizes is doc-count-sized (billions of
@@ -297,7 +294,7 @@ def all_pairs_jaccard_prefix(
     ranked = keyed.withColumn("r", F.row_number().over(w)).join(sizes, "doc_id")
     prefix = ranked.filter(
         F.col("r") <= F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     a = prefix.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("na"), "skey")
     b = prefix.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("nb"), "skey")
     cand = (
@@ -398,16 +395,15 @@ def containment_pairs(
     intersection count with their own denominators — no second join.
     The df-cap is the same load-bearing fan-out guard (empty drop set
     at gate scale, pinned like LSH's bucket cap)."""
-    from pyspark import StorageLevel
-
-    # same multi-branch reuse as jaccard_pairs_inverted (round 6)
-    sh = shingles(corpus, k).persist(StorageLevel.MEMORY_AND_DISK)
+    # the same multi-branch tables as jaccard_pairs_inverted, likewise
+    # not persisted (no cold win)
+    sh = shingles(corpus, k)
     df_counts = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     kept = sh.join(
         df_counts.filter(F.col("df") <= max_doc_freq).select("shingle"),
         "shingle",
         "left_semi",
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = kept.select(F.col("doc_id").alias("a"), "shingle")
     b = kept.select(F.col("doc_id").alias("b"), "shingle")
@@ -613,18 +609,13 @@ def minhash_estimate_error(
     collision) drop out of both sides identically."""
     from functools import reduce
 
-    from pyspark import StorageLevel
-
     # sh feeds four branches (signatures, sizes, both intersection
     # sides), sigs three (both signature sides + banding), cand two
-    # (estimate join + exact-intersection join) — persist each so the
-    # heavy stages run once (round 6; same rationale as
-    # minhash_near_duplicates)
-    sh = shingles(corpus, k).persist(StorageLevel.MEMORY_AND_DISK)
-    sigs = minhash_signatures(sh, perms).persist(StorageLevel.MEMORY_AND_DISK)
-    cand = lsh_candidate_pairs(lsh_bands(sigs, bands, perms)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # (estimate join + exact-intersection join); none is persisted, as
+    # in minhash_near_duplicates (no cold win)
+    sh = shingles(corpus, k)
+    sigs = minhash_signatures(sh, perms)
+    cand = lsh_candidate_pairs(lsh_bands(sigs, bands, perms))
     sa = sigs.select(
         F.col("doc_id").alias("a"), *[F.col(f"mh_{j}").alias(f"_a{j}") for j in range(perms)]
     )
@@ -666,15 +657,11 @@ def minhash_near_duplicates(corpus: DataFrame) -> DataFrame:
 
     The shingle table feeds FOUR plan branches (signatures, pair sizes,
     both intersection sides); per-branch projections differ, so Spark's
-    static exchange reuse never fires and the scan+explode+distinct ran
-    once per branch (round-5 plan: 36 parquet scans, 16 Generates, 0
-    ReusedExchange).  Persisting it computes the shingles once and
-    every branch reads the snapshot (round 6; guide §2.4 — share one
-    exchange instead of four; recompute-on-eviction is deterministic,
-    so this is reuse, not a correctness freeze)."""
-    from pyspark import StorageLevel
-
-    sh = shingles(corpus).persist(StorageLevel.MEMORY_AND_DISK)
+    static exchange reuse never fires and the scan+explode+distinct
+    runs once per branch.  It is not persisted: keeping it (and
+    cutting the result so it can be released) was no faster cold than
+    the four scans (docs/PLANS.md, "One scoped persist")."""
+    sh = shingles(corpus)
     sigs = minhash_signatures(sh)
     cands = lsh_candidate_pairs(lsh_bands(sigs))
     return jaccard_verify(cands, sh)
@@ -823,22 +810,21 @@ def exact_substring_pairs(
         )
 
     wins_arr = F.element_at(F.transform(z, per), 1)
-    from pyspark import StorageLevel
 
     # the window-hash table feeds three branches (df filter + both join
-    # sides) whose projections differ, so exchange reuse never fires —
-    # persist so the O(n·w) per-window md5 explode runs once (round 6;
-    # same rationale as minhash_near_duplicates)
-    wins = corpus.select(
-        "doc_id", F.posexplode(wins_arr).alias("pos", "wh")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # sides) whose projections differ, so exchange reuse never fires;
+    # neither it nor the shared hits is persisted: keeping them (and
+    # cutting the result so they can be released) was no faster cold
+    # than re-running the per-window md5 explode (docs/PLANS.md, "One
+    # scoped persist")
+    wins = corpus.select("doc_id", F.posexplode(wins_arr).alias("pos", "wh"))
     shared = (
         wins.groupBy("wh")
         .agg(F.count_distinct("doc_id").alias("ndocs"))
         .filter((F.col("ndocs") >= 2) & (F.col("ndocs") <= max_doc_freq))
         .select("wh")
     )
-    hits = wins.join(shared, "wh").persist(StorageLevel.MEMORY_AND_DISK)
+    hits = wins.join(shared, "wh")
     a = hits.select(
         F.col("wh"), F.col("doc_id").alias("doc_a"), F.col("pos").alias("pos_a")
     )
@@ -846,8 +832,6 @@ def exact_substring_pairs(
         F.col("wh"), F.col("doc_id").alias("doc_b"), F.col("pos").alias("pos_b")
     )
     pairs = a.join(b, "wh").filter(F.col("doc_a") < F.col("doc_b"))
-    from pyspark.sql import Window
-
     diag = (F.col("pos_a") - F.col("pos_b")).alias("diag")
     seq = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pos_a")
     runs = (

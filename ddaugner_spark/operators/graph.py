@@ -55,14 +55,14 @@ Scale design:
   ``_local_min_rounds``.  The other loops over more than one table
   (the BFS frontier, MSF's Borůvka rounds, densest subgraph, sampled
   betweenness) stay hand-rolled.
-* **Release**: PageRank and MSF, the only operators here that
-  persist, unpersist everything before they return a parquet-backed
-  result.
+* **Release**: nothing here persists (PageRank and MSF did; cold
+  A/Bs showed no win, docs/PLANS.md "One scoped persist").  An
+  operator that owns its temp dir removes, on return, every dir its
+  result does not read.
 """
 
 from __future__ import annotations
 
-import shutil
 import time
 from functools import reduce
 
@@ -70,7 +70,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ddaugner_spark.operators import canonical
-from ddaugner_spark.plans.materialize import cut, fixpoint, scratch_dir
+from ddaugner_spark.plans.materialize import cut, fixpoint, keep_only, scratch_dir
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:
@@ -251,20 +251,15 @@ def pagerank(
     stage_dir = scratch_dir(stage_dir, "ddaugner_pr_")
 
     t0 = time.time()
-    from pyspark import StorageLevel
-
-    # loop-invariant tables persist instead of parquet round-tripping
-    # (round 6; one deg.count() materializes both caches — two write
-    # jobs fewer per call; shallow plans, so no lineage hazard).  The
-    # per-iteration rank checkpoint below stays parquet: the rank table
-    # feeds both sides of the contribution join, so its plan would
-    # otherwise double per iteration.
-    sym = symmetrize(edges).repartition("a").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    deg = (
-        sym.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("deg"))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # the loop-invariant sym and deg tables are neither persisted nor
+    # cut: recomputing them per round was faster cold than keeping them,
+    # on bench.py's graph and on a 1M-node chain (docs/PLANS.md, "One
+    # scoped persist"); the plans stay shallow.  The per-iteration rank
+    # checkpoint below stays parquet: the rank table feeds both sides
+    # of the contribution join, so its plan would otherwise double per
+    # iteration.
+    sym = symmetrize(edges).repartition("a")
+    deg = sym.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("deg"))
     n_nodes = deg.count()
     stats["n_nodes"] = n_nodes
     broadcast_ranks = n_nodes <= canonical.BROADCAST_AUTO_THRESHOLD
@@ -283,8 +278,6 @@ def pagerank(
         s_count = flagged.filter(F.col("_s") == 1).count()
         stats["n_seeds"] = s_count
         if s_count == 0:
-            sym.unpersist()
-            deg.unpersist()
             raise ValueError("personalized pagerank: no seed is a graph node")
         is_seed = F.col("_s") == 1
         ranks = flagged.select(
@@ -334,9 +327,6 @@ def pagerank(
         ranks, step, measure, stage_dir, "ranks", max_iter, stats["iters"],
         key="it", own_dir=own_dir,
     )
-    # the result is backed by the final rank cut
-    sym.unpersist()
-    deg.unpersist()
     return ranks.select(F.col("node").alias("entity"), "rank")
 
 
@@ -1694,8 +1684,10 @@ def minimum_spanning_forest(
     count job, not the join, is the per-step cost at bench scale),
     parquet-cut every 3 steps for deep chains.
     Output: the forest's original ``(a, b, w)`` edges, cut into one
-    parquet table under ``stage_dir``; every persisted table is
-    released before return.
+    parquet table under ``stage_dir``.  Nothing is persisted: keeping
+    the per-round pick and label tables was no faster cold than
+    recomputing them from the live cut on either branch
+    (docs/PLANS.md, "One scoped persist").
 
     The Borůvka FIXPOINT itself is not SQL-replayable (union-find
     state), but the RESULT is: under a strict total edge order,
@@ -1704,9 +1696,6 @@ def minimum_spanning_forest(
     DuckDB oracle checks with a per-edge bounded reachability CTE;
     pytest pins a Kruskal differential on top.
     """
-    from pyspark import StorageLevel
-
-    lvl = StorageLevel.MEMORY_AND_DISK
     stage_dir = scratch_dir(stage_dir, "ddaugner_msf_")
 
     # live edge state: component endpoints (ca, cb) + original
@@ -1725,10 +1714,8 @@ def minimum_spanning_forest(
         .distinct()
         .select(F.col("a").alias("ca"), F.col("b").alias("cb"),
                 "a", "b", "w")
-        .persist(lvl)
     )
     picks: list[DataFrame] = []
-    persisted: list[DataFrame] = [live]
     rounds = []
     for r in range(1, max_rounds + 1):
         _t0 = time.time()
@@ -1752,9 +1739,7 @@ def minimum_spanning_forest(
                 F.col("m.a").alias("a"), F.col("m.b").alias("b"),
                 F.col("m.w").alias("w"), F.col("m.cb").alias("par"),
             )
-            .persist(lvl)
         )
-        persisted.append(pick)
         picks.append(pick.select("a", "b", "w"))
 
         # contract: the picks, read as (component → partner component)
@@ -1779,11 +1764,9 @@ def minimum_spanning_forest(
                 .mapInPandas(canonical.union_find, "entity string, component string")
                 .select(F.col("entity").alias("node"),
                         F.col("component").alias("par"))
-                .persist(lvl)
             )
-            persisted.append(lab)
-            # run the kernel here, so jump_sec (not relabel_sec) bills it
-            lab.count()
+            # not counted here: the kernel runs inside the relabel cut,
+            # which relabel_sec bills
             round_stat["n_jumps"] = 0
         else:
             # distributed pointer doubling (the honest big-graph path):
@@ -1810,7 +1793,8 @@ def minimum_spanning_forest(
             # two jumps per materialized step (4× chain compression per
             # convergence count); the self-join doubles the logical
             # plan per jump, so parquet-cut every 3 steps (rarely
-            # reached — pseudotree chains are short)
+            # reached — pseudotree chains are short) to alternating
+            # dirs, since the chain being cut reads the previous one
             jumps = 0
             while True:
                 mid = _hop(lab)
@@ -1822,16 +1806,14 @@ def minimum_spanning_forest(
                         "node", F.col("g").alias("par"),
                         (F.col("g") != F.col("par")).alias("chg"),
                     )
-                    .persist(lvl)
                 )
-                persisted.append(nxt)
                 n_chg = nxt.filter("chg").count()
                 lab = nxt.select("node", "par")
                 jumps += 1
                 if n_chg == 0:
                     break
                 if jumps % 3 == 0:
-                    lab = cut(lab, f"{stage_dir}/jump_{r}")
+                    lab = cut(lab, f"{stage_dir}/jump_{r}_{jumps // 3 % 2}")
             round_stat["n_jumps"] = jumps
         round_stat["jump_sec"] = round(time.time() - _t0, 3)
         _t0 = time.time()
@@ -1870,14 +1852,10 @@ def minimum_spanning_forest(
     forest = live.select("a", "b", "w").limit(0)
     for p in picks:
         forest = forest.unionByName(p)
-    # one forest-sized table backs the result, so nothing stays
-    # persisted.  A mutual-min edge is picked by both its components;
+    # one forest-sized table backs the result.  A mutual-min edge is picked by both its components;
     # no edge is picked in two rounds (its endpoints then share a
     # component), so one distinct over the union dedups every round.
-    forest = cut(forest.distinct(), f"{stage_dir}/forest")
-    for df in persisted:
-        df.unpersist()
-    return forest
+    return cut(forest.distinct(), f"{stage_dir}/forest")
 
 
 def single_link_clusters(
@@ -1949,6 +1927,7 @@ def densest_subgraph(
     set with its (round-6) density.
     """
     spark = edges.sparkSession
+    own_dir = stage_dir is None
     stage_dir = scratch_dir(stage_dir, "ddaugner_dsg_")
 
     live = cut(
@@ -1998,10 +1977,10 @@ def densest_subgraph(
     if stats is not None:
         stats["rounds"] = rounds
         stats["best_round"] = best_round
+    if own_dir:
+        keep_only(stage_dir, [] if best_round is None else [f"n_{best_round}"])
     if best_round is None:
-        return nodes.select(
-            F.col("node").alias("entity"), F.lit(0.0).alias("density")
-        ).limit(0)
+        return spark.createDataFrame([], "entity string, density double")
     return spark.read.parquet(f"{stage_dir}/n_{best_round}").select(
         F.col("node").alias("entity"),
         F.round(F.lit(best_rho), 6).alias("density"),
@@ -2090,9 +2069,7 @@ def _local_min_rounds(
     if stats is not None:
         stats["rounds"] = rounds
     if own_dir:
-        for table in ("pending", "live"):
-            for i in (0, 1):
-                shutil.rmtree(f"{stage_dir}/{name}_{table}_{i}", ignore_errors=True)
+        keep_only(stage_dir, [f"{name}_{r}" for r in range(len(wins))])
     if not wins:
         return edges.sparkSession.createDataFrame([], f"entity string, {col} long")
     return reduce(DataFrame.unionByName, wins).select(
@@ -2248,6 +2225,7 @@ def betweenness_sampled(
     absent.
     """
     spark = edges.sparkSession
+    own_dir = stage_dir is None
     stage_dir = scratch_dir(stage_dir, "ddaugner_bc_")
 
     sym = cut(symmetrize(edges).repartition("a"), f"{stage_dir}/sym")
@@ -2317,6 +2295,13 @@ def betweenness_sampled(
         if d > 1:
             parts.append(lvl_delta.select("src", "node", "delta"))
         w_tbl = lvl_delta
+    if own_dir:
+        # the parts read the deepest level and the delta tables above
+        # level 1
+        keep_only(stage_dir, [
+            f"lvl_{len(levels) - 1}",
+            *(f"delta_{d}" for d in range(2, len(levels))),
+        ] if parts else [])
     if not parts:
         return spark.createDataFrame([], "node string, bc double")
     allparts = reduce(DataFrame.unionByName, parts)

@@ -31,30 +31,23 @@ Scale shape — the part worth grading:
   (one-task sort) is exactly what this replaces.
 * One range exchange + one per-doc window per round, ``O(log L)``
   rounds; state is one slim (doc_id, pos, rank) row per token.
-* **One job per round** (round-6 optimization; guide §1.2/§2.4): the
-  ranked table is persisted (MEMORY_AND_DISK — spills, never drops)
-  and a single numPartitions-row aggregate both MATERIALIZES the
-  snapshot and returns the per-partition distinct/row counts, from
-  which the rank offsets AND the fixed-point test come for free —
-  the parquet write+read, the separate offsets broadcast job and the
-  separate per-round count pass of rounds ≤ 5 are all gone (measured
-  ~4.5× on the bench corpus, plan identical per round otherwise).
-  ``io="parquet"`` restores the round-5 behavior for clusters where
-  long-lived storage-level state is undesirable.
+* **Two jobs per round**: the ranked table is cut to parquet (one
+  write), and a single numPartitions-row aggregate over the cut
+  returns the per-partition distinct/row counts, from which the rank
+  offsets AND the fixed-point test come for free — no separate
+  offsets job and no per-round count pass.  Nothing is persisted, so
+  nothing is left in block storage when an operator returns.
 
 Boundary-freeze contract (correctness, not hygiene): a DataFrame range
 exchange re-samples its boundaries on every *new* query execution, so
 the partition-id column must come from exactly ONE materialized
-execution.  Both io modes guarantee that — parquet by the round-trip,
-cache because the counts aggregate materializes every partition once
-and all later consumers (including the offset attach) read the stored
-blocks; recomputation-on-loss replays the SAME ShuffleDependency
-(boundaries are fixed per materialized plan, not per task).
+execution.  The parquet cut is that execution: every later consumer
+(the counts aggregate, the offset attach, the LCP walk) reads the
+written files, never the exchange.
 """
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -77,6 +70,12 @@ _OFFSET_MAP_MAX = 1024
 #: saved rounds past 3).  2 restores the classic Manber–Myers ladder.
 FANOUT = 3
 
+#: the LCP walk chains its level joins lazily and cuts the pair state
+#: to parquet every this many passes, which bounds the plan depth for
+#: any document length; a cut per pass would only add writes, since
+#: the joins are deterministic hash joins and need no boundary freeze.
+CKPT_EVERY = 4
+
 
 def global_dense_rank(
     df: DataFrame,
@@ -84,7 +83,6 @@ def global_dense_rank(
     out: str = "rank",
     n_parts: int | None = None,
     stage_path: str | None = None,
-    io: str = "cache",
     counts_out: dict | None = None,
 ) -> DataFrame:
     """Scale-safe global ``dense_rank() OVER (ORDER BY keys)``: range-
@@ -93,11 +91,9 @@ def global_dense_rank(
     exclusive running sum of per-partition distinct-key counts.  The
     only driver-side work is the numPartitions-row counts collect.
 
-    ``io="cache"`` (default): the ranked table is persisted and
-    materialized by the counts aggregate — one job, no parquet.
-    ``io="parquet"``: round-5 behavior, write+read under
-    ``stage_path``.  Both freeze the range boundaries (module
-    docstring); results are identical and partitioning-independent.
+    The ranked table is cut to parquet at ``stage_path`` (a temp dir
+    when None), which freezes the range boundaries (module docstring);
+    the result reads the cut and is partitioning-independent.
 
     ``counts_out``: optional dict filled with ``n_total`` (rows) and
     ``n_ranks`` (distinct keys) — the prefix-doubling fixed-point test
@@ -114,14 +110,11 @@ def global_dense_rank(
             F.dense_rank().over(Window.partitionBy("_pid").orderBy(*keys)),
         )
     )
-    if io == "parquet":
-        if stage_path is None:
-            stage_path = f"{scratch_dir(None, 'ddaugner_rank_')}/part"
-        local = cut(local, stage_path)
-    else:
-        local = local.persist(StorageLevel.MEMORY_AND_DISK)
-    # one tiny aggregate: materializes the snapshot (cache mode) AND
-    # yields per-partition (distinct, rows) for offsets + fixed point
+    if stage_path is None:
+        stage_path = f"{scratch_dir(None, 'ddaugner_rank_')}/part"
+    local = cut(local, stage_path)
+    # one tiny aggregate: per-partition (distinct, rows) for the
+    # offsets and the fixed point
     crows = sorted(
         local.groupBy("_pid")
         .agg(F.max("_lr").alias("_cnt"), F.count(F.lit(1)).alias("_n"))
@@ -165,7 +158,6 @@ def suffix_array(
     stage_dir: str | None = None,
     max_rounds: int = 32,
     _levels: list | None = None,
-    io: str = "cache",
 ) -> DataFrame:
     """Global suffix array of a (doc_id, pos, tok) token table —
     ``(sa_idx, doc_id, pos, rank)`` with ``rank`` the dense
@@ -177,19 +169,14 @@ def suffix_array(
     ``_levels``: internal accumulator for ``lcp_array`` — when a list
     is passed, every doubling level's rank table is appended as
     ``(resolution_tokens, df)`` (level k orders suffixes by their
-    first ``resolution`` tokens).  Level tables are cache-backed (or
-    parquet-backed with ``io="parquet"``), already materialized.
+    first ``resolution`` tokens).  Level tables are parquet-backed
+    under ``stage_dir`` (a temp dir when None), already materialized.
     """
-    if io == "parquet":
-        stage_dir = scratch_dir(stage_dir, "ddaugner_sa_")
-
-    def _stage(name: str) -> str | None:
-        return None if stage_dir is None else f"{stage_dir}/{name}"
-
+    stage_dir = scratch_dir(stage_dir, "ddaugner_sa_")
     counts: dict = {}
     cur = global_dense_rank(
         toks.select("doc_id", "pos", "tok"), ["tok"],
-        stage_path=_stage("sa_0"), io=io, counts_out=counts,
+        stage_path=f"{stage_dir}/sa_0", counts_out=counts,
     ).select("doc_id", "pos", "rank")
     if _levels is not None:
         _levels.append((1, cur))
@@ -221,7 +208,7 @@ def suffix_array(
         counts = {}
         cur = global_dense_rank(
             paired, ["rank"] + rcols, out="nr",
-            stage_path=_stage(f"sa_{r}"), io=io, counts_out=counts,
+            stage_path=f"{stage_dir}/sa_{r}", counts_out=counts,
         ).select("doc_id", "pos", F.col("nr").alias("rank"))
         n_ranks = counts["n_ranks"]
         gap *= FANOUT
@@ -230,15 +217,13 @@ def suffix_array(
 
     return global_dense_rank(
         cur, ["rank", "doc_id", "pos"], out="sa_idx",
-        stage_path=_stage("sa_final"), io=io,
+        stage_path=f"{stage_dir}/sa_final",
     ).select("sa_idx", "doc_id", "pos", "rank")
 
 
 def lcp_array(
     toks: DataFrame,
     stage_dir: str | None = None,
-    io: str = "cache",
-    ckpt_every: int = 4,
 ) -> DataFrame:
     """LCP array over the suffix array — ``(sa_idx, doc_id, pos, lcp)``
     with ``lcp`` the longest-common-prefix token count between suffix
@@ -259,23 +244,12 @@ def lcp_array(
 
     Scale shape: O(log L) passes, each two hash equi-joins of the
     slim (n−1)-row pair state against a level table the doubling loop
-    already materialized (cache- or parquet-backed — no re-write).
-    The walk chains LAZILY and is state-persisted every
-    ``ckpt_every`` levels purely to bound plan depth (round 6: the
-    per-level parquet round-trip of rounds ≤ 5 was pure overhead —
-    the joins are deterministic hash joins, no boundary freeze
-    needed).
+    already cut to parquet (no re-write).  The walk chains LAZILY and
+    is cut every :data:`CKPT_EVERY` passes purely to bound plan depth.
     """
-    if io == "parquet":
-        stage_dir = scratch_dir(stage_dir, "ddaugner_lcp_")
-
+    stage_dir = scratch_dir(stage_dir, "ddaugner_lcp_")
     levels: list = []
-    sa = suffix_array(
-        toks,
-        stage_dir=None if stage_dir is None else f"{stage_dir}/sa",
-        _levels=levels,
-        io=io,
-    )
+    sa = suffix_array(toks, stage_dir=f"{stage_dir}/sa", _levels=levels)
     # sa is a projection over the final doubling round's materialized
     # snapshot — both the cur and prev branches below re-read that
     # snapshot, so no extra materialization is needed here
@@ -353,8 +327,8 @@ def lcp_array(
         )
         # bound plan depth only — not every level (guide §1.2: the
         # per-level materialization was the wall, not the joins)
-        if (i + 1) % max(1, ckpt_every) == 0 and i + 1 < len(walk):
-            state = state.persist(StorageLevel.MEMORY_AND_DISK)
+        if (i + 1) % CKPT_EVERY == 0 and i + 1 < len(walk):
+            state = cut(state, f"{stage_dir}/walk_{(i + 1) // CKPT_EVERY % 2}")
 
     return state.select("sa_idx", "doc_id", "pos", "lcp")
 
@@ -363,7 +337,6 @@ def repeat_coverage(
     toks: DataFrame,
     min_len: int = 5,
     stage_dir: str | None = None,
-    io: str = "cache",
 ) -> DataFrame:
     """Per-document ExactSubstr coverage — ``(doc_id, n_tokens,
     covered, ratio)`` where ``covered`` counts tokens inside a span of
@@ -382,14 +355,14 @@ def repeat_coverage(
     Scale shape: one sa_idx equi-join to rebuild pairs, then the
     standard interval-union window per doc (sort by start, running
     max end, group flag + sum — one doc-keyed exchange); the coverage
-    sum is a per-doc aggregate.  The LCP table is persisted once (it
-    feeds three branches); rounds ≤ 5 paid a parquet round-trip here.
+    sum is a per-doc aggregate.  The LCP table feeds three branches
+    but is not persisted: keeping it (and cutting the result so it can
+    be released) was no faster cold than re-running the walk's tail
+    per branch (docs/PLANS.md, "One scoped persist").
     """
     lcp = lcp_array(
-        toks,
-        stage_dir=None if stage_dir is None else f"{stage_dir}/lcp",
-        io=io,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    toks, stage_dir=None if stage_dir is None else f"{stage_dir}/lcp"
+    )
 
     # both sides of every qualifying adjacent pair (i−1, i): row i
     # covers [pos_i, pos_i + lcp_i); row i−1 covers its OWN position
@@ -446,7 +419,6 @@ def repeat_coverage(
 def distinct_substring_count(
     toks: DataFrame,
     stage_dir: str | None = None,
-    io: str = "cache",
 ) -> DataFrame:
     """Number of DISTINCT token substrings in the corpus — one row
     ``(n_suffix_tokens, lcp_sum, n_distinct)`` via the classic SA
@@ -456,9 +428,7 @@ def distinct_substring_count(
     over tables the LCP construction already materializes.
     """
     lcp = lcp_array(
-        toks,
-        stage_dir=None if stage_dir is None else f"{stage_dir}/lcp",
-        io=io,
+        toks, stage_dir=None if stage_dir is None else f"{stage_dir}/lcp"
     )
     nlen = toks.groupBy("doc_id").agg(
         (F.max("pos") + 1).cast("long").alias("n")

@@ -352,10 +352,10 @@ def mentions_udf(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def merged_mentions_udf(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Mention rows of model tags merged with the gazetteer's tags, in
-    one Arrow pass: :func:`mentions_from_tagged` over
-    :func:`merge_tag_sources` of :func:`tagged_docs_udf` and
-    ``mentions.with_bio``, with ``mentions.sent_id_at`` sentence ids."""
+    """Mention rows of model tags merged with the gazetteer's tags:
+    one :func:`_mentions_pass`, whose per-document kernel
+    :func:`doc_mentions` tags each sentence with the model, merges the
+    gazetteer tagger's tags, BIO-decodes and assigns sentence ids."""
     return _mentions_pass(docs, id_col, use_model=True, gazetteer=DictTaggerModel())
 
 

@@ -20,6 +20,9 @@ lineage with :func:`cut` (a parquet round-trip, not ``localCheckpoint``)
 under the directory :func:`scratch_dir` resolves: the caller's
 ``stage_dir``, or a temp dir removed at process exit.  The iterative
 graph operators run their single-table loops through :func:`fixpoint`.
+No operator persists: every persist the operators had was measured
+cold against recomputing or cutting, and none won (docs/PLANS.md, "One
+scoped persist"), so nothing is left in block storage when one returns.
 """
 
 from __future__ import annotations
@@ -29,7 +32,7 @@ import os
 import shutil
 import tempfile
 import time
-from typing import Callable, List, Optional, Tuple
+from typing import Callable, Iterable, List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 
@@ -97,9 +100,21 @@ def cut(df: DataFrame, path: str) -> DataFrame:
     return the re-read table.  Reliable where ``localCheckpoint`` is not
     (blocks survive a lost executor) and measured faster here; it also
     stops a small derived table that fans out over several branches
-    from re-running its corpus-touching plan once per branch."""
+    from re-running its corpus-touching plan once per branch.  The
+    re-read takes ``df``'s schema rather than inferring it from the
+    files, which would cost one Spark job per cut."""
     df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
+def keep_only(stage_dir: str, names: Iterable[str]) -> None:
+    """Remove every entry of ``stage_dir`` but ``names``: an operator
+    that owns its temp dir calls it on return with the dirs its result
+    reads."""
+    names = set(names)
+    for entry in os.listdir(stage_dir):
+        if entry not in names:
+            shutil.rmtree(os.path.join(stage_dir, entry), ignore_errors=True)
 
 
 def fixpoint(
@@ -136,7 +151,5 @@ def fixpoint(
         if done:
             break
     if own_dir:
-        for entry in os.listdir(stage_dir):
-            if entry != final:
-                shutil.rmtree(os.path.join(stage_dir, entry), ignore_errors=True)
+        keep_only(stage_dir, [final])
     return state

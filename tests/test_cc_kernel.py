@@ -112,10 +112,11 @@ def test_auto_runs_loop_past_threshold(spark, tmp_path, monkeypatch, caller_dir)
 
 
 def test_kernel_branch_is_one_pass(spark, tmp_path, jobs_started):
-    """Under the threshold CC is one optimistic kernel pass: 3 Spark
-    jobs on a createDataFrame edge table (the exchange's map stage, the
-    kernel's write, the schema read of its parquet; the count-first
-    form took 8), and nothing stays persisted."""
+    """Under the threshold CC is one optimistic kernel pass: 2 Spark
+    jobs on a createDataFrame edge table (the exchange's map stage and
+    the kernel's write; the cut re-reads with the written schema, so
+    no schema-read job; the count-first form took 8), and nothing
+    stays persisted."""
     rows = [(f"n{i:04d}", f"n{i + 1:04d}") for i in range(50)]
     edges = spark.createDataFrame(rows, "a string, b string")
     st: dict = {}
@@ -124,7 +125,7 @@ def test_kernel_branch_is_one_pass(spark, tmp_path, jobs_started):
             edges, stage_dir=str(tmp_path / "cc"), stats=st
         )
     )
-    assert n_jobs == 3
+    assert n_jobs == 2
     assert len(spark.sparkContext._jsc.getPersistentRDDs()) == 0
     assert st["broadcast_labels"] is True and st["n_nodes"] == 51
     assert set(comps.collect()) == {(f"n{i:04d}", "n0000") for i in range(51)}

@@ -529,17 +529,115 @@ def test_leaves_nothing_persisted(spark, monkeypatch, op):
         assert sorted(tuple(r) for r in rows) == _kruskal(pairs)
 
 
-@pytest.mark.parametrize("op", ["luby_mis", "jp_coloring", "louvain_rounds"])
+def _release_op(spark, op):
+    """``op`` on a tiny input: three documents plus ``with_dup_corpus``'s
+    copies for dedup, two token documents for suffix, five surfaces for
+    SNM."""
+    from ddaugner_spark.operators import dedup, er, suffix
+
+    if op == "sorted_neighborhood_pairs":
+        return er.sorted_neighborhood_pairs(spark.createDataFrame(
+            [("Spark", "ORG"), ("sark", "ORG"), ("Oscar", "PER"),
+             ("0scar", "PER"), ("Paris", "LOC")],
+            "surface string, tag string",
+        ))
+    if op in dedup.__dict__:
+        base = " ".join(f"w{j:02d}" for j in range(24))
+        texts = [(0, base + " alpha beta"), (10, base + " gamma delta eps"),
+                 (20, "z0 z1 z2 z3 z4 z5 z6 z7 " + base[:40])]
+        return getattr(dedup, op)(dedup.with_dup_corpus(
+            spark.createDataFrame(texts, "doc_id long, text string")
+        ))
+    toks = [(d, p, t) for d, text in enumerate(["a b a b", "b a"])
+            for p, t in enumerate(text.split(" "))]
+    kw = {"min_len": 2} if op == "repeat_coverage" else {}
+    return getattr(suffix, op)(
+        spark.createDataFrame(toks, "doc_id long, pos long, tok string"), **kw
+    )
+
+
+_JACCARD_ROWS = [
+    (0, 10, 0.8148), (0, 1000000, 1.0), (0, 2000010, 0.9167),
+    (10, 1000000, 0.8148), (10, 2000010, 0.88), (20, 1000020, 1.0),
+    (1000000, 2000010, 0.9167),
+]
+
+#: each operator's rows on ``_release_op``'s input, as the operators
+#: returned them while they left their tables persisted
+_PARENT_ROWS = {
+    "jaccard_pairs_inverted": _JACCARD_ROWS,
+    "all_pairs_jaccard_prefix": _JACCARD_ROWS,
+    "minhash_near_duplicates": _JACCARD_ROWS,
+    "containment_pairs": [
+        (0, 10, 22, 0.9167), (0, 1000000, 24, 1.0), (0, 2000010, 22, 0.9167),
+        (20, 1000020, 17, 1.0), (1000000, 0, 24, 1.0),
+        (1000000, 10, 22, 0.9167), (1000000, 2000010, 22, 0.9167),
+        (1000020, 20, 17, 1.0), (2000010, 0, 22, 1.0), (2000010, 10, 22, 1.0),
+        (2000010, 1000000, 22, 1.0),
+    ],
+    "minhash_estimate_error": [
+        (0, 10, 6, 0.75, 0.814815, 0.064815), (0, 1000000, 8, 1.0, 1.0, 0.0),
+        (0, 2000010, 7, 0.875, 0.916667, 0.041667),
+        (10, 1000000, 6, 0.75, 0.814815, 0.064815),
+        (10, 2000010, 7, 0.875, 0.88, 0.005), (20, 1000020, 8, 1.0, 1.0, 0.0),
+        (1000000, 2000010, 7, 0.875, 0.916667, 0.041667),
+    ],
+    "exact_substring_pairs": [
+        (0, 10, 5, 5, 24), (0, 1000000, 7, 7, 26), (0, 2000010, 5, 5, 24),
+        (10, 1000000, 5, 5, 24), (10, 2000010, 5, 5, 24),
+        (1000000, 2000010, 5, 5, 24),
+    ],
+    "suffix_array": [(1, 1, 1, 1), (2, 0, 2, 2), (3, 0, 0, 3), (4, 0, 3, 4),
+                     (5, 1, 0, 5), (6, 0, 1, 6)],
+    "lcp_array": [(1, 1, 1, 0), (2, 0, 2, 1), (3, 0, 0, 2), (4, 0, 3, 0),
+                  (5, 1, 0, 1), (6, 0, 1, 2)],
+    "repeat_coverage": [(0, 4, 4, 1.0), (1, 2, 2, 1.0)],
+    "distinct_substring_count": [(13, 6, 7)],
+    "sorted_neighborhood_pairs": [
+        ("0scar", "PER", "Oscar", "PER", 1, 1, True),
+        ("0scar", "PER", "Paris", "LOC", 2, 5, False),
+        ("0scar", "PER", "sark", "ORG", 3, 3, False),
+        ("Oscar", "PER", "Paris", "LOC", 1, 5, False),
+        ("Oscar", "PER", "Spark", "ORG", 3, 4, False),
+        ("Oscar", "PER", "sark", "ORG", 2, 3, False),
+        ("Paris", "LOC", "Spark", "ORG", 2, 4, False),
+        ("Paris", "LOC", "sark", "ORG", 1, 3, False),
+        ("sark", "ORG", "Spark", "ORG", 1, 2, True),
+    ],
+}
+
+
+@pytest.mark.parametrize("op", sorted(_PARENT_ROWS))
+def test_dedup_and_suffix_leave_nothing_persisted(spark, op):
+    """Each dedup, suffix and SNM operator returns with the storage list
+    empty, and its result reads the rows the operator returned while it
+    left its tables persisted."""
+    _release_all(spark)
+    out = _release_op(spark, op)
+    assert spark.sparkContext._jsc.getPersistentRDDs().isEmpty()
+    assert sorted(tuple(r) for r in out.collect()) == _PARENT_ROWS[op]
+
+
+@pytest.mark.parametrize(
+    "op",
+    ["luby_mis", "jp_coloring", "louvain_rounds", "densest_subgraph",
+     "betweenness_sampled"],
+)
 def test_own_dir_keeps_only_result_dirs(spark, tmp_path, monkeypatch, op):
     """With ``stage_dir=None`` the operator's temp dir holds, on
     return, only the dirs its result reads, and the result reads the
     same rows as a run in a caller-owned stage dir."""
     import os
     import tempfile
+    from functools import partial
     from urllib.parse import urlparse
 
     e = _edges(spark, _ARM_PAIRS)
     run = getattr(graph, op)
+    if op == "betweenness_sampled":
+        run = partial(
+            run, sources=spark.createDataFrame([("n00",), ("n13",)], "node string")
+        )
     want = sorted(run(e, stage_dir=str(tmp_path / "caller")).collect())
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
     os.mkdir(tmp_path / "tmp")
@@ -943,36 +1041,6 @@ def test_msf_nonbroadcast_branch_matches_kernel(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(canonical, "BROADCAST_AUTO_THRESHOLD", 0)
     doubling = _msf(spark, pairs, tmp_path / "d")
     assert doubling == kernel == _kruskal(pairs)
-
-
-def test_msf_kernel_labels_cached_before_relabel(spark, tmp_path, monkeypatch):
-    """On the kernel branch the union-find job runs in the jump phase:
-    when each round's relabel cut starts, that round's label table is
-    already in the block manager, so ``jump_sec`` bills the kernel and
-    ``relabel_sec`` only the relabel."""
-    def cached_labels():
-        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        return sum(
-            "union_find" in i.name() and i.numCachedPartitions() > 0 for i in infos
-        )
-
-    seen = []
-    real_cut = graph.cut
-
-    def spy(df, path):
-        if "/live_" in path:
-            seen.append(cached_labels() - before)
-        return real_cut(df, path)
-
-    monkeypatch.setattr(graph, "cut", spy)
-    before = cached_labels()
-    # a path: round 1 pairs neighbours, later rounds contract the pairs
-    pairs = [(f"v{i}", f"v{i + 1}", float((i * 7) % 11 + 1)) for i in range(8)]
-    stats: dict = {}
-    df = spark.createDataFrame(pairs, "a string, b string, w double")
-    graph.minimum_spanning_forest(df, stage_dir=str(tmp_path / "m"), stats=stats)
-    assert len(stats["rounds"]) >= 2
-    assert seen == list(range(1, len(stats["rounds"]) + 1))
 
 
 def _uf_components(pairs):

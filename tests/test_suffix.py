@@ -165,6 +165,21 @@ def test_lcp_differential_vs_python(spark, tmp_path):
     assert got == _py_lcp(docs)
 
 
+def test_lcp_long_document_cuts_the_walk(spark, tmp_path):
+    """A periodic 300-token document (3x the sf0.1 corpus's longest)
+    needs six doubling rounds, so the LCP walk runs ten passes and is
+    cut to parquet along the way; the result still equals the direct
+    construction."""
+    from ddaugner_spark.operators.suffix import CKPT_EVERY
+
+    docs = [" ".join("abc"[i % 3] if i % 50 else "z" for i in range(300)),
+            "a b c a b c"]
+    stage = tmp_path / "lcp"
+    got = _lcp(lcp_array(_toks(spark, docs), stage_dir=str(stage)))
+    assert got == _py_lcp(docs)
+    assert CKPT_EVERY < 10 and (stage / "walk_1").is_dir()
+
+
 def test_repeat_coverage_fixtures(spark, tmp_path):
     from ddaugner_spark.operators.suffix import repeat_coverage
 
