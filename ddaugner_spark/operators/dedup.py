@@ -206,44 +206,51 @@ def jaccard_pairs_inverted(
     carry ~no Jaccard signal — same bucket-cap-with-logged-drop policy
     as LSH; at the default the drop set is empty on the gate corpus) →
     self-join on shingle (the one content-keyed shuffle, sized by the
-    inverted index, not the corpus²) → per-pair intersection counts →
-    per-doc set sizes broadcast in → |A∩B| / (|A|+|B|−|A∩B|).
+    inverted index, not the corpus²) → per-pair intersection counts,
+    with each doc's set size carried from its shingle array →
+    |A∩B| / (|A|+|B|−|A∩B|).
 
     At 100 TB the max_doc_freq cap is the load-bearing guard: web text
     has power-law shingle frequencies, and the cap bounds any single
     shingle's pair fan-out exactly like LSH's bucket cap."""
-    # the shingle table feeds three branches and the df-kept postings
-    # two; neither is persisted: keeping them (and cutting the result
-    # so they can be released) was no faster cold than re-running the
-    # explode per branch (docs/PLANS.md, "One scoped persist")
-    sh = shingles(corpus, k)
-    df_counts = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    kept = sh.join(
-        df_counts.filter(F.col("df") <= max_doc_freq).select("shingle"),
-        "shingle",
-        "left_semi",
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a = kept.select(F.col("doc_id").alias("a"), "shingle")
-    b = kept.select(F.col("doc_id").alias("b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("nb"))
+    jac = F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter"))
     return (
-        inter.join(sa, "a")
-        .join(sb, "b")
-        .withColumn(
-            "jaccard_raw",
-            F.col("n_inter")
-            / (F.col("na") + F.col("nb") - F.col("n_inter")),
-        )
+        _shared_shingle_counts(corpus, k, max_doc_freq)
+        .withColumn("jaccard_raw", jac)
         .filter(F.col("jaccard_raw") >= threshold)
         .select("a", "b", F.round("jaccard_raw", 4).alias("jaccard"))
+    )
+
+
+def _shared_shingle_counts(
+    corpus: DataFrame, k: int, max_doc_freq: int
+) -> DataFrame:
+    """(a, b, na, nb, n_inter) for every doc pair a < b sharing a
+    shingle that at most ``max_doc_freq`` docs have: ``na``/``nb`` are
+    the docs' distinct-shingle counts, ``n_inter`` the capped shingles
+    they share.  The inverted index of :func:`jaccard_pairs_inverted`
+    and :func:`containment_pairs`.
+
+    The shingle explode runs once, with nothing persisted
+    (docs/PLANS.md, "One scoped persist"): each doc's count is its
+    shingle set's size, the df cap is a window over the shingle-keyed
+    exchange, and the self-join joins one frame with itself, so both
+    sides read that one exchange."""
+    sets = corpus.select("doc_id", F.array_distinct(shingle_array(k)).alias("_s"))
+    kept = (
+        sets.select("doc_id", F.size("_s").alias("n_sh"), F.explode("_s").alias("shingle"))
+        .withColumn("_df", F.count(F.lit(1)).over(Window.partitionBy("shingle")))
+        .filter(F.col("_df") <= max_doc_freq)
+        .select("shingle", "doc_id", "n_sh")
+    )
+    return (
+        kept.alias("x").join(kept.alias("y"), "shingle")
+        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
+        .groupBy(
+            F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"),
+            F.col("x.n_sh").alias("na"), F.col("y.n_sh").alias("nb"),
+        )
+        .agg(F.count("*").alias("n_inter"))
     )
 
 
@@ -395,33 +402,18 @@ def containment_pairs(
     intersection count with their own denominators — no second join.
     The df-cap is the same load-bearing fan-out guard (empty drop set
     at gate scale, pinned like LSH's bucket cap)."""
-    # the same multi-branch tables as jaccard_pairs_inverted, likewise
-    # not persisted (no cold win)
-    sh = shingles(corpus, k)
-    df_counts = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    kept = sh.join(
-        df_counts.filter(F.col("df") <= max_doc_freq).select("shingle"),
-        "shingle",
-        "left_semi",
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    a = kept.select(F.col("doc_id").alias("a"), "shingle")
-    b = kept.select(F.col("doc_id").alias("b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("n_inter"))
-    )
+    inter = _shared_shingle_counts(corpus, k, max_doc_freq)
     directed = inter.select(
-        F.col("a").alias("src"), F.col("b").alias("dst"), "n_inter"
+        F.col("a").alias("src"), F.col("b").alias("dst"), "n_inter",
+        F.col("na").alias("n_src"),
     ).unionByName(
-        inter.select(F.col("b").alias("src"), F.col("a").alias("dst"), "n_inter")
+        inter.select(
+            F.col("b").alias("src"), F.col("a").alias("dst"), "n_inter",
+            F.col("nb").alias("n_src"),
+        )
     )
-    ssz = sizes.select(F.col("doc_id").alias("src"), F.col("n_sh").alias("n_src"))
     return (
-        directed.join(ssz, "src")
-        .withColumn("containment_raw", F.col("n_inter") / F.col("n_src"))
+        directed.withColumn("containment_raw", F.col("n_inter") / F.col("n_src"))
         .filter(F.col("containment_raw") >= threshold)
         .select(
             "src",
@@ -786,13 +778,14 @@ def exact_substring_pairs(
     and misses a long verbatim quote inside otherwise-different docs)
     and intra-doc repeated n-grams.
 
-    Shape at scale: the window explode is narrow; window hashes seen in
-    more than ``max_doc_freq`` documents are dropped before the
-    self-join (the same boilerplate-storm cap as
-    jaccard_pairs_inverted, df-capped join fan-out ≤ cap² per hash);
-    the join carries (md5, doc_id, pos) slim rows only for SHARED
-    hashes; island detection is one window function partitioned by
-    (pair, diagonal) — keys the shuffle already provides.
+    Shape at scale: the window explode is narrow and runs once; window
+    hashes seen in more than ``max_doc_freq`` documents are dropped
+    before the self-join (the same boilerplate-storm cap as
+    jaccard_pairs_inverted, df-capped join fan-out ≤ cap² per hash) by
+    a window over the one hash-keyed exchange, which both join sides
+    reuse; the join carries (md5, doc_id, pos) slim rows only for
+    SHARED hashes; island detection is one window function partitioned
+    by (pair, diagonal) — keys the shuffle already provides.
     """
     # token array let-bound (same device and rationale as shingle_array)
     toks = F.split(F.col("text"), " ")
@@ -811,27 +804,30 @@ def exact_substring_pairs(
 
     wins_arr = F.element_at(F.transform(z, per), 1)
 
-    # the window-hash table feeds three branches (df filter + both join
-    # sides) whose projections differ, so exchange reuse never fires;
-    # neither it nor the shared hits is persisted: keeping them (and
-    # cutting the result so they can be released) was no faster cold
-    # than re-running the per-window md5 explode (docs/PLANS.md, "One
+    # the df cap is a window over the wh-partitioned hashes (distinct
+    # docs = the max dense_rank by doc_id; null ids never pair, so they
+    # are not counted), not a groupBy joined back: both self-join sides
+    # are then one plan, so they share one exchange and the per-window
+    # md5 explode runs once, with nothing persisted (docs/PLANS.md, "One
     # scoped persist")
-    wins = corpus.select("doc_id", F.posexplode(wins_arr).alias("pos", "wh"))
-    shared = (
-        wins.groupBy("wh")
-        .agg(F.count_distinct("doc_id").alias("ndocs"))
-        .filter((F.col("ndocs") >= 2) & (F.col("ndocs") <= max_doc_freq))
-        .select("wh")
+    wins = corpus.where(F.col("doc_id").isNotNull()).select(
+        "doc_id", F.posexplode(wins_arr).alias("pos", "wh")
     )
-    hits = wins.join(shared, "wh")
-    a = hits.select(
-        F.col("wh"), F.col("doc_id").alias("doc_a"), F.col("pos").alias("pos_a")
+    by_hash = Window.partitionBy("wh")
+    hits = (
+        wins.withColumn("_dr", F.dense_rank().over(by_hash.orderBy("doc_id")))
+        .withColumn("_nd", F.max("_dr").over(by_hash))
+        .filter((F.col("_nd") >= 2) & (F.col("_nd") <= max_doc_freq))
+        .select("wh", "doc_id", "pos")
     )
-    b = hits.select(
-        F.col("wh"), F.col("doc_id").alias("doc_b"), F.col("pos").alias("pos_b")
+    pairs = (
+        hits.alias("a").join(hits.alias("b"), "wh")
+        .select(
+            F.col("a.doc_id").alias("doc_a"), F.col("a.pos").alias("pos_a"),
+            F.col("b.doc_id").alias("doc_b"), F.col("b.pos").alias("pos_b"),
+        )
+        .filter(F.col("doc_a") < F.col("doc_b"))
     )
-    pairs = a.join(b, "wh").filter(F.col("doc_a") < F.col("doc_b"))
     diag = (F.col("pos_a") - F.col("pos_b")).alias("diag")
     seq = Window.partitionBy("doc_a", "doc_b", "diag").orderBy("pos_a")
     runs = (

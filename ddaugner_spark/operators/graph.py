@@ -1852,9 +1852,10 @@ def minimum_spanning_forest(
     forest = live.select("a", "b", "w").limit(0)
     for p in picks:
         forest = forest.unionByName(p)
-    # one forest-sized table backs the result.  A mutual-min edge is picked by both its components;
-    # no edge is picked in two rounds (its endpoints then share a
-    # component), so one distinct over the union dedups every round.
+    # one forest-sized table backs the result.  A mutual-min edge is
+    # picked by both its components; no edge is picked in two rounds
+    # (its endpoints then share a component), so one distinct over the
+    # union dedups every round.
     return cut(forest.distinct(), f"{stage_dir}/forest")
 
 

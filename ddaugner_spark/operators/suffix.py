@@ -361,7 +361,7 @@ def repeat_coverage(
     per branch (docs/PLANS.md, "One scoped persist").
     """
     lcp = lcp_array(
-    toks, stage_dir=None if stage_dir is None else f"{stage_dir}/lcp"
+        toks, stage_dir=None if stage_dir is None else f"{stage_dir}/lcp"
     )
 
     # both sides of every qualifying adjacent pair (i−1, i): row i

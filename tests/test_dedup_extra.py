@@ -54,6 +54,21 @@ def test_jaccard_inverted_doc_freq_cap(spark, docs):
     assert any((i, i + 1_000_000) in ones for i in exact_ids)
 
 
+def test_exact_substring_doc_freq_cap(spark):
+    """A window hash is kept iff 2 ≤ (distinct non-null doc ids) ≤ cap:
+    three docs share one 25-token run, and a null-id copy of it neither
+    pairs nor counts towards the cap."""
+    base = " ".join(f"w{j}" for j in range(25))
+    df = spark.createDataFrame(
+        [(None, base), (1, base), (2, base + " x"), (3, "q " + base), (None, "a b")],
+        "doc_id long, text string",
+    )
+    want = [(1, 2, 6, 6, 25), (1, 3, 6, 6, 25), (2, 3, 6, 6, 25)]
+    for cap, rows in ((2, []), (3, want), (1000, want)):
+        got = dedup.exact_substring_pairs(df, max_doc_freq=cap).collect()
+        assert sorted(tuple(r) for r in got) == rows, cap
+
+
 # ---------------------------------------------------------------------------
 # intra-doc repeated n-gram removal
 # ---------------------------------------------------------------------------
