@@ -284,7 +284,8 @@ def all_pairs_jaccard_prefix(
     candidates, not corpus².
     """
     # sh feeds two branches, keyed three, the prefix postings two; none
-    # is persisted, as in jaccard_pairs_inverted (no cold win)
+    # is persisted: keeping them (and cutting the result so they can be
+    # released) was no faster cold (docs/PLANS.md, "One scoped persist")
     sh = shingles(corpus, k)
     dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     keyed = sh.join(dfreq, "shingle").select(
