@@ -15,10 +15,10 @@ the minimum member.
   member)`` into ONE parquet table.  The pass is optimistic: the kernel
   counts distinct nodes itself and reports the count through an
   accumulator, so a graph of ≤ :data:`BROADCAST_AUTO_THRESHOLD` nodes
-  costs one pass — the exchange, the kernel's write and the schema
-  read of its parquet: 3 Spark jobs where counting the label table
-  first took 8.  On small graphs the job floor, not the data, is the
-  cost.  The exchange into the single task keeps the stages that feed
+  costs one pass — the exchange and the kernel's write: 2 Spark jobs
+  where counting the label table first took 8.  On small graphs the
+  job floor, not the data, is the cost.  The exchange into the single
+  task keeps the stages that feed
   it parallel;
 
 * **distributed hash-min + pointer jumping**, when the kernel sees
@@ -220,15 +220,18 @@ def connected_components(
         return comps
     shutil.rmtree(comps_dir, ignore_errors=True)
 
-    # the symmetric edge table is loop-INVARIANT, yet it is not
-    # persisted: re-reading and re-exchanging it each round was faster
-    # cold than keeping it, on a 1M-node chain too (docs/PLANS.md, "One
+    # the symmetric edge table is loop-INVARIANT: it is cut once, so a
+    # lazy upstream (the pipeline's co-mention edges) runs once more
+    # after the kernel pass, not once per round (docs/PLANS.md, "One
     # scoped persist").  Iteration checkpoints stay parquet — the label
     # self-joins quadruple the logical plan per iteration, which only a
     # real lineage cut resets.
-    sym = edges.union(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).repartition("a")
+    sym = cut(
+        edges.union(
+            edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
+        ).repartition("a"),
+        f"{stage_dir}/sym",
+    )
 
     # iteration 1 fused into init: with label(v)=v, the first hash-min
     # step is label(v) ← min(v, min neighbor id) — ONE aggregate over

@@ -283,45 +283,51 @@ def all_pairs_jaccard_prefix(
     before the exact verification join, which is sized by surviving
     candidates, not corpus².
     """
-    # sh feeds two branches, keyed three, the prefix postings two; none
-    # is persisted: keeping them (and cutting the result so they can be
-    # released) was no faster cold (docs/PLANS.md, "One scoped persist")
-    sh = shingles(corpus, k)
-    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    keyed = sh.join(dfreq, "shingle").select(
-        "doc_id",
-        F.concat(
-            F.lpad(F.col("df").cast("string"), 10, "0"), F.lit("#"), F.col("shingle")
-        ).alias("skey"),
-    )
-    sizes = keyed.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    w = Window.partitionBy("doc_id").orderBy(F.col("skey").asc())
-    # plain join, NOT broadcast: sizes is doc-count-sized (billions of
-    # rows at crawl scale); it shares the doc_id partitioning with the
-    # window's output, so the exchange is reused
-    ranked = keyed.withColumn("r", F.row_number().over(w)).join(sizes, "doc_id")
-    prefix = ranked.filter(
-        F.col("r") <= F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-    )
-    a = prefix.select(F.col("doc_id").alias("a"), F.col("n_sh").alias("na"), "skey")
-    b = prefix.select(F.col("doc_id").alias("b"), F.col("n_sh").alias("nb"), "skey")
-    cand = (
-        a.join(b, "skey")
-        .filter(
-            (F.col("a") < F.col("b"))
-            & (F.col("nb") >= F.lit(threshold) * F.col("na"))
-            & (F.col("na") >= F.lit(threshold) * F.col("nb"))
+    # the shingle explode runs once, with nothing persisted: each doc's
+    # set is collected back as its sorted key array, so the prefix is a
+    # slice and the verification an array intersection, and every
+    # branch reads the one doc-keyed exchange (docs/PLANS.md, "One
+    # scoped persist")
+    sets = corpus.select("doc_id", F.array_distinct(shingle_array(k)).alias("_s"))
+    keyed = (
+        sets.select("doc_id", F.explode("_s").alias("shingle"))
+        .withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("shingle")))
+        .groupBy("doc_id")
+        .agg(
+            F.array_sort(
+                F.collect_list(
+                    F.concat(
+                        F.lpad(F.col("df").cast("string"), 10, "0"),
+                        F.lit("#"),
+                        F.col("shingle"),
+                    )
+                )
+            ).alias("skeys")
         )
-        .select("a", "b", "na", "nb")
+        .withColumn("n_sh", F.size("skeys"))
+    )
+    plen = F.greatest(
+        F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1, F.lit(0)
+    ).cast("int")
+    prefix = keyed.select(
+        "doc_id", "n_sh", F.explode(F.slice("skeys", 1, plen)).alias("skey")
+    )
+    cand = (
+        prefix.alias("x").join(prefix.alias("y"), "skey")
+        .filter(
+            (F.col("x.doc_id") < F.col("y.doc_id"))
+            & (F.col("y.n_sh") >= F.lit(threshold) * F.col("x.n_sh"))
+            & (F.col("x.n_sh") >= F.lit(threshold) * F.col("y.n_sh"))
+        )
+        .select(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
         .distinct()
     )
-    ka = keyed.select(F.col("doc_id").alias("a"), "skey")
-    kb = keyed.select(F.col("doc_id").alias("b"), "skey")
-    inter = (
-        cand.join(ka, "a")
-        .join(kb, ["b", "skey"])
-        .groupBy("a", "b", "na", "nb")
-        .agg(F.count("*").alias("n_inter"))
+    ka = keyed.select(F.col("doc_id").alias("a"), F.col("skeys").alias("sa"),
+                      F.col("n_sh").alias("na"))
+    kb = keyed.select(F.col("doc_id").alias("b"), F.col("skeys").alias("sb"),
+                      F.col("n_sh").alias("nb"))
+    inter = cand.join(ka, "a").join(kb, "b").withColumn(
+        "n_inter", F.size(F.array_intersect("sa", "sb"))
     )
     jac = F.col("n_inter") / (F.col("na") + F.col("nb") - F.col("n_inter"))
     return (

@@ -251,14 +251,13 @@ def pagerank(
     stage_dir = scratch_dir(stage_dir, "ddaugner_pr_")
 
     t0 = time.time()
-    # the loop-invariant sym and deg tables are neither persisted nor
-    # cut: recomputing them per round was faster cold than keeping them,
-    # on bench.py's graph and on a 1M-node chain (docs/PLANS.md, "One
-    # scoped persist"); the plans stay shallow.  The per-iteration rank
-    # checkpoint below stays parquet: the rank table feeds both sides
-    # of the contribution join, so its plan would otherwise double per
-    # iteration.
-    sym = symmetrize(edges).repartition("a")
+    # the loop-invariant symmetric edge table is cut once, so a lazy
+    # upstream (textrank's co-occurrence join, ER's blocking join) runs
+    # once rather than once per round (docs/PLANS.md, "One scoped
+    # persist").  The per-iteration rank checkpoint below stays parquet:
+    # the rank table feeds both sides of the contribution join, so its
+    # plan would otherwise double per iteration.
+    sym = cut(symmetrize(edges).repartition("a"), f"{stage_dir}/sym")
     deg = sym.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("deg"))
     n_nodes = deg.count()
     stats["n_nodes"] = n_nodes
@@ -323,9 +322,10 @@ def pagerank(
         )
         return delta < tol, {"linf_delta": delta}
 
+    # with no round run the result reads the sym cut, so the dir stays
     ranks = fixpoint(
         ranks, step, measure, stage_dir, "ranks", max_iter, stats["iters"],
-        key="it", own_dir=own_dir,
+        key="it", own_dir=own_dir and max_iter > 0,
     )
     return ranks.select(F.col("node").alias("entity"), "rank")
 

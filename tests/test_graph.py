@@ -621,7 +621,7 @@ def test_dedup_and_suffix_leave_nothing_persisted(spark, op):
 @pytest.mark.parametrize(
     "op",
     ["luby_mis", "jp_coloring", "louvain_rounds", "densest_subgraph",
-     "betweenness_sampled"],
+     "betweenness_sampled", "pagerank"],
 )
 def test_own_dir_keeps_only_result_dirs(spark, tmp_path, monkeypatch, op):
     """With ``stage_dir=None`` the operator's temp dir holds, on
@@ -650,6 +650,34 @@ def test_own_dir_keeps_only_result_dirs(spark, tmp_path, monkeypatch, op):
     }
     assert set(os.listdir(own)) == backing
     assert want and sorted(out.collect()) == want
+
+
+@pytest.mark.parametrize("op", ["pagerank", "cc_loop"])
+def test_loop_invariant_edges_read_upstream_once(spark, monkeypatch, op):
+    """PageRank and CC's loop branch cut the symmetric edge table once,
+    so a lazy upstream runs as often in a 4-round call as in a 1-round
+    one, not once more per round."""
+    monkeypatch.setattr(canonical, "BROADCAST_AUTO_THRESHOLD", 0)
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def tap(x):
+        acc.add(1)
+        return x
+
+    e = _edges(spark, _ARM_PAIRS).select(tap("a").alias("a"), "b")
+
+    def upstream_rows(rounds):
+        acc.value = 0
+        if op == "pagerank":
+            graph.pagerank(e, max_iter=rounds, tol=None).collect()
+        else:
+            st: dict = {}
+            canonical.connected_components(e, max_iter=rounds, stats=st).collect()
+            assert len(st["iters"]) == rounds
+        return acc.value
+
+    assert 0 < upstream_rows(1) == upstream_rows(4)
 
 
 class TestHits:
